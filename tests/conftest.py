@@ -21,3 +21,16 @@ def rows(df, *cols):
     if cols:
         df = df.select(*cols)
     return sorted(tuple(r) for r in df.collect())
+
+
+class NullBelow100:
+    """Custom rule whose verdict is NULL (not False) for values <= 100 —
+    the case ``ExprRule`` cannot produce, since it coalesces to False."""
+
+    def to_column(self, col, registry):
+        from pyspark.sql import functions as F
+
+        return F.when(col > 100, True)
+
+    def sql_expr(self, col_sql, registry):
+        raise NotImplementedError

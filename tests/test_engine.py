@@ -7,10 +7,17 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from xmlschemavalidator_spark.compiler import FieldRule, RuleSet
-from xmlschemavalidator_spark.engine import DOC_OK, ok_col_name, validate, with_status
+from xmlschemavalidator_spark.engine import (
+    DOC_OK,
+    explode_failures,
+    ok_col_name,
+    validate,
+    with_status,
+)
 from xmlschemavalidator_spark.rules.attributes import RequiredAttr
 from xmlschemavalidator_spark.rules.facets import Enumeration, MaxInclusive, MinInclusive
 from xmlschemavalidator_spark.rules.types import Restriction
+from tests.conftest import NullBelow100
 
 
 def _docs(spark):
@@ -241,20 +248,63 @@ def test_null_verdict_rule_counts_failed_everywhere(spark):
     """A rule yielding NULL must fail consistently: in violations AND in
     _doc_ok / valid() / partition summary (it used to appear only in
     violations, so split flows silently lost the row)."""
-    class NullRule:
-        def to_column(self, col, registry):
-            return F.when(col > 100, True)  # NULL for col <= 100
-
-        def sql_expr(self, col_sql, registry):
-            raise NotImplementedError
-
     df = spark.createDataFrame([(1, 50), (2, 200)], "k long, v long")
-    rs = RuleSet(rules=[FieldRule("maybe", NullRule(), column="v")])
+    rs = RuleSet(rules=[FieldRule("maybe", NullBelow100(), column="v")])
     res = validate(df, rs, key="k")
     assert [r["k"] for r in res.violations.collect()] == [1]
     got = {r["k"]: r["_doc_ok"] for r in res.verdicts.collect()}
     assert got == {1: False, 2: True}
     assert not res.valid()
+
+
+def test_explode_failures_matches_per_rule_union(spark):
+    """The lazy violations core against an independent reference: the
+    union over rules of ``where(~coalesce(ok, false))`` scans. Edge cases:
+    a failing rule whose observed value is NULL (url_required on a NULL
+    url), a NULL-yielding custom rule, fully passing rows, and carried
+    ``violation_cols``."""
+    df = spark.createDataFrame(
+        [
+            (1, "u1", "en", 40, 200, "p0"),   # passes everything
+            (2, "u2", "xx", 35, 200, "p1"),   # lang + range
+            (3, None, "de", 40, 200, "p0"),   # url_required, NULL observed
+            (4, "u4", "en", 40, 50, "p1"),    # custom rule yields NULL
+            (5, None, None, 99, None, "p0"),  # every rule fails
+            (6, "u6", "sv", 42, 101, "p1"),   # passes everything
+        ],
+        "k long, url string, lang string, n_chars bigint, v long, part string",
+    ).coalesce(1)
+    rs = RuleSet(
+        rules=_ruleset().rules + [FieldRule("maybe", NullBelow100(), column="v")]
+    )
+    compiled = rs.compile()
+    reference = None
+    for rule in rs.resolved_rules():
+        part = df.where(~F.coalesce(compiled[rule.rule_id], F.lit(False))).select(
+            "k",
+            "part",
+            F.lit(rule.rule_id).alias("rule_id"),
+            F.expr(rule.observed_expr).cast("string").alias("observed_value"),
+        )
+        reference = part if reference is None else reference.unionByName(part)
+    want = sorted(tuple(r) for r in reference.collect())
+
+    got = explode_failures(df, rs, "k", "part")
+    assert got.columns == ["k", "part", "rule_id", "observed_value"]
+    got_rows = got.collect()
+    assert sorted(tuple(r) for r in got_rows) == want
+    res = validate(df, rs, key="k", violation_cols=["part"])
+    assert res.violations.columns == ["k", "rule_id", "observed_value", "part"]
+    assert sorted(
+        (r["k"], r["part"], r["rule_id"], r["observed_value"]) for r in res.violations.collect()
+    ) == want
+
+    assert [r for r in want if r[0] == 3] == [(3, "p0", "url_required", None)]
+    assert (4, "p1", "maybe", "50") in want
+    assert not {1, 6} & {r[0] for r in want}
+    # within a row, failures come out in ruleset order
+    order = [r.rule_id for r in rs.resolved_rules()]
+    assert [r["rule_id"] for r in got_rows if r["k"] == 5] == order
 
 
 def test_ruleset_registry_isolated(spark):

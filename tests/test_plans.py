@@ -35,13 +35,52 @@ def _docs(spark):
 
 
 def test_violations_plan_no_shuffle(spark):
-    """N rules compile into ONE projection + filter-explode over one scan:
+    """N rules compile into ONE projection + explode over one scan:
     no Exchange, no Union, exactly one parquet scan."""
     res = validate(_docs(spark), documents_ruleset(), key="doc_id")
     p = fmt(res.violations)
     assert n_scans(p) == 1
     assert "Exchange" not in p
     assert "Union" not in p
+
+
+def _assert_lazy_violations_plan(p: str) -> None:
+    """One scan, one plain explode of per-rule ``CASE WHEN failed THEN
+    struct END`` elements: no higher-order ``filter`` and no lambda (those
+    build every observed value on every row and run interpreted), no
+    shuffle, no union."""
+    import re
+
+    assert n_scans(p) == 1
+    assert "ArrayFilter" not in p
+    assert not re.search(r"(?<![A-Za-z_])filter\(", p)
+    assert "lambda" not in p.lower()
+    assert "Exchange" not in p
+    assert "Union" not in p
+    assert "explode(array(CASE WHEN" in p
+
+
+def test_violations_plan_lazy_batch_and_stream(spark, tmp_path):
+    """Batch ``validate().violations`` and ``stream_violations`` share one
+    plan shape; the streaming pin reads the executed micro-batch plan."""
+    from xmlschemavalidator_spark.streaming.validate_stream import stream_violations
+
+    res = validate(_docs(spark), documents_ruleset(), key="doc_id")
+    _assert_lazy_violations_plan(fmt(res.violations))
+
+    src = str(tmp_path / "src")
+    _docs(spark).write.parquet(src)
+    sdf = spark.readStream.schema(_docs(spark).schema).parquet(src)
+    q = (
+        stream_violations(sdf, documents_ruleset(), key="doc_id")
+        .writeStream.format("memory").queryName("t_plan_viols")
+        .outputMode("append").trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    jvm = spark._jvm
+    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    _assert_lazy_violations_plan(q._jsq.streamingQuery().lastExecution().explainString(mode))
+    assert spark.table("t_plan_viols").count() == res.violations.count()
 
 
 def test_verdicts_plan_single_scan_no_shuffle(spark):

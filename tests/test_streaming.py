@@ -13,6 +13,7 @@ from xmlschemavalidator_spark.rules.facets import Enumeration
 from xmlschemavalidator_spark.rules.types import Restriction
 from xmlschemavalidator_spark.streaming import stream_validate, windowed_violation_counts
 from xmlschemavalidator_spark.streaming.validate_stream import stream_violations
+from tests.conftest import NullBelow100
 
 
 @pytest.fixture()
@@ -58,6 +59,21 @@ def test_stream_validate_verdicts(spark, stream_src):
     _run(out, "t_verdicts")
     got = {r["url"]: r[DOC_OK] for r in spark.sql("SELECT * FROM t_verdicts").collect()}
     assert got == {"u1": True, "u2": False, "u3": True, "u4": False, "u5": False}
+
+
+def test_null_verdict_doc_ok_batch_matches_stream(spark, tmp_path):
+    """A rule yielding NULL fails the row in streaming ``_doc_ok`` exactly
+    as in batch ``validate()`` (it used to make the streaming verdict NULL)."""
+    from xmlschemavalidator_spark.engine import validate
+
+    src = str(tmp_path / "null_src")
+    spark.createDataFrame([(1, 50), (2, 200)], "k long, v long").write.parquet(src)
+    rs = RuleSet(rules=[FieldRule("maybe", NullBelow100(), column="v")])
+    batch = {r["k"]: r[DOC_OK] for r in validate(spark.read.parquet(src), rs, key="k").verdicts.collect()}
+    _run(stream_validate(spark.readStream.schema("k long, v long").parquet(src), rs), "t_null_ok")
+    stream = {r["k"]: r[DOC_OK] for r in spark.sql("SELECT * FROM t_null_ok").collect()}
+    assert batch[1] is False and stream[1] is False
+    assert batch == stream == {1: False, 2: True}
 
 
 def test_stream_violations_rows(spark, stream_src):

@@ -55,6 +55,9 @@ def main(only: list[str] | None = None) -> int:
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failures = 0
+    for name in sorted(set(only or ()) - set(qs)):
+        print(f"FAIL {name}: no such query")  # a typo must not pass as "checked"
+        failures += 1
     for name, fn in qs.items():
         if only and name not in only:
             continue

@@ -6,8 +6,11 @@ Output model (SURVEY.md §1.3) — the reference's verdict tree
 * **wide verdicts**  — one boolean column per rule plus ``_doc_ok`` (the
   AND-fold that is the reference's ``valid?``, core.clj:279-285);
 * **violations**     — a long DataFrame ``(key, rule_id, observed_value)``,
-  built from ONE array-of-structs projection + ``filter`` + ``explode`` so N
-  rules never cause N scans or a union of N subplans;
+  built by :func:`explode_failures`: each rule contributes
+  ``when(failed, struct(rule_id, observed_value))`` to ONE array, which is
+  plainly ``explode``-d and kept ``WHERE v IS NOT NULL``. An observed value
+  is computed only for a rule that failed, there is no higher-order
+  function, and N rules never cause N scans or a union of N subplans;
 * **partition summary** — per ``spark_partition_id()`` pass/fail counts
   (the dataset-level analogue of per-node status metadata from ``decode``,
   core.clj:263-276).
@@ -64,21 +67,38 @@ class ValidationResult:
         return self.verdicts.filter(~F.col(DOC_OK)).isEmpty()
 
 
-def failed_rules_array(ruleset: RuleSet, compiled=None) -> "F.Column":
-    """The single-pass violations core: an inline array of
-    ``(rule_id, ok, observed_value)`` structs filtered to failures — shared
-    by the batch engine and the streaming violation paths so the two can
-    never drift."""
+def explode_failures(
+    df: DataFrame, ruleset: RuleSet, *carry: str, compiled=None
+) -> DataFrame:
+    """The single-pass violations core, shared by the batch engine and the
+    streaming violation paths so the two can never drift: one
+    ``(carry..., rule_id, observed_value)`` row per failed rule per input
+    row, in ruleset order within a row.
+
+    Each rule becomes ``when(~coalesce(ok, false), struct(rule_id,
+    observed_value))``, so the observed value (e.g. a decoded html prefix)
+    is evaluated only for the rows that rule fails; NULL counts as failed,
+    as in ``_doc_ok``. The per-rule elements form one array that gets a
+    plain ``explode`` and ``WHERE v IS NOT NULL`` — all codegen'd, no
+    lambda. Never build every rule's payload and drop the passing ones
+    with a higher-order ``filter``: that evaluates every observed value on
+    every row, interpreted."""
     compiled = compiled if compiled is not None else ruleset.compile()
-    structs = [
-        F.struct(
-            F.lit(rule.rule_id).alias("rule_id"),
-            compiled[rule.rule_id].alias("ok"),
-            F.expr(rule.observed_expr).cast("string").alias("observed_value"),
+    failures = [
+        F.when(
+            ~F.coalesce(compiled[rule.rule_id], F.lit(False)),
+            F.struct(
+                F.lit(rule.rule_id).alias("rule_id"),
+                F.expr(rule.observed_expr).cast("string").alias("observed_value"),
+            ),
         )
         for rule in ruleset.resolved_rules()
     ]
-    return F.filter(F.array(*structs), lambda s: ~F.coalesce(s["ok"], F.lit(False)))
+    return (
+        df.select(*carry, F.explode(F.array(*failures)).alias("_v"))
+        .where(F.col("_v").isNotNull())
+        .select(*carry, "_v.rule_id", "_v.observed_value")
+    )
 
 
 def validate(
@@ -91,8 +111,11 @@ def validate(
     """Compile ``ruleset`` (driver-side) and evaluate it over ``df``.
 
     One projection computes every rule boolean; ``_doc_ok`` is their
-    conjunction. The violations frame filters/explodes an inline array of
-    ``(rule_id, ok, observed_value)`` structs — a single narrow pass.
+    conjunction (NULL counts as failed). The violations frame comes from
+    :func:`explode_failures`: one ``when(failed, struct(rule_id,
+    observed_value))`` per rule, a plain ``explode`` and ``WHERE v IS NOT
+    NULL`` — a single narrow pass that computes an observed value only
+    where its rule failed.
 
     ``violation_cols``: extra input columns carried through onto each
     violation row (e.g. the partition column for partitioned sinks). They
@@ -107,7 +130,7 @@ def validate(
     verdicts = df.withColumns(verdict_cols)
     doc_ok = F.lit(True)
     for name in verdict_cols:
-        # coalesce like the violations path (failed_rules_array): a custom
+        # coalesce like the violations path (explode_failures): a custom
         # rule yielding NULL must count as failed EVERYWHERE, or the row
         # shows in violations while _doc_ok/valid()/split_valid miss it
         doc_ok = doc_ok & F.coalesce(F.col(name), F.lit(False))
@@ -128,17 +151,11 @@ def validate(
             ],
         )
 
-    # --- violations: one array-of-structs, filter ok=false, explode -------
-    failed = failed_rules_array(ruleset, compiled)
+    # --- violations: when(failed, payload) per rule, explode, not null ---
     extra = violation_cols or []
-    violations = (
-        df.select(F.col(key).alias("key"), *[F.col(c) for c in extra], F.explode(failed).alias("v"))
-        .select(
-            F.col("key").alias(key),
-            F.col("v.rule_id").alias("rule_id"),
-            F.col("v.observed_value").alias("observed_value"),
-            *[F.col(c) for c in extra],
-        )
+    carry = [key, *[c for c in extra if c != key]]
+    violations = explode_failures(df, ruleset, *carry, compiled=compiled).select(
+        key, "rule_id", "observed_value", *extra
     )
 
     # --- per-partition pass/fail (north rule: per-partition verdicts) -----

@@ -297,8 +297,10 @@ def train_lang_model_weak(
     content-addressed sample (the kmeans/BPE bounded-training contract):
     NB count tables plateau long before 2M docs, and an uncapped weak
     train was the hidden cost of the 20M lang stage (measured 322-354 s
-    of the stage's ~480 s wall — the scoring pass is 111 s). The count
-    used for the fraction is a parquet-metadata count; None disables."""
+    of the stage's ~480 s wall — the scoring pass is 111 s). The sample
+    fraction comes from a full ``df.count()``: one extra Spark job over
+    ``df`` as given, including any upstream transforms. None disables the
+    cap and skips that count."""
     from xmlschemavalidator_spark.textops import lang_id
 
     if max_train_docs:

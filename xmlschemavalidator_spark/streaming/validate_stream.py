@@ -18,30 +18,28 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xmlschemavalidator_spark.compiler import RuleSet
-from xmlschemavalidator_spark.engine import DOC_OK, failed_rules_array, ok_col_name
+from xmlschemavalidator_spark.engine import DOC_OK, explode_failures, ok_col_name
 
 
 def stream_validate(stream_df: DataFrame, ruleset: RuleSet) -> DataFrame:
     """Per-row verdicts on a streaming DataFrame: the input columns plus
     one boolean per rule and the ``_doc_ok`` conjunction. Stateless
     (append mode); keying is the caller's concern — every input column is
-    carried through."""
+    carried through. A rule yielding NULL counts as failed in ``_doc_ok``,
+    exactly as in the batch engine."""
     compiled = ruleset.compile()
     out = stream_df.withColumns({ok_col_name(rid): c for rid, c in compiled.items()})
     doc_ok = F.lit(True)
     for rid in compiled:
-        doc_ok = doc_ok & F.col(ok_col_name(rid))
+        doc_ok = doc_ok & F.coalesce(F.col(ok_col_name(rid)), F.lit(False))
     return out.withColumn(DOC_OK, doc_ok)
 
 
 def stream_violations(stream_df: DataFrame, ruleset: RuleSet, key: str) -> DataFrame:
     """Long violation rows (key, rule_id, observed_value) as a stream —
-    the SAME failed-array core as the batch engine (engine.
-    failed_rules_array), so batch and streaming semantics cannot drift."""
-    failed = failed_rules_array(ruleset)
-    return stream_df.select(F.col(key), F.explode(failed).alias("v")).select(
-        key, F.col("v.rule_id").alias("rule_id"), F.col("v.observed_value").alias("observed_value")
-    )
+    the SAME core as the batch engine (engine.explode_failures), so batch
+    and streaming semantics cannot drift."""
+    return explode_failures(stream_df, ruleset, key)
 
 
 def windowed_violation_counts(
@@ -54,12 +52,7 @@ def windowed_violation_counts(
     """Per-(event-time window, rule) violation counts with late-data
     handling: watermark bounds the agg state; output is append-complete
     per closed window."""
-    failed = failed_rules_array(ruleset)
-    exploded = (
-        stream_df.withWatermark(ts_col, watermark)
-        .select(F.col(ts_col), F.explode(failed).alias("v"))
-        .select(F.col(ts_col), F.col("v.rule_id").alias("rule_id"))
-    )
+    exploded = explode_failures(stream_df.withWatermark(ts_col, watermark), ruleset, ts_col)
     return exploded.groupBy(
         F.window(F.col(ts_col), window).alias("w"), F.col("rule_id")
     ).agg(F.count(F.lit(1)).alias("n_violations")).select(
@@ -84,12 +77,7 @@ def session_violation_bursts(
     session boundary localizes it in time better than fixed windows.
     Session-window state is merged incrementally and closed by the
     watermark (bounded state)."""
-    failed = failed_rules_array(ruleset)
-    exploded = (
-        stream_df.withWatermark(ts_col, watermark)
-        .select(F.col(ts_col), F.explode(failed).alias("v"))
-        .select(F.col(ts_col), F.col("v.rule_id").alias("rule_id"))
-    )
+    exploded = explode_failures(stream_df.withWatermark(ts_col, watermark), ruleset, ts_col)
     # streaming session windows need a companion grouping key (a global
     # session agg is unsupported) — per-rule sessions are also the more
     # useful diagnostic: bursts localize to the rule that fired
