@@ -11,7 +11,18 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "4")  # small + fast for unit tests
 def spark():
     from xmlschemavalidator_spark.session import get_spark
 
-    s = get_spark(app_name="xmlschemavalidator-tests", master="local[4]", shuffle_partitions=8)
+    # Python workers run under tests/worker_daemon.py, which stops every
+    # task from re-reading pyspark.zip (see that module's docstring)
+    here = os.path.dirname(os.path.abspath(__file__))
+    s = get_spark(
+        app_name="xmlschemavalidator-tests",
+        master="local[4]",
+        shuffle_partitions=8,
+        conf={
+            "spark.python.daemon.module": "worker_daemon",
+            "spark.executorEnv.PYTHONPATH": here,
+        },
+    )
     yield s
     s.stop()
 

@@ -546,11 +546,12 @@ def pq_train(
     ]
     sub = _with_subvectors(df.select(id_col, vec_col), vec_col, m, d)
     for _ in range(iters):
+        # the codes get their own projection BELOW the posexplode: in the
+        # same select they would sit above the Generate and the m HOF
+        # argmins would run once per exploded element (dim times per row)
         rows = (
-            sub.select(
-                F.array(*_pq_code_cols(codebooks)).alias("_codes"),
-                F.posexplode(vec_col).alias("i", "x"),
-            )
+            sub.select(F.array(*_pq_code_cols(codebooks)).alias("_codes"), vec_col)
+            .select("_codes", F.posexplode(vec_col).alias("i", "x"))
             .select(
                 F.expr(f"i div {d}").cast("int").alias("j"),
                 F.expr(f"element_at(_codes, CAST(i div {d} AS INT) + 1)").alias(
