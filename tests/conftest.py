@@ -5,24 +5,23 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")  # small + fast for unit tests
+# Python workers run under tests/pyworker/worker_daemon.py, which stops every
+# task from re-reading pyspark.zip (see that module's docstring); only that
+# directory goes on the executors' PYTHONPATH
+os.environ.setdefault(
+    "PYSPARK_SUBMIT_ARGS",
+    "--conf spark.python.daemon.module=worker_daemon"
+    " --conf spark.executorEnv.PYTHONPATH="
+    + os.path.join(os.path.dirname(os.path.abspath(__file__)), "pyworker")
+    + " pyspark-shell",
+)
 
 
 @pytest.fixture(scope="session")
 def spark():
     from xmlschemavalidator_spark.session import get_spark
 
-    # Python workers run under tests/worker_daemon.py, which stops every
-    # task from re-reading pyspark.zip (see that module's docstring)
-    here = os.path.dirname(os.path.abspath(__file__))
-    s = get_spark(
-        app_name="xmlschemavalidator-tests",
-        master="local[4]",
-        shuffle_partitions=8,
-        conf={
-            "spark.python.daemon.module": "worker_daemon",
-            "spark.executorEnv.PYTHONPATH": here,
-        },
-    )
+    s = get_spark(app_name="xmlschemavalidator-tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -16,7 +16,8 @@ importer it holds before forking, so forked workers start with stamps.
 
 ``tests/conftest.py`` starts the session with
 ``spark.python.daemon.module=worker_daemon`` and this directory on the
-executors' ``PYTHONPATH``.
+executors' ``PYTHONPATH``; the module sits alone in its directory so that
+nothing else from ``tests/`` becomes importable on executors.
 """
 
 from __future__ import annotations
@@ -26,6 +27,9 @@ import sys
 import zipimport
 
 _stock_invalidate = zipimport.zipimporter.invalidate_caches
+
+# how many times this process let the stock method re-read an archive
+stock_reads = 0
 
 
 def _archive_stamp(path: str):
@@ -37,10 +41,12 @@ def _archive_stamp(path: str):
 
 
 def invalidate_if_changed(self: zipimport.zipimporter) -> None:
+    global stock_reads
     stamp = _archive_stamp(self.archive)
     if stamp is not None and getattr(self, "_read_stamp", None) == stamp:
         return
     _stock_invalidate(self)
+    stock_reads += 1
     self._read_stamp = stamp
 
 

@@ -1,13 +1,13 @@
-"""The test session's worker daemon (tests/worker_daemon.py): a zip importer
-re-reads its archive only when the archive changed, and the session's
-Python workers really run under it."""
+"""The test session's worker daemon (tests/pyworker/worker_daemon.py): a
+zip importer re-reads its archive only when the archive changed, and the
+session's Python workers really run under it."""
 
 from __future__ import annotations
 
 import zipfile
 import zipimport
 
-from tests.worker_daemon import invalidate_if_changed
+from tests.pyworker import worker_daemon
 
 
 def _write_zip(path, names):
@@ -20,15 +20,16 @@ def test_invalidate_rereads_only_a_changed_archive(tmp_path):
     archive = str(tmp_path / "mods.zip")
     _write_zip(archive, ["mod_a"])
     importer = zipimport.zipimporter(archive)
-    invalidate_if_changed(importer)
-    files = importer._files
+    worker_daemon.invalidate_if_changed(importer)
+    reads = worker_daemon.stock_reads
 
-    invalidate_if_changed(importer)  # unchanged on disk: no re-read
-    assert importer._files is files
+    worker_daemon.invalidate_if_changed(importer)  # unchanged on disk
+    assert worker_daemon.stock_reads == reads
+    assert importer.find_spec("mod_b") is None
 
     _write_zip(archive, ["mod_a", "mod_b"])  # a new module: size changes
-    invalidate_if_changed(importer)
-    assert importer._files is not files
+    worker_daemon.invalidate_if_changed(importer)
+    assert worker_daemon.stock_reads == reads + 1
     assert importer.find_spec("mod_b") is not None
 
 

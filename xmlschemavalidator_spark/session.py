@@ -17,10 +17,7 @@ def get_spark(
     app_name: str = "xmlschemavalidator-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """``conf``: extra Spark settings applied on top of the defaults below
-    (they must be known at session start, e.g. ``spark.python.*``)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or (int(cpus) if str(cpus).isdigit() else 32)
@@ -38,8 +35,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for key, value in (conf or {}).items():
-        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     _ship_package(spark)
     return spark
