@@ -1318,3 +1318,25 @@ def test_capture_recapture_orientation_and_disjoint(spark):
     b2 = spark.createDataFrame([(9, 10)], "id_a long, id_b long")
     [r2] = capture_recapture_estimate(a, b2).collect()
     assert r2["n_hat"] is None and r2["recall_a"] is None
+
+
+def test_planted_exact_groups_vertical_tab_duckdb_parity(spark, tmp_path):
+    """``dedup_exact_groups_planted`` and its DuckDB oracle agree on a text
+    holding ``\\x0B``: Java's ``\\s`` matches it and RE2's does not, so both
+    sides spell the whitespace class as ``textops._WS``."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+    from tools.check_oracles import frame_hash
+
+    spark.createDataFrame(
+        [(0, "Hello\x0bWorld"), (100, "hello world"), (7, "other\x0b text")],
+        "doc_id bigint, text string",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    name = "dedup_exact_groups_planted"
+    got = entrymod.queries()[name](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet/*.parquet'")
+    want = con.execute(entrymod.oracle_sql()[name]).df()
+    assert sorted(got["n_docs"]) == [4]  # docs 0 and 100, each planted twice
+    assert frame_hash(got) == frame_hash(want)

@@ -582,3 +582,126 @@ def test_rule_cofire_matrix_hand_computed(spark):
     import pytest as _pt
     with _pt.raises(ValueError):
         rule_cofire(df, RuleSet(rules=[rs.rules[0]]))
+
+
+def test_compile_cache_sees_added_rule(spark):
+    """The memoized compile snapshots the rule list: a rule added after a
+    first validate() shows up in the next one's verdicts and violations."""
+    df, rs = _docs(spark), _ruleset()
+    assert ok_col_name("chars_max40") not in validate(df, rs, key="url").verdicts.columns
+    rs.add(FieldRule(
+        "chars_max40",
+        Restriction(base="integer", facets=(MaxInclusive(40),)),
+        column="n_chars",
+    ))
+    res = validate(df, rs, key="url")
+    got = {r["url"]: r[ok_col_name("chars_max40")] for r in res.verdicts.collect()}
+    assert got == {"u1": True, "u2": True, "u3": False, "u4": True, "u5": False, "u6": True}
+    viols = {(u, o) for u, rid, o in res.violations.collect() if rid == "chars_max40"}
+    assert viols == {("u3", "42"), ("u5", "43")}
+
+
+def test_compile_cache_sees_rule_replaced_in_place(spark):
+    df, rs = _docs(spark), _ruleset()
+    first = validate(df, rs, key="url").violations.collect()
+    assert {(u, o) for u, rid, o in first if rid == "lang_enum"} == {
+        ("u3", "xx"), ("u5", "yy"), ("u6", None)
+    }
+    rs.rules[0] = FieldRule(
+        "lang_enum", Restriction(facets=(Enumeration("xx"),)), column="lang"
+    )
+    res = validate(df, rs, key="url")
+    got = {r["url"]: r[ok_col_name("lang_enum")] for r in res.verdicts.collect()}
+    assert got == {"u1": False, "u2": False, "u3": True, "u4": False, "u5": False, "u6": False}
+    viols = {(u, o) for u, rid, o in res.violations.collect() if rid == "lang_enum"}
+    assert viols == {("u1", "en"), ("u2", "de"), ("u4", "en"), ("u5", "yy"), ("u6", None)}
+
+
+def test_compile_cache_sees_registry_redefine(spark):
+    """``TypeRegistry.define`` rebinds a named type in place; a rule whose
+    ``Restriction(base=name)`` resolves it must pick up the new binding."""
+    df = _docs(spark)
+    rs = RuleSet(rules=[FieldRule("chars_small", Restriction(base="small"), column="n_chars")])
+    rs.registry.define("small", Restriction(base="integer", facets=(MaxInclusive(40),)))
+    first = validate(df, rs, key="url").violations.collect()
+    assert sorted(r["url"] for r in first) == ["u3", "u5"]
+    rs.registry.define("small", Restriction(base="integer", facets=(MaxInclusive(36),)))
+    res = validate(df, rs, key="url")
+    got = {r["url"]: r[ok_col_name("chars_small")] for r in res.verdicts.collect()}
+    assert got == {"u1": False, "u2": True, "u3": False, "u4": True, "u5": False, "u6": False}
+    assert sorted(tuple(r) for r in res.violations.collect()) == [
+        ("u1", "chars_small", "40"),
+        ("u3", "chars_small", "42"),
+        ("u5", "chars_small", "43"),
+        ("u6", "chars_small", "40"),
+    ]
+
+
+def test_compile_returns_a_copy(spark):
+    rs = _ruleset()
+    rs.compile().pop("lang_enum")
+    assert set(rs.compile()) == {"lang_enum", "chars_range", "url_required"}
+
+
+def test_second_call_compiles_no_rule(spark, monkeypatch):
+    """Compile once: on the second call with the same RuleSet (or schema
+    root, or the flagship), ``compile_rule`` runs zero times and the rows
+    are the same."""
+    from xmlschemavalidator_spark import compiler, datagen
+    from xmlschemavalidator_spark.flagship import run_flagship
+    from xmlschemavalidator_spark.xsd import parse_xsd
+
+    calls = []
+    real = compiler.compile_rule
+    monkeypatch.setattr(
+        compiler, "compile_rule", lambda *a: calls.append(a) or real(*a)
+    )
+
+    def rows(res, key):
+        return (
+            sorted(tuple(r) for r in res.verdicts.select(key, DOC_OK).collect()),
+            sorted(tuple(r) for r in res.violations.collect()),
+        )
+
+    def twice(call, key):
+        first = rows(call(), key)
+        n_first = len(calls)
+        second = rows(call(), key)
+        assert len(calls) == n_first, "second call compiled rules again"
+        assert second == first
+        return n_first
+
+    df, rs = _docs(spark), _ruleset()
+    assert twice(lambda: validate(df, rs, key="url"), "url") == 3
+
+    schema = parse_xsd("""<schema>
+      <simpleType name="langtype">
+        <restriction base="string">
+          <enumeration value="en"/><enumeration value="de"/>
+        </restriction>
+      </simpleType>
+      <complexType name="doctype">
+        <sequence>
+          <element name="lang" type="langtype"/>
+          <element name="n" type="integer"/>
+        </sequence>
+        <attribute name="source" type="string" use="required"/>
+      </complexType>
+      <element name="document" type="doctype"/>
+    </schema>""")
+    docs = spark.createDataFrame(
+        [
+            ("d1", '<document source="s"><lang>en</lang><n>1</n></document>'),
+            ("d2", "<document><lang>xx</lang><n>z</n></document>"),
+        ],
+        "doc_id string, xml string",
+    )
+    calls.clear()
+    n_xsd = twice(
+        lambda: schema.validate_xml_column(docs, "xml", root="document", key="doc_id"),
+        "doc_id",
+    )
+    assert n_xsd > 0
+
+    pages = datagen.pages(spark, 200, seed=3)
+    twice(lambda: run_flagship(pages), "url")

@@ -152,6 +152,49 @@ def test_validate_xml_column_end_to_end(spark):
     assert ("x1", "udr__uniontest", "0") in v
 
 
+def test_validate_xml_column_sees_schema_edits(spark):
+    """validate_xml_column caches its DDL, flatten Columns and compiled
+    RuleSet per root; a schema edit after a first call must still show in
+    the next one's verdicts and violations."""
+    from xmlschemavalidator_spark.rules.facets import Enumeration
+    from xmlschemavalidator_spark.rules.types import Restriction
+    from xmlschemavalidator_spark.xsd import AttrDecl
+
+    schema = parse_xsd("""<schema>
+      <simpleType name="langtype">
+        <restriction base="string"><enumeration value="en"/></restriction>
+      </simpleType>
+      <complexType name="doctype">
+        <sequence><element name="lang" type="langtype"/></sequence>
+      </complexType>
+      <element name="doc" type="doctype"/>
+    </schema>""")
+    df = spark.createDataFrame(
+        [("d1", "<doc><lang>en</lang></doc>"), ("d2", '<doc id="7"><lang>de</lang></doc>')],
+        "doc_id string, xml string",
+    )
+
+    def run():
+        res = schema.validate_xml_column(df, "xml", root="doc", key="doc_id")
+        return (
+            {r["doc_id"]: r[DOC_OK] for r in res.verdicts.collect()},
+            sorted(tuple(r) for r in res.violations.collect()),
+        )
+
+    assert run() == ({"d1": True, "d2": False}, [("d2", "doc__lang", "de")])
+    # a named type rebound in the schema's registry
+    schema.types.define("langtype", Restriction(base="string", facets=(Enumeration("de"),)))
+    assert run() == ({"d1": False, "d2": True}, [("d1", "doc__lang", "en")])
+    # a declaration added to the complexType: new from_xml field and rule
+    schema.complex_types["doctype"].attributes.append(
+        AttrDecl("id", type="integer", required=True)
+    )
+    assert run() == (
+        {"d1": False, "d2": True},
+        [("d1", "doc__attr_id", None), ("d1", "doc__lang", "en")],
+    )
+
+
 def test_choice_null_alternative_passes_type(spark):
     xsd = """<schema>
       <complexType name="c">

@@ -7,7 +7,9 @@ core.clj:257-261 / parser.clj:331-341): a :class:`RuleSet` is compiled
 ``(partial decode schema)`` pre-compilation idiom, README.md:62-67), then
 evaluated per row in executors by :func:`xmlschemavalidator_spark.engine.validate`
 — all rule booleans fuse into one projection inside one whole-stage-codegen
-pass, so N rules cost a single scan.
+pass, so N rules cost a single scan. The compile is memoized on the RuleSet
+(:meth:`RuleSet.compiled`): every later ``validate()`` reuses its Columns
+until the rules or the type registry change.
 
 Every rule also renders an equivalent ANSI-SQL expression (``sql_expr``) so
 each operator is independently checkable against a SQL oracle — preserving
@@ -155,6 +157,27 @@ class RuleRef:
     rule_id: str
 
 
+@dataclass(eq=False)
+class Compiled:
+    """One compile of a RuleSet: its rule Columns and the snapshot they were
+    built from. ``derived`` is what the engine builds from these Columns
+    (engine.RuleColumns: verdict, ``_doc_ok`` and violation payload
+    Columns), set on first use; it lives exactly as long as they stay valid."""
+
+    rules: tuple[FieldRule, ...]
+    registry: TypeRegistry
+    registry_version: int
+    columns: dict[str, Column]
+    derived: Any = None
+
+    def is_current(self, ruleset: "RuleSet") -> bool:
+        return (
+            self.registry is ruleset.registry
+            and self.registry_version == ruleset.registry.version
+            and self.rules == tuple(ruleset.rules)
+        )
+
+
 @dataclass
 class RuleSet:
     """An ordered, named collection of field rules plus a type environment.
@@ -224,14 +247,32 @@ class RuleSet:
     def rule_ids(self) -> list[str]:
         return [r.rule_id for r in self.rules]
 
-    def compile(self) -> dict[str, Column]:
-        """rule_id → boolean Column; compile once on the driver."""
-        out: dict[str, Column] = {}
-        for r in self.rules:
-            if r.rule_id in out:
+    def compiled(self) -> Compiled:
+        """The memoized compile. Every rule Column is one py4j round trip
+        per node, so it is built once and reused by every later call; it is
+        rebuilt when the rules (``add()``, in-place list edits) or the
+        registry (``define()``, or a new registry) have changed since."""
+        cached = getattr(self, "_compiled", None)
+        if cached is not None and cached.is_current(self):
+            return cached
+        snapshot = Compiled(tuple(self.rules), self.registry, self.registry.version, {})
+        for r in snapshot.rules:
+            if r.rule_id in snapshot.columns:
                 raise ValueError(f"duplicate rule_id {r.rule_id!r}")
-            out[r.rule_id] = self._resolve_ref(r).ok_column(self.registry)
-        return out
+            snapshot.columns[r.rule_id] = self._resolve_ref(r).ok_column(self.registry)
+        self._compiled = snapshot
+        return snapshot
+
+    def compile(self) -> dict[str, Column]:
+        """rule_id → boolean Column, from the memoized compile. A copy: a
+        caller's edit to the dict cannot reach the cache."""
+        return dict(self.compiled().columns)
+
+    def __getstate__(self) -> dict:
+        # the compiled Columns hold JVM handles: never pickle or deep-copy them
+        state = self.__dict__.copy()
+        state.pop("_compiled", None)
+        return state
 
     def compile_sql(self) -> dict[str, str]:
         """rule_id → ANSI-SQL boolean expression (oracle rendering).

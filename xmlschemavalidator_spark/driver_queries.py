@@ -42,7 +42,7 @@ from xmlschemavalidator_spark.rules.facets import (
 )
 from xmlschemavalidator_spark.rules.structural import AllRule, ChoiceRule, SequenceRule
 from xmlschemavalidator_spark.rules.types import PREDEF_TYPES, Restriction, Union
-from xmlschemavalidator_spark.textops import lang_id, quality_features, token_count
+from xmlschemavalidator_spark.textops import _WS, lang_id, quality_features, token_count
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -793,8 +793,8 @@ def text_lang_id(spark, sf_dir):
 
 @q(
     "dedup_exact_groups",
-    """SELECT fingerprint, CAST(count(*) AS BIGINT) AS n_docs FROM (
-         SELECT md5(lower(regexp_replace(trim(coalesce(text, '')), '\\s+', ' ', 'g'))) AS fingerprint
+    rf"""SELECT fingerprint, CAST(count(*) AS BIGINT) AS n_docs FROM (
+         SELECT md5(lower(regexp_replace(trim(coalesce(text, '')), '{_WS}+', ' ', 'g'))) AS fingerprint
          FROM documents
        ) GROUP BY fingerprint HAVING count(*) > 1""",
 )
@@ -806,8 +806,8 @@ def dedup_exact_groups(spark, sf_dir):
 
 @q(
     "dedup_exact_groups_planted",
-    r"""SELECT fingerprint, CAST(count(*) AS BIGINT) AS n_docs FROM (
-          SELECT md5(lower(regexp_replace(trim(coalesce(text, '')), '\s+', ' ', 'g'))) AS fingerprint
+    rf"""SELECT fingerprint, CAST(count(*) AS BIGINT) AS n_docs FROM (
+          SELECT md5(lower(regexp_replace(trim(coalesce(text, '')), '{_WS}+', ' ', 'g'))) AS fingerprint
           FROM (
             SELECT doc_id, text FROM documents
             UNION ALL

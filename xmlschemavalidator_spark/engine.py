@@ -15,6 +15,15 @@ Output model (SURVEY.md §1.3) — the reference's verdict tree
   (the dataset-level analogue of per-node status metadata from ``decode``,
   core.clj:263-276).
 
+Compile once: every Column built per rule — the ``rule_<id>_ok`` verdicts,
+the ``_doc_ok`` fold and the violation payload array — is derived from the
+RuleSet's memoized compile (:meth:`RuleSet.compiled`) the first time it is
+needed and kept with it (:func:`rule_columns`). A later ``validate()`` on the
+same RuleSet, from the batch engine, a manifest batch or a streaming
+micro-batch, only assembles DataFrames; nothing is rebuilt per call unless
+the rules or the type registry changed. Only these driver-side expression
+objects are cached, never data.
+
 Scale notes: the whole verdict computation is narrow (no shuffle); the only
 shuffle is the partition-summary aggregation, which is a partial+final hash
 aggregate over at most O(#partitions) groups. Violations inherit the input's
@@ -67,35 +76,67 @@ class ValidationResult:
         return self.verdicts.filter(~F.col(DOC_OK)).isEmpty()
 
 
-def explode_failures(
-    df: DataFrame, ruleset: RuleSet, *carry: str, compiled=None
-) -> DataFrame:
+@dataclass(frozen=True, eq=False)
+class RuleColumns:
+    """The Columns the engine builds per rule, derived once from a RuleSet's
+    memoized compile and shared by the batch and streaming paths."""
+
+    verdicts: dict[str, Column]  # rule_<id>_ok -> the rule's boolean Column
+    # AND of coalesce(rule_<id>_ok, false): a rule yielding NULL counts as
+    # failed here exactly as in the violation rows; reads the verdict columns
+    doc_ok: Column
+    # array(when(failed, struct(rule_id, observed_value))), in ruleset order
+    failures: Column
+
+
+def rule_columns(ruleset: RuleSet) -> RuleColumns:
+    """``ruleset``'s :class:`RuleColumns`, built on first use and cached
+    with its compile (rebuilt only when that compile is)."""
+    compiled = ruleset.compiled()
+    if compiled.derived is None:
+        verdicts = {ok_col_name(rid): c for rid, c in compiled.columns.items()}
+        doc_ok = F.lit(True)
+        for name in verdicts:
+            doc_ok = doc_ok & F.coalesce(F.col(name), F.lit(False))
+        # Each rule's payload sits under when(~coalesce(ok, false), ...), so
+        # its observed value (e.g. a decoded html prefix) is evaluated only
+        # for the rows that rule fails. Never build every rule's payload and
+        # drop the passing ones with a higher-order ``filter``: that
+        # evaluates every observed value on every row, interpreted.
+        failures = F.array(*[
+            F.when(
+                ~F.coalesce(compiled.columns[rule.rule_id], F.lit(False)),
+                F.struct(
+                    F.lit(rule.rule_id).alias("rule_id"),
+                    F.expr(rule.observed_expr).cast("string").alias("observed_value"),
+                ),
+            )
+            for rule in ruleset.resolved_rules()
+        ])
+        compiled.derived = RuleColumns(verdicts, doc_ok, failures)
+    return compiled.derived
+
+
+def with_verdicts(df: DataFrame, ruleset: RuleSet) -> DataFrame:
+    """``df`` plus one ``rule_<id>_ok`` boolean per rule and their
+    ``_doc_ok`` fold — the one verdict builder of the batch engine and
+    streaming validation."""
+    cols = rule_columns(ruleset)
+    return df.withColumns(cols.verdicts).withColumn(DOC_OK, cols.doc_ok)
+
+
+def explode_failures(df: DataFrame, ruleset: RuleSet, *carry: str) -> DataFrame:
     """The single-pass violations core, shared by the batch engine and the
     streaming violation paths so the two can never drift: one
     ``(carry..., rule_id, observed_value)`` row per failed rule per input
     row, in ruleset order within a row.
 
-    Each rule becomes ``when(~coalesce(ok, false), struct(rule_id,
-    observed_value))``, so the observed value (e.g. a decoded html prefix)
-    is evaluated only for the rows that rule fails; NULL counts as failed,
-    as in ``_doc_ok``. The per-rule elements form one array that gets a
-    plain ``explode`` and ``WHERE v IS NOT NULL`` — all codegen'd, no
-    lambda. Never build every rule's payload and drop the passing ones
-    with a higher-order ``filter``: that evaluates every observed value on
-    every row, interpreted."""
-    compiled = compiled if compiled is not None else ruleset.compile()
-    failures = [
-        F.when(
-            ~F.coalesce(compiled[rule.rule_id], F.lit(False)),
-            F.struct(
-                F.lit(rule.rule_id).alias("rule_id"),
-                F.expr(rule.observed_expr).cast("string").alias("observed_value"),
-            ),
-        )
-        for rule in ruleset.resolved_rules()
-    ]
+    The payload array (:class:`RuleColumns` ``failures``) holds one
+    ``when(~coalesce(ok, false), struct(rule_id, observed_value))`` per
+    rule; NULL counts as failed, as in ``_doc_ok``. It gets a plain
+    ``explode`` and ``WHERE v IS NOT NULL`` — all codegen'd, no lambda."""
     return (
-        df.select(*carry, F.explode(F.array(*failures)).alias("_v"))
+        df.select(*carry, F.explode(rule_columns(ruleset).failures).alias("_v"))
         .where(F.col("_v").isNotNull())
         .select(*carry, "_v.rule_id", "_v.observed_value")
     )
@@ -108,8 +149,11 @@ def validate(
     violation_cols: list[str] | None = None,
     observe: bool = False,
 ) -> ValidationResult:
-    """Compile ``ruleset`` (driver-side) and evaluate it over ``df``.
+    """Evaluate ``ruleset`` over ``df``.
 
+    The rule Columns come from the RuleSet's memoized compile
+    (:func:`rule_columns`): the first call on a RuleSet builds them, every
+    later one reuses them and only assembles the three DataFrames.
     One projection computes every rule boolean; ``_doc_ok`` is their
     conjunction (NULL counts as failed). The violations frame comes from
     :func:`explode_failures`: one ``when(failed, struct(rule_id,
@@ -124,17 +168,7 @@ def validate(
     plus a key shuffle.
     """
     ruleset.check_schema(df)
-    compiled = ruleset.compile()  # rule_id -> Column, once, on the driver
-
-    verdict_cols = {ok_col_name(rid): c for rid, c in compiled.items()}
-    verdicts = df.withColumns(verdict_cols)
-    doc_ok = F.lit(True)
-    for name in verdict_cols:
-        # coalesce like the violations path (explode_failures): a custom
-        # rule yielding NULL must count as failed EVERYWHERE, or the row
-        # shows in violations while _doc_ok/valid()/split_valid miss it
-        doc_ok = doc_ok & F.coalesce(F.col(name), F.lit(False))
-    verdicts = verdicts.withColumn(DOC_OK, doc_ok)
+    verdicts = with_verdicts(df, ruleset)
 
     observation: Optional[Observation] = None
     if observe:
@@ -147,14 +181,14 @@ def validate(
                 F.sum((~F.coalesce(F.col(name), F.lit(False))).cast("long")).alias(
                     f"viol_{name[len(OK_PREFIX):-len(OK_SUFFIX)]}"
                 )
-                for name in verdict_cols
+                for name in rule_columns(ruleset).verdicts
             ],
         )
 
     # --- violations: when(failed, payload) per rule, explode, not null ---
     extra = violation_cols or []
     carry = [key, *[c for c in extra if c != key]]
-    violations = explode_failures(df, ruleset, *carry, compiled=compiled).select(
+    violations = explode_failures(df, ruleset, *carry).select(
         key, "rule_id", "observed_value", *extra
     )
 

@@ -70,9 +70,13 @@ def web_ruleset(max_chars: int = 1_000_000) -> RuleSet:
     )
 
 
+# one ruleset for every run_flagship call, so its compile is reused
+_WEB_RULESET = web_ruleset()
+
+
 def run_flagship(df: DataFrame, key: str = "url") -> ValidationResult:
     """Apply the web ruleset — one narrow pass for verdicts + violations."""
-    return validate(df, web_ruleset(), key=key)
+    return validate(df, _WEB_RULESET, key=key)
 
 
 def documents_ruleset() -> RuleSet:

@@ -431,6 +431,9 @@ class TypeRegistry:
         self._types: dict[str, Type] = {}
         for layer in layers:
             self._types.update(layer)
+        # bumped by define(): compiled RuleSets check it to notice that a
+        # named type they resolved was rebound in place
+        self.version = 0
 
     def merge(self, local: dict[str, Type]) -> "TypeRegistry":
         reg = TypeRegistry(self._types, local)
@@ -438,6 +441,7 @@ class TypeRegistry:
 
     def define(self, name: str, t: Type) -> None:
         self._types[name] = t
+        self.version += 1
 
     def resolve(self, name: str) -> Type:
         try:

@@ -8,8 +8,9 @@ per window) adds a watermarked windowed aggregation — Spark's incremental
 hash-agg state, mergeable and bounded by the watermark horizon.
 
 This mirrors the reference's compile-once/apply-many contract
-(README.md:62-67): compilation happens once on the driver; micro-batches
-reuse the same generated code.
+(README.md:62-67): compilation happens once on the driver, and the rule
+Columns are cached with the RuleSet (engine.rule_columns), so micro-batches
+reuse the same expressions and the same generated code.
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xmlschemavalidator_spark.compiler import RuleSet
-from xmlschemavalidator_spark.engine import DOC_OK, explode_failures, ok_col_name
+from xmlschemavalidator_spark.engine import explode_failures, with_verdicts
 
 
 def stream_validate(stream_df: DataFrame, ruleset: RuleSet) -> DataFrame:
@@ -26,13 +27,9 @@ def stream_validate(stream_df: DataFrame, ruleset: RuleSet) -> DataFrame:
     one boolean per rule and the ``_doc_ok`` conjunction. Stateless
     (append mode); keying is the caller's concern — every input column is
     carried through. A rule yielding NULL counts as failed in ``_doc_ok``,
-    exactly as in the batch engine."""
-    compiled = ruleset.compile()
-    out = stream_df.withColumns({ok_col_name(rid): c for rid, c in compiled.items()})
-    doc_ok = F.lit(True)
-    for rid in compiled:
-        doc_ok = doc_ok & F.coalesce(F.col(ok_col_name(rid)), F.lit(False))
-    return out.withColumn(DOC_OK, doc_ok)
+    exactly as in the batch engine: both take their verdict columns from
+    engine.with_verdicts."""
+    return with_verdicts(stream_df, ruleset)
 
 
 def stream_violations(stream_df: DataFrame, ruleset: RuleSet, key: str) -> DataFrame:

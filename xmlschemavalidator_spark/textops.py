@@ -134,8 +134,9 @@ def lang_id(text: Column) -> Column:
 def doc_fingerprint(text: Column) -> Column:
     """Deterministic content fingerprint: md5 of the whitespace-normalized,
     lower-cased text. md5 (not xxhash64) so SQL oracles in other engines
-    reproduce it bit-for-bit."""
-    norm = F.lower(F.regexp_replace(F.trim(F.coalesce(text, F.lit(""))), r"\s+", " "))
+    reproduce it bit-for-bit; whitespace is the explicit :data:`_WS` class,
+    which those oracles must use too (RE2's ``\s`` has no ``\x0B``)."""
+    norm = F.lower(F.regexp_replace(F.trim(F.coalesce(text, F.lit(""))), _WS + "+", " "))
     return F.md5(norm)
 
 

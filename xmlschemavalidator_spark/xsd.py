@@ -184,11 +184,33 @@ class ComplexDecl:
     has_any: bool = False
 
 
+@dataclass(eq=False)
+class _XmlPlan:
+    """What validate_xml_column derives from the schema for one root: the
+    from_xml DDL, the flatten Columns and the attribute-remapped RuleSet,
+    whose compile is memoized on it."""
+
+    ddl: str
+    reserved: frozenset[str]  # the flattened column names
+    fields: list[Column]
+    ruleset: RuleSet
+
+
 @dataclass
 class XsdSchema:
     types: TypeRegistry
     complex_types: dict[str, ComplexDecl]
     elements: dict[str, ElementDecl]
+    # root -> _XmlPlan; driver-side expressions only, never data
+    _xml_plans: dict[str, _XmlPlan] = field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
+
+    def __getstate__(self) -> dict:
+        # the cached plans hold JVM Column handles: never pickle or copy them
+        state = self.__dict__.copy()
+        state["_xml_plans"] = {}
+        return state
 
     # ------------------------------------------------------------------
     def _resolve_complex(self, decl: ComplexDecl) -> ComplexDecl:
@@ -500,34 +522,12 @@ class XsdSchema:
             fields.append("`_VALUE` string")
         return "struct<" + ", ".join(fields) + ">"
 
-    def validate_xml_column(
-        self, df: DataFrame, xml_col: str, root: str, key: str
-    ) -> ValidationResult:
-        """Document path: parse the XML column with from_xml, flatten the
-        struct to columns, run the compiled RuleSet — the reference's
-        ``decode`` over a table of documents."""
+    def _xml_plan(self, root: str) -> _XmlPlan:
+        """The cached :class:`_XmlPlan` of ``root``. The DDL and the remapped
+        rules are plain Python, re-derived on each call and compared with
+        the cached ones, so an edit to the schema rebuilds the plan; an
+        unchanged schema reuses its Columns and its compiled RuleSet."""
         ddl = self.xml_struct_ddl(root)
-        ct = self._element_complex(root)
-        # flatten by SELECT, keeping only the key + parsed fields: a
-        # withColumn flatten would silently OVERWRITE input columns that
-        # share a child-element name — including the key column itself,
-        # which would re-key verdicts by document content
-        reserved = {c.name for c in ct.children} | {f"_{a.name}" for a in ct.attributes}
-        if key in reserved or key == "_VALUE":
-            raise ValueError(
-                f"key column {key!r} collides with a declared element/attribute "
-                f"of root {root!r}; rename the key column before validating"
-            )
-        parsed = df.withColumn("_x", F.from_xml(F.col(xml_col), ddl))
-        cols = [F.col(key)] + [
-            F.col(f"_x.{c.name}").alias(c.name) for c in ct.children
-        ] + [F.col(f"_x._{a.name}").alias(f"_{a.name}") for a in ct.attributes]
-        if ct.simple_content is not None:
-            cols.append(F.col("_x._VALUE").alias("_VALUE"))
-        # root_tag is carried when present (dispatch_validate_xml selects it)
-        if "root_tag" in df.columns and "root_tag" not in reserved:
-            cols.append(F.col("root_tag"))
-        flat = parsed.select(*cols)
         rs = self.ruleset_for(root)
         # attribute columns carry the Spark XML '_' prefix; remap ONLY the
         # attribute rules, identified by the structural is_attr flag set in
@@ -535,15 +535,56 @@ class XsdSchema:
         # element literally named 'attr_<x>' (round-1 advisor finding)
         from xmlschemavalidator_spark.xpath_assert import Assertion as _Assert
 
-        rs_attr = RuleSet(rules=[
+        rules = [
             FieldRule(r.rule_id,
                       r.rule.with_attr_prefix("_") if isinstance(r.rule, _Assert) else r.rule,
                       ("_" + r.column) if (r.column and r.is_attr) else r.column,
                       r.observed, is_attr=r.is_attr)
             for r in rs.rules
-        ], registry=rs.registry)
-        return validate(flat, rs_attr, key=key)
+        ]
+        plan = self._xml_plans.get(root)
+        if (
+            plan is not None
+            and plan.ddl == ddl
+            and plan.ruleset.registry is rs.registry
+            and plan.ruleset.rules == rules
+        ):
+            return plan
+        ct = self._element_complex(root)
+        fields = [F.col(f"_x.{c.name}").alias(c.name) for c in ct.children]
+        fields += [F.col(f"_x._{a.name}").alias(f"_{a.name}") for a in ct.attributes]
+        if ct.simple_content is not None:
+            fields.append(F.col("_x._VALUE").alias("_VALUE"))
+        reserved = frozenset(
+            [c.name for c in ct.children] + [f"_{a.name}" for a in ct.attributes]
+        )
+        plan = _XmlPlan(ddl, reserved, fields, RuleSet(rules=rules, registry=rs.registry))
+        self._xml_plans[root] = plan
+        return plan
 
+    def validate_xml_column(
+        self, df: DataFrame, xml_col: str, root: str, key: str
+    ) -> ValidationResult:
+        """Document path: parse the XML column with from_xml, flatten the
+        struct to columns, run the compiled RuleSet — the reference's
+        ``decode`` over a table of documents. The DDL, the flatten Columns
+        and the compiled RuleSet are built once per root (:meth:`_xml_plan`)."""
+        plan = self._xml_plan(root)
+        # flatten by SELECT, keeping only the key + parsed fields: a
+        # withColumn flatten would silently OVERWRITE input columns that
+        # share a child-element name — including the key column itself,
+        # which would re-key verdicts by document content
+        if key in plan.reserved or key == "_VALUE":
+            raise ValueError(
+                f"key column {key!r} collides with a declared element/attribute "
+                f"of root {root!r}; rename the key column before validating"
+            )
+        parsed = df.withColumn("_x", F.from_xml(F.col(xml_col), plan.ddl))
+        cols = [F.col(key), *plan.fields]
+        # root_tag is carried when present (dispatch_validate_xml selects it)
+        if "root_tag" in df.columns and "root_tag" not in plan.reserved:
+            cols.append(F.col("root_tag"))
+        return validate(parsed.select(*cols), plan.ruleset, key=key)
 
     # ------------------------------------------------------------------
     def dispatch_validate_xml(
