@@ -23,7 +23,6 @@ import json
 import sys
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -46,6 +45,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from xmlschemavalidator_spark.flagship import web_ruleset
     from xmlschemavalidator_spark.manifest import MetricsManifest, resumable_validate
+    from xmlschemavalidator_spark.tables import with_bucket
 
     if args.input:
         df = spark.read.parquet(args.input)
@@ -56,10 +56,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.partition_col not in df.columns:
         # derive an Iceberg-partition-like bucket column from the key hash
-        df = df.withColumn(
-            args.partition_col,
-            F.pmod(F.xxhash64(F.col(args.key)), F.lit(args.partition_buckets)).cast("int"),
-        )
+        df = with_bucket(df, args.key, args.partition_buckets, args.partition_col)
 
     manifest = MetricsManifest(f"{args.output}/manifest")
     committed = resumable_validate(

@@ -69,6 +69,28 @@ def test_dynamic_overwrite_replaces_own_partition_only(spark, tmp_path):
     ).count()
 
 
+def test_write_partitioned_leaves_session_conf_alone(spark, tmp_path):
+    """Dynamic overwrite is an option of the writer: the session's
+    partitionOverwriteMode is the same after write_partitioned as before,
+    and a rewrite under the default (static) session mode still replaces
+    only its own partition."""
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(conf)
+    before = spark.conf.get(conf)
+    df = with_bucket(
+        spark.createDataFrame([(f"u{i}", i) for i in range(40)], "url string, n int"),
+        "url", 4,
+    )
+    path = str(tmp_path / "t")
+    write_partitioned(df, path, ["bucket"])
+    assert spark.conf.get(conf) == before
+    write_partitioned(df.where(F.col("bucket") == 2).limit(1), path, ["bucket"])
+    assert spark.conf.get(conf) == before
+    after = spark.read.parquet(path)
+    assert after.where(F.col("bucket") == 2).count() == 1
+    assert after.where(F.col("bucket") != 2).count() == df.where(F.col("bucket") != 2).count()
+
+
 def test_stream_dedup_first_seen(spark, tmp_path):
     from xmlschemavalidator_spark.streaming.stateful import stream_dedup_first_seen
 

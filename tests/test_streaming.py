@@ -134,6 +134,67 @@ def test_streaming_violations_sink_idempotent(spark, tmp_path):
     assert commit["n_violations"] == 2 and commit["n_failed_docs"] == 2
 
 
+def _epoch_commit(out, epoch):
+    import json
+    import os
+
+    with open(os.path.join(out, "_commits", f"epoch={epoch}.json")) as fh:
+        return json.load(fh)
+
+
+def test_sink_commits_all_clean_first_batch(spark, tmp_path):
+    """An all-clean micro-batch writes no violation data file; the sink's
+    read-back must still commit zeros (a schema-inferring read of the empty
+    dataset threw UNABLE_TO_INFER_SCHEMA), called directly and in a query."""
+    from xmlschemavalidator_spark.streaming.sink import (
+        StreamingViolationsSink,
+        write_violations_stream,
+    )
+
+    clean = spark.createDataFrame([("u1", "en"), ("u2", "de")], "url string, lang string")
+    direct = str(tmp_path / "direct")
+    StreamingViolationsSink(_ruleset(), "url", direct)(clean, 0)
+    commit = _epoch_commit(direct, 0)
+    assert commit["n_violations"] == 0 and commit["n_failed_docs"] == 0
+
+    src = str(tmp_path / "src")
+    clean.write.parquet(src)
+    out = str(tmp_path / "out")
+    q = write_violations_stream(
+        spark.readStream.schema("url string, lang string").parquet(src),
+        _ruleset(), "url", out, str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    commit = _epoch_commit(out, 0)
+    assert commit["n_violations"] == 0 and commit["n_failed_docs"] == 0
+
+
+def test_sink_and_manifest_count_null_key_alike(spark, tmp_path):
+    """The sink and resumable_validate read written violations back the
+    same way: a NULL-key violation counts as a violation but not as a
+    failed document (count_distinct skips NULL keys)."""
+    from xmlschemavalidator_spark.manifest import MetricsManifest, resumable_validate
+    from xmlschemavalidator_spark.streaming.sink import StreamingViolationsSink
+
+    df = spark.createDataFrame(
+        [("u1", "xx"), (None, "yy"), ("u2", "en"), (None, "de"), ("u1", "zz")],
+        "url string, lang string",
+    )
+    out = str(tmp_path / "sink")
+    StreamingViolationsSink(_ruleset(), "url", out)(df, 0)
+    commit = _epoch_commit(out, 0)
+
+    [m] = resumable_validate(
+        df.withColumn("part", F.lit(0)), _ruleset(), key="url", partition_col="part",
+        snapshot="s", manifest=MetricsManifest(str(tmp_path / "m")),
+        violations_out=str(tmp_path / "viols"),
+    )
+    assert (commit["n_violations"], commit["n_failed_docs"]) == (3, 1)
+    assert (m.n_violations, m.n_failed_docs) == (3, 1)
+    assert commit["viol_lang_enum"] == 3
+
+
 def test_stream_referential(spark, stream_src):
     """Stream-static referential: langs missing from the dim (and NULL FKs)
     surface as violation rows; the static side broadcasts per batch."""

@@ -12,9 +12,9 @@ lifecycle around it:
 * :func:`drift_report` — sketch the current table the same way, load the
   named baseline snapshot, and emit one KS-style drift number per column
   (max quantile-CDF gap, 0 = identical; see tdigest.quantile_gap_drift);
-* re-snapshotting the same (snapshot, column) overwrites exactly that
-  partition of the store (dynamic partition overwrite — same idempotence
-  contract as the violations sink in manifest.py).
+* re-snapshotting the same snapshot overwrites exactly that partition of
+  the store (``tables.write_partitioned``, dynamic partition overwrite —
+  same idempotence contract as the violations written by manifest.py).
 
 The store layout is plain parquet partitioned by snapshot — readable by
 any engine, diffable across snapshots, and mergeable (centroids are
@@ -34,6 +34,7 @@ from xmlschemavalidator_spark.checks.tdigest import (
     partition_digests_multi,
     quantile_gap_drift,
 )
+from xmlschemavalidator_spark.tables import write_partitioned
 
 _STORE_SCHEMA = "snapshot string, column string, mean double, weight long"
 
@@ -63,13 +64,7 @@ def save_baseline(
     for col, d in digests.items():
         for m, w in zip(d.means, d.weights):
             rows.append((snapshot, col, float(m), int(w)))
-    sdf = spark.createDataFrame(rows, _STORE_SCHEMA)
-    (
-        sdf.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("snapshot")
-        .parquet(path)
-    )
+    write_partitioned(spark.createDataFrame(rows, _STORE_SCHEMA), path, ["snapshot"])
 
 
 def load_baseline(

@@ -1,4 +1,5 @@
-"""Per-partition lineage + metrics manifest with resume.
+"""Per-partition lineage + metrics manifest with resume, and the one
+write-once commit protocol every resumable writer uses.
 
 North rule: "resumable from a checkpointed per-partition lineage/metrics
 manifest (Delta-style commit log keyed by Iceberg partition + snapshot-id),
@@ -9,17 +10,22 @@ directory partitions, or a derived bucket column):
 
 * the job is split by a **partition column** (the unit of commit);
 * each partition's outputs (violation rows) land under
-  ``<out>/part=<p>/`` via dynamic partition overwrite — re-running a
-  partition replaces exactly its own files, so retries are idempotent;
+  ``<out>/part=<p>/`` via ``tables.write_partitioned`` (dynamic partition
+  overwrite) — re-running a partition replaces exactly its own files, so
+  retries are idempotent;
 * after a partition's outputs are durably written, a single JSON commit
-  file ``<manifest>/<snapshot>/part=<p>.json`` records its metrics
+  file ``<manifest>/snapshot=<s>/part=<p>.json`` records its metrics
   (n_rows, n_failed_docs, n_violations, wall seconds, lineage: snapshot id
-  + input fingerprint). The commit file is written ONCE (write-to-temp +
-  atomic rename; an existing commit is never overwritten) — safe under
-  speculative re-execution;
+  + input fingerprint);
 * resume = list commit files for the snapshot, filter the input to
   not-yet-committed partitions (a pushed-down partition-pruning filter),
   process only those.
+
+The streaming violations sink and the drift monitor commit their epochs
+(``_commits/epoch=<batchId>.json``) through the same two functions:
+:func:`commit_once` (write-once: temp file + hard link, an existing commit
+is never overwritten) and :func:`committed_units`. The sink shares
+:func:`violation_counts`, the one read-back of written violations.
 
 Batching: partitions are processed in groups of ``batch_size`` per Spark
 job — at 10^12 rows you want hundreds of partitions per job (amortize
@@ -38,6 +44,72 @@ from pyspark.sql import functions as F
 
 from xmlschemavalidator_spark.compiler import RuleSet
 from xmlschemavalidator_spark.engine import validate
+from xmlschemavalidator_spark.tables import write_partitioned
+
+
+def commit_once(commit_dir: str, unit: str, unit_id: str | int, record: dict) -> bool:
+    """Write ``record`` as ``<commit_dir>/<unit>=<unit_id>.json``, once.
+    Returns False, leaving the existing file alone, if the unit is already
+    committed — idempotent under retries/speculation."""
+    path = os.path.join(commit_dir, f"{unit}={unit_id}.json")
+    if os.path.exists(path):
+        return False
+    tmp = f"{path}.tmp.{os.getpid()}"
+    with open(tmp, "w") as fh:
+        json.dump(record, fh)
+    try:
+        # link (not rename): rename REPLACES an existing file, so two
+        # concurrent committers would both "win"; link fails with EEXIST
+        # for the loser — true write-once under speculation/races
+        os.link(tmp, path)
+        return True
+    except OSError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
+def committed_units(commit_dir: str, unit: str) -> set[str]:
+    """Ids of the ``<unit>=<id>.json`` commits in ``commit_dir``; a leftover
+    temp file of an interrupted commit is not a commit."""
+    prefix = f"{unit}="
+    return {
+        f[len(prefix) : -len(".json")]
+        for f in os.listdir(commit_dir)
+        if f.startswith(prefix) and f.endswith(".json")
+    }
+
+
+def violation_counts(
+    violations: DataFrame,
+    path: str,
+    unit_col: str,
+    units: list[str],
+    key: str,
+    rule_ids: list[str],
+) -> dict[str, dict[str, int]]:
+    """ONE aggregate over the ``violations`` written under ``path``: for
+    each of ``units`` (string ids of ``unit_col``), ``n_violations``,
+    ``n_failed_docs`` (distinct non-NULL keys) and ``viol_<rule>`` for each
+    rule with rows. Read with the EXPLICIT schema: an all-clean unit writes
+    no data file, and a schema-inferring read of no files throws."""
+    unit = F.col(unit_col).cast("string")
+    per_rule = [F.count(F.when(F.col("rule_id") == r, 1)) for r in rule_ids]
+    out = {u: {"n_violations": 0, "n_failed_docs": 0} for u in units}
+    for row in (
+        violations.sparkSession.read.schema(violations.schema)
+        .parquet(path)
+        .where(unit.isin(units))
+        .groupBy(unit)
+        .agg(F.count(F.lit(1)), F.count_distinct(F.col(key)), *per_rule)
+        .collect()
+    ):
+        out[row[0]] = {
+            "n_violations": row[1],
+            "n_failed_docs": row[2],
+            **{f"viol_{r}": n for r, n in zip(rule_ids, row[3:]) if n},
+        }
+    return out
 
 
 @dataclass
@@ -63,36 +135,12 @@ class MetricsManifest:
         os.makedirs(d, exist_ok=True)
         return d
 
-    def _commit_path(self, snapshot: str, partition: str) -> str:
-        return os.path.join(self._snap_dir(snapshot), f"part={partition}.json")
-
     def committed(self, snapshot: str) -> set[str]:
-        d = self._snap_dir(snapshot)
-        out = set()
-        for f in os.listdir(d):
-            if f.startswith("part=") and f.endswith(".json"):
-                out.add(f[len("part="):-len(".json")])
-        return out
+        return committed_units(self._snap_dir(snapshot), "part")
 
     def commit(self, m: PartitionMetrics) -> bool:
-        """Write-once: returns False (no overwrite) if already committed —
-        idempotent under retries/speculation."""
-        path = self._commit_path(m.snapshot, m.partition)
-        if os.path.exists(path):
-            return False
-        tmp = path + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as fh:
-            json.dump(m.__dict__, fh)
-        try:
-            # link (not rename): rename REPLACES an existing file, so two
-            # concurrent committers would both "win"; link fails with EEXIST
-            # for the loser — true write-once under speculation/races
-            os.link(tmp, path)
-        except OSError:
-            os.unlink(tmp)
-            return False
-        os.unlink(tmp)
-        return True
+        """Write-once: returns False (no overwrite) if already committed."""
+        return commit_once(self._snap_dir(m.snapshot), "part", m.partition, m.__dict__)
 
     def metrics(self, snapshot: str) -> list[PartitionMetrics]:
         d = self._snap_dir(snapshot)
@@ -241,14 +289,7 @@ def resumable_validate(
         # the same projection (violation_cols) — never joined back to the
         # input (that join is a second full scan + key shuffle at scale).
         res = validate(sub, ruleset, key=key, violation_cols=[partition_col])
-        # dynamic overwrite scoped to THIS writer (a session-global conf flip
-        # would silently change overwrite semantics for unrelated writes)
-        (
-            res.violations.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(violations_out)
-        )
+        write_partitioned(res.violations, violations_out, [partition_col])
 
         # n_rows per partition: a column-pruned scan reading ONLY the
         # partition column (parquet row-group metadata does most of it).
@@ -258,32 +299,18 @@ def resumable_validate(
             .agg(F.count(F.lit(1)).alias("n_rows"))
             .collect()
         }
-        # failure metrics from the WRITTEN violations (tiny, already durable;
-        # a doc fails iff it has >= 1 violation row). Read back with the
-        # EXPLICIT schema: an all-clean batch writes zero data files, and a
-        # schema-inferring read of a dataset with no files throws — the
-        # clean table is the common case, it must not crash the job.
-        viol_schema = res.violations.schema
-        vstats = {
-            str(r["p"]): (r["n_failed"], r["n_viol"])
-            for r in df.sparkSession.read.schema(viol_schema).parquet(violations_out)
-            .where(F.col(partition_col).cast("string").isin(batch))
-            .groupBy(F.col(partition_col).cast("string").alias("p"))
-            .agg(
-                F.count_distinct(F.col(key)).alias("n_failed"),
-                F.count(F.lit(1)).alias("n_viol"),
-            )
-            .collect()
-        }
+        # failure metrics from the WRITTEN violations (tiny, already durable)
+        counts = violation_counts(
+            res.violations, violations_out, partition_col, batch, key, ruleset.rule_ids()
+        )
         wall = time.time() - t0
         for p, n_rows in rows.items():
-            n_failed, n_viol = vstats.get(p, (0, 0))
             m = PartitionMetrics(
                 snapshot=snapshot,
                 partition=p,
                 n_rows=n_rows,
-                n_failed_docs=int(n_failed),
-                n_violations=int(n_viol),
+                n_failed_docs=counts[p]["n_failed_docs"],
+                n_violations=counts[p]["n_violations"],
                 wall_s=wall / max(len(rows), 1),
                 committed_at=time.time(),
             )

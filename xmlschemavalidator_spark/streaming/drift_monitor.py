@@ -3,17 +3,18 @@ compared against a persisted baseline snapshot.
 
 Composes the batch primitives (checks/baseline.py sketch+compare) under the
 same foreachBatch epoch-commit discipline as StreamingViolationsSink: each
-micro-batch appends one report row per monitored column under
-``epoch=<batchId>`` (dynamic partition overwrite — replays rewrite exactly
-their own files) and then writes a write-once commit marker, so the
-at-least-once foreachBatch contract is effectively exactly-once for the
-drift log. State is ZERO on the stream side — the sketch is recomputed per
-batch (one narrow pass over the batch), and the baseline lives on disk.
+micro-batch writes one report row per monitored column under
+``epoch=<batchId>`` through ``tables.write_partitioned`` (dynamic partition
+overwrite — replays rewrite exactly their own files) and then commits
+``_commits/epoch=<batchId>.json`` with ``manifest.commit_once``
+(write-once), so the at-least-once foreachBatch contract is effectively
+exactly-once for the drift log. State is ZERO on the stream side — the
+sketch is recomputed per batch (one narrow pass over the batch), and the
+baseline lives on disk.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -22,6 +23,8 @@ from pyspark.sql import functions as F
 
 from xmlschemavalidator_spark.checks.baseline import compute_digests, load_baseline
 from xmlschemavalidator_spark.checks.tdigest import Digest, quantile_gap_drift
+from xmlschemavalidator_spark.manifest import commit_once, committed_units
+from xmlschemavalidator_spark.tables import write_partitioned
 
 import numpy as np
 
@@ -57,15 +60,8 @@ class StreamingDriftMonitor:
         os.makedirs(self.commits_dir, exist_ok=True)
         self._baseline: dict[str, Digest] | None = None
 
-    def _commit_path(self, batch_id: int) -> str:
-        return os.path.join(self.commits_dir, f"epoch={batch_id}.json")
-
     def committed_epochs(self) -> set[int]:
-        return {
-            int(f[len("epoch=") : -len(".json")])
-            for f in os.listdir(self.commits_dir)
-            if f.startswith("epoch=") and f.endswith(".json")
-        }
+        return {int(e) for e in committed_units(self.commits_dir, "epoch")}
 
     def _get_baseline(self, spark) -> dict[str, Digest]:
         # loaded once per query run, not per batch — the baseline is
@@ -102,25 +98,13 @@ class StreamingDriftMonitor:
             )
             .withColumn("epoch", F.lit(batch_id))
         )
-        (
-            report.write.mode("overwrite")
-            # scoped to this writer — a session-global conf flip would change
-            # overwrite semantics for every other write in the application
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(os.path.join(self.out_dir, "reports"))
+        write_partitioned(report, os.path.join(self.out_dir, "reports"), ["epoch"])
+        commit_once(
+            self.commits_dir,
+            "epoch",
+            batch_id,
+            {"batch_id": batch_id, "committed_at": time.time(), "columns": self.columns},
         )
-        tmp = self._commit_path(batch_id) + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"batch_id": batch_id, "committed_at": time.time(), "columns": self.columns},
-                fh,
-            )
-        try:
-            os.link(tmp, self._commit_path(batch_id))  # write-once: EEXIST loses
-        except OSError:
-            pass
-        os.unlink(tmp)
 
     def reports(self, spark) -> DataFrame:
         """The accumulated drift log across epochs."""

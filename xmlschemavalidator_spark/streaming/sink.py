@@ -1,16 +1,18 @@
 """Streaming violations sink: foreachBatch + epoch-keyed commit log.
 
-The streaming counterpart of manifest.resumable_validate: each micro-batch
-writes its violation rows under ``epoch=<batchId>`` (dynamic partition
+The streaming counterpart of manifest.resumable_validate, built from the
+same pieces: each micro-batch writes its violation rows under
+``epoch=<batchId>`` through ``tables.write_partitioned`` (dynamic partition
 overwrite → a replayed batch after failure overwrites exactly its own
-files) and then commits a metrics marker keyed by (query, batchId) —
+files), reads them back with ``manifest.violation_counts`` (one aggregate
+over the explicit schema, so an all-clean batch commits zeros) and then
+commits ``_commits/epoch=<batchId>.json`` with ``manifest.commit_once`` —
 write-once, so Structured Streaming's at-least-once foreachBatch contract
 becomes effectively-exactly-once for the sink.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -19,6 +21,8 @@ from pyspark.sql import functions as F
 
 from xmlschemavalidator_spark.compiler import RuleSet
 from xmlschemavalidator_spark.engine import validate
+from xmlschemavalidator_spark.manifest import commit_once, committed_units, violation_counts
+from xmlschemavalidator_spark.tables import write_partitioned
 
 
 class StreamingViolationsSink:
@@ -29,51 +33,29 @@ class StreamingViolationsSink:
         self.commits_dir = os.path.join(out_dir, "_commits")
         os.makedirs(self.commits_dir, exist_ok=True)
 
-    def _commit_path(self, batch_id: int) -> str:
-        return os.path.join(self.commits_dir, f"epoch={batch_id}.json")
-
     def committed_epochs(self) -> set[int]:
-        return {
-            int(f[len("epoch="):-len(".json")])
-            for f in os.listdir(self.commits_dir)
-            if f.startswith("epoch=") and f.endswith(".json")
-        }
+        return {int(e) for e in committed_units(self.commits_dir, "epoch")}
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch body. Replays of an already-committed epoch no-op."""
         if batch_id in self.committed_epochs():
             return
-        spark = batch_df.sparkSession
-        res = validate(batch_df, self.ruleset, key=self.key)
-        viol_path = os.path.join(self.out_dir, "violations")
-        (
-            res.violations.withColumn("epoch", F.lit(batch_id))
-            .write.mode("overwrite")
-            # scoped to this writer, not the shared session conf
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(viol_path)
+        violations = validate(batch_df, self.ruleset, key=self.key).violations.withColumn(
+            "epoch", F.lit(batch_id)
         )
+        viol_path = os.path.join(self.out_dir, "violations")
+        write_partitioned(violations, viol_path, ["epoch"])
         # metrics from the WRITTEN epoch files (tiny) — the violations plan
         # is the one that ran, so don't re-scan the batch for counts
-        written = spark.read.parquet(viol_path).where(F.col("epoch") == batch_id)
-        per_rule = {
-            f"viol_{r['rule_id']}": r["n"]
-            for r in written.groupBy("rule_id").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        counts = {
-            "n_violations": sum(per_rule.values()),
-            "n_failed_docs": written.select(self.key).distinct().count(),
-            **per_rule,
-        }
-        tmp = self._commit_path(batch_id) + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as fh:
-            json.dump({"batch_id": batch_id, "committed_at": time.time(), **counts}, fh)
-        try:
-            os.link(tmp, self._commit_path(batch_id))  # write-once: EEXIST loses
-        except OSError:
-            pass
-        os.unlink(tmp)
+        counts = violation_counts(
+            violations, viol_path, "epoch", [str(batch_id)], self.key, self.ruleset.rule_ids()
+        )[str(batch_id)]
+        commit_once(
+            self.commits_dir,
+            "epoch",
+            batch_id,
+            {"batch_id": batch_id, "committed_at": time.time(), **counts},
+        )
 
 
 def write_violations_stream(

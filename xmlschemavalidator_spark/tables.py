@@ -6,6 +6,11 @@ it keys on a partition COLUMN, however the files are organized). The rule
 at 100 TB: the validation job's heaviest filters (snapshot date, lang
 bucket, url-hash bucket) must be PARTITION columns so scans prune files,
 not rows.
+
+:func:`write_partitioned` is the one dynamic-overwrite writer: the resume
+manifest, the streaming violations sink, the drift monitor and the drift
+baseline store all write through it. Dynamic overwrite is an option of
+that one writer; the session's ``partitionOverwriteMode`` is never set.
 """
 
 from __future__ import annotations
@@ -22,15 +27,16 @@ def with_bucket(df: DataFrame, key: str, n_buckets: int, col_name: str = "bucket
     )
 
 
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    """Partitioned parquet write with dynamic overwrite (re-running a subset
-    replaces exactly its own partitions — the idempotence the resume layer
-    relies on)."""
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
+    """Partitioned parquet write with dynamic overwrite: re-running a subset
+    replaces exactly its own partitions (the idempotence the resume layer
+    relies on) and leaves every other partition under ``path`` alone."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def read_partition(spark: SparkSession, path: str, **equals) -> DataFrame:
