@@ -74,8 +74,6 @@ def headline_queries():
     )
     from xmlschemavalidator_spark.driver_queries import (
         agg_pricing_summary,
-        corpus_bleu_shifted,
-        corpus_wer_dropped_tokens,
         events_cohort_retention,
         text_jaro_winkler_windows,
         ann_cosine_topk,
@@ -246,14 +244,10 @@ def headline_queries():
         # corpus scans)
         "code_switch": lambda s: code_switch_report_q(s, SF_DIR),
         "stratified_audit": lambda s: _bench_stratified_audit(s),
-        # round-4 session-11: reference-based text metrics (BLEU's shared
-        # (doc, order, gram) match-count shuffle; WER's single-codepoint
-        # token encoding through the engines' built-in Levenshtein DP),
-        # the weekly cohort retention matrix (DISTINCT (user, week)
-        # before any join), and the Jaro-Winkler Arrow pandas_udf — the
-        # suite's measured Python-boundary comparator
-        "corpus_bleu": lambda s: corpus_bleu_shifted(s, SF_DIR),
-        "corpus_wer": lambda s: corpus_wer_dropped_tokens(s, SF_DIR),
+        # round-4 session-11: the weekly cohort retention matrix
+        # (DISTINCT (user, week) before any join) and the Jaro-Winkler
+        # Arrow pandas_udf — the suite's measured Python-boundary
+        # comparator
         "cohort_retention": lambda s: events_cohort_retention(s, SF_DIR),
         "jaro_winkler": lambda s: text_jaro_winkler_windows(s, SF_DIR),
     }

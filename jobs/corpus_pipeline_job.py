@@ -926,8 +926,10 @@ def main(argv: list[str] | None = None) -> int:
         default="after_quality",
         help="where the cap runs: after the quality filters (default — "
         "the cap's window sorts scan the filtered pool, and cap slots "
-        "aren't burned on docs quality drops anyway) or in the URL "
-        "layer (exact C4 order: cap before any text judgment)",
+        "aren't burned on docs quality drops anyway; this departs from "
+        "C4's published order and keeps a different document set) or in "
+        "the URL layer (url_layer reproduces C4's published order: cap "
+        "before any text judgment)",
     )
     p.add_argument(
         "--url-badwords",

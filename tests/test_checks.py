@@ -1295,124 +1295,6 @@ def test_semantic_type_classifier_every_class(spark):
         semantic_type_violations(df, "v", "nonsense", "id")
 
 
-def test_denial_constraints_planted(spark):
-    import pytest as _pt
-
-    from xmlschemavalidator_spark.checks.denial import (
-        Pred,
-        denial_block_counts,
-        denial_hot_blocks,
-        denial_violations,
-    )
-
-    # "same part: more quantity never costs less"
-    rows = [
-        # part 1: monotone — no violations
-        (1, 1, 1.0, 10.0), (2, 1, 2.0, 20.0), (3, 1, 3.0, 30.0),
-        # part 2: row 5 has more qty but LOWER price than row 4
-        (4, 2, 5.0, 50.0), (5, 2, 6.0, 40.0),
-        # part 3: null price -> predicate never fires
-        (6, 3, 1.0, None), (7, 3, 2.0, 10.0),
-    ]
-    df = spark.createDataFrame(rows, "id long, pk long, qty double, price double")
-    dc = [Pred("pk", "=", "pk"), Pred("qty", ">", "qty"), Pred("price", "<", "price")]
-    got = {(r["id_a"], r["id_b"]) for r in denial_violations(df, dc, "id").collect()}
-    assert got == {(5, 4)}
-    [r] = denial_violations(df, dc, "id").collect()
-    assert r["rule_id"] == "dc_pk"
-
-    # block-count triage shape
-    [b] = denial_block_counts(df, dc, "id").collect()
-    assert (b["pk"], b["n_pairs"]) == (2, 1)
-
-    # cap: block of part 2 excluded at max_block=1 -> no violations,
-    # and the audit surfaces every oversized block
-    assert denial_violations(df, dc, "id", max_block=1).count() == 0
-    hot = {(r["pk"], r["n_rows"]) for r in denial_hot_blocks(df, dc, max_block=2).collect()}
-    assert hot == {(1, 3)}
-
-    # unblocked DC refused
-    with _pt.raises(ValueError):
-        denial_violations(df, [Pred("qty", ">", "qty")], "id")
-    with _pt.raises(ValueError):
-        Pred("a", "~", "b")
-
-    # symmetric DC (an FD as a DC) yields both orientations
-    fd = [Pred("pk", "=", "pk"), Pred("qty", "=", "qty"), Pred("price", "!=", "price")]
-    df2 = spark.createDataFrame(
-        [(1, 1, 2.0, 10.0), (2, 1, 2.0, 11.0)],
-        "id long, pk long, qty double, price double",
-    )
-    got2 = {(r["id_a"], r["id_b"]) for r in denial_violations(df2, fd, "id").collect()}
-    assert got2 == {(1, 2), (2, 1)}
-
-
-def test_poisson_bootstrap_python_replay(spark):
-    import hashlib
-
-    from xmlschemavalidator_spark.checks.bootstrap import (
-        poisson_bootstrap_mean,
-        poisson_thresholds,
-    )
-
-    vals = [(i, float(10 + (i * 7) % 13)) for i in range(1, 81)]
-    df = spark.createDataFrame(vals, "id long, v double")
-    n_reps = 50
-    [r] = poisson_bootstrap_mean(
-        df, "v", "id", n_reps=n_reps, salt="t"
-    ).collect()
-
-    # full Python replay of the same content-addressed draws
-    ts = poisson_thresholds()
-
-    def weight(rep, rid):
-        h = hashlib.md5(f"t:{rep}:{rid}".encode()).hexdigest()
-        return sum(1 for t in ts if h >= t)
-
-    means = []
-    for rep in range(n_reps):
-        sw = sum(weight(rep, i) * int(v * 1_000_000) for i, v in vals)
-        n = sum(weight(rep, i) for i, v in vals)
-        means.append(sw / n / 1_000_000)
-    means.sort()
-    lo = round(means[(n_reps - 1) * 2500 // 100_000], 6)
-    hi = round(means[(n_reps - 1) * 97500 // 100_000], 6)
-    want_mean = round(
-        sum(int(v * 1e6) for _, v in vals) / len(vals) / 1e6, 6
-    )
-    assert r["n"] == 80 and r["n_reps"] == n_reps
-    assert r["mean"] == want_mean
-    assert (r["ci_lo"], r["ci_hi"]) == (lo, hi)
-    assert r["ci_lo"] <= r["mean"] <= r["ci_hi"]
-
-    # determinism: same salt -> identical CI; different salt -> different
-    [r2] = poisson_bootstrap_mean(df, "v", "id", n_reps=n_reps, salt="t").collect()
-    assert (r2["ci_lo"], r2["ci_hi"]) == (r["ci_lo"], r["ci_hi"])
-    [r3] = poisson_bootstrap_mean(df, "v", "id", n_reps=n_reps, salt="u").collect()
-    assert (r3["ci_lo"], r3["ci_hi"]) != (r["ci_lo"], r["ci_hi"])
-
-    # grouped: one CI row per group, each bracketing its own mean
-    rows = [(i, "a", 1.0 + i % 3) for i in range(60)] + [
-        (i + 100, "b", 100.0 + i % 5) for i in range(60)
-    ]
-    gdf = spark.createDataFrame(rows, "id long, g string, v double")
-    got = {
-        r["g"]: r
-        for r in poisson_bootstrap_mean(
-            gdf, "v", "id", group_cols=("g",), n_reps=40
-        ).collect()
-    }
-    assert set(got) == {"a", "b"}
-    for k, rr in got.items():
-        assert rr["ci_lo"] <= rr["mean"] <= rr["ci_hi"]
-    assert got["b"]["ci_lo"] > got["a"]["ci_hi"]
-
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        poisson_bootstrap_mean(df, "v", "id", n_reps=1)
-
-
 def test_species_richness_hand_computed(spark):
     from xmlschemavalidator_spark.checks.stats import species_richness
 

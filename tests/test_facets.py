@@ -178,3 +178,44 @@ def test_whitespace_xsd_parse_and_sql_parity(spark):
     want = [r[0] for r in con.execute(
         f"SELECT {t.sql_expr('v', PREDEF_TYPES)} FROM t").fetchall()]
     assert [bool(w) if w is not None else False for w in want] == got
+
+
+def test_quoted_literals_compile_sql_duckdb_parity(spark):
+    """Rule values holding a single quote render through
+    RuleSet.compile_sql() into valid DuckDB SQL whose verdicts equal
+    Spark's, for both an Enumeration facet and a FixedAttr."""
+    import duckdb
+
+    from xmlschemavalidator_spark.compiler import FieldRule, RuleSet
+    from xmlschemavalidator_spark.engine import ok_col_name, validate
+    from xmlschemavalidator_spark.rules.attributes import FixedAttr
+    from xmlschemavalidator_spark.rules.types import Restriction
+
+    rows = [
+        (1, "O'Brien", "it's"),
+        (2, "O''Brien", "its"),
+        (3, "'", "it's "),
+        (4, "OBrien", None),
+        (5, None, "it''s"),
+        (6, "''", "it's"),
+    ]
+    rs = RuleSet(rules=[
+        FieldRule("name_enum", Restriction(facets=(Enumeration("O'Brien"), Enumeration("'"))),
+                  column="name"),
+        FieldRule("tag_fixed", FixedAttr("it's"), column="tag"),
+    ])
+    df = spark.createDataFrame(rows, "id int, name string, tag string")
+    cols = [ok_col_name(r) for r in rs.rule_ids()]
+    got = {r["id"]: tuple(r[c] for c in cols)
+           for r in validate(df, rs, key="id").verdicts.select("id", *cols).collect()}
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t(id INTEGER, name VARCHAR, tag VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
+    sqls = rs.compile_sql()
+    duck = {r[0]: tuple(r[1:]) for r in con.execute(
+        f"SELECT id, {sqls['name_enum']}, {sqls['tag_fixed']} FROM t").fetchall()}
+
+    assert got == duck
+    assert got[1] == (True, True) and got[3] == (True, False)
+    assert got[2] == (False, False) and got[6] == (False, True)

@@ -11,6 +11,7 @@ from xmlschemavalidator_spark.flagship import web_ruleset
 from xmlschemavalidator_spark.manifest import (
     MetricsManifest,
     PartitionMetrics,
+    commit_once,
     resumable_validate,
 )
 
@@ -63,6 +64,27 @@ def test_commit_is_write_once(tmp_path):
     assert man.commit(m) is True
     assert man.commit(m) is False  # idempotent under retry/speculation
     assert len(man.metrics("s")) == 1
+
+
+def test_commit_once_raises_on_link_failure_other_than_a_lost_race(tmp_path, monkeypatch):
+    """Only EEXIST from the hard link means another committer won. Any
+    other error (EPERM on a file system without hard links) must raise,
+    leaving neither a commit nor a temp file behind."""
+
+    def link_fails(err):
+        def link(src, dst):
+            raise err(f"link {src} -> {dst}")
+
+        return link
+
+    monkeypatch.setattr("os.link", link_fails(PermissionError))
+    with pytest.raises(PermissionError):
+        commit_once(str(tmp_path), "part", 3, {"n_rows": 1})
+    assert list(tmp_path.iterdir()) == []
+
+    monkeypatch.setattr("os.link", link_fails(FileExistsError))
+    assert commit_once(str(tmp_path), "part", 3, {"n_rows": 1}) is False
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_rerun_after_full_commit_is_noop(spark, paged, tmp_path):

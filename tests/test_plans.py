@@ -629,31 +629,6 @@ def test_stratified_fixed_k_salted_window_bounds_sort(spark):
     assert n_scans(p) == 1
 
 
-def test_bloom_pruned_join_filter_below_exchange(spark):
-    """The bloom membership test must run as a narrow Filter on the fact
-    side BEFORE any exchange/broadcast — pruning after the shuffle would
-    defeat the operator's purpose."""
-    from xmlschemavalidator_spark.checks.bloom import bloom_pruned_join
-
-    fact = spark.range(0, 10_000).select(
-        F.col("id").alias("key"), (F.col("id") * 2).alias("marker")
-    )
-    dim = spark.range(0, 100, 7).select(
-        F.col("id").alias("key"), F.lit("d").alias("payload")
-    )
-    p = fmt(bloom_pruned_join(fact, dim, "key", m=1 << 12, k=3))
-    # the membership predicate compiles to a Filter node (xxhash64 probe)
-    assert "xxhash64" in p
-    # tree summary (parent-first): a post-join filter would print ABOVE
-    # the join line; the pruning filter must sit in the fact branch
-    # BETWEEN the join and the dim side's exchange
-    summary = p[: p.index("\n(1)")]
-    join_pos = summary.index("Join")
-    filter_pos = summary.index("Filter")
-    exchange_pos = summary.index("Exchange")
-    assert join_pos < filter_pos < exchange_pos
-
-
 def test_trigram_index_probe_prunes_partitions(spark, tmp_path):
     """The persisted trigram probe must prune _bucket partition dirs at
     file listing (PartitionFilters), not post-scan."""
@@ -765,54 +740,6 @@ def test_weighted_quantile_one_sort_one_exchange(spark):
     assert len(re.findall(r"\(\d+\) Sort\b", p)) == 1
 
 
-def test_poisson_bootstrap_partial_agg_below_exchange(spark):
-    """The replicate explode must collapse MAP-SIDE: the per-(group,rep)
-    hash aggregate appears in partial mode BELOW the exchange, so the
-    shuffle carries partitions x groups x (R+1) pre-combined rows, never
-    n x R exploded rows. Also exactly one parquet scan (the rep -1
-    point-estimate lane rides the same aggregate)."""
-    import re
-
-    from xmlschemavalidator_spark.checks.bootstrap import (
-        poisson_bootstrap_mean,
-    )
-
-    docs = _docs(spark)
-    df = poisson_bootstrap_mean(
-        docs, "n_chars", "doc_id", group_cols=("lang",), n_reps=50
-    )
-    p = fmt(df)
-    # the per-replicate aggregate is checkpointed once: the final plan
-    # (point + both percentile picks) re-reads the tiny materialized
-    # table and never re-scans the corpus or re-explodes replicates
-    assert n_scans(p) == 0
-    assert "Generate" not in p
-
-    # the materialization itself collapses map-side: partial agg below
-    # the exchange, one corpus scan, explode below the aggregate
-    from pyspark.sql import functions as F2
-
-    v = F2.col("n_chars").cast("double")
-    base = docs.where(v.isNotNull()).select(
-        "lang",
-        F2.floor(v * F2.lit(1_000_000)).cast("decimal(38,0)").alias("_q"),
-        F2.col("doc_id").cast("string").alias("_id"),
-    )
-    long = base.select(
-        "lang", "_q", "_id",
-        F2.explode(F2.sequence(F2.lit(-1), F2.lit(49))).alias("rep"),
-    )
-    agg = long.groupBy("lang", "rep").agg(F2.sum("_q").alias("s"))
-    p2 = fmt(agg)
-    assert n_scans(p2) == 1
-    first_ha = p2.find("HashAggregate")
-    exch = p2.find("Exchange")
-    gen = p2.find("Generate")
-    # tree prints top-down: final agg, exchange, partial agg ... generate
-    assert re.findall(r"\(\d+\) HashAggregate", p2).__len__() == 2
-    assert first_ha < exch < gen
-
-
 def test_cochran_armitage_single_aggregate(spark):
     """The trend test collapses to FIVE integer sums: one scan, one
     partial+final hash aggregate pair (a single Exchange of one row per
@@ -844,23 +771,6 @@ def test_species_richness_two_stacked_aggregates(spark):
     p = fmt(species_richness(docs, "source", group_cols=("lang",)))
     assert n_scans(p) == 1
     assert "Expand" not in p
-
-
-def test_theta_set_ops_filter_before_exchange(spark):
-    """Both sketch sides shed 1-2^-p of rows at the SCAN (the hash
-    threshold filter sits below every Exchange), and the membership fold
-    is one groupBy(h) — no join in the plan."""
-    from xmlschemavalidator_spark.checks.theta import (
-        theta_set_ops,
-        theta_sketch_rows,
-    )
-
-    docs = _docs(spark)
-    a = theta_sketch_rows(docs.where(F.col("doc_id") % 2 == 0), "text", p=4)
-    b = theta_sketch_rows(docs.where(F.col("doc_id") % 2 == 1), "text", p=4)
-    p = fmt(theta_set_ops(a, b, p=4))
-    assert "Join" not in p
-    assert "72057594037927936" in p  # the 2^(60-4) threshold literal is pushed
 
 
 def test_keyness_counts_shuffle_not_text(spark):
@@ -898,26 +808,6 @@ def test_ql_dirichlet_single_token_pass(spark):
     assert n_scans(p) == 2
     assert len(_re.findall(r"\(\d+\) SortMergeJoin|\(\d+\) BroadcastHashJoin", p)) <= 1
     assert "TakeOrderedAndProject" in p
-
-
-def test_ngram_match_counts_single_scan(spark):
-    """BLEU/ROUGE/chrF's shared match-count pass reads the corpus ONCE:
-    all (order, side) gram arrays are tagged structs concatenated in one
-    projection and exploded once — not a 2·max_order-branch Union of
-    rescans (the 100-TB IO bill)."""
-    from xmlschemavalidator_spark.texteval import corpus_chrf, ngram_match_counts
-
-    docs = _docs(spark).select(
-        "doc_id", F.col("text").alias("cand"), F.col("text").alias("ref")
-    )
-    p = fmt(ngram_match_counts(docs, "cand", "ref", "doc_id", 4))
-    assert n_scans(p) == 1
-    assert "Union" not in p
-    p = fmt(corpus_chrf(docs, "cand", "ref", "doc_id"))
-    # chrF adds the bounded n_pairs count branch: ≤ 2 scans, still no
-    # per-order Union fan-out
-    assert n_scans(p) <= 2
-    assert "Union" not in p
 
 
 def test_lift_chart_no_global_sort(spark):

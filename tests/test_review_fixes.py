@@ -235,23 +235,6 @@ def test_approx_heavy_hitters_null_takeover(spark):
     assert got.get(None) == 0.8
 
 
-def test_wav_full_scale_sample_features(spark):
-    """PCM16 minimum (-32768) must not wrap negative through np.abs."""
-    import numpy as np
-
-    from xmlschemavalidator_spark.multimodal import decode_real_features, encode_wav
-
-    samples = np.array([-32768, 32767, 0], dtype=np.int16)
-    df = spark.createDataFrame(
-        [(1, "audio", bytearray(encode_wav(samples)), None)],
-        "media_id long, kind string, content binary, "
-        "meta struct<width:int,height:int,n_frames:int>",
-    )
-    row = decode_real_features(df).collect()[0]
-    assert row["decode_error"] is None
-    assert row["mean_intensity"] > 20000  # mean |.| of full-scale samples
-
-
 def test_identity_tuple_separator_no_collision(spark):
     """Multi-field tuples ('a|b','c') vs ('a','b|c') are DISTINCT keys."""
     from xmlschemavalidator_spark.xsd import parse_xsd

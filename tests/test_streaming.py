@@ -366,166 +366,3 @@ def test_url_layer_composes_with_streaming(spark, tmp_path):
     assert got[1]["canonical_url"] == "http://shop.example.co.uk/a?b=1"
     assert got[1]["domain"] == "example.co.uk" and not got[1]["url_flagged"]
     assert got[2]["url_flagged"]
-
-
-def test_stream_interval_join_matches_batch(spark, tmp_path):
-    """Views paired to same-user clicks within 10 minutes, replayed as
-    two micro-batches — a click in batch 2 must still pair with a view
-    buffered from batch 1; result must equal the batch join."""
-    import glob
-    import os
-    import shutil
-
-    from xmlschemavalidator_spark.streaming.joins import stream_interval_join
-
-    rows = [
-        # (event_id, user_id, type, ts)  — u1: view 10:00, clicks 10:05 (in) / 10:20 (out)
-        (1, 1, "view", "2024-01-01 10:00:00"),
-        (2, 1, "click", "2024-01-01 10:05:00"),
-        (3, 1, "click", "2024-01-01 10:20:00"),
-        # u2: click BEFORE the view never matches
-        (4, 2, "click", "2024-01-01 09:59:00"),
-        (5, 2, "view", "2024-01-01 10:00:00"),
-        # u3 in batch 1, click arrives in batch 2 within bound
-        (6, 3, "view", "2024-01-01 10:08:00"),
-        (7, 3, "click", "2024-01-01 10:12:00"),
-        # NULL ts must be dropped, not stall anything
-        (8, 1, "click", None),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id bigint, user_id bigint, et string, ts_s string"
-    ).select("event_id", "user_id", "et", F.col("ts_s").cast("timestamp").alias("ts"))
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    cut = "2024-01-01 10:10:00"
-    for j, ch in enumerate(
-        [df.where(F.col("ts") <= cut), df.where((F.col("ts") > cut) | F.col("ts").isNull())]
-    ):
-        d = str(tmp_path / f"chunk{j}")
-        ch.coalesce(1).write.parquet(d)
-        dst = f"{src}/{j:04d}.parquet"
-        shutil.move(glob.glob(f"{d}/part-*.parquet")[0], dst)
-        os.utime(dst, (1_600_000_000 + 600 * j,) * 2)
-
-    sdf = (
-        spark.readStream.schema("event_id bigint, user_id bigint, et string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    views = sdf.where(F.col("et") == "view").select(
-        "user_id", F.col("event_id").alias("view_id"), F.col("ts").alias("view_ts")
-    )
-    clicks = sdf.where(F.col("et") == "click").select(
-        "user_id", F.col("event_id").alias("click_id"), F.col("ts").alias("click_ts")
-    )
-    out = stream_interval_join(
-        views, clicks, on="user_id", left_ts="view_ts", right_ts="click_ts",
-        max_delay_seconds=600, watermark="1 hour",
-    )
-    q = (
-        out.writeStream.format("memory").queryName("t_ssj")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    try:
-        assert q.awaitTermination(120)
-    finally:
-        q.stop()
-    got = sorted(
-        (r["user_id"], r["view_id"], r["click_id"])
-        for r in spark.sql("SELECT * FROM t_ssj").collect()
-    )
-    assert got == [(1, 1, 2), (3, 6, 7)]
-
-
-def test_stream_interval_join_rejects_clashes(spark, tmp_path):
-    import pytest
-
-    from xmlschemavalidator_spark.streaming.joins import stream_interval_join
-
-    df = spark.createDataFrame([(1, 1, "2024-01-01 00:00:00")],
-                               "user_id bigint, x bigint, ts string")
-    l = df.select("user_id", "x", F.col("ts").cast("timestamp").alias("lts"))
-    r = df.select("user_id", "x", F.col("ts").cast("timestamp").alias("rts"))
-    with pytest.raises(ValueError, match="disjoint"):
-        stream_interval_join(l, r, "user_id", "lts", "rts", 60)
-    with pytest.raises(ValueError, match="max_delay"):
-        stream_interval_join(
-            l, r.withColumnRenamed("x", "y"), "user_id", "lts", "rts", 0
-        )
-
-
-def test_stream_abandonment_join_emits_null_matches(spark, tmp_path):
-    """Left-outer stream-stream join: u1's view converts, u2's view
-    expires unmatched and must emit ONCE with is_abandoned=true after
-    the watermark passes its window (advanced by a sentinel batch)."""
-    import glob
-    import os
-    import shutil
-
-    from xmlschemavalidator_spark.streaming.joins import stream_abandonment_join
-
-    rows = [
-        (1, 1, "view", "2024-01-01 10:00:00"),
-        (2, 1, "click", "2024-01-01 10:05:00"),
-        (3, 2, "view", "2024-01-01 10:01:00"),   # never clicks
-        # sentinel far-future traffic advances the watermark so the
-        # abandonment verdict for u2 can emit in a following batch
-        (4, 9, "view", "2024-01-01 12:00:00"),
-        (5, 9, "click", "2024-01-01 12:00:30"),
-        (6, 8, "view", "2024-01-01 13:00:00"),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id bigint, user_id bigint, et string, ts_s string"
-    ).select("event_id", "user_id", "et",
-             F.col("ts_s").cast("timestamp").alias("ts"))
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    cuts = [
-        df.where(F.col("ts") < "2024-01-01 11:00:00"),
-        df.where((F.col("ts") >= "2024-01-01 11:00:00")
-                 & (F.col("ts") < "2024-01-01 12:30:00")),
-        df.where(F.col("ts") >= "2024-01-01 12:30:00"),
-    ]
-    for j, ch in enumerate(cuts):
-        d = str(tmp_path / f"chunk{j}")
-        ch.coalesce(1).write.parquet(d)
-        dst = f"{src}/{j:04d}.parquet"
-        shutil.move(glob.glob(f"{d}/part-*.parquet")[0], dst)
-        os.utime(dst, (1_600_000_000 + 600 * j,) * 2)
-
-    sdf = (
-        spark.readStream.schema(
-            "event_id bigint, user_id bigint, et string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    views = sdf.where(F.col("et") == "view").select(
-        "user_id", F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"))
-    clicks = sdf.where(F.col("et") == "click").select(
-        "user_id", F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"))
-    out = stream_abandonment_join(
-        views, clicks, on="user_id", left_ts="view_ts", right_ts="click_ts",
-        max_delay_seconds=600, watermark="1 minute",
-    )
-    q = (
-        out.writeStream.format("memory").queryName("t_aban")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    try:
-        assert q.awaitTermination(180)
-    finally:
-        q.stop()
-    got = {
-        (r["user_id"], r["view_id"]): (r["click_id"], r["is_abandoned"])
-        for r in spark.sql("SELECT * FROM t_aban").collect()
-    }
-    # converted views pair; the u2 view emits exactly once, abandoned
-    assert got[(1, 1)] == (2, False)
-    assert got[(2, 3)] == (None, True)
-    assert got[(9, 4)] == (5, False)
-    import pytest as _pt
-    with _pt.raises(ValueError):
-        stream_abandonment_join(views, views, "user_id", "view_ts",
-                                "view_ts", 60)

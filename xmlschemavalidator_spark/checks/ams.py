@@ -12,11 +12,11 @@ Form: the "fast AMS" / Count-Sketch variant (Alon, Matias & Szegedy
 STOC'96 estimator; Thorup & Zhang SODA'04 bucketing; Charikar et al.
 ICALP'02): ``rows`` independent hash rows, each value lands in ONE of
 ``counters`` signed counters per row — z_{ij} = Σ ±1 — so per-input
-work is ``rows`` hashes (the cms_build contract, not rows×counters).
-Per row F̂₂⁽ⁱ⁾ = Σ_j z_{ij}²; the verdict is the MEDIAN over rows.
+work is ``rows`` hashes, not rows×counters. Per row
+F̂₂⁽ⁱ⁾ = Σ_j z_{ij}²; the verdict is the MEDIAN over rows.
 
-Like the CMS next door, the sketch IS a DataFrame ``(i, j, z)`` with at
-most rows×counters cells: mergeable (union + groupBy-sum), persistable,
+The sketch IS a DataFrame ``(i, j, z)`` with at most rows×counters
+cells: mergeable (union + groupBy-sum), persistable,
 and — because sign and bucket come from the repo's one portable hash
 recipe — bit-identically replayable in DuckDB, so the driver oracle is
 exact, not a statistical bound.
@@ -30,8 +30,8 @@ a double. Output casts to BIGINT assume F₂ < 9·10¹⁸ (true until one
 key holds > 3·10⁹ copies — keep the DECIMAL upstream beyond that).
 
 Reference scope note: eliassona/xmlschemavalidator has no dataset layer
-(core.clj:263-285); north-rule sketch beside checks/cms.py, hll.py,
-tdigest.py, theta.py.
+(core.clj:263-285); north-rule sketch beside checks/hll.py and
+tdigest.py.
 """
 
 from __future__ import annotations

@@ -1857,36 +1857,6 @@ def unpivot_source_metrics(spark, sf_dir):
     )
 
 
-from xmlschemavalidator_spark.layout import zorder_value_sql  # noqa: E402
-
-
-@q(
-    "zorder_curve_docs",
-    f"""SELECT doc_id,
-               {zorder_value_sql(["doc_id % 16", "(doc_id * 7 + 3) % 16"], bits=4)}
-                 AS z
-        FROM documents""",
-)
-def zorder_curve_docs(spark, sf_dir):
-    """The exact Morton-interleave layer under zorder_layout (layout.py —
-    the lakehouse OPTIMIZE ZORDER rewrite): two planted bounded ranks per
-    doc interleave into one BIGINT curve position, bit-for-bit against
-    the DuckDB rendering of the SAME shared recipe (zorder_value_sql —
-    one implementation renders both engines, so the oracle cannot drift).
-    The end-to-end rewrite (percentile bucketing + repartitionByRange +
-    the per-file min/max locality win on every participating column) is
-    pinned in test_layout.py."""
-    from xmlschemavalidator_spark.layout import zorder_value
-
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        zorder_value(
-            F.col("doc_id") % 16, (F.col("doc_id") * 7 + 3) % 16, bits=4
-        ).alias("z"),
-    )
-
-
 @q(
     "outliers_event_value",
     """\
@@ -2892,32 +2862,6 @@ def heavy_hitters_approx(spark, sf_dir):
     return approx_heavy_hitters(_t(spark, sf_dir, "documents"), "source", 0.05)
 
 
-@q("bloom_membership")  # no oracle: xxhash64 bit positions are Spark-specific
-def bloom_membership(spark, sf_dir):
-    """Bloom-filter membership sketch over document fingerprints: built in
-    one bit_or-aggregated pass, tested as a pure Column expression.
-    Output pins the contract: zero false negatives (every member hits),
-    and the measured false-positive count over planted non-members stays
-    near the textbook estimate. Deterministic given the fixed seed."""
-    from xmlschemavalidator_spark.checks.bloom import BloomFilter
-    from xmlschemavalidator_spark.textops import doc_fingerprint
-
-    docs = _t(spark, sf_dir, "documents").select(
-        doc_fingerprint(F.col("text")).alias("fp")
-    )
-    bf = BloomFilter.build(docs, "fp", m=1 << 16, k=5)
-    members_hit = docs.where(bf.might_contain(F.col("fp"))).count()
-    n = docs.count()
-    planted = spark.range(10000).select(
-        F.md5(F.concat(F.lit("not-in-corpus:"), F.col("id").cast("string"))).alias("fp")
-    )
-    fp_hits = planted.where(bf.might_contain(F.col("fp"))).count()
-    return spark.createDataFrame(
-        [(n, members_hit, fp_hits, round(bf.estimated_fpp(n), 6))],
-        "n_members long, members_hit long, false_positives long, est_fpp double",
-    )
-
-
 @q("incremental_near_dedup_roundtrip")  # no oracle: stateful (writes a store)
 def incremental_near_dedup_roundtrip(spark, sf_dir):
     """Cross-batch NEAR-dup dedup (persistent LSH bucket store) exercised
@@ -3223,86 +3167,6 @@ def incremental_revalidation(spark, sf_dir):
     return incremental_revalidate(prev, docs, new, rs, key="doc_id")
 
 
-@q("multimodal_decode_features")
-def multimodal_decode_features(spark, sf_dir):
-    """Multimodal decode end-to-end over REAL byte formats:
-    spec-implemented uncompressed BMP + PNG + baseline JPEG images
-    (rotating per media_id; imagecodecs.py — zlib inflate + all five PNG
-    filters, T.81 Huffman + IDCT) and PCM16 WAV audio (video stays on
-    the disclosed fake container — compressed video needs ffmpeg, absent
-    here). Binary media table → mapInPandas sniff + decode + histogram
-    features → per-(kind, format) aggregate; malformed blobs surface as
-    decode_error rows, and n_decode_errors must be 0 on the generated
-    corpus. Rows-only by design (binary codecs aren't SQL-expressible)."""
-    from xmlschemavalidator_spark.multimodal import decode_real_features, real_media
-
-    media = real_media(spark, 2000)
-    decoded = decode_real_features(media)
-    return (
-        decoded.groupBy("kind", "format")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_media"),
-            F.sum(F.col("decode_error").isNotNull().cast("bigint")).alias("n_decode_errors"),
-            F.round(F.avg("mean_intensity"), 3).alias("avg_intensity"),
-            F.round(F.avg(F.element_at("features", 1)), 5).alias("avg_f0"),
-        )
-        .orderBy("kind", "format")
-    )
-
-
-@q("multimodal_image_neardups")
-def multimodal_image_neardups(spark, sf_dir):
-    """Perceptual image near-dup pairs (dHash + the SAME pigeonhole
-    Hamming pairing the text SimHash uses — dedup.hamming_near_duplicates
-    serves both modalities): a planted media table of 40 gradient bases,
-    each with an exact copy and a one-hot-pixel perturbation, plus one
-    undecodable blob per 10. Each group is encoded in a ROTATING real
-    format — BMP, PNG, or baseline JPEG (imagecodecs.py) by g%3 — so the
-    pairing provably works on compressed crawl-shaped bytes, not just
-    the uncompressed tier (VERDICT r4 item 2). Rows-only by design (the
-    codecs aren't SQL-expressible); the planted structure makes the
-    expected pairing checkable — every (base, copy) pair at hamming 0
-    (identical bytes decode identically, JPEG included), every
-    (base, noisy) pair within the threshold — and the aggregate output
-    pins exactly that."""
-    import numpy as np
-
-    from xmlschemavalidator_spark.imagecodecs import encode_jpeg, encode_png
-    from xmlschemavalidator_spark.multimodal import (
-        MEDIA_SCHEMA,
-        encode_bmp,
-        image_near_dups,
-    )
-
-    rows = []
-    for g in range(40):
-        base = ((np.add.outer(np.arange(16), np.arange(24)) * (2 * g + 1)
-                 + 5 * g) % 256).astype(np.uint8)
-        noisy = base.copy()
-        noisy[3, 3] = 255
-        enc = (encode_bmp, encode_png, encode_jpeg)[g % 3]
-        for j, arr in ((0, base), (1, base), (2, noisy)):
-            rows.append(
-                (g * 10 + j, "image", bytearray(enc(arr)),
-                 {"width": 24, "height": 16, "n_frames": 1})
-            )
-        if g % 10 == 0:
-            rows.append((g * 10 + 9, "image", bytearray(b"corrupt"), None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    pairs = image_near_dups(media, hamming_max=4)
-    return (
-        pairs.groupBy((F.col("id_a") - F.col("id_a") % 10).alias("group_base"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-            F.sum(F.when(F.col("hamming") == 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_exact"),
-            F.max("hamming").cast("bigint").alias("max_hamming"),
-        )
-        .orderBy("group_base")
-    )
-
-
 @q("ann_lsh_recall")
 def ann_lsh_recall(spark, sf_dir):
     """Recall@10 of the LSH-bucketed ANN vs the exact brute-force top-10,
@@ -3415,124 +3279,6 @@ def ann_ivf_index_topk(spark, sf_dir):
         return spark.createDataFrame(
             [(r["vec_id"], r["cosine"]) for r in topk.collect()],
             "vec_id bigint, cosine double",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@q("stream_near_dedup_first_seen")  # no oracle: stateful streaming op
-def stream_near_dedup_first_seen_query(spark, sf_dir):
-    """Streaming ingest-time near-dedup driven with availableNow over the
-    documents table: one surviving row per distinct MinHash-signature key.
-    The batch side of the SAME key expression pins the expected count, so
-    the single output row self-checks kept == distinct keys."""
-    import shutil
-    import tempfile
-
-    from xmlschemavalidator_spark.dedup import near_dedup_key
-    from xmlschemavalidator_spark.streaming.stateful import (
-        stream_near_dedup_first_seen,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="strnear_")
-    try:
-        docs = _t(spark, sf_dir, "documents").select(
-            F.col("doc_id").cast("string").alias("doc_id"), "text"
-        )
-        src = f"{tmp}/src"
-        docs.repartition(4).write.parquet(src)
-        sdf = spark.readStream.schema("doc_id string, text string").parquet(src)
-        name = "q_stream_near_dedup"
-        q = (
-            stream_near_dedup_first_seen(sdf, ["doc_id", "text"])
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(availableNow=True)
-            .option("checkpointLocation", f"{tmp}/ckpt").start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError(
-                    "stream_near_dedup_first_seen did not finish in 300s"
-                )
-        finally:
-            q.stop()  # never leave a stream running over the tmpdir
-        n_kept = spark.sql(f"SELECT count(*) c FROM {name}").first()["c"]
-        # the SAME key expression the operator uses (shared builder —
-        # the self-check cannot drift from the streaming code path)
-        n_expected = docs.select(near_dedup_key("text")).distinct().count()
-        n_input = docs.count()
-        return spark.createDataFrame(
-            [(n_input, int(n_kept), n_expected, n_kept == n_expected)],
-            "n_input long, n_kept long, n_distinct_sigs long, kept_matches_sigs boolean",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@q("stream_latest_capture")  # no oracle: stateful streaming op
-def stream_latest_capture_query(spark, sf_dir):
-    """Streaming latest-capture dedup (streaming/stateful.py:
-    stream_latest_capture — the ingest-time form of snapshot_dedup)
-    driven with availableNow over a planted multi-capture pages stream:
-    per canonical URL, only strictly newer captures emit. The batch
-    side's snapshot_dedup over the SAME input pins the expected newest
-    capture per URL, so the single output row self-checks the stream's
-    per-URL max against the batch winner set."""
-    import shutil
-    import tempfile
-
-    from xmlschemavalidator_spark.streaming.stateful import (
-        stream_latest_capture,
-    )
-    from xmlschemavalidator_spark.weburl import snapshot_dedup
-
-    tmp = tempfile.mkdtemp(prefix="strlatest_")
-    try:
-        # ~25 canonical classes, ~20 captures each, ts ramps by doc_id
-        docs = _t(spark, sf_dir, "documents").select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            F.concat(
-                F.lit("http://s"), (F.col("doc_id") % 5).cast("string"),
-                F.lit(".com/p/"), (F.col("doc_id") % 25).cast("string"),
-            ).alias("url"),
-            (F.lit(1_700_000_000) + F.col("doc_id")).alias("warc_ts"),
-        )
-        src = f"{tmp}/src"
-        docs.repartition(4).write.parquet(src)
-        sdf = spark.readStream.schema(
-            "doc_id string, url string, warc_ts long"
-        ).parquet(src)
-        name = "q_stream_latest"
-        q = (
-            stream_latest_capture(sdf, "url", "warc_ts", ["doc_id"])
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(availableNow=True)
-            .option("checkpointLocation", f"{tmp}/ckpt").start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError(
-                    "stream_latest_capture did not finish in 300s"
-                )
-        finally:
-            q.stop()  # never leave a stream running over the tmpdir
-        # last emission per canonical URL == the improvement log's max
-        emitted = (
-            spark.sql(f"SELECT canonical_url, capture_ts FROM {name}")
-            .groupBy("canonical_url")
-            .agg(F.max("capture_ts").alias("capture_ts"))
-        )
-        batch = snapshot_dedup(docs, "url", "warc_ts", "doc_id").select(
-            "canonical_url", F.col("warc_ts").alias("capture_ts")
-        )
-        n_urls = emitted.count()
-        n_match = emitted.join(
-            batch, ["canonical_url", "capture_ts"], "inner"
-        ).count()
-        return spark.createDataFrame(
-            [(n_urls, batch.count(), n_match, n_urls == n_match)],
-            "n_stream_urls long, n_batch_urls long, n_matching long, "
-            "stream_matches_batch boolean",
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -5543,20 +5289,20 @@ def text_tfidf_top_terms(spark, sf_dir):
 def _mojibake_oracle() -> str:
     import re as _re
 
+    from xmlschemavalidator_spark.rules.facets import sql_lit
     from xmlschemavalidator_spark.textops import (
         _MOJIBAKE_TABLE,
         mojibake_sql,
     )
-    from xmlschemavalidator_spark.textops import _sql_quote as _sq
 
     sample = " ".join(bad for bad, _ in _MOJIBAKE_TABLE[:6])
     plant = (
         "coalesce(text, '')"
-        f" || CASE WHEN doc_id % 6 = 0 THEN chr(10) || {_sq('broken: ' + sample)}"
+        f" || CASE WHEN doc_id % 6 = 0 THEN chr(10) || {sql_lit('broken: ' + sample)}"
         " ELSE '' END"
     )
     alts = "|".join(_re.escape(bad) for bad, _ in _MOJIBAKE_TABLE)
-    count = f"len(regexp_split_to_array({plant}, {_sq('(?:' + alts + ')')})) - 1"
+    count = f"len(regexp_split_to_array({plant}, {sql_lit('(?:' + alts + ')')})) - 1"
     return f"""SELECT doc_id,
        {mojibake_sql(f'({plant})')} AS text,
        CAST({count} AS INT) AS n_mojibake
@@ -6911,48 +6657,6 @@ def text_index_incremental(spark, sf_dir):
 _ORACLES["text_index_incremental"] = _bm25_oracle()
 
 
-_CMS_PROBES = ["table", "hash", "spark", "window", "zzzmissing"]
-_CMS_TOKENS_SQL = (
-    "SELECT lower(unnest(list_filter(regexp_split_to_array("
-    "trim(coalesce(text, '')), '[ \\t\\n\\x0b\\f\\r]+'), x -> x <> ''))) AS v "
-    "FROM documents"
-)
-
-
-def _cms_oracle() -> str:
-    from xmlschemavalidator_spark.checks.cms import cms_estimate_sql
-
-    return (
-        cms_estimate_sql(_CMS_TOKENS_SQL, _CMS_PROBES, depth=4, width=512)
-        + " ORDER BY value"
-    )
-
-
-@q("cms_token_frequencies", None)  # oracle attached below
-def cms_token_frequencies(spark, sf_dir):
-    """Count-Min sketch over the corpus token stream (Cormode &
-    Muthukrishnan 2005; checks/cms.py): one map-side-combined agg into
-    ≤ depth×width cells — the fixed-memory alternative to an exact
-    token groupBy at 10^12 rows — then a broadcast probe of 5 terms
-    (one absent). Hashes are the portable md5 recipe, so the DuckDB
-    replay builds the bit-identical sketch: the oracle checks exact
-    cell values, not a statistical bound."""
-    from xmlschemavalidator_spark.checks.cms import cms_build, cms_estimate
-    from xmlschemavalidator_spark.textops import tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(
-            F.filter(tokens(F.lower(F.col("text"))), lambda t: F.length(t) > 0)
-        ).alias("token")
-    )
-    sk = cms_build(toks, "token", depth=4, width=512)
-    return cms_estimate(sk, _CMS_PROBES, depth=4, width=512).orderBy("value")
-
-
-_ORACLES["cms_token_frequencies"] = _cms_oracle()
-
-
 def _temp_mix_oracle() -> str:
     from xmlschemavalidator_spark.sampling import temperature_mix_sql
 
@@ -7484,98 +7188,6 @@ def temporal_interval_union(spark, sf_dir):
         ).alias("end_ts"),
     )
     return interval_union(iv, on="user_id", start="start_ts", end="end_ts")
-
-
-@q(
-    "temporal_sessionize_streaming",
-    """\
-WITH g AS (
-  SELECT user_id, event_id, ts,
-         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS prev_us
-  FROM events
-)
-SELECT CAST(user_id AS BIGINT) AS user_id,
-       CAST(event_id AS BIGINT) AS event_id,
-       epoch_us(ts) AS ts_us,
-       CAST(SUM(CASE WHEN prev_us IS NULL
-                       OR epoch_us(ts) - prev_us > 21600000000
-                     THEN 1 ELSE 0 END)
-            OVER (PARTITION BY user_id ORDER BY ts, event_id)
-            AS BIGINT) AS session_seq
-FROM g""",
-)
-def temporal_sessionize_streaming(spark, sf_dir):
-    """The SAME 6-hour-gap sessionization maintained by a STATEFUL
-    streaming operator (applyInPandasWithState): events replay as a file
-    stream in three ts-range chunks with ascending mtimes (one file per
-    micro-batch), so per-key arrival order is non-decreasing across
-    batches — the documented batch-equivalence contract of
-    stream_sessionize. State carries (last event time, session counter)
-    across micro-batches; the full sink must hash-match the one-shot SQL
-    window replay, making this a stateful streaming query with a FULL
-    DuckDB oracle (per-event session assignment, cross-batch
-    continuations and gap breaks included)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from xmlschemavalidator_spark.streaming.stateful import stream_sessionize
-
-    tmp = tempfile.mkdtemp(prefix="stsess_")
-    try:
-        e = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-        us = F.unix_micros(F.col("ts").cast("timestamp"))
-        cuts = e.select(
-            F.percentile_approx(us, F.array(F.lit(0.34), F.lit(0.67))).alias("c")
-        ).collect()[0]["c"]
-        lo, hi = int(cuts[0]), int(cuts[1])
-        srcdir = f"{tmp}/in"
-        os.makedirs(srcdir)
-        chunks = [
-            e.where(us <= lo),
-            e.where((us > lo) & (us <= hi)),
-            e.where(us > hi),
-        ]
-        t_base = 1_600_000_000  # ascending mtimes pin the file order the
-        # FileStreamSource processes (it sorts by modification time)
-        for j, ch in enumerate(chunks):
-            d = f"{tmp}/chunk{j}"
-            ch.coalesce(1).write.parquet(d)
-            dst = f"{srcdir}/{j:04d}.parquet"
-            shutil.move(glob.glob(f"{d}/part-*.parquet")[0], dst)
-            os.utime(dst, (t_base + 600 * j, t_base + 600 * j))
-        sdf = (
-            spark.readStream.schema(
-                "event_id bigint, user_id bigint, ts timestamp_ntz"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(srcdir)
-        )
-        out = stream_sessionize(sdf, "user_id", "ts", 21600, "event_id")
-        q_ = (
-            out.writeStream.format("parquet")
-            .option("path", f"{tmp}/sink")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q_.awaitTermination(300):
-                raise TimeoutError("stream_sessionize did not finish in 300s")
-        finally:
-            q_.stop()
-        res = spark.read.parquet(f"{tmp}/sink").select(
-            F.col("user_id").cast("bigint").alias("user_id"),
-            F.col("event_id").cast("bigint").alias("event_id"),
-            F.col("ts_us").cast("bigint").alias("ts_us"),
-            F.col("session_seq").cast("bigint").alias("session_seq"),
-        )
-        return spark.createDataFrame(res.collect(), res.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ===========================================================================
@@ -8369,41 +7981,6 @@ def link_personalized_pagerank(spark, sf_dir):
 
 
 @q(
-    "compaction_plan_docs",
-    """WITH f AS (SELECT lang, doc_id AS file, CAST(n_chars AS BIGINT) AS size
-                  FROM documents),
-            c AS (SELECT lang, file, size,
-                         coalesce(sum(size) OVER (PARTITION BY lang
-                             ORDER BY size DESC, file ASC
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                             0) AS cum
-                  FROM f),
-            b AS (SELECT lang, file, size, cum // 5000 AS bin FROM c)
-       SELECT lang, file, size, bin,
-              CAST(sum(size) OVER (PARTITION BY lang, bin) AS BIGINT) AS bin_bytes,
-              CAST(count(*) OVER (PARTITION BY lang, bin) AS BIGINT) AS bin_files
-       FROM b ORDER BY lang, bin, size DESC, file""",
-)
-def compaction_plan_docs(spark, sf_dir):
-    """Small-file compaction planner (layout.py:compaction_plan — the
-    OPTIMIZE half that Z-order is the clustering half of): documents
-    stand in for the file listing (file=doc_id, size=n_chars,
-    partition=lang), binned to ~5000 bytes. Size-striped deterministic
-    assignment — floor(preceding-cumsum/target) in integer division —
-    so a partially-failed rewrite RETRIES INTO THE SAME PLAN; runs on
-    metadata (one row per file), never the data."""
-    from xmlschemavalidator_spark.layout import compaction_plan
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "lang", F.col("doc_id").alias("file"), "n_chars"
-    )
-    plan = compaction_plan(
-        docs, "n_chars", target_bytes=5000, partition_cols=("lang",)
-    )
-    return plan.orderBy("lang", "bin", F.desc("size"), "file")
-
-
-@q(
     "ecdf_normalize_chars",
     """SELECT doc_id, lang, n_chars,
               CASE WHEN n > 1 THEN (rn - 1) * 1000000 // (n - 1)
@@ -8516,98 +8093,6 @@ def snm_entity_clusters(spark, sf_dir):
         .select(F.col("doc").alias("id"), F.col("cluster"))
         .orderBy("id")
     )
-
-
-@q(
-    "stream_order_violations",
-    """WITH p AS (SELECT event_id, user_id,
-                         CAST(ts AS TIMESTAMP)
-                           - (event_id % 37) * INTERVAL 1 MINUTE AS ts2
-                  FROM events),
-            w AS (SELECT event_id, user_id, ts2,
-                         max(ts2) OVER (PARTITION BY user_id ORDER BY event_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                             AS pm
-                  FROM p)
-       SELECT CAST(user_id AS VARCHAR) AS user_id,
-              CAST(event_id AS VARCHAR) AS event_id,
-              epoch_us(ts2) AS ts_us,
-              epoch_us(pm) AS prev_max_us
-       FROM w WHERE pm IS NOT NULL AND ts2 < pm
-       ORDER BY CAST(event_id AS BIGINT)""",
-)
-def stream_order_violations_q(spark, sf_dir):
-    """The time-ran-backwards monitor as a STATEFUL STREAM
-    (streaming/stateful.py:stream_order_violations): the per-key
-    running-max watermark lives in keyed state across micro-batches and
-    violations emit at ingest. Events (with the same planted disorder
-    as the batch check) replay as a 3-chunk file stream split by
-    event_id — per-key arrival follows log order across batches, the
-    documented batch-equivalence contract — so the full sink hash-
-    matches the one-shot SQL window replay: a stateful streaming
-    validation query with a FULL DuckDB oracle."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from xmlschemavalidator_spark.streaming.stateful import (
-        stream_order_violations,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="stord_")
-    try:
-        e = _t(spark, sf_dir, "events").select(
-            "event_id",
-            "user_id",
-            F.expr(
-                "CAST(ts AS TIMESTAMP) - make_interval(0, 0, 0, 0, 0, "
-                "CAST(event_id % 37 AS INT), 0)"
-            ).alias("ts2"),
-        )
-        n = e.count()
-        srcdir = f"{tmp}/in"
-        os.makedirs(srcdir)
-        chunks = [
-            e.where(F.col("event_id") < n // 3),
-            e.where((F.col("event_id") >= n // 3) & (F.col("event_id") < 2 * n // 3)),
-            e.where(F.col("event_id") >= 2 * n // 3),
-        ]
-        t_base = 1_600_000_000
-        for j, ch in enumerate(chunks):
-            d = f"{tmp}/chunk{j}"
-            ch.coalesce(1).write.parquet(d)
-            dst = f"{srcdir}/{j:04d}.parquet"
-            shutil.move(glob.glob(f"{d}/part-*.parquet")[0], dst)
-            os.utime(dst, (t_base + 600 * j, t_base + 600 * j))
-        sdf = (
-            spark.readStream.schema(
-                "event_id bigint, user_id bigint, ts2 timestamp_ntz"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(srcdir)
-        )
-        out = stream_order_violations(sdf, "user_id", "ts2", "event_id")
-        q_ = (
-            out.writeStream.format("parquet")
-            .option("path", f"{tmp}/sink")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q_.awaitTermination(300)
-        got = (
-            spark.read.schema(
-                "user_id string, event_id string, ts_us long, prev_max_us long"
-            )
-            .parquet(f"{tmp}/sink")
-            .orderBy(F.col("event_id").cast("bigint"))
-            .localCheckpoint()
-        )
-        return got
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 from xmlschemavalidator_spark.textops import flesch_reading_ease_sql  # noqa: E402
@@ -8862,20 +8347,6 @@ def suggest_fds_orders(spark, sf_dir):
     return suggest_fds(
         orders, ["o_orderkey", "o_custkey", "o_orderstatus"]
     ).orderBy("lhs", "rhs")
-
-
-@q("multimodal_image_hash_panel")  # rows-only: no BMP decode in DuckDB
-def multimodal_image_hash_panel(spark, sf_dir):
-    """All three perceptual image hashes in ONE decode pass
-    (multimodal.py:image_hash_panel — at 10^12 images the decode
-    dominates, so dHash/aHash/pHash share a single mapInPandas):
-    ``(doc, dhash, ahash, phash)``. Rows-only like the other multimodal
-    queries (no BMP decode in DuckDB); the hash implementations are
-    pinned by invariance and parity tests in test_multimodal.py."""
-    from xmlschemavalidator_spark.multimodal import image_hash_panel, real_media
-
-    media = real_media(spark, 2000)
-    return image_hash_panel(media).select("doc", "dhash", "ahash", "phash")
 
 
 @q(
@@ -9267,159 +8738,6 @@ def containment_pairs_docs(spark, sf_dir):
     return containment_pairs(
         docs, "doc_id", shingle_n=3, threshold=0.9, max_posting=100000
     ).orderBy("src_id", "dst_id")
-
-
-@q(
-    "frequent_part_pairs",
-    """WITH b AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
-                  FROM lineitem),
-            f1 AS (SELECT item, CAST(count(*) AS BIGINT) AS item_cnt
-                   FROM b GROUP BY 1 HAVING count(*) >= 3),
-            fb AS (SELECT b.basket, b.item, f1.item_cnt
-                   FROM b JOIN f1 USING (item)),
-            n AS (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_baskets
-                  FROM lineitem),
-            sized AS (SELECT basket, count(*) AS sz FROM fb GROUP BY 1),
-            p AS (SELECT a.item AS item_a, bb.item AS item_b,
-                         CAST(count(*) AS BIGINT) AS pair_count
-                  FROM fb a JOIN fb bb
-                    ON a.basket = bb.basket AND a.item < bb.item
-                  JOIN sized s ON s.basket = a.basket
-                  WHERE s.sz > 1 AND s.sz <= 1000
-                  GROUP BY 1, 2 HAVING count(*) >= 3)
-       SELECT item_a, item_b, pair_count,
-              sa.item_cnt AS count_a, sb.item_cnt AS count_b,
-              CAST(round(pair_count::DOUBLE * n.n_baskets::DOUBLE
-                         / (sa.item_cnt::DOUBLE * sb.item_cnt::DOUBLE), 6)
-                   AS DOUBLE) AS lift
-       FROM p JOIN f1 sa ON sa.item = item_a
-              JOIN f1 sb ON sb.item = item_b
-              CROSS JOIN n
-       ORDER BY item_a, item_b""",
-)
-def frequent_part_pairs(spark, sf_dir):
-    """Frequent-itemset pair mining (itemsets.py:frequent_item_pairs —
-    the Apriori pair pass, Agrawal & Srikant VLDB'94): parts
-    co-purchased in >= 3 orders, with lift vs independence. A-priori
-    prune (both items must be frequent), per-basket cap with audit
-    (itemset_hot_baskets), ordered pairs via ONE narrow indexed HOF per
-    basket — never a positional self-join of the exploded table. 63
-    pairs of 2M possible at sf0.01."""
-    from xmlschemavalidator_spark.itemsets import frequent_item_pairs
-
-    li = _t(spark, sf_dir, "lineitem")
-    return frequent_item_pairs(
-        li, "l_orderkey", "l_partkey", min_support=3, max_basket=1000
-    ).orderBy("item_a", "item_b")
-
-
-@q(
-    "streaming_interval_join",
-    """SELECT v.user_id AS user_id,
-              v.event_id AS view_id, epoch_us(v.ts) AS view_us,
-              c.event_id AS click_id, epoch_us(c.ts) AS click_us
-       FROM (SELECT user_id, event_id, ts FROM events
-             WHERE event_type = 'view' AND ts IS NOT NULL) v
-       JOIN (SELECT user_id, event_id, ts FROM events
-             WHERE event_type = 'click' AND ts IS NOT NULL) c
-         ON v.user_id = c.user_id
-        AND c.ts >= v.ts AND c.ts <= v.ts + INTERVAL 30 MINUTE
-       ORDER BY user_id, view_id, click_id""",
-)
-def streaming_interval_join(spark, sf_dir):
-    """Watermarked stream-stream interval join (streaming/joins.py:
-    stream_interval_join — the SS ad-monetization shape): every view
-    paired to same-user clicks within 30 minutes, with events replayed
-    as a 3-chunk ts-ordered file stream (one file per micro-batch) so
-    cross-micro-batch pairing is exercised — a click in batch 3 must
-    match a view buffered since batch 1. Watermark far above the
-    replay's disorder, so the append sink is batch-complete and the
-    DuckDB batch interval join is a FULL oracle (23 pairs at sf0.01).
-    State at scale is bounded by watermark + join bound, never stream
-    length."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from xmlschemavalidator_spark.streaming.joins import stream_interval_join
-
-    tmp = tempfile.mkdtemp(prefix="ssjoin_")
-    try:
-        e = (
-            _t(spark, sf_dir, "events")
-            .where(F.col("event_type").isin("view", "click"))
-            .select("event_id", "user_id", "event_type", "ts")
-        )
-        us = F.unix_micros(F.col("ts").cast("timestamp"))
-        cuts = e.select(
-            F.percentile_approx(us, F.array(F.lit(0.34), F.lit(0.67))).alias("c")
-        ).collect()[0]["c"]
-        lo, hi = int(cuts[0]), int(cuts[1])
-        srcdir = f"{tmp}/in"
-        os.makedirs(srcdir)
-        chunks = [
-            e.where(us <= lo),
-            e.where((us > lo) & (us <= hi)),
-            e.where((us > hi) | us.isNull()),
-        ]
-        t_base = 1_600_000_000
-        for j, ch in enumerate(chunks):
-            d = f"{tmp}/chunk{j}"
-            ch.coalesce(1).write.parquet(d)
-            dst = f"{srcdir}/{j:04d}.parquet"
-            shutil.move(glob.glob(f"{d}/part-*.parquet")[0], dst)
-            os.utime(dst, (t_base + 600 * j, t_base + 600 * j))
-        sdf = (
-            spark.readStream.schema(
-                "event_id bigint, user_id bigint, event_type string, ts timestamp_ntz"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(srcdir)
-        )
-        tscol = F.col("ts").cast("timestamp")
-        views = sdf.where(F.col("event_type") == "view").select(
-            "user_id",
-            F.col("event_id").alias("view_id"),
-            tscol.alias("view_ts"),
-        )
-        clicks = sdf.where(F.col("event_type") == "click").select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            tscol.alias("click_ts"),
-        )
-        out = stream_interval_join(
-            views,
-            clicks,
-            on="user_id",
-            left_ts="view_ts",
-            right_ts="click_ts",
-            max_delay_seconds=1800,
-            watermark="90 days",
-        )
-        q_ = (
-            out.writeStream.format("parquet")
-            .option("path", f"{tmp}/sink")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q_.awaitTermination(300):
-                raise TimeoutError("stream_interval_join did not finish in 300s")
-        finally:
-            q_.stop()
-        res = spark.read.parquet(f"{tmp}/sink").select(
-            F.col("user_id").cast("bigint").alias("user_id"),
-            F.col("view_id").cast("bigint").alias("view_id"),
-            F.unix_micros("view_ts").alias("view_us"),
-            F.col("click_id").cast("bigint").alias("click_id"),
-            F.unix_micros("click_ts").alias("click_us"),
-        )
-        return spark.createDataFrame(res.collect(), res.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @q(
@@ -10338,111 +9656,6 @@ def retrieval_ndcg_metrics(spark, sf_dir):
     return retrieval_metrics(run, qrels, k=10)
 
 
-def _theta_oracle() -> str:
-    from xmlschemavalidator_spark.checks.theta import theta_key_sql
-
-    key = theta_key_sql("event_id", "theta")
-    t = 1 << (60 - 4)
-    return f"""\
-WITH surv AS (SELECT DISTINCT {key} AS h FROM events
-              WHERE event_id IS NOT NULL AND {key} < {t})
-SELECT CAST(count(*) AS BIGINT) AS n_survivors,
-       CAST(count(*) * 16 AS BIGINT) AS estimate
-FROM surv"""
-
-
-@q("theta_distinct_estimate", _theta_oracle())
-def theta_distinct_estimate(spark, sf_dir):
-    """Fixed-threshold theta sketch (checks/theta.py; Bar-Yossef et al.
-    RANDOM'02 / DataSketches fixed-theta mode): approximate distinct
-    event_ids where the shuffle carries only the ~1/16 of hashes under
-    the threshold — the oracle-checkable middle ground between exact
-    count_distinct (full-column shuffle) and HLL (engine-specific
-    registers, rows-only). The portable md5 key makes the ESTIMATE
-    itself hash-exact cross-engine — an approximate-cardinality path
-    the driver can value-check."""
-    from xmlschemavalidator_spark.checks.theta import theta_distinct
-
-    return theta_distinct(_t(spark, sf_dir, "events"), "event_id", p=4)
-
-
-def _theta_merge_oracle() -> str:
-    from xmlschemavalidator_spark.checks.theta import theta_key_sql
-
-    key = theta_key_sql("event_id", "theta")
-    t = 1 << (60 - 4)
-    return f"""\
-WITH parts AS (
-  SELECT DISTINCT event_id % 3 AS b, {key} AS h FROM events
-  WHERE event_id IS NOT NULL AND {key} < {t}),
-merged AS (SELECT DISTINCT h FROM parts),
-direct AS (SELECT DISTINCT {key} AS h FROM events
-           WHERE event_id IS NOT NULL AND {key} < {t})
-SELECT (SELECT CAST(count(*) AS BIGINT) FROM merged) AS n_survivors,
-       (SELECT CAST(count(*) * 16 AS BIGINT) FROM merged) AS estimate,
-       (SELECT count(*) FROM merged) = (SELECT count(*) FROM direct)
-         AS matches_direct"""
-
-
-@q("theta_partial_merge", _theta_merge_oracle())
-def theta_partial_merge(spark, sf_dir):
-    """The sketch's mergeability contract, exercised the way a 100 TB
-    ingest would use it: three per-batch sketches (event_id mod 3 —
-    disjoint batches) unioned and re-estimated must equal the one-shot
-    whole-corpus sketch EXACTLY (same hashes survive the same
-    threshold) — the same partials-equal-one-shot guarantee the rollup
-    and CDC stores rely on. matches_direct is computed, not assumed."""
-    from xmlschemavalidator_spark.checks.theta import (
-        theta_estimate,
-        theta_sketch_rows,
-    )
-
-    events = _t(spark, sf_dir, "events")
-    parts = [
-        theta_sketch_rows(
-            events.where(F.col("event_id") % 3 == i), "event_id", p=4
-        )
-        for i in range(3)
-    ]
-    u = parts[0]
-    for s in parts[1:]:
-        u = u.unionByName(s)
-    merged = theta_estimate(u, p=4)
-    direct = theta_estimate(
-        theta_sketch_rows(events, "event_id", p=4), p=4
-    ).select(F.col("n_survivors").alias("_direct"))
-    return merged.crossJoin(direct).select(
-        "n_survivors",
-        "estimate",
-        (F.col("n_survivors") == F.col("_direct")).alias("matches_direct"),
-    )
-
-
-def _theta_group_oracle() -> str:
-    from xmlschemavalidator_spark.checks.theta import theta_key_sql
-
-    key = theta_key_sql("user_id", "theta")
-    t = 1 << (60 - 1)
-    return f"""\
-WITH surv AS (SELECT DISTINCT event_type AS "group", {key} AS h FROM events
-              WHERE user_id IS NOT NULL AND {key} < {t})
-SELECT "group", CAST(count(*) AS BIGINT) AS n_survivors,
-       CAST(count(*) * 2 AS BIGINT) AS estimate
-FROM surv GROUP BY 1"""
-
-
-@q("theta_distinct_by_group", _theta_group_oracle())
-def theta_distinct_by_group_q(spark, sf_dir):
-    """Per-group sketched cardinality (distinct users per event type) —
-    the per-domain/per-source panel shape. The narrow threshold filter
-    still precedes the shuffle; the distinct runs on (group, h)."""
-    from xmlschemavalidator_spark.checks.theta import theta_distinct_by_group
-
-    return theta_distinct_by_group(
-        _t(spark, sf_dir, "events"), "user_id", "event_type", p=1
-    )
-
-
 def _grouped_split_oracle() -> str:
     from xmlschemavalidator_spark.sampling import assign_split_sql
 
@@ -10799,39 +10012,6 @@ def text_stupid_backoff_lm(spark, sf_dir):
         "n_trigrams",
         "logscore_micro",
         F.round("avg_logscore", 6).alias("avg_logscore"),
-    )
-
-
-@q(
-    "bloom_pruned_fact_join",
-    """SELECT o.o_orderkey, o.o_custkey, c.c_nationkey,
-              round(o.o_totalprice, 2) AS total_2dp
-       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-       WHERE c.c_nationkey < 3""",
-)
-def bloom_pruned_fact_join(spark, sf_dir):
-    """Bloom-pruned fact⋈dim join (checks/bloom.py:bloom_pruned_join —
-    the explicit runtime-filter pattern): the dim side is the
-    c_nationkey<3 customer slice (184 of 1500 at sf0.01), whose key
-    filter prunes ~88% of the 15k-row fact side with a narrow Column
-    test BEFORE any exchange. Semantically transparent by the
-    no-false-negative property, so the oracle is the PLAIN join —
-    hash-equality here proves both the pruning's losslessness and that
-    false positives ride through to the exact join. 1745 result rows
-    measured at sf0.01."""
-    from xmlschemavalidator_spark.checks.bloom import bloom_pruned_join
-
-    orders = _t(spark, sf_dir, "orders")
-    dim = (
-        _t(spark, sf_dir, "customer")
-        .where(F.col("c_nationkey") < 3)
-        .select(F.col("c_custkey").alias("o_custkey"), "c_nationkey")
-    )
-    return bloom_pruned_join(orders, dim, "o_custkey", m=1 << 16, k=5).select(
-        "o_orderkey",
-        "o_custkey",
-        "c_nationkey",
-        F.round("o_totalprice", 2).alias("total_2dp"),
     )
 
 
@@ -11721,39 +10901,6 @@ def trigram_index_search(spark, sf_dir):
     )
 
 
-from xmlschemavalidator_spark.layout import rendezvous_shard_sql  # noqa: E402
-
-
-@q(
-    "rendezvous_shard_assignment",
-    f"""SELECT doc_id,
-              {rendezvous_shard_sql('doc_id', 7)} AS shard_7,
-              {rendezvous_shard_sql('doc_id', 8)} AS shard_8,
-              {rendezvous_shard_sql('doc_id', 7)}
-                <> {rendezvous_shard_sql('doc_id', 8)} AS moved
-       FROM documents""",
-)
-def rendezvous_shard_assignment(spark, sf_dir):
-    """Rendezvous/HRW shard routing (layout.py:rendezvous_shard) at
-    S=7 AND S=8 side by side — the audit that shows the consistent-
-    routing property itself: every `moved` row lands on the NEW shard
-    and ~1/8 of keys move (mod-N would move ~7/8). The routing layer
-    for the incremental stores (dedup fingerprints, LSH buckets, index
-    batches) when the shard count must grow in place. Narrow bounded
-    HOF per row, no shuffle; portable md5 weights replayed exactly."""
-    from xmlschemavalidator_spark.layout import rendezvous_shard
-
-    docs = _t(spark, sf_dir, "documents")
-    s7 = rendezvous_shard(F.col("doc_id"), 7, portable=True)
-    s8 = rendezvous_shard(F.col("doc_id"), 8, portable=True)
-    return docs.select(
-        "doc_id",
-        s7.alias("shard_7"),
-        s8.alias("shard_8"),
-        (s7 != s8).alias("moved"),
-    )
-
-
 def _method_eval_oracle() -> str:
     """Meta-oracle: composes the exact-Jaccard truth with both portable
     candidate oracles — one query scoring two operators against a third,
@@ -12099,64 +11246,6 @@ def eb_shrunken_source_rates(spark, sf_dir):
         ).cast("int").alias("has_spark"),
     )
     return eb_shrunken_rates(scored, ("source",), "has_spark")
-
-
-_SKIP_AUDIT_DIR = "/tmp/sparkgraft_skip_audit"
-_SKIP_LO, _SKIP_HI = 100.0, 200.0
-
-
-@q(
-    "parquet_skip_audit",
-    f"""WITH s AS (
-         SELECT row_group_num_rows AS n_rows,
-                CAST(stats_min_value AS DOUBLE) AS mn,
-                CAST(stats_max_value AS DOUBLE) AS mx
-         FROM parquet_metadata('{_SKIP_AUDIT_DIR}/**/*.parquet')
-         WHERE path_in_schema = 'n_chars_d')
-       SELECT CAST(count(*) AS BIGINT) AS n_row_groups,
-              CAST(sum(CASE WHEN mn IS NOT NULL AND mx IS NOT NULL
-                        AND (mx < {_SKIP_LO!r} OR mn > {_SKIP_HI!r})
-                        THEN 1 ELSE 0 END) AS BIGINT) AS n_skippable,
-              CAST(sum(n_rows) AS BIGINT) AS n_rows_total,
-              CAST(sum(CASE WHEN mn IS NOT NULL AND mx IS NOT NULL
-                        AND (mx < {_SKIP_LO!r} OR mn > {_SKIP_HI!r})
-                        THEN n_rows ELSE 0 END) AS BIGINT) AS n_rows_skippable,
-              CAST(sum(CASE WHEN mn IS NOT NULL AND mx IS NOT NULL
-                        AND (mx < {_SKIP_LO!r} OR mn > {_SKIP_HI!r})
-                        THEN 1 ELSE 0 END) * 1000000 // count(*) AS BIGINT)
-                AS skip_ratio_micro
-       FROM s""",
-)
-def parquet_skip_audit(spark, sf_dir):
-    """Row-group data-skipping audit (layout.py:parquet_rowgroup_stats +
-    skip_audit — the measurement half of the Z-order/compaction layout
-    ops): documents re-laid-out clustered on n_chars (one file per
-    250-wide bucket dir), then the parquet FOOTERS alone answer how
-    many row groups the predicate 100<=n_chars<=200 prunes — the exact
-    rule the reader's row-group pruning applies at 100 TB. The write is
-    deterministic (fixed bucket dirs, one file each), so the DuckDB
-    parquet_metadata() replay over the same fixed path hash-matches;
-    the Spark side always rewrites the layout before auditing."""
-    import shutil
-
-    from xmlschemavalidator_spark.layout import parquet_rowgroup_stats, skip_audit
-
-    docs = _t(spark, sf_dir, "documents").where(F.col("n_chars").isNotNull())
-    shutil.rmtree(_SKIP_AUDIT_DIR, ignore_errors=True)
-    (
-        docs.select(
-            F.col("doc_id"),
-            F.col("n_chars").cast("double").alias("n_chars_d"),
-            (F.col("n_chars") / 250).cast("int").alias("b"),
-        )
-        .repartition("b")
-        .sortWithinPartitions("n_chars_d")
-        .write.partitionBy("b")
-        .mode("overwrite")
-        .parquet(_SKIP_AUDIT_DIR)
-    )
-    stats = parquet_rowgroup_stats(spark, _SKIP_AUDIT_DIR, "n_chars_d")
-    return skip_audit(stats, _SKIP_LO, _SKIP_HI)
 
 
 @q(
@@ -12510,89 +11599,6 @@ def fs_em_scored_linkage(spark, sf_dir):
         pj, agreements, learned, upper_micro=20_000_000, lower_micro=0
     )
     return out.select("id_a", "id_b", "weight_micro", "decision")
-
-
-@q(
-    "stream_rate_violations",
-    """WITH w AS (SELECT 'h' || CAST(user_id % 20 AS VARCHAR) AS host,
-                         CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000
-                              AS BIGINT) * 3600 AS window_start,
-                         count(*) AS n
-                  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2)
-       SELECT host, window_start FROM w WHERE n > 3""",
-)
-def stream_rate_violations_q(spark, sf_dir):
-    """The crawl-politeness breaker as a STATEFUL STREAM
-    (streaming/stateful.py:stream_rate_violations): per-host
-    (window, count) keyed state across micro-batches, tripping the
-    moment a window crosses the limit — at ingest, not in tomorrow's
-    batch audit. Events replay as a 3-chunk file stream split by TS
-    THIRDS (per-host window ids nondecreasing across batches — the
-    batch-equivalence contract), so the emitted set hash-matches the
-    one-shot batch audit's violating (host, window) pairs: one more
-    stateful streaming query with a FULL SQL oracle."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from xmlschemavalidator_spark.streaming.stateful import stream_rate_violations
-
-    tmp = tempfile.mkdtemp(prefix="strate_")
-    try:
-        e = (
-            _t(spark, sf_dir, "events")
-            .where(F.col("ts").isNotNull())
-            .select(
-                F.concat(F.lit("h"), (F.col("user_id") % 20).cast("string")).alias(
-                    "host"
-                ),
-                F.col("ts").cast("timestamp").alias("ts"),
-            )
-        )
-        cuts = e.agg(
-            F.expr("percentile(unix_micros(ts), 0.33)").alias("c1"),
-            F.expr("percentile(unix_micros(ts), 0.66)").alias("c2"),
-        ).collect()[0]
-        c1, c2 = int(cuts["c1"]), int(cuts["c2"])
-        us = F.unix_micros("ts")
-        chunks = [
-            e.where(us < c1),
-            e.where((us >= c1) & (us < c2)),
-            e.where(us >= c2),
-        ]
-        srcdir = f"{tmp}/in"
-        os.makedirs(srcdir)
-        t_base = 1_600_000_000
-        for j, ch in enumerate(chunks):
-            d = f"{tmp}/chunk{j}"
-            ch.coalesce(1).write.parquet(d)
-            dst = f"{srcdir}/{j:04d}.parquet"
-            shutil.move(glob.glob(f"{d}/part-*.parquet")[0], dst)
-            os.utime(dst, (t_base + 600 * j, t_base + 600 * j))
-        sdf = (
-            spark.readStream.schema("host string, ts timestamp_ntz")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(srcdir)
-        )
-        out = stream_rate_violations(sdf, "host", "ts", max_per_window=3, window_s=3600)
-        q_ = (
-            out.writeStream.format("parquet")
-            .option("path", f"{tmp}/sink")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q_.awaitTermination(300)
-        got = (
-            spark.read.schema("host string, window_start long")
-            .parquet(f"{tmp}/sink")
-            .localCheckpoint()
-        )
-        return got
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @q(
@@ -14596,39 +13602,6 @@ def benford_money_mentions(spark, sf_dir):
     return benford_first_digit(amt, "cents")
 
 
-def _hilbert_oracle() -> str:
-    from xmlschemavalidator_spark.layout import hilbert_index_sql
-
-    body = hilbert_index_sql(
-        "(SELECT doc_id, doc_id % 61 AS x, (doc_id * 7) % 59 AS y FROM documents)",
-        ["doc_id", "x", "y"],
-        "x",
-        "y",
-        bits=6,
-    )
-    return f"WITH {body} SELECT doc_id, x, y, hilbert_d FROM h_out"
-
-
-@q("hilbert_curve_index", _hilbert_oracle())
-def hilbert_curve_index(spark, sf_dir):
-    """Hilbert-curve index (layout.py:hilbert_index — the locality
-    upgrade Z-order lacks: consecutive d are NEIGHBORING cells, never a
-    quadrant teleport, so contiguous file ranges cover compact
-    rectangles and per-file min/max spans tighten on BOTH clustered
-    columns; the property liquid clustering moved to Hilbert for).
-    Classic xy2d bit walk, every level literal-constant integer
-    arithmetic with (x,y,d) LET-BOUND per step via chained selects; the
-    oracle replays the identical walk as chained CTEs."""
-    from xmlschemavalidator_spark.layout import hilbert_index
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        (F.col("doc_id") % 61).alias("x"),
-        ((F.col("doc_id") * 7) % 59).alias("y"),
-    )
-    return hilbert_index(docs, "x", "y", bits=6)
-
-
 _PLANT_HOMOGLYPH_TEXT = """concat(text,
   CASE WHEN doc_id % 6 = 0 THEN ' visit pаypal today'
        WHEN doc_id % 6 = 1 THEN ' contact Μicrosoft support'
@@ -14661,129 +13634,6 @@ def mixed_script_homoglyphs(spark, sf_dir):
     )
     sig = mixed_script_words(F.col("t"))
     return p.select("doc_id", *(c.alias(k) for k, c in sig.items()))
-
-
-@q(
-    "streaming_abandonment_join",
-    """WITH b AS (SELECT min(epoch_us(ts)) AS mn, max(epoch_us(ts)) AS mx
-                  FROM events
-                  WHERE event_type IN ('view', 'click') AND ts IS NOT NULL),
-       cut AS (SELECT mn + 2 * ((mx - mn) // 3)
-                      - 60000000 - 1800000000 - 1000000 AS c
-               FROM b),
-       v AS (SELECT user_id, event_id, ts FROM events
-             WHERE event_type = 'view' AND ts IS NOT NULL
-               AND epoch_us(ts) <= (SELECT c FROM cut)),
-       ck AS (SELECT user_id, event_id, ts FROM events
-              WHERE event_type = 'click' AND ts IS NOT NULL)
-       SELECT v.user_id AS user_id, v.event_id AS view_id,
-              epoch_us(v.ts) AS view_us,
-              ck.event_id AS click_id, epoch_us(ck.ts) AS click_us,
-              ck.event_id IS NULL AS is_abandoned
-       FROM v LEFT JOIN ck
-         ON v.user_id = ck.user_id
-        AND ck.ts >= v.ts AND ck.ts <= v.ts + INTERVAL 30 MINUTE""",
-)
-def streaming_abandonment_join(spark, sf_dir):
-    """Watermarked LEFT OUTER stream-stream join (streaming/joins.py:
-    stream_abandonment_join) — the MISSING-event monitor: views that
-    never convert within 30 minutes emit once with is_abandoned=true
-    AFTER the watermark proves no click can still arrive. Events replay
-    as a 3-chunk ts-ordered file stream (min+max integer-arithmetic
-    cuts — deterministic in both engines, unlike approx percentiles);
-    the compared set is restricted to views whose verdict windows are
-    provably closed by the batch-3 watermark (view_us ≤ hi − wm − delay
-    − 1s margin), making the DuckDB batch LEFT JOIN a FULL oracle for
-    matches AND abandonments."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from xmlschemavalidator_spark.streaming.joins import stream_abandonment_join
-
-    tmp = tempfile.mkdtemp(prefix="ssaban_")
-    try:
-        e = (
-            _t(spark, sf_dir, "events")
-            .where(F.col("event_type").isin("view", "click") & F.col("ts").isNotNull())
-            .select("event_id", "user_id", "event_type", "ts")
-        )
-        us = F.unix_micros(F.col("ts").cast("timestamp"))
-        bounds = e.agg(F.min(us).alias("mn"), F.max(us).alias("mx")).collect()[0]
-        mn, mx = int(bounds["mn"]), int(bounds["mx"])
-        lo = mn + (mx - mn) // 3
-        hi = mn + 2 * ((mx - mn) // 3)
-        cutoff = hi - 60_000_000 - 1_800_000_000 - 1_000_000
-        srcdir = f"{tmp}/in"
-        os.makedirs(srcdir)
-        chunks = [
-            e.where(us <= lo),
-            e.where((us > lo) & (us <= hi)),
-            e.where(us > hi),
-        ]
-        t_base = 1_600_000_000
-        for j, ch in enumerate(chunks):
-            d = f"{tmp}/chunk{j}"
-            ch.coalesce(1).write.parquet(d)
-            dst = f"{srcdir}/{j:04d}.parquet"
-            shutil.move(glob.glob(f"{d}/part-*.parquet")[0], dst)
-            os.utime(dst, (t_base + 600 * j, t_base + 600 * j))
-        sdf = (
-            spark.readStream.schema(
-                "event_id bigint, user_id bigint, event_type string, ts timestamp_ntz"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(srcdir)
-        )
-        tscol = F.col("ts").cast("timestamp")
-        views = sdf.where(F.col("event_type") == "view").select(
-            "user_id",
-            F.col("event_id").alias("view_id"),
-            tscol.alias("view_ts"),
-        )
-        clicks = sdf.where(F.col("event_type") == "click").select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            tscol.alias("click_ts"),
-        )
-        out = stream_abandonment_join(
-            views,
-            clicks,
-            on="user_id",
-            left_ts="view_ts",
-            right_ts="click_ts",
-            max_delay_seconds=1800,
-            watermark="1 minute",
-        )
-        q_ = (
-            out.writeStream.format("parquet")
-            .option("path", f"{tmp}/sink")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q_.awaitTermination(300):
-                raise TimeoutError("stream_abandonment_join did not finish in 300s")
-        finally:
-            q_.stop()
-        res = (
-            spark.read.parquet(f"{tmp}/sink")
-            .where(F.unix_micros("view_ts") <= cutoff)
-            .select(
-                F.col("user_id").cast("bigint").alias("user_id"),
-                F.col("view_id").cast("bigint").alias("view_id"),
-                F.unix_micros("view_ts").alias("view_us"),
-                F.col("click_id").cast("bigint").alias("click_id"),
-                F.unix_micros("click_ts").alias("click_us"),
-                "is_abandoned",
-            )
-        )
-        return spark.createDataFrame(res.collect(), res.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _cofire_oracle() -> str:
@@ -15696,158 +14546,6 @@ def nelson_aalen_user_hazard(spark, sf_dir):
     return nelson_aalen(u, "dur", "obs")
 
 
-@q("lang_fasttext_roundtrip")  # rows-only: binary artifact IO
-def lang_fasttext_roundtrip(spark, sf_dir):
-    """fastText .bin import path (fasttext_io.py, VERDICT r4 missing
-    item 4): a supervised model written in the public binary layout is
-    read back and served by the Arrow-batched prediction UDF; the query
-    reports per-label doc counts plus the roundtrip invariants (file
-    reparse bit-exact at float32, Spark predictions == the pure-Python
-    replay on every doc). The NB export bridge is exercised too: the
-    engine's trained weight grid rides the same format. Rows-only by
-    design (binary IO); parity pinned in tests/test_fasttext_io.py."""
-    import shutil
-    import tempfile
-
-    import numpy as np
-
-    from xmlschemavalidator_spark.fasttext_io import (
-        export_nb_as_fasttext,
-        predict_lang_fasttext,
-        read_fasttext_model,
-        write_fasttext_model,
-    )
-    from xmlschemavalidator_spark.lang_model import train_lang_model
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 200)
-        .select("doc_id", "text")
-        .localCheckpoint()
-    )
-    rng = np.random.default_rng(9)
-    words = ["</s>", "the", "and", "der", "und", "och", "att", "le", "la"]
-    labels = ["__label__en", "__label__de", "__label__sv"]
-    bucket, dim = 64, 8
-    inp = rng.standard_normal((len(words) + bucket, dim))
-    out_m = rng.standard_normal((len(labels), dim))
-    tmp = tempfile.mkdtemp(prefix="ft_rt_")
-    try:
-        path = f"{tmp}/model.bin"
-        write_fasttext_model(path, words, labels, inp, out_m, bucket,
-                             minn=2, maxn=3, wordNgrams=2)
-        m = read_fasttext_model(path)
-        pred = predict_lang_fasttext(docs, m, "doc_id").localCheckpoint()
-        replay_ok = all(
-            (r["lang_pred"], r["score"]) == (
-                m.predict_py(t)[0].removeprefix("__label__"),
-                round(m.predict_py(t)[1], 6),
-            )
-            for r, t in zip(
-                pred.orderBy("doc").collect(),
-                [x["text"] for x in docs.orderBy("doc_id").collect()],
-            )
-        )
-        nb = train_lang_model(
-            _t(spark, sf_dir, "documents").where(F.col("doc_id") < 200),
-            "doc_id", n_buckets=64,
-        )
-        export_nb_as_fasttext(nb, f"{tmp}/nb.bin")
-        nb_ft = read_fasttext_model(f"{tmp}/nb.bin")
-        nb_bridge_ok = (
-            nb_ft.labels == [f"__label__{lg}" for lg in nb.langs]
-            and nb_ft.bucket == nb.n_buckets
-        )
-        counts = (
-            pred.groupBy("lang_pred")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-            .withColumn("replay_identical", F.lit(bool(replay_ok)))
-            .withColumn("nb_bridge_ok", F.lit(bool(nb_bridge_ok)))
-            .orderBy("lang_pred")
-        )
-        return counts.localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@q("tokenizer_hf_roundtrip")  # rows-only: artifact IO + iterative training
-def tokenizer_hf_roundtrip(spark, sf_dir):
-    """Tokenizer artifact export/import (tokenizer_io.py, VERDICT r4
-    item 4): train all three tokenizers on the documents head, write
-    each as a HuggingFace tokenizers-JSON file, reload, re-encode, and
-    report per-family whether the reloaded model's token ids are
-    BIT-IDENTICAL to the in-engine model's (they must be — the reload
-    runs with an empty segmentation fast path, so this also proves the
-    OOV path equals the seg-table path). Rows-only by design (file IO +
-    iterative training); the same contract is pinned per-family in
-    tests/test_tokenizer_io.py."""
-    import shutil
-    import tempfile
-
-    from xmlschemavalidator_spark.bpe import bpe_encode_ids, train_bpe
-    from xmlschemavalidator_spark.tokenizer_io import (
-        load_hf_tokenizer,
-        save_hf_bpe,
-        save_hf_unigram,
-        save_hf_wordpiece,
-    )
-    from xmlschemavalidator_spark.unigram import (
-        train_unigram,
-        unigram_encode,
-        unigram_encode_ids,
-        unigram_vocab,
-    )
-    from xmlschemavalidator_spark.wordpiece import (
-        train_wordpiece,
-        wordpiece_encode,
-        wordpiece_vocab,
-    )
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 80)
-        .select("doc_id", "text")
-        .localCheckpoint()
-    )
-
-    def ids_map(df):
-        return {r["doc"]: list(r["ids"]) for r in df.select("doc", "ids").collect()}
-
-    tmp = tempfile.mkdtemp(prefix="tok_hf_")
-    out = []
-    try:
-        bpe = train_bpe(docs, n_merges=40, max_words=500, min_frequency=1)
-        save_hf_bpe(bpe, f"{tmp}/bpe.json")
-        lb = load_hf_tokenizer(spark, f"{tmp}/bpe.json")
-        want = ids_map(bpe_encode_ids(docs, bpe, "doc_id"))
-        got = ids_map(bpe_encode_ids(docs, lb.model, "doc_id", vocab=lb.vocab))
-        out.append(("bpe", len(want), want == got))
-
-        wp = train_wordpiece(docs, vocab_size=80, max_words=500, min_frequency=1)
-        save_hf_wordpiece(wp, f"{tmp}/wp.json")
-        lw = load_hf_tokenizer(spark, f"{tmp}/wp.json")
-        want = ids_map(unigram_encode_ids(
-            wordpiece_encode(docs, wp, "doc_id"), wordpiece_vocab(wp)))
-        got = ids_map(unigram_encode_ids(
-            wordpiece_encode(docs, lw.model, "doc_id"), lw.vocab))
-        out.append(("wordpiece", len(want), want == got))
-
-        ug = train_unigram(docs, vocab_size=120, max_words=500, max_piece_len=6)
-        save_hf_unigram(ug, f"{tmp}/ug.json")
-        lu = load_hf_tokenizer(spark, f"{tmp}/ug.json")
-        want = ids_map(unigram_encode_ids(
-            unigram_encode(docs, ug, "doc_id"),
-            unigram_vocab(ug).select("piece", "id")))
-        got = ids_map(unigram_encode_ids(
-            unigram_encode(docs, lu.model, "doc_id"), lu.vocab))
-        out.append(("unigram", len(want), want == got))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        out, "family string, n_docs bigint, ids_identical boolean"
-    ).orderBy("family")
-
-
 @q("embedding_opq_report")  # no oracle: Lloyd + SVD are engine-specific
 def embedding_opq_report(spark, sf_dir):
     """OPQ vs plain PQ at equal bytes/vector (similarity.py:opq_train —
@@ -16141,138 +14839,6 @@ def semantic_violations_mixed(spark, sf_dir):
     return semantic_type_violations(staged, "mixed_str", "integer", "event_id")
 
 
-# ===========================================================================
-# denial constraints (checks/denial.py)
-# ===========================================================================
-
-# the synthetic lineitem does NOT have unique (orderkey, linenumber) —
-# the uniqueness_duplicates query exists because of exactly that — so the
-# staged row id is a per-part row_number (deterministic: ties on the full
-# ordering tuple are byte-identical rows, hence interchangeable labels)
-_DC_STAGED_SQL = (
-    "SELECT l_partkey * 100000 + row_number() OVER ("
-    " PARTITION BY l_partkey ORDER BY l_orderkey, l_linenumber,"
-    " l_quantity, l_extendedprice) AS lid,"
-    " l_partkey, l_quantity, l_extendedprice FROM lineitem"
-)
-
-
-def _dc_preds():
-    from xmlschemavalidator_spark.checks.denial import Pred
-
-    return [
-        Pred("l_partkey", "=", "l_partkey"),
-        Pred("l_quantity", ">", "l_quantity"),
-        Pred("l_extendedprice", "<", "l_extendedprice"),
-    ]
-
-
-def _dc_staged(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    w = Window.partitionBy("l_partkey").orderBy(
-        "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
-    )
-    return li.select(
-        (F.col("l_partkey") * 100000 + F.row_number().over(w)).alias("lid"),
-        "l_partkey",
-        "l_quantity",
-        "l_extendedprice",
-    )
-
-
-def _dc_counts_oracle() -> str:
-    from xmlschemavalidator_spark.checks.denial import (
-        denial_block_counts_oracle_sql,
-    )
-
-    return denial_block_counts_oracle_sql(
-        _DC_STAGED_SQL, _dc_preds(), "lid", rule_id="dc_price_monotone"
-    )
-
-
-@q("denial_constraint_block_counts", _dc_counts_oracle())
-def denial_constraint_block_counts(spark, sf_dir):
-    """Denial constraint over lineitem (checks/denial.py) — the DC
-    ¬(t.partkey = u.partkey ∧ t.qty > u.qty ∧ t.price < u.price):
-    'for the same part, more quantity never costs less'. Blocked
-    self-join on the equality predicate (Catalyst extracts it as the
-    join key, the comparisons ride as join filters), hot blocks capped
-    + audited, per-block violation tallies as the compact triage shape
-    (the full ordered-pair list is 440k rows at sf0.01 — the tallies
-    are what a human reads first). Pairs shuffle only inside blocks."""
-    from xmlschemavalidator_spark.checks.denial import denial_block_counts
-
-    return denial_block_counts(
-        _dc_staged(spark, sf_dir), _dc_preds(), "lid",
-        rule_id="dc_price_monotone",
-    )
-
-
-def _dc_pairs_oracle() -> str:
-    from xmlschemavalidator_spark.checks.denial import denial_oracle_sql
-
-    return denial_oracle_sql(
-        "SELECT * FROM (" + _DC_STAGED_SQL + ") WHERE l_partkey % 97 = 0",
-        _dc_preds(),
-        "lid",
-        rule_id="dc_price_monotone",
-    )
-
-
-@q("denial_constraint_pairs", _dc_pairs_oracle())
-def denial_constraint_pairs(spark, sf_dir):
-    """The same DC's ordered violating PAIRS (id_a, id_b, rule_id) on a
-    1/97 slice of parts — the full-fidelity shape, oracle-replayed
-    exactly (same blocking, same cap, same three-valued null
-    semantics). Asymmetric predicates make the pair orientation
-    meaningful: id_a is the more-quantity-cheaper row."""
-    from xmlschemavalidator_spark.checks.denial import denial_violations
-
-    staged = _dc_staged(spark, sf_dir).where(F.col("l_partkey") % 97 == 0)
-    return denial_violations(
-        staged, _dc_preds(), "lid", rule_id="dc_price_monotone"
-    )
-
-
-# ===========================================================================
-# Poisson bootstrap (checks/bootstrap.py)
-# ===========================================================================
-
-def _boot_oracle() -> str:
-    from xmlschemavalidator_spark.checks.bootstrap import (
-        poisson_bootstrap_oracle_sql,
-    )
-
-    return poisson_bootstrap_oracle_sql(
-        "SELECT doc_id, lang, n_chars FROM documents",
-        "n_chars", "doc_id", group_cols=("lang",), n_reps=200, salt="boot",
-    )
-
-
-@q("poisson_bootstrap_mean_chars", _boot_oracle())
-def poisson_bootstrap_mean_chars(spark, sf_dir):
-    """Poisson bootstrap 95% CI for per-language mean document length
-    (checks/bootstrap.py:poisson_bootstrap_mean — Chamandy et al.'s
-    at-scale bootstrap): the classical resample-n-rows-R-times is
-    unimplementable at 10^12 docs; Poisson(1) weights per (row,
-    replicate) need ONE streaming pass. Weights are content-addressed
-    (md5 hex vs precomputed inverse-CDF thresholds — the engine's
-    md5-threshold trick lifted from sampling to RESAMPLING), so the
-    oracle replays every draw bit-exactly. Replicates explode map-side
-    and partially aggregate before the single shuffle (exchange carries
-    partitions x langs x 201 rows, never n x R); integer rank picks, no
-    percentile interpolation convention to diverge."""
-    from xmlschemavalidator_spark.checks.bootstrap import (
-        poisson_bootstrap_mean,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return poisson_bootstrap_mean(
-        docs, "n_chars", "doc_id", group_cols=("lang",), n_reps=200,
-        salt="boot",
-    )
-
-
 def _brier_oracle() -> str:
     from xmlschemavalidator_spark.checks.evaluation import brier_oracle_sql
 
@@ -16541,64 +15107,6 @@ def cramers_v_lang_source(spark, sf_dir):
     from xmlschemavalidator_spark.checks.stats import cramers_v
 
     return cramers_v(_t(spark, sf_dir, "documents"), "lang", "source")
-
-
-def _theta_setops_oracle() -> str:
-    from xmlschemavalidator_spark.checks.theta import theta_key_sql
-    from xmlschemavalidator_spark.textops import _WS
-
-    thresh = 1 << (60 - 4)
-    return f"""WITH tok AS (
-     SELECT doc_id % 2 = 0 AS ina, w FROM (
-       SELECT doc_id, unnest(string_split_regex(trim(coalesce(text, '')),
-              '{_WS}+')) AS w FROM documents) WHERE w <> ''),
-   surv AS (SELECT ina, h FROM (
-       SELECT ina, {theta_key_sql('w', 'crawlcmp')} AS h FROM tok)
-     WHERE h < {thresh}),
-   per AS (SELECT h, max(CASE WHEN ina THEN 1 ELSE 0 END) AS a,
-                  max(CASE WHEN ina THEN 0 ELSE 1 END) AS b
-           FROM surv GROUP BY h),
-   agg AS (SELECT CAST(sum(a) AS BIGINT) AS n_a,
-                  CAST(sum(b) AS BIGINT) AS n_b,
-                  CAST(count(*) AS BIGINT) AS n_union,
-                  CAST(sum(a * b) AS BIGINT) AS n_intersect
-           FROM per)
- SELECT n_a, n_b, n_union, n_intersect,
-   CAST(n_a * 16 AS BIGINT) AS est_a,
-   CAST(n_b * 16 AS BIGINT) AS est_b,
-   CAST(n_union * 16 AS BIGINT) AS est_union,
-   CAST(n_intersect * 16 AS BIGINT) AS est_intersect,
-   CAST((n_a - n_intersect) * 16 AS BIGINT) AS est_only_a,
-   CAST((n_b - n_intersect) * 16 AS BIGINT) AS est_only_b,
-   CASE WHEN n_union > 0 THEN n_intersect * 1000000 // n_union END
-     AS jaccard_micro
- FROM agg"""
-
-
-@q("theta_vocab_overlap", _theta_setops_oracle())
-def theta_vocab_overlap(spark, sf_dir):
-    """Theta-sketch set operations (checks/theta.py:theta_set_ops)
-    between the token vocabularies of two crawl halves (doc_id parity
-    as the snapshot split): union/intersection/difference ESTIMATES and
-    the direct KMV Jaccard (Beyer et al. SIGMOD'07) — the cross-crawl
-    overlap question HLL can't answer without inclusion–exclusion
-    error stacking (est_only_b = genuinely new vocabulary = frontier
-    growth; jaccard≈1 = a refetch). Portable md5 hashing makes the
-    whole estimate hash-exact in DuckDB — an approximate set-op path
-    the driver can value-check, unlike any HLL intersection. Both
-    sketches shed 15/16 of tokens at the scan before anything
-    shuffles."""
-    from xmlschemavalidator_spark.checks.theta import theta_set_ops, theta_sketch_rows
-    from xmlschemavalidator_spark.textops import tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    tok = docs.select(
-        (F.col("doc_id") % 2 == 0).alias("ina"),
-        F.explode(tokens(F.col("text"))).alias("w"),
-    ).where(F.col("w") != "")
-    sa = theta_sketch_rows(tok.where(F.col("ina")), "w", p=4, salt="crawlcmp")
-    sb = theta_sketch_rows(tok.where(~F.col("ina")), "w", p=4, salt="crawlcmp")
-    return theta_set_ops(sa, sb, p=4)
 
 
 def _prf_oracle() -> str:
@@ -18194,76 +16702,6 @@ def conformal_density_gate(spark, sf_dir):
     return conformal_gate(scored, "score", "id", alpha_milli=100)
 
 
-def _bleu_oracle() -> str:
-    from xmlschemavalidator_spark.texteval import _toks_sql, corpus_bleu_oracle_sql
-
-    cand = (
-        f"array_to_string(list_slice({_toks_sql('text')}, 2,"
-        f" len({_toks_sql('text')})), ' ')"
-    )
-    return corpus_bleu_oracle_sql(
-        "SELECT doc_id, text FROM documents WHERE text IS NOT NULL",
-        cand,
-        "text",
-        "doc_id",
-    )
-
-
-@q("corpus_bleu_shifted", _bleu_oracle())
-def corpus_bleu_shifted(spark, sf_dir):
-    """Corpus BLEU (texteval.py:corpus_bleu, Papineni ACL'02) of every
-    doc minus its FIRST token against the doc itself — a planted
-    transform whose BLEU is high-but-not-1 with a real brevity penalty
-    (cand is exactly n_docs tokens shorter), exercising clipping, all
-    four modified precisions, the micro-ln geometric mean and BP in one
-    measured number. ONE (doc, order, gram) token-scale shuffle with
-    map-side combine; the rest is 4 rows. Oracle replays the identical
-    pass in DuckDB — bit-exact."""
-    from xmlschemavalidator_spark.texteval import _toks, corpus_bleu
-
-    docs = _t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    toks = _toks(F.col("text"))
-    paired = docs.select(
-        "doc_id",
-        F.array_join(F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))), " ").alias("cand"),
-        F.col("text").alias("ref"),
-    )
-    return corpus_bleu(paired, "cand", "ref", "doc_id")
-
-
-def _rouge_oracle() -> str:
-    from xmlschemavalidator_spark.texteval import _toks_sql, rouge_n_oracle_sql
-
-    cand = f"array_to_string(list_slice({_toks_sql('text')}, 1, 50), ' ')"
-    return rouge_n_oracle_sql(
-        "SELECT doc_id, text FROM documents WHERE text IS NOT NULL",
-        cand,
-        "text",
-        "doc_id",
-    )
-
-
-@q("corpus_rouge_lead50", _rouge_oracle())
-def corpus_rouge_lead50(spark, sf_dir):
-    """Micro ROUGE-1/2 (texteval.py:rouge_n, Lin 2004) of the LEAD-50
-    summary (first 50 tokens) against the full doc — the classic
-    extractive-baseline grading shape: precision reads ~1 (every lead
-    gram is in the doc), recall is the measured fraction of the doc the
-    lead covers, f1 = 2·overlap/(cand+ref) stays one exact division.
-    Same shared match-count pass as BLEU; corpus-level micro sums in
-    DECIMAL before any ratio."""
-    from xmlschemavalidator_spark.texteval import _toks, rouge_n
-
-    docs = _t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    toks = _toks(F.col("text"))
-    paired = docs.select(
-        "doc_id",
-        F.array_join(F.slice(toks, 1, 50), " ").alias("cand"),
-        F.col("text").alias("ref"),
-    )
-    return rouge_n(paired, "cand", "ref", "doc_id")
-
-
 # bow-tie fixture: doc_id%80 lays down a 75-node graph holding every
 # Broder class — 0..19 core ring (SCC), 20..29 feeders (IN), 30..39
 # sinks (OUT), 40..44 IN-side tendrils, 45..49 OUT-side tendrils,
@@ -18477,8 +16915,8 @@ def text_jaro_winkler_windows(spark, sf_dir):
     1990) between two overlapping 20-char windows of each doc — a
     measured spread of similarities exercising matches, transpositions
     and the prefix boost. The Spark side is an Arrow-batched pandas_udf
-    (the per-pair flag-array walk has no Column form — disclosed
-    multimodal-class exception); the oracle is DuckDB's BUILT-IN
+    (the per-pair flag-array walk has no Column form — a disclosed
+    Python-path exception); the oracle is DuckDB's BUILT-IN
     jaro_winkler_similarity, so the hash compare crosschecks two
     INDEPENDENT implementations of the same parameterization (p=0.1,
     prefix≤4, boost>0.7 — fuzz-verified on 3k random pairs)."""
@@ -18491,82 +16929,6 @@ def text_jaro_winkler_windows(spark, sf_dir):
         F.substring(F.coalesce(F.col("text"), F.lit("")), 9, 20).alias("b"),
     )
     return with_jaro_winkler(pairs, "a", "b").select("doc_id", "jw")
-
-
-def _wer_oracle() -> str:
-    from xmlschemavalidator_spark.texteval import _toks_sql, wer_oracle_sql
-
-    # drop every 7th token (DuckDB lambda index is 1-based)
-    cand = (
-        f"array_to_string(list_filter({_toks_sql('text')},"
-        " (t, i) -> i % 7 <> 0), ' ')"
-    )
-    return wer_oracle_sql(
-        "SELECT doc_id, text FROM documents WHERE text IS NOT NULL",
-        cand,
-        "text",
-        "doc_id",
-    )
-
-
-@q("corpus_wer_dropped_tokens", _wer_oracle())
-def corpus_wer_dropped_tokens(spark, sf_dir):
-    """Corpus word error rate (texteval.py:corpus_wer — the ASR/NIST
-    alignment-strict metric beside BLEU/ROUGE's order-blind overlap)
-    of every doc with each 7th token dropped, vs the doc itself: the
-    measured WER is the deletion fraction the transform planted
-    (≈1/7 over the 100-token windows). Token-level Levenshtein with NO
-    Python: pair-local vocab → one CODEPOINT per token (chr 32..255
-    where Spark's mod-256 chr and DuckDB's chr agree) → the engines'
-    built-in string Levenshtein IS the word-level distance; DuckDB's
-    independent DP crosschecks the whole encoding trick. Exact integer
-    edit/length sums in DECIMAL, one division."""
-    from xmlschemavalidator_spark.texteval import _toks, corpus_wer
-
-    docs = _t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    toks = _toks(F.col("text"))
-    paired = docs.select(
-        "doc_id",
-        F.array_join(
-            F.filter(toks, lambda t, i: (i + 1) % 7 != 0), " "  # 0-based index
-        ).alias("cand"),
-        F.col("text").alias("ref"),
-    )
-    return corpus_wer(paired, "cand", "ref", "doc_id")
-
-
-def _chrf_oracle() -> str:
-    from xmlschemavalidator_spark.texteval import corpus_chrf_oracle_sql
-
-    # candidate = text minus its LAST 5 characters (morphology-ish damage)
-    cand = "substr(coalesce(text, ''), 1, greatest(length(coalesce(text, '')) - 5, 0))"
-    return corpus_chrf_oracle_sql(
-        "SELECT doc_id, text FROM documents WHERE text IS NOT NULL",
-        cand,
-        "text",
-        "doc_id",
-    )
-
-
-@q("corpus_chrf_truncated", _chrf_oracle())
-def corpus_chrf_truncated(spark, sf_dir):
-    """Corpus chrF (texteval.py:corpus_chrf, Popović WMT'15) of every
-    doc minus its last 5 characters vs the doc itself — character-level
-    damage that WORD metrics barely see (one token edited) but chrF
-    prices correctly across all 6 char-gram orders; β=2 recall-weighted,
-    whitespace stripped per the paper. P/R exact rationals 12dp-rounded
-    then DECIMAL-summed over the effective orders; same single
-    (doc, order, gram) shuffle shape as BLEU, on characters."""
-    from xmlschemavalidator_spark.texteval import corpus_chrf
-
-    docs = _t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    t = F.coalesce(F.col("text"), F.lit(""))
-    paired = docs.select(
-        "doc_id",
-        F.substring(t, 1, F.greatest(F.length(t) - 5, F.lit(0))).alias("cand"),
-        F.col("text").alias("ref"),
-    )
-    return corpus_chrf(paired, "cand", "ref", "doc_id")
 
 
 def _cohort_oracle() -> str:

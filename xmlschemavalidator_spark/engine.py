@@ -32,6 +32,7 @@ partitioning. At 10^12 rows, nothing here is a bottleneck beyond the scan.
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass
 from typing import Optional
 
@@ -383,6 +384,35 @@ def expectation_summary(
     )
 
 
+def _rule_pair_failures(df: DataFrame, ruleset: RuleSet) -> DataFrame:
+    """``(rule_a, rule_b, n_fail_a, n_fail_b, n_both, n_rows)``, one row
+    per unordered pair of rules in sorted id order, from ONE aggregate over
+    one scan: ``n_rows``, each rule's failures ``_f_i`` and each pair's
+    joint failures ``_b_i_j`` — k + k(k−1)/2 longs per partition reach
+    the shuffle (k = #rules, bounded by the ruleset, never by data) — then
+    ``stack()`` renders the pair table from that single row, never a join.
+    NULL verdicts count as failed, same convention as validate()."""
+    compiled = ruleset.compile()
+    rids = sorted(compiled)
+    fails = [(~F.coalesce(compiled[r], F.lit(False))).cast("long") for r in rids]
+    pairs = list(itertools.combinations(range(len(rids)), 2))
+    aggs = [F.count(F.lit(1)).cast("bigint").alias("n_rows")]
+    aggs += [F.sum(f).cast("bigint").alias(f"_f_{i}") for i, f in enumerate(fails)]
+    aggs += [
+        F.sum(fails[i] * fails[j]).cast("bigint").alias(f"_b_{i}_{j}") for i, j in pairs
+    ]
+    stack = ", ".join(
+        f"'{rids[i]}', '{rids[j]}', _f_{i}, _f_{j}, _b_{i}_{j}" for i, j in pairs
+    )
+    return df.agg(*aggs).select(
+        F.expr(
+            f"stack({len(pairs)}, {stack})"
+            " AS (rule_a, rule_b, n_fail_a, n_fail_b, n_both)"
+        ),
+        "n_rows",
+    )
+
+
 def rule_cooccurrence(df: DataFrame, ruleset: RuleSet) -> DataFrame:
     """Pairwise rule-failure co-occurrence — the root-cause question a
     violation report raises next: "do these rules fail on the SAME rows
@@ -390,40 +420,14 @@ def rule_cooccurrence(df: DataFrame, ruleset: RuleSet) -> DataFrame:
 
     For every unordered rule pair, counts rows failing both and scores
     association: ``lift`` = P(both) / (P(a)·P(b)) (>1 ⇒ failures
-    co-locate) and failure-set ``jaccard``. Everything comes from ONE
-    aggregate over one scan — k + k(k−1)/2 longs per partition reach the
-    shuffle (k = #rules, bounded by the ruleset, never by data), then a
-    driver-side stack renders the pair table. NULL verdicts count as
-    failed, same convention as validate().
+    co-locate) and failure-set ``jaccard``. The counts come from
+    :func:`_rule_pair_failures` (one aggregate over one scan).
 
     ``lift`` is NULL when either marginal is zero and ``jaccard`` when
     both are (association undefined — never a divide-by-zero under ANSI
     mode).
     """
-    compiled = ruleset.compile()
-    rids = sorted(compiled)
-    fails = {
-        r: (~F.coalesce(compiled[r], F.lit(False))).cast("long") for r in rids
-    }
-    aggs = [F.count(F.lit(1)).cast("bigint").alias("n_rows")]
-    aggs += [
-        F.sum(fails[r]).cast("bigint").alias(f"_f_{i}") for i, r in enumerate(rids)
-    ]
-    pairs = [(i, j) for i in range(len(rids)) for j in range(i + 1, len(rids))]
-    aggs += [
-        F.sum(fails[rids[i]] * fails[rids[j]]).cast("bigint").alias(f"_b_{i}_{j}")
-        for i, j in pairs
-    ]
-    stack = ", ".join(
-        f"'{rids[i]}', '{rids[j]}', _f_{i}, _f_{j}, _b_{i}_{j}" for i, j in pairs
-    )
-    out = df.agg(*aggs).select(
-        F.expr(
-            f"stack({len(pairs)}, {stack})"
-            " AS (rule_a, rule_b, n_fail_a, n_fail_b, n_both)"
-        ),
-        "n_rows",
-    )
+    out = _rule_pair_failures(df, ruleset)
     both = F.col("n_both").cast("double")
     denom_l = F.col("n_fail_a") * F.col("n_fail_b")
     denom_j = F.col("n_fail_a") + F.col("n_fail_b") - F.col("n_both")
@@ -558,48 +562,18 @@ def rule_cofire(df: DataFrame, ruleset: RuleSet) -> DataFrame:
     (P(b fails | a fails)), all integer floor-division micros on exact
     counts.
 
-    Scale shape: the engine's standard ONE aggregate — k singles +
-    k(k−1)/2 pair indicator sums reach the shuffle as one row per
-    partition (rules are bounded; 10 rules = 55 longs); the pair table
-    is assembled from that single row with stack(), never a join.
-    NULL verdicts count as failures (the validate() convention).
+    The counts come from :func:`_rule_pair_failures`, the same one
+    aggregate as :func:`rule_cooccurrence` (10 rules = 55 longs per
+    partition).
 
     Reference scope note: the reference validates one record at a time
     (core.clj:263-285) and its decode reports per-rule status
     (parser.clj:345-375); the co-fire MATRIX over a corpus is the
     north-rule dataset view of that same status vocabulary.
     """
-    compiled = ruleset.compile()
-    rids = sorted(compiled)
-    if len(rids) < 2:
+    if len(ruleset.compile()) < 2:
         raise ValueError("rule_cofire: need ≥2 SQL-compilable rules")
-    fails = {
-        r: (~F.coalesce(compiled[r], F.lit(False))).cast("long") for r in rids
-    }
-    aggs = [F.count(F.lit(1)).cast("bigint").alias("n_rows")]
-    for i, r in enumerate(rids):
-        aggs.append(F.sum(fails[r]).cast("bigint").alias(f"_f_{i}"))
-    pairs = []
-    for i in range(len(rids)):
-        for j in range(i + 1, len(rids)):
-            aggs.append(
-                F.sum(fails[rids[i]] * fails[rids[j]])
-                .cast("bigint")
-                .alias(f"_b_{i}_{j}")
-            )
-            pairs.append((i, j))
-    agg = df.agg(*aggs)
-    stack = ", ".join(
-        f"'{rids[i]}', '{rids[j]}', _f_{i}, _f_{j}, _b_{i}_{j}"
-        for i, j in pairs
-    )
-    long = agg.select(
-        F.expr(
-            f"stack({len(pairs)}, {stack}) AS "
-            "(rule_a, rule_b, n_fail_a, n_fail_b, n_both)"
-        ),
-        "n_rows",
-    )
+    long = _rule_pair_failures(df, ruleset)
     union = F.col("n_fail_a") + F.col("n_fail_b") - F.col("n_both")
     return long.select(
         "rule_a",

@@ -36,8 +36,8 @@ PRIME64_5 = 0x27D4EB2F165667C5
 SPARK_SEED = 42  # Spark's default xxhash64 seed
 
 # signed-long powers of two (index 63 = the long sign bit) — the shared
-# bit-mask table for JVM-side bit manipulation (SimHash votes, Bloom
-# masks); PySpark's shiftleft only takes a Python-int shift, so masking
+# bit-mask table for JVM-side bit manipulation (SimHash votes);
+# PySpark's shiftleft only takes a Python-int shift, so masking
 # by a COLUMN bit index needs an element_at over this table
 SIGNED_POW2 = [(1 << b) if b < 63 else -(1 << 63) for b in range(64)]
 

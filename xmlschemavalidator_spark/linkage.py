@@ -616,8 +616,8 @@ def with_jaro_winkler(
 
     Python path DISCLOSED and justified (the rules of the repo): the
     per-pair flag-array walk has no Column-expression form; this is an
-    Arrow-batched ``pandas_udf`` (never row-at-a-time Python UDF), the
-    multimodal-codec class of exception. NULL in either side → NULL
+    Arrow-batched ``pandas_udf`` (never row-at-a-time Python UDF), like
+    the engine's other no-Column-form kernels. NULL in either side → NULL
     out. Values rounded ``round_to`` dp; the oracle is DuckDB's
     BUILT-IN ``jaro_winkler_similarity`` — same parameterization
     (verified: p=0.1, prefix≤4, boost threshold 0.7), so the hash

@@ -50,7 +50,9 @@ from xmlschemavalidator_spark.tables import write_partitioned
 def commit_once(commit_dir: str, unit: str, unit_id: str | int, record: dict) -> bool:
     """Write ``record`` as ``<commit_dir>/<unit>=<unit_id>.json``, once.
     Returns False, leaving the existing file alone, if the unit is already
-    committed — idempotent under retries/speculation."""
+    committed — idempotent under retries/speculation. Any other failure of
+    the commit (e.g. a file system without hard links) raises: treating it
+    as a lost race would leave the unit uncommitted forever."""
     path = os.path.join(commit_dir, f"{unit}={unit_id}.json")
     if os.path.exists(path):
         return False
@@ -62,11 +64,11 @@ def commit_once(commit_dir: str, unit: str, unit_id: str | int, record: dict) ->
         # concurrent committers would both "win"; link fails with EEXIST
         # for the loser — true write-once under speculation/races
         os.link(tmp, path)
-        return True
-    except OSError:
+    except FileExistsError:
         return False
     finally:
         os.unlink(tmp)
+    return True
 
 
 def committed_units(commit_dir: str, unit: str) -> set[str]:

@@ -19,6 +19,7 @@ from typing import Any, Optional
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from xmlschemavalidator_spark.rules.facets import sql_lit
 from xmlschemavalidator_spark.rules.types import Type, TypeRegistry, TypeRef
 
 
@@ -26,12 +27,6 @@ def _resolve(t: Optional[TypeRef], registry: Optional[TypeRegistry]) -> Optional
     if t is None:
         return None
     return registry.resolve(t) if isinstance(t, str) else t
-
-
-def _sql_lit(value: Any) -> str:
-    if isinstance(value, str):
-        return "'" + value.replace("'", "''") + "'"
-    return repr(value)
 
 
 @dataclass(frozen=True)
@@ -52,11 +47,11 @@ class DefaultAttr:
 
     def sql_expr(self, col_sql: str, registry: Optional[TypeRegistry] = None) -> str:
         t = _resolve(self.type, registry)
-        v = f"coalesce({col_sql}, {_sql_lit(self.default)})"
+        v = f"coalesce({col_sql}, {sql_lit(self.default)})"
         return t.sql_expr(v, registry) if t is not None else f"({v} IS NOT NULL)"
 
     def decoded_sql(self, col_sql: str) -> str:
-        return f"coalesce({col_sql}, {_sql_lit(self.default)})"
+        return f"coalesce({col_sql}, {sql_lit(self.default)})"
 
 
 @dataclass(frozen=True)
@@ -69,7 +64,7 @@ class FixedAttr:
         return F.coalesce(col == F.lit(self.fixed), F.lit(False))
 
     def sql_expr(self, col_sql: str, registry: Optional[TypeRegistry] = None) -> str:
-        return f"coalesce({col_sql} = {_sql_lit(self.fixed)}, FALSE)"
+        return f"coalesce({col_sql} = {sql_lit(self.fixed)}, FALSE)"
 
 
 @dataclass(frozen=True)

@@ -57,7 +57,11 @@ def _sql_null_safe(expr: str) -> str:
     return f"coalesce({expr}, FALSE)"
 
 
-def _sql_lit(value: Any) -> str:
+def sql_lit(value: Any) -> str:
+    """The engine's one SQL literal renderer, for the DuckDB/ANSI oracle
+    SQL. A string is single-quoted with embedded quotes doubled (standard
+    strings process no backslash escapes, so a regex keeps its backslashes
+    raw); a bool renders as TRUE/FALSE; any other value as its ``repr``."""
     if isinstance(value, str):
         escaped = value.replace("'", "''")
         return f"'{escaped}'"
@@ -76,7 +80,7 @@ class MinInclusive(Facet):
         return _null_safe(col >= F.lit(self.value))
 
     def sql_expr(self, col_sql: str) -> str:
-        return _sql_null_safe(f"({col_sql} >= {_sql_lit(self.value)})")
+        return _sql_null_safe(f"({col_sql} >= {sql_lit(self.value)})")
 
 
 @dataclass(frozen=True)
@@ -89,7 +93,7 @@ class MaxInclusive(Facet):
         return _null_safe(col <= F.lit(self.value))
 
     def sql_expr(self, col_sql: str) -> str:
-        return _sql_null_safe(f"({col_sql} <= {_sql_lit(self.value)})")
+        return _sql_null_safe(f"({col_sql} <= {sql_lit(self.value)})")
 
 
 @dataclass(frozen=True)
@@ -102,7 +106,7 @@ class MinExclusive(Facet):
         return _null_safe(col > F.lit(self.value))
 
     def sql_expr(self, col_sql: str) -> str:
-        return _sql_null_safe(f"({col_sql} > {_sql_lit(self.value)})")
+        return _sql_null_safe(f"({col_sql} > {sql_lit(self.value)})")
 
 
 @dataclass(frozen=True)
@@ -115,7 +119,7 @@ class MaxExclusive(Facet):
         return _null_safe(col < F.lit(self.value))
 
     def sql_expr(self, col_sql: str) -> str:
-        return _sql_null_safe(f"({col_sql} < {_sql_lit(self.value)})")
+        return _sql_null_safe(f"({col_sql} < {sql_lit(self.value)})")
 
 
 @dataclass(frozen=True)
@@ -129,7 +133,7 @@ class Enumeration(Facet):
         return _null_safe(col == F.lit(self.value))
 
     def sql_expr(self, col_sql: str) -> str:
-        return _sql_null_safe(f"({col_sql} = {_sql_lit(self.value)})")
+        return _sql_null_safe(f"({col_sql} = {sql_lit(self.value)})")
 
     @property
     def is_enumeration(self) -> bool:
@@ -153,7 +157,7 @@ class Pattern(Facet):
 
     def sql_expr(self, col_sql: str) -> str:
         # DuckDB regexp_full_match == Java String.matches semantics.
-        return _sql_null_safe(f"regexp_full_match(CAST({col_sql} AS VARCHAR), {_sql_lit(self.pattern)})")
+        return _sql_null_safe(f"regexp_full_match(CAST({col_sql} AS VARCHAR), {sql_lit(self.pattern)})")
 
 
 @dataclass(frozen=True)

@@ -48,14 +48,22 @@ def _ship_package(spark: SparkSession) -> None:
     must be able to import ``xmlschemavalidator_spark``. Driver-side
     ``sys.path`` edits don't propagate to workers; a --py-files zip does.
     Building + registering the zip here makes the package location-independent
-    (no-op if the zip was already added, e.g. by spark-submit)."""
+    (no-op if the zip was already added, e.g. by spark-submit).
+
+    The zip path is per process: sessions started side by side on one host
+    would otherwise rewrite each other's zip under their running tasks,
+    which then fail with "exists and does not match contents". The zip is
+    removed when the process exits."""
+    import atexit
     import tempfile
     import zipfile
 
     import xmlschemavalidator_spark as pkg
 
     pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
-    out = os.path.join(tempfile.gettempdir(), "xmlschemavalidator_spark_autoship.zip")
+    out = os.path.join(
+        tempfile.gettempdir(), f"xmlschemavalidator_spark_autoship_{os.getpid()}.zip"
+    )
     try:
         with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
             for dirpath, _dirs, files in os.walk(pkg_dir):
@@ -69,8 +77,16 @@ def _ship_package(spark: SparkSession) -> None:
                         )
                         z.write(full, rel)
         spark.sparkContext.addPyFile(out)
+        atexit.register(_remove_quietly, out)
     except Exception:
         pass  # e.g. Spark Connect without addPyFile; --py-files covers prod
+
+
+def _remove_quietly(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
 
 
 def free_local_checkpoint(df) -> None:

@@ -13,6 +13,8 @@ import pandas as pd  # module scope: pandas_udf type hints must resolve
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from xmlschemavalidator_spark.rules.facets import sql_lit
+
 # Distinctive stopwords per language — tiny on purpose (a heuristic, not a
 # model). Deterministic and SQL-portable.
 _STOPWORDS = {
@@ -312,9 +314,9 @@ def mojibake_sql(x: str) -> str:
     same two-phase placeholder scheme."""
     out = x
     for i, (bad, _) in enumerate(_MOJIBAKE_TABLE):
-        out = f"replace({out}, {_sql_quote(bad)}, {_sql_quote(_mojibake_placeholder(i))})"
+        out = f"replace({out}, {sql_lit(bad)}, {sql_lit(_mojibake_placeholder(i))})"
     for i, (_, good) in enumerate(_MOJIBAKE_TABLE):
-        out = f"replace({out}, {_sql_quote(_mojibake_placeholder(i))}, {_sql_quote(good)})"
+        out = f"replace({out}, {sql_lit(_mojibake_placeholder(i))}, {sql_lit(good)})"
     return out
 
 
@@ -668,10 +670,6 @@ def html_to_text(html: Column) -> Column:
     return out
 
 
-def _sql_quote(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
-
-
 def html_to_text_sql(x: str) -> str:
     """DuckDB spelling of :func:`html_to_text` — the exact same rule
     tables rendered with ``regexp_replace(..., 'g')`` / ``replace`` and
@@ -679,18 +677,18 @@ def html_to_text_sql(x: str) -> str:
     construction: both read _HTML_RULES/_HTML_ENTITIES/_HTML_WS_RULES."""
     out = x
     for pat, repl in _HTML_RULES:
-        r = "chr(10)" if repl == "{NL}" else _sql_quote(repl)
-        out = f"regexp_replace({out}, {_sql_quote(pat)}, {r}, 'g')"
+        r = "chr(10)" if repl == "{NL}" else sql_lit(repl)
+        out = f"regexp_replace({out}, {sql_lit(pat)}, {r}, 'g')"
     for ent, ch in _HTML_ENTITIES:
-        out = f"replace({out}, {_sql_quote(ent)}, {_sql_quote(ch)})"
+        out = f"replace({out}, {sql_lit(ent)}, {sql_lit(ch)})"
     for pat, repl in _HTML_WS_RULES:
         r = repl.replace("{NL}", "\n")
         r_sql = (
             "chr(10)" if r == "\n"
             else "chr(10) || chr(10)" if r == "\n\n"
-            else _sql_quote(r)
+            else sql_lit(r)
         )
-        out = f"regexp_replace({out}, {_sql_quote(pat)}, {r_sql}, 'g')"
+        out = f"regexp_replace({out}, {sql_lit(pat)}, {r_sql}, 'g')"
     return out
 
 
@@ -794,19 +792,19 @@ def main_content_sql(
     out = x
     for pat, repl in _MAIN_RULES:
         r = _sql_marker(repl) or (
-            "chr(10)" if repl == "{NL}" else _sql_quote(repl)
+            "chr(10)" if repl == "{NL}" else sql_lit(repl)
         )
-        out = f"regexp_replace({out}, {_sql_quote(pat)}, {r}, 'g')"
+        out = f"regexp_replace({out}, {sql_lit(pat)}, {r}, 'g')"
     for ent, ch in _HTML_ENTITIES:
-        out = f"replace({out}, {_sql_quote(ent)}, {_sql_quote(ch)})"
+        out = f"replace({out}, {sql_lit(ent)}, {sql_lit(ch)})"
     for pat, repl in _HTML_WS_RULES:
         r = repl.replace("{NL}", "\n")
         r_sql = (
             "chr(10)" if r == "\n"
             else "chr(10) || chr(10)" if r == "\n\n"
-            else _sql_quote(r)
+            else sql_lit(r)
         )
-        out = f"regexp_replace({out}, {_sql_quote(pat)}, {r_sql}, 'g')"
+        out = f"regexp_replace({out}, {sql_lit(pat)}, {r_sql}, 'g')"
     op, cl = f"chr({ord(_ANCHOR_OPEN)})", f"chr({ord(_ANCHOR_CLOSE)})"
     vis = f"replace(replace(b, {op}, ''), {cl}, '')"
     link = (
@@ -1282,12 +1280,12 @@ def normalize_for_dedup_sql(
     out = f"lower({x})"
     if strip_accents:
         out = (
-            f"translate({out}, {_sql_quote(_ACCENT_SRC)}, "
-            f"{_sql_quote(_ACCENT_DST)})"
+            f"translate({out}, {sql_lit(_ACCENT_SRC)}, "
+            f"{sql_lit(_ACCENT_DST)})"
         )
     if strip_punct:
-        out = f"regexp_replace({out}, {_sql_quote(_PUNCT_CLASS)}, ' ', 'g')"
-    return f"trim(regexp_replace({out}, {_sql_quote(_WS + '+')}, ' ', 'g'))"
+        out = f"regexp_replace({out}, {sql_lit(_PUNCT_CLASS)}, ' ', 'g')"
+    return f"trim(regexp_replace({out}, {sql_lit(_WS + '+')}, ' ', 'g'))"
 
 
 #: <title> inner text (plain text up to the first '<' — nested markup
@@ -1309,8 +1307,8 @@ def extract_title(html: Column) -> Column:
 
 def extract_title_sql(x: str) -> str:
     return (
-        f"trim(regexp_replace(regexp_extract({x}, {_sql_quote(_TITLE_RE)}, 1), "
-        f"{_sql_quote(_WS + '+')}, ' ', 'g'))"
+        f"trim(regexp_replace(regexp_extract({x}, {sql_lit(_TITLE_RE)}, 1), "
+        f"{sql_lit(_WS + '+')}, ' ', 'g'))"
     )
 
 
@@ -2340,15 +2338,15 @@ def extract_dates(text: Column) -> Column:
 
 
 def extract_dates_sql(x: str) -> str:
-    iso = f"regexp_extract_all({x}, {_sql_quote(_DATE_ISO_RE)}, 0)"
-    usp = _sql_quote(_DATE_US_RE)
+    iso = f"regexp_extract_all({x}, {sql_lit(_DATE_ISO_RE)}, 0)"
+    usp = sql_lit(_DATE_US_RE)
     us = (
         f"list_transform(regexp_extract_all({x}, {usp}, 0), m -> "
         f"concat_ws('-', regexp_extract(m, {usp}, 3), "
         f"lpad(regexp_extract(m, {usp}, 1), 2, '0'), "
         f"lpad(regexp_extract(m, {usp}, 2), 2, '0')))"
     )
-    txp = _sql_quote(_DATE_TEXT_RE)
+    txp = sql_lit(_DATE_TEXT_RE)
     month_case = "CASE regexp_extract(m, " + txp + ", 1) " + " ".join(
         f"WHEN '{mn}' THEN '{i + 1:02d}'" for i, mn in enumerate(_MONTHS)
     ) + " ELSE '00' END"
@@ -2385,7 +2383,7 @@ def extract_money_cents(text: Column) -> Column:
 
 
 def extract_money_cents_sql(x: str) -> str:
-    pat = _sql_quote(_MONEY_RE)
+    pat = sql_lit(_MONEY_RE)
     amounts = (
         f"list_transform(regexp_extract_all({x}, {pat}, 0), m -> "
         f"CASE WHEN regexp_extract(m, {pat}, 2) = '' "
@@ -2448,9 +2446,9 @@ def mixed_script_words(
 
 
 def mixed_script_words_sql(x: str, max_chars: int = 2000) -> dict[str, str]:
-    lat = _sql_quote(_SCRIPT_RANGES["latin"])
-    cyr = _sql_quote(_SCRIPT_RANGES["cyrillic"])
-    grk = _sql_quote(_GREEK_RANGE)
+    lat = sql_lit(_SCRIPT_RANGES["latin"])
+    cyr = sql_lit(_SCRIPT_RANGES["cyrillic"])
+    grk = sql_lit(_GREEK_RANGE)
     prefix = f"substr(coalesce({x}, ''), 1, {max_chars})"
     toks = (
         f"list_filter(regexp_split_to_array(trim({prefix}), "

@@ -43,6 +43,8 @@ import re as _re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from xmlschemavalidator_spark.rules.facets import sql_lit
+
 # ---------------------------------------------------------------------------
 # shared regex/vocabulary constants — each drives BOTH the Spark Column
 # builder and the DuckDB SQL renderer (single source of truth, the
@@ -104,13 +106,6 @@ HREF_RE = (
 )
 
 
-def _sql_quote(pat: str) -> str:
-    """Embed a regex in a single-quoted DuckDB literal (DuckDB does not
-    process backslash escapes in standard strings, so only quotes need
-    doubling — the regex engine sees the backslashes raw)."""
-    return "'" + pat.replace("'", "''") + "'"
-
-
 # ---------------------------------------------------------------------------
 # canonical URL
 # ---------------------------------------------------------------------------
@@ -128,7 +123,7 @@ def canonical_query(q: Column) -> Column:
 def canonical_query_sql(x: str) -> str:
     """DuckDB rendering of :func:`canonical_query` over expression ``x``.
     ``coalesce`` because DuckDB ``array_to_string([])`` is NULL."""
-    track = _sql_quote(TRACKING_PARAM_RE)
+    track = sql_lit(TRACKING_PARAM_RE)
     return (
         "coalesce(array_to_string(list_sort(list_filter("
         f"string_split({x}, '&'), "
@@ -191,8 +186,8 @@ def canonical_url_sql(x: str, strip_www: bool = True) -> str:
     """DuckDB rendering of :func:`canonical_url` over expression ``x`` —
     same steps, 'g'-flagged replaces (DuckDB defaults to first-match)."""
     t = f"trim({x})"
-    scheme = f"lower(regexp_extract({t}, {_sql_quote(_SCHEME_RE)}, 1))"
-    rest = f"regexp_extract({t}, {_sql_quote(_REST_RE)}, 1)"
+    scheme = f"lower(regexp_extract({t}, {sql_lit(_SCHEME_RE)}, 1))"
+    rest = f"regexp_extract({t}, {sql_lit(_REST_RE)}, 1)"
     authority = f"regexp_extract({rest}, '^([^/?#]*)', 1)"
     hostport = f"lower(regexp_replace({authority}, '^[^@]*@', '', 'g'))"
     host = (
@@ -217,7 +212,7 @@ def canonical_url_sql(x: str, strip_www: bool = True) -> str:
         f"CASE WHEN {q} = '' THEN '' ELSE concat('?', {q}) END)"
     )
     return (
-        f"CASE WHEN regexp_matches({t}, {_sql_quote(_SCHEME_RE)}) "
+        f"CASE WHEN regexp_matches({t}, {sql_lit(_SCHEME_RE)}) "
         f"THEN {canon} ELSE {t} END"
     )
 
@@ -245,9 +240,9 @@ def registered_domain(host: Column) -> Column:
 
 
 def registered_domain_sql(x: str) -> str:
-    reg = _sql_quote(REGISTERED_DOMAIN_RE)
+    reg = sql_lit(REGISTERED_DOMAIN_RE)
     return (
-        f"CASE WHEN regexp_matches({x}, {_sql_quote(_IPV4ISH_RE)}) "
+        f"CASE WHEN regexp_matches({x}, {sql_lit(_IPV4ISH_RE)}) "
         f"OR regexp_extract({x}, {reg}, 1) = '' THEN {x} "
         f"ELSE regexp_extract({x}, {reg}, 1) END"
     )
@@ -483,7 +478,7 @@ def extract_links(html: Column) -> Column:
 
 
 def extract_links_sql(x: str) -> str:
-    return f"regexp_extract_all({x}, {_sql_quote(HREF_RE)}, 1)"
+    return f"regexp_extract_all({x}, {sql_lit(HREF_RE)}, 1)"
 
 
 #: anchor tag WITH its visible text: HREF_RE's attribute-boundary prefix,
@@ -633,7 +628,7 @@ def outlink_signals_sql(html_sql: str, url_sql: str) -> str:
     links = extract_links_sql(html_sql)
     abs_links = (
         f"list_filter({links}, u -> regexp_matches(u, "
-        f"{_sql_quote(_ABS_HTTP_RE)}))"
+        f"{sql_lit(_ABS_HTTP_RE)}))"
     )
     tdoms = (
         f"list_transform({abs_links}, u -> "
@@ -1324,7 +1319,7 @@ def robots_url_path(url: Column) -> Column:
 
 
 def robots_url_path_sql(x: str) -> str:
-    rest = f"regexp_extract(trim({x}), {_sql_quote(_REST_RE)}, 1)"
+    rest = f"regexp_extract(trim({x}), {sql_lit(_REST_RE)}, 1)"
     pq = f"regexp_extract({rest}, '^[^/?#]*([^#]*)', 1)"
     return f"CASE WHEN {pq} = '' THEN '/' ELSE {pq} END"
 
@@ -1337,8 +1332,8 @@ def robots_disallow_prefixes(robots: Column) -> Column:
 
 
 def robots_disallow_prefixes_sql(x: str) -> str:
-    grp = _sql_quote(ROBOTS_GROUP_RE)
-    dis = _sql_quote(ROBOTS_DISALLOW_RE)
+    grp = sql_lit(ROBOTS_GROUP_RE)
+    dis = sql_lit(ROBOTS_DISALLOW_RE)
     return (
         f"list_filter(regexp_extract_all(regexp_extract({x}, {grp}, 1), "
         f"{dis}, 1), p -> p <> '')"
@@ -2275,7 +2270,7 @@ def robots_sitemap_urls(robots: Column) -> Column:
 
 
 def robots_sitemap_urls_sql(x: str) -> str:
-    pat = _sql_quote(ROBOTS_SITEMAP_RE)
+    pat = sql_lit(ROBOTS_SITEMAP_RE)
     return (
         f"list_filter(list_transform(regexp_extract_all({x}, {pat}, 1), "
         f"v -> regexp_replace(v, '[ \\t]+$', '')), v -> v <> '')"
@@ -2326,10 +2321,10 @@ def sitemap_entries(df: DataFrame, xml_col: str) -> DataFrame:
 def sitemap_entries_sql(x: str) -> str:
     """DuckDB twin of the per-row entry array (unnest it to mirror the
     explode)."""
-    ub = _sql_quote(_SM_URL_BLOCK_RE)
-    ib = _sql_quote(_SM_INDEX_BLOCK_RE)
-    loc = _sql_quote(_SM_LOC_RE)
-    lm = _sql_quote(_SM_LASTMOD_RE)
+    ub = sql_lit(_SM_URL_BLOCK_RE)
+    ib = sql_lit(_SM_INDEX_BLOCK_RE)
+    loc = sql_lit(_SM_LOC_RE)
+    lm = sql_lit(_SM_LASTMOD_RE)
 
     def tr(blocks: str, flag: str) -> str:
         return (
@@ -2411,7 +2406,7 @@ def structure_fingerprint(html: Column) -> Column:
 
 
 def structure_fingerprint_sql(x: str) -> str:
-    pat = _sql_quote(_TAG_NAME_RE)
+    pat = sql_lit(_TAG_NAME_RE)
     return (
         f"md5(array_to_string(list_transform("
         f"regexp_extract_all({x}, {pat}, 1), t -> lower(t)), ','))"
@@ -2493,8 +2488,8 @@ def robots_crawl_delay_millis(robots: Column) -> Column:
 
 
 def robots_crawl_delay_millis_sql(x: str) -> str:
-    grp = _sql_quote(ROBOTS_GROUP_RE)
-    pat = _sql_quote(ROBOTS_CRAWL_DELAY_RE)
+    grp = sql_lit(ROBOTS_GROUP_RE)
+    pat = sql_lit(ROBOTS_CRAWL_DELAY_RE)
     return (
         f"CAST(floor(CAST(nullif(regexp_extract("
         f"regexp_extract({x}, {grp}, 1), {pat}, 1), '') AS DOUBLE) * 1000)"
@@ -2543,9 +2538,9 @@ def hreflang_alternates(df: DataFrame, id_col: str, html_col: str) -> DataFrame:
 def hreflang_alternates_sql(x: str) -> str:
     """DuckDB twin: the per-row entry array — unnest and filter
     non-empty pairs to mirror the explode."""
-    lk = _sql_quote(_HREFLANG_LINK_RE)
-    hl = _sql_quote(_HREFLANG_ATTR_RE)
-    hr = _sql_quote(_HREF_ATTR_RE)
+    lk = sql_lit(_HREFLANG_LINK_RE)
+    hl = sql_lit(_HREFLANG_ATTR_RE)
+    hr = sql_lit(_HREF_ATTR_RE)
     return (
         f"list_filter(list_transform(regexp_extract_all({x}, {lk}, 1), tag -> "
         f"struct_pack(hreflang := lower(regexp_extract(tag, {hl}, 1)), "
@@ -2627,8 +2622,8 @@ def rel_canonical(html: Column) -> Column:
 
 
 def rel_canonical_sql(x: str) -> str:
-    rh = f"regexp_extract({x}, {_sql_quote(CANONICAL_RH_RE)}, 1)"
-    hr = f"regexp_extract({x}, {_sql_quote(CANONICAL_HR_RE)}, 1)"
+    rh = f"regexp_extract({x}, {sql_lit(CANONICAL_RH_RE)}, 1)"
+    hr = f"regexp_extract({x}, {sql_lit(CANONICAL_HR_RE)}, 1)"
     return f"trim(CASE WHEN {rh} <> '' THEN {rh} ELSE {hr} END)"
 
 
@@ -2657,9 +2652,9 @@ def canonical_target(
 
 def canonical_target_sql(url_sql: str, html_sql: str, strip_www: bool = True) -> str:
     decl = rel_canonical_sql(html_sql)
-    base = f"regexp_extract({url_sql}, {_sql_quote(_PAGE_BASE_RE)}, 0)"
+    base = f"regexp_extract({url_sql}, {sql_lit(_PAGE_BASE_RE)}, 0)"
     resolved = (
-        f"CASE WHEN regexp_matches({decl}, {_sql_quote(_ABS_HTTP_RE)}) THEN {decl} "
+        f"CASE WHEN regexp_matches({decl}, {sql_lit(_ABS_HTTP_RE)}) THEN {decl} "
         f"WHEN regexp_matches({decl}, '^//') THEN {url_sql} "
         f"WHEN regexp_matches({decl}, '^/') AND {base} <> '' "
         f"THEN concat({base}, {decl}) "
@@ -2735,8 +2730,8 @@ def meta_content(html: Column, attr: str, value: str) -> Column:
 
 def meta_content_sql(x: str, attr: str, value: str) -> str:
     fwd, rev = _meta_content_res(attr, value)
-    a = f"regexp_extract({x}, {_sql_quote(fwd)}, 1)"
-    b = f"regexp_extract({x}, {_sql_quote(rev)}, 1)"
+    a = f"regexp_extract({x}, {sql_lit(fwd)}, 1)"
+    b = f"regexp_extract({x}, {sql_lit(rev)}, 1)"
     return f"trim(CASE WHEN {a} <> '' THEN {a} ELSE {b} END)"
 
 
@@ -2752,7 +2747,7 @@ def _robots_norm(content: Column) -> Column:
 
 
 def _robots_norm_sql(c: str) -> str:
-    return f"concat(',', regexp_replace(lower({c}), {_sql_quote(_WS + '+')}, '', 'g'), ',')"
+    return f"concat(',', regexp_replace(lower({c}), {sql_lit(_WS + '+')}, '', 'g'), ',')"
 
 
 def meta_robots_signals(html: Column) -> dict[str, Column]:
@@ -2797,7 +2792,7 @@ def og_properties(
     carrier beside JSON-LD and <table> grids: og:title/og:description
     give clean title/abstract text where <title> carries site-name
     boilerplate, og:url is yet another declared-canonical signal, and
-    og:image feeds the multimodal side. One projection; keys are
+    og:image names the page's lead image. One projection; keys are
     ``og_<prop>``."""
     return {f"og_{p}": meta_content(html, "property", f"og:{p}") for p in props}
 
@@ -2851,8 +2846,8 @@ def feed_links(html: Column) -> Column:
 
 
 def feed_links_sql(x: str) -> str:
-    a = f"regexp_extract_all({x}, {_sql_quote(FEED_TYPE_HREF_RE)}, 1)"
-    b = f"regexp_extract_all({x}, {_sql_quote(FEED_HREF_TYPE_RE)}, 1)"
+    a = f"regexp_extract_all({x}, {sql_lit(FEED_TYPE_HREF_RE)}, 1)"
+    b = f"regexp_extract_all({x}, {sql_lit(FEED_HREF_TYPE_RE)}, 1)"
     return f"list_concat({a}, {b})"
 
 
@@ -2864,8 +2859,8 @@ def _cdata_unwrap(v: Column) -> Column:
 
 def _cdata_unwrap_sql(v: str) -> str:
     return (
-        f"regexp_replace(regexp_replace({v}, {_sql_quote(_CDATA_OPEN_RE)}, ''), "
-        f"{_sql_quote(_CDATA_CLOSE_RE)}, '')"
+        f"regexp_replace(regexp_replace({v}, {sql_lit(_CDATA_OPEN_RE)}, ''), "
+        f"{sql_lit(_CDATA_CLOSE_RE)}, '')"
     )
 
 
@@ -2926,26 +2921,26 @@ def feed_entries_sql(x: str) -> str:
     """DuckDB twin of the per-row entry array (unnest to mirror the
     explode)."""
     title = _cdata_unwrap_sql(
-        f"regexp_extract(b, {_sql_quote(_FEED_TITLE_RE)}, 1)"
+        f"regexp_extract(b, {sql_lit(_FEED_TITLE_RE)}, 1)"
     )
     guid = _cdata_unwrap_sql(
-        f"regexp_extract(b, {_sql_quote(_RSS_GUID_RE)}, 1)"
+        f"regexp_extract(b, {sql_lit(_RSS_GUID_RE)}, 1)"
     )
     rss = (
-        f"list_transform(regexp_extract_all({x}, {_sql_quote(_RSS_ITEM_RE)}, 1), b -> "
+        f"list_transform(regexp_extract_all({x}, {sql_lit(_RSS_ITEM_RE)}, 1), b -> "
         f"struct_pack(feed_format := 'rss', "
         f"title := nullif({title}, ''), "
-        f"link := nullif(regexp_extract(b, {_sql_quote(_RSS_LINK_RE)}, 1), ''), "
-        f"published := nullif(regexp_extract(b, {_sql_quote(_RSS_PUBDATE_RE)}, 1), ''), "
+        f"link := nullif(regexp_extract(b, {sql_lit(_RSS_LINK_RE)}, 1), ''), "
+        f"published := nullif(regexp_extract(b, {sql_lit(_RSS_PUBDATE_RE)}, 1), ''), "
         f"entry_id := nullif({guid}, '')))"
     )
     atom = (
-        f"list_transform(regexp_extract_all({x}, {_sql_quote(_ATOM_ENTRY_RE)}, 1), b -> "
+        f"list_transform(regexp_extract_all({x}, {sql_lit(_ATOM_ENTRY_RE)}, 1), b -> "
         f"struct_pack(feed_format := 'atom', "
         f"title := nullif({title}, ''), "
-        f"link := nullif(regexp_extract(b, {_sql_quote(_ATOM_LINK_RE)}, 1), ''), "
-        f"published := nullif(regexp_extract(b, {_sql_quote(_ATOM_UPDATED_RE)}, 1), ''), "
-        f"entry_id := nullif({_cdata_unwrap_sql(f'regexp_extract(b, {_sql_quote(_ATOM_ID_RE)}, 1)')}, '')))"
+        f"link := nullif(regexp_extract(b, {sql_lit(_ATOM_LINK_RE)}, 1), ''), "
+        f"published := nullif(regexp_extract(b, {sql_lit(_ATOM_UPDATED_RE)}, 1), ''), "
+        f"entry_id := nullif({_cdata_unwrap_sql(f'regexp_extract(b, {sql_lit(_ATOM_ID_RE)}, 1)')}, '')))"
     )
     return (
         f"list_filter(list_concat({rss}, {atom}), "
@@ -2966,8 +2961,8 @@ def robots_allow_prefixes(robots: Column) -> Column:
 
 
 def robots_allow_prefixes_sql(x: str) -> str:
-    grp = _sql_quote(ROBOTS_GROUP_RE)
-    alw = _sql_quote(ROBOTS_ALLOW_RE)
+    grp = sql_lit(ROBOTS_GROUP_RE)
+    alw = sql_lit(ROBOTS_ALLOW_RE)
     return (
         f"list_filter(regexp_extract_all(regexp_extract({x}, {grp}, 1), "
         f"{alw}, 1), p -> p <> '')"
@@ -3092,7 +3087,7 @@ def pct_normalize(url: Column) -> Column:
 def pct_normalize_sql(x: str) -> str:
     out = x
     for pat, rep in _PCT_DECODE_TABLE:
-        out = f"regexp_replace({out}, {_sql_quote(pat)}, '{rep}', 'g')"
+        out = f"regexp_replace({out}, {sql_lit(pat)}, '{rep}', 'g')"
     return out
 
 

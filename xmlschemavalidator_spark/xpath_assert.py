@@ -30,6 +30,8 @@ import re
 from dataclasses import dataclass
 from typing import Any, Optional
 
+from xmlschemavalidator_spark.rules.facets import sql_lit
+
 _TOKEN_RE = re.compile(
     r"\s*(?:"
     r"(?P<num>\d+(?:\.\d+)?)"
@@ -214,12 +216,6 @@ def _is_numericish(node) -> bool:
     return False
 
 
-def _sql_lit(v: Any) -> str:
-    if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
-    return repr(v)
-
-
 def to_sql(node, dialect: str = "spark", attr_prefix: str = "",
            numeric_ctx: bool = False) -> str:
     """Render the AST in the given SQL dialect. ``attr_prefix`` maps
@@ -236,7 +232,7 @@ def to_sql(node, dialect: str = "spark", attr_prefix: str = "",
             return f"try_cast({col} AS DOUBLE)"
         return col
     if isinstance(node, Lit):
-        return _sql_lit(node.value)
+        return sql_lit(node.value)
     if isinstance(node, Call):
         a = [to_sql(x, dialect, attr_prefix) for x in node.args]
         if node.func in ("true", "false"):
