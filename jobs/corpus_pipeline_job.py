@@ -107,7 +107,7 @@ def run_pipeline(
         incremental_near_dedup,
         minhash_lsh_candidates,
     )
-    from xmlschemavalidator_spark.engine import validate
+    from xmlschemavalidator_spark.engine import split_valid, validate
     from xmlschemavalidator_spark.flagship import documents_ruleset
     from xmlschemavalidator_spark.sampling import stratified_sample, token_budget_select
     from xmlschemavalidator_spark.textops import gopher_pass
@@ -398,11 +398,14 @@ def run_pipeline(
             docs.drop("lang").withColumn("lang", lang_id(F.col("text"))),
         )
 
-    # 1. schema/constraint validation — violations kept as an audit table
-    res = validate(docs, documents_ruleset(), key=id_col)
+    # 1. schema/constraint validation — violations kept as an audit table.
+    # The validated stage is the verdict projection filtered on _doc_ok,
+    # never a join of passing ids back onto the corpus: two rows sharing
+    # an id, one valid and one not, would both pass that join.
+    ruleset = documents_ruleset()
+    res = validate(docs, ruleset, key=id_col)
     res.violations.write.mode("overwrite").parquet(f"{audit_dir}/violations")
-    ok_ids = res.verdicts.where(F.col("_doc_ok")).select(id_col)
-    validated = stage("validated", docs.join(ok_ids, id_col, "left_semi"))
+    validated = stage("validated", split_valid(docs, ruleset, key=id_col)[0])
     cur = validated
 
     # 2. quality filter (gopher pass)

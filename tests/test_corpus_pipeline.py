@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 
 import pytest
@@ -371,6 +372,60 @@ def test_pipeline_releases_checkpoint_storage(spark, tmp_path):
     run_pipeline(spark, docs, str(tmp_path / "rel2"), batch_id="r2")
     # and repeated batches must not GROW resident storage
     assert n_cached() <= after_first + 1
+
+
+def test_pipeline_validated_stage_keeps_only_valid_rows_of_a_shared_id(
+    spark, tmp_path
+):
+    """Two input rows share a doc_id, one valid and one not: the
+    validated stage keeps the valid row only. Re-admitting rows by joining
+    the passing ids back onto the corpus let the invalid twin through."""
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
+    from corpus_pipeline_job import run_pipeline
+
+    from xmlschemavalidator_spark.engine import DOC_OK, validate
+    from xmlschemavalidator_spark.flagship import documents_ruleset
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").where(
+        F.col("doc_id") % 10 == 0
+    )
+    verdicts = validate(docs, documents_ruleset(), key="doc_id").verdicts
+    n_valid = verdicts.where(F.col(DOC_OK)).count()
+    twin_id = verdicts.where(F.col(DOC_OK)).agg(F.min("doc_id")).first()[0]
+    twin = docs.where(F.col("doc_id") == twin_id).withColumn("source", F.lit("bogus"))
+    audit = run_pipeline(
+        spark, docs.unionByName(twin), str(tmp_path / "dup"), batch_id="dup1"
+    )
+    assert audit["input"] == docs.count() + 1
+    assert audit["validated"] == n_valid
+
+
+def test_pipeline_validated_stage_plan_has_no_join(spark, tmp_path, monkeypatch):
+    """The validated stage is the verdict projection filtered on _doc_ok,
+    with no join back to the corpus (the plan is read just before the
+    stage's checkpoint cuts its lineage)."""
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
+    from corpus_pipeline_job import run_pipeline
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    cls = type(docs)
+    checkpoint = cls.localCheckpoint
+    explain_mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
+    plans = []
+
+    def recording_checkpoint(self, *args, **kwargs):
+        qe = self._jdf.queryExecution()
+        plans.append(qe.explainString(explain_mode.fromString("formatted")))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording_checkpoint)
+    audit = run_pipeline(spark, docs, str(tmp_path / "plan"), batch_id="p1")
+    order = list(audit)
+    # the stages up to and including validated checkpoint once each, in order
+    assert order[:2] == ["input", "validated"], order
+    p = plans[order.index("validated")]
+    assert "Join" not in p, p
+    assert len(re.findall(r"\(\d+\) Scan ExistingRDD", p)) == 1, p
 
 
 def test_pipeline_fix_encoding_stage(spark, tmp_path):

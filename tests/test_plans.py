@@ -740,28 +740,6 @@ def test_weighted_quantile_one_sort_one_exchange(spark):
     assert len(re.findall(r"\(\d+\) Sort\b", p)) == 1
 
 
-def test_cochran_armitage_single_aggregate(spark):
-    """The trend test collapses to FIVE integer sums: one scan, one
-    partial+final hash aggregate pair (a single Exchange of one row per
-    partition), no window, no join."""
-    from xmlschemavalidator_spark.checks.evaluation import cochran_armitage
-
-    docs = _docs(spark)
-    staged = docs.select(
-        F.least(F.expr("n_chars div 200"), F.lit(2)).alias("s"),
-        (F.col("n_chars") % 7 == 0).alias("y"),
-    )
-    p = fmt(cochran_armitage(staged, "s", "y"))
-    assert n_scans(p) == 1
-    import re as _re
-
-    # two real exchanges: the count_distinct(s) two-phase pair; the five
-    # moment sums ride the same aggregates (numbered detail entries --
-    # the tree summary would double-count)
-    assert len(_re.findall(r"\(\d+\) Exchange", p)) <= 2
-    assert "Window" not in p and "Expand" not in p
-
-
 def test_species_richness_two_stacked_aggregates(spark):
     """Coverage/chao1 is groupBy(key) then groupBy(group): exactly two
     aggregate exchanges over one scan — never a countDistinct Expand."""
@@ -808,24 +786,3 @@ def test_ql_dirichlet_single_token_pass(spark):
     assert n_scans(p) == 2
     assert len(_re.findall(r"\(\d+\) SortMergeJoin|\(\d+\) BroadcastHashJoin", p)) <= 1
     assert "TakeOrderedAndProject" in p
-
-
-def test_lift_chart_no_global_sort(spark):
-    """The gains/lift rank is assembled from the bounded score grid —
-    no corpus-wide global Sort partition (the window sorts are over the
-    grid and per-score partitions only)."""
-    from xmlschemavalidator_spark.checks.evaluation import lift_chart
-
-    docs = _docs(spark).select(
-        F.col("doc_id").alias("id"),
-        (F.col("n_chars") % 500 / 500.0).alias("score"),
-        (F.col("doc_id") % 3 == 0).alias("label"),
-    )
-    p = fmt(lift_chart(docs, "score", "label", "id"))
-    # the corpus-side row_number is partitioned by the quantized score —
-    # never an empty-partition global ordering over row data
-    import re
-
-    specs = re.findall(r"row_number\(\) windowspecdefinition\(([^)]*)", p)
-    assert specs, p
-    assert all(spec.startswith("_q#") for spec in specs), specs

@@ -143,7 +143,7 @@ def t_closeness_report(
 
     Scale shape: cells are a partial-aggregatable groupBy; the lattice
     is classes × distinct grid values (the l-diversity class-bounded
-    contract times the roc_auc value-grid contract), never row-sized;
+    contract times the distinct value grid), never row-sized;
     the per-class window orders the value grid, not rows. NULL
     sensitive values are excluded from the distribution (a NULL carries
     no attacker-readable value; both engines agree by construction).

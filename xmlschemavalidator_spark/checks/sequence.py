@@ -379,7 +379,7 @@ def runs_test(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided
+    from xmlschemavalidator_spark.checks.stats import _p_two_sided
 
     base = df.where(
         F.col(order_col).isNotNull() & F.col(outcome_col).isNotNull()
@@ -443,7 +443,7 @@ def runs_test_oracle_sql(
 ) -> str:
     """DuckDB replay of :func:`runs_test`; ``from_sql`` must yield
     ``t`` and boolean ``y``."""
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided_sql
+    from xmlschemavalidator_spark.checks.stats import _p_two_sided_sql
 
     er = "(2.0 * n1 * n0 / nn + 1.0)"
     vr = "(2.0 * n1 * n0 * (2.0 * n1 * n0 - nn) / (nn * nn * (nn - 1.0)))"

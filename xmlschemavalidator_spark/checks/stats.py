@@ -16,6 +16,38 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+# Zelen & Severo (Abramowitz & Stegun 26.2.17) normal-CDF polynomial
+# constants — fixed double literals so BOTH engines evaluate the exact
+# same IEEE chain (the repo's fixed-chain contract; |error| < 7.5e-8,
+# far inside the 6dp rounding).
+_NORM_T = 0.2316419
+_NORM_B = (0.319381530, -0.356563782, 1.781477937, -1.821255978, 1.330274429)
+_INV_SQRT_2PI = 0.3989422804014327
+
+
+def _p_two_sided(z):
+    """Two-sided normal p-value from a z column via the A&S 26.2.17
+    polynomial — exp + multiply/add only, so the double chain is
+    bit-identical across engines. Clamped to 1 (z=0 overshoots by 9e-10)."""
+    az = F.abs(z)
+    t = F.lit(1.0) / (F.lit(1.0) + F.lit(_NORM_T) * az)
+    b1, b2, b3, b4, b5 = (F.lit(c) for c in _NORM_B)
+    poly = t * (b1 + t * (b2 + t * (b3 + t * (b4 + t * b5))))
+    pdf = F.exp(-(az * az) / F.lit(2.0)) * F.lit(_INV_SQRT_2PI)
+    return F.least(F.lit(1.0), F.lit(2.0) * pdf * poly)
+
+
+def _p_two_sided_sql(z: str) -> str:
+    """The DuckDB rendering of :func:`_p_two_sided` — same literals,
+    same nesting, same operator order."""
+    b1, b2, b3, b4, b5 = _NORM_B
+    az = f"abs({z})"
+    t = f"(1.0 / (1.0 + {_NORM_T} * {az}))"
+    poly = f"({t} * ({b1} + {t} * ({b2} + {t} * ({b3} + {t} * ({b4} + {t} * {b5})))))"
+    pdf = f"(exp(-({az} * {az}) / 2.0) * {_INV_SQRT_2PI})"
+    return f"least(1.0, 2.0 * {pdf} * {poly})"
+
+
 def column_stats(df: DataFrame, columns: list[str] | None = None, round_to: int = 6) -> DataFrame:
     """null-rate, min, max, mean length per column — one aggregation pass.
 
@@ -1201,7 +1233,7 @@ def spearman_correlation(
     distinct value the average rank is an exact integer HALF
     (2·avgrank = 2·cum_below + t + 1), joined back to the pairwise-
     complete rows on the quantized value (the rank tables are bounded
-    by the distinct grid, the roc_auc contract); the five moment sums
+    by the distinct grid, never by the corpus); the five moment sums
     over the integer 2·avgrank pairs run in DECIMAL(38,0); rho is the
     Pearson final — one fixed double chain with one sqrt. Constant
     columns (zero rank variance) yield NULL rho."""
@@ -1318,10 +1350,9 @@ def anova_f(
     quantum: int = 1_000_000,
     round_to: int = 6,
 ) -> DataFrame:
-    """One-way ANOVA F — the parametric counterpart of
-    :func:`~xmlschemavalidator_spark.checks.evaluation.kruskal_wallis`
-    (between-group vs within-group variance of the VALUES, where KW
-    tests the ranks): ONE row ``(n, n_groups, f, df_between,
+    """One-way ANOVA F — the parametric counterpart of the
+    Kruskal–Wallis rank test (between-group vs within-group variance
+    of the VALUES, where KW tests the ranks): ONE row ``(n, n_groups, f, df_between,
     df_within)``; compare against the F(k−1, n−k) critical value of
     your level.
 
@@ -1383,7 +1414,7 @@ def kendall_tau(
 
     Machinery: the naive form is an O(n²) pair walk — undoable at
     corpus scale. Instead observations collapse onto the quantized
-    (x, y) CELL table (the roc_auc/Spearman distinct-grid contract) and
+    (x, y) CELL table (the Spearman distinct-grid contract) and
     every pair statistic becomes a cell-pair product: C = Σ c₁c₂ over
     cells with x₁<x₂ ∧ y₁<y₂, D likewise with y₁>y₂ — exact integers in
     DECIMAL(38,0). Ties never enter the join: the denominator's tie
@@ -1980,8 +2011,6 @@ def mantel_haenszel(
     vd = F.col("_V").cast("double")
     or_mh = F.when(dd > 0, nd_ / dd)
     chi2 = F.when(vd > 0, od * od / vd)
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided
-
     return agg.select(
         "n",
         "n_strata",
@@ -2002,8 +2031,6 @@ def mantel_haenszel_oracle_sql(
 ) -> str:
     """DuckDB replay of :func:`mantel_haenszel`; ``from_sql`` yields
     ``(st, e BOOLEAN, o BOOLEAN)`` rows, nulls pre-filtered."""
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided_sql
-
     chi2 = "(CASE WHEN CAST(V AS DOUBLE) > 0 THEN CAST(O AS DOUBLE) * CAST(O AS DOUBLE) / CAST(V AS DOUBLE) END)"
     p = f"(CASE WHEN CAST(V AS DOUBLE) > 0 THEN {_p_two_sided_sql(f'sqrt({chi2})')} END)"
     return f"""WITH src AS ({from_sql}),
@@ -2064,8 +2091,8 @@ def jonckheere_terpstra(
     round_to: int = 6,
 ) -> DataFrame:
     """Jonckheere–Terpstra ordered-alternative test (Jonckheere 1954;
-    Terpstra 1952) — :func:`~xmlschemavalidator_spark.checks.evaluation.
-    cochran_armitage`'s CONTINUOUS sibling: "does the metric RISE across
+    Terpstra 1952) — the Cochran–Armitage trend test's CONTINUOUS
+    sibling: "does the metric RISE across
     ordered buckets", the one-directed-df question Kruskal–Wallis
     wastes power on by testing any-difference. ``score_col`` is the
     integer group order, ``value_col`` the metric. ONE row ``(n,
@@ -2151,8 +2178,6 @@ def jonckheere_terpstra(
         (F.col("n") > 2) & (var > 0),
         (F.col("_j2").cast("double") - ej2) / F.lit(2.0) / F.sqrt(var),
     )
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided
-
     return out.select(
         "n",
         "n_groups",
@@ -2258,8 +2283,6 @@ def woolf_homogeneity(
         )
         / F.sqrt(F.lit(2.0) / (F.lit(9.0) * dofd)),
     )
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided
-
     # upper-tail chi2 p = one-sided normal tail of z_wh
     half_p = _p_two_sided(zwh) / F.lit(2.0)
     p = F.when(ok, F.when(zwh >= 0, half_p).otherwise(F.lit(1.0) - half_p))
@@ -2278,8 +2301,6 @@ def woolf_homogeneity(
 def woolf_homogeneity_oracle_sql(from_sql: str, round_to: int = 6) -> str:
     """DuckDB replay of :func:`woolf_homogeneity`; ``from_sql`` yields
     ``(st, e BOOLEAN, o BOOLEAN)`` rows, nulls pre-filtered."""
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided_sql
-
     half_p = f"({_p_two_sided_sql('zwh')} / 2.0)"
     p = (
         "(CASE WHEN ok THEN CASE WHEN zwh >= 0 THEN "
@@ -2361,7 +2382,7 @@ def kendalls_w(
 
     in DOUBLED-rank space (average ranks are exact integer halves, so
     the doubled per-item rank sums R̃ᵢ keep every numerator term an
-    exact integer — the mann_whitney discipline; Tⱼ = Σ(t³−t) over
+    exact integer; Tⱼ = Σ(t³−t) over
     scorer j's tie blocks), and the chi²(n−1) = m(n−1)W significance
     via the Wilson–Hilferty chain (the Woolf device). W = 1 perfect
     concordance, W → 0 no agreement. Items must be scored by EVERY
@@ -2441,8 +2462,6 @@ def kendalls_w(
         (F.cbrt(chi2 / dofd) - (F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * dofd)))
         / F.sqrt(F.lit(2.0) / (F.lit(9.0) * dofd)),
     )
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided
-
     half_p = _p_two_sided(zwh) / F.lit(2.0)
     p = F.when(ok, F.when(zwh >= 0, half_p).otherwise(F.lit(1.0) - half_p))
     return agg.select(
@@ -2496,8 +2515,6 @@ def mann_kendall(
     layer (core.clj:263-285); north-rule analyzer completing the trend
     family (ols_trend → theil_sen_trend → THIS verdict).
     """
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided
-
     base = df.where(
         F.col(x).isNotNull() & F.col(y).isNotNull()
     ).select(
@@ -2630,8 +2647,6 @@ def mann_kendall_oracle_sql(
     ``x``, ``y`` and (when grouped) a ``grp`` column named by
     ``group_sql``. Same cells, same exact tie sums, same fixed
     three-term variance chain."""
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided_sql
-
     gsel = f"{group_sql}, " if group_sql else ""
     gby = f"GROUP BY {group_sql}" if group_sql else ""
     gjoin = (
@@ -2838,7 +2853,7 @@ def cliffs_delta(
     threshold.
 
     Machinery: both cohorts quantize onto the shared value grid (the
-    roc_auc/kendall_tau cell contract); wins = Σ over a-cells of
+    kendall_tau cell contract); wins = Σ over a-cells of
     cnt_a·(cumulative b below), losses symmetrically, ties the matched
     cells — exact DECIMAL(38,0) products via one bounded window over
     the DISTINCT grid and one join, never an n_a×n_b pair walk. δ is
@@ -3064,8 +3079,6 @@ def friedman_test(
         )
         / F.sqrt(F.lit(2.0) / (F.lit(9.0) * dofd)),
     )
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided
-
     half_p = _p_two_sided(zwh) / F.lit(2.0)
     p = F.when(ok, F.when(zwh >= 0, half_p).otherwise(F.lit(1.0) - half_p))
     return agg.select(
@@ -3088,8 +3101,6 @@ def friedman_oracle_sql(
     """DuckDB replay of :func:`friedman_test`; ``from_sql`` must yield
     ``blk``, ``trt``, ``val``. Same doubled ranks, same tie term,
     same Wilson–Hilferty tail."""
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided_sql
-
     chi2 = (
         "(CASE WHEN n_blocks > 0 AND n_treatments >= 2 AND corr > 0"
         " THEN raw / corr END)"

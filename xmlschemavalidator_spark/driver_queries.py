@@ -9496,166 +9496,6 @@ def rule_failure_cooccurrence(spark, sf_dir):
     return rule_cooccurrence(_t(spark, sf_dir, "documents"), _documents_ruleset_v2())
 
 
-_AUC_ORACLE = """\
-WITH b AS (
-  SELECT CAST(floor(CAST(length(text) - length(replace(text, ' ', '')) AS DOUBLE))
-              AS BIGINT) AS s,
-         CASE WHEN position(' spark ' IN ' ' || text || ' ') > 0 THEN 1 ELSE 0 END AS y
-  FROM documents WHERE text IS NOT NULL),
-g AS (SELECT s, CAST(sum(y) AS DECIMAL(38,0)) AS np,
-             CAST(sum(1 - y) AS DECIMAL(38,0)) AS nn
-      FROM b GROUP BY s),
-w AS (SELECT np, nn,
-             np * (2 * COALESCE(sum(nn) OVER (ORDER BY s
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   + nn) AS c
-      FROM g)
-SELECT CAST(sum(np) AS BIGINT) AS n_pos, CAST(sum(nn) AS BIGINT) AS n_neg,
-       CAST(count(*) AS BIGINT) AS n_scores,
-       round(CAST(sum(c) AS DOUBLE)
-             / (2 * CAST(sum(np) AS DOUBLE) * CAST(sum(nn) AS DOUBLE)), 6) AS auc
-FROM w"""
-
-
-@q("classifier_roc_auc", _AUC_ORACLE)
-def classifier_roc_auc(spark, sf_dir):
-    """Exact tie-aware ROC AUC (checks/evaluation.py:roc_auc — the
-    Mann-Whitney rank identity): the in-engine evaluation the quality/
-    lang classifiers previously lacked. Score = whitespace count (a
-    length proxy, integer so ties are real), label = contains the token
-    'spark' — a MEASURED mid-range association (AUC 0.7797 at sf0.01:
-    longer docs are likelier to contain any given token), so strict
-    wins, losses AND the half-credit tie path all carry weight in the
-    hash. The statistic is one exact rational summed in DECIMAL(38,0);
-    the ordered window runs over distinct integer scores (~90 rows),
-    never the corpus."""
-    from xmlschemavalidator_spark.checks.evaluation import roc_auc
-
-    docs = _t(spark, sf_dir, "documents")
-    scored = docs.where(F.col("text").isNotNull()).select(
-        (F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "), F.lit(""))))
-        .cast("double")
-        .alias("score"),
-        (
-            F.locate(" spark ", F.concat(F.lit(" "), F.col("text"), F.lit(" "))) > 0
-        ).alias("label"),
-    )
-    return roc_auc(scored, "score", "label", quantum=1)
-
-
-def _retrieval_metrics_oracle() -> str:
-    from xmlschemavalidator_spark.textops import bm25_topk_sql
-
-    runs = "\nUNION ALL\n".join(
-        f"""SELECT '{t}' AS query, doc,
-       row_number() OVER (ORDER BY score_micro DESC, doc ASC) AS rank
-FROM ({bm25_topk_sql([t], k=10)})"""
-        for t in sorted(_BM25_TERMS)
-    )
-    in_list = ", ".join(f"'{t}'" for t in sorted(_BM25_TERMS))
-    ws = "[ \\t\\n\\x0b\\f\\r]+"
-    return f"""\
-WITH run AS ({runs}),
-qr AS (
-  SELECT term AS query, doc, LEAST(3, tf) AS rel FROM (
-    SELECT doc, term, CAST(count(*) AS BIGINT) AS tf FROM (
-      SELECT doc_id AS doc,
-             lower(unnest(list_filter(
-               regexp_split_to_array(trim(coalesce(text, '')), '{ws}'),
-               x -> x <> ''))) AS term
-      FROM documents)
-    WHERE term IN ({in_list}) GROUP BY 1, 2)
-),
-hits AS (
-  SELECT r.query, r.rank, COALESCE(q.rel, 0) AS rel
-  FROM run r LEFT JOIN qr q ON r.query = q.query AND r.doc = q.doc
-  WHERE r.rank <= 10
-),
-pr AS (
-  SELECT query, CAST(count(*) AS BIGINT) AS n_ret,
-         CAST(sum(CASE WHEN rel > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_rel_ret,
-         min(CASE WHEN rel > 0 THEN rank END) AS first_rel,
-         sum(CAST(round((power(2, rel) - 1) / log2(rank + 1), 12)
-                  AS DECIMAL(20,12))) AS dcg
-  FROM hits GROUP BY query),
-nr AS (SELECT query, CAST(count(*) AS BIGINT) AS n_rel FROM qr
-       WHERE rel > 0 GROUP BY query),
-ideal AS (
-  SELECT query,
-         sum(CAST(round((power(2, rel) - 1) / log2(irank + 1), 12)
-                  AS DECIMAL(20,12))) AS idcg
-  FROM (SELECT query, rel,
-               row_number() OVER (PARTITION BY query
-                                  ORDER BY rel DESC, doc ASC) AS irank
-        FROM qr WHERE rel > 0)
-  WHERE irank <= 10 GROUP BY query)
-SELECT pr.query, n_ret, COALESCE(n_rel, 0) AS n_rel, n_rel_ret,
-       round(CAST(n_rel_ret AS DOUBLE) / 10, 6) AS precision_k,
-       CASE WHEN n_rel > 0
-            THEN round(CAST(n_rel_ret AS DOUBLE) / n_rel, 6) END AS recall_k,
-       round(COALESCE(CAST(1 AS DOUBLE) / first_rel, CAST(0 AS DOUBLE)), 6) AS rr,
-       round(CAST(dcg AS DOUBLE), 6) AS dcg_k,
-       CASE WHEN CAST(idcg AS DOUBLE) > 0
-            THEN round(CAST(dcg AS DOUBLE) / CAST(idcg AS DOUBLE), 6) END AS ndcg_k
-FROM pr
-LEFT JOIN nr ON pr.query = nr.query
-LEFT JOIN ideal ON pr.query = ideal.query"""
-
-
-@q("retrieval_ndcg_metrics", _retrieval_metrics_oracle())
-def retrieval_ndcg_metrics(spark, sf_dir):
-    """TREC-style evaluation of the engine's OWN retrieval
-    (checks/evaluation.py:retrieval_metrics over textops.bm25_topk):
-    three single-term BM25 top-10 runs scored against graded judgments
-    rel = min(3, tf of the term) derived from the SAME tokenizer — so
-    precision/recall/MRR/nDCG@10 are all measured on real rankings (BM25
-    length normalization makes the run diverge from the pure-tf ideal
-    ordering: nDCG < 1 carries signal). DCG terms follow the entropy
-    contract (fixed double chain on exact integers, 12dp round,
-    DECIMAL sum); the qrels tf comes from ONE projection with a tf
-    column per term (one corpus scan), and every aggregate is keyed on
-    query."""
-    from xmlschemavalidator_spark.checks.evaluation import retrieval_metrics
-    from xmlschemavalidator_spark.similarity import ranked
-    from xmlschemavalidator_spark.textops import _bm25_projection, bm25_topk
-
-    docs = _t(spark, sf_dir, "documents")
-    terms = sorted(_BM25_TERMS)
-    runs = []
-    for t in terms:
-        r = ranked(
-            bm25_topk(docs, "doc_id", [t], k=10),
-            [F.col("score_micro").desc()],
-            "doc",
-        )
-        runs.append(r.select(F.lit(t).alias("query"), "doc", "rank"))
-    run = runs[0]
-    for r in runs[1:]:
-        run = run.unionByName(r)
-    proj = _bm25_projection(docs, "doc_id", "text", terms)
-    qrels = (
-        proj.select(
-            "doc",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("query"),
-                            F.least(F.lit(3), F.col(f"_tf{i}")).alias("rel"),
-                            F.col(f"_tf{i}").alias("_tf"),
-                        )
-                        for i, t in enumerate(terms)
-                    ]
-                )
-            ).alias("s"),
-        )
-        .select("doc", "s.query", "s.rel", "s._tf")
-        .where(F.col("_tf") > 0)
-        .drop("_tf")
-    )
-    return retrieval_metrics(run, qrels, k=10)
-
-
 def _grouped_split_oracle() -> str:
     from xmlschemavalidator_spark.sampling import assign_split_sql
 
@@ -9824,95 +9664,6 @@ def privacy_l_diversity(spark, sf_dir):
     return l_diversity_violations(
         _t(spark, sf_dir, "documents"), ["source"], "lang", l=_L_DIV
     )
-
-
-# ===========================================================================
-# classifier calibration — reliability bins + ECE (checks/evaluation.py)
-# ===========================================================================
-
-# prob = fractional part of n_chars/500 clamped to [0,1] (a deterministic
-# pseudo-probability spread over all bins), label = text contains 'spark'
-_CAL_PROB_DUCK = "CAST((n_chars % 500) AS DOUBLE) / 500"
-_CAL_LABEL_DUCK = "CASE WHEN position(' spark ' IN ' ' || text || ' ') > 0 THEN 1 ELSE 0 END"
-
-
-def _cal_base_duck() -> str:
-    return f"""\
-b AS (
-  SELECT least(greatest(CAST(floor({_CAL_PROB_DUCK} * 1000000) AS BIGINT), 0),
-               1000000) AS p,
-         {_CAL_LABEL_DUCK} AS y
-  FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL),
-g AS (
-  SELECT least(CAST(floor(p * 10 / 1000000) AS BIGINT), 9) AS bin,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(p AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sp,
-         CAST(sum(CAST(y AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sy
-  FROM b GROUP BY 1)"""
-
-
-@q(
-    "classifier_calibration_bins",
-    f"""WITH {_cal_base_duck()}
-       SELECT bin, n,
-              round(CAST(sp AS DOUBLE) / (n * 1e6), 6) AS conf,
-              round(CAST(sy AS DOUBLE) / n, 6) AS acc,
-              round(CAST(sy AS DOUBLE) / n - CAST(sp AS DOUBLE) / (n * 1e6), 6) AS gap
-       FROM g""",
-)
-def classifier_calibration_bins(spark, sf_dir):
-    """Reliability-diagram bins (Guo et al. ICML'17 binned calibration;
-    checks/evaluation.py:calibration_report): prob = (n_chars mod
-    500)/500 — a deterministic pseudo-probability spanning all 10 bins —
-    against the 'spark'-token label, so conf varies per bin while acc
-    hovers at the base rate and gap is a measured nonzero in every bin.
-    Probabilities quantize to integer millionths BEFORE binning; both
-    means are exact rationals. ONE groupBy on the bin id — 10 result
-    rows at any corpus size."""
-    from xmlschemavalidator_spark.checks.evaluation import calibration_report
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & F.col("n_chars").isNotNull()
-    )
-    scored = docs.select(
-        ((F.col("n_chars") % 500).cast("double") / F.lit(500)).alias("prob"),
-        (
-            F.locate(" spark ", F.concat(F.lit(" "), F.col("text"), F.lit(" "))) > 0
-        ).alias("label"),
-    )
-    return calibration_report(scored, "prob", "label", n_bins=10)
-
-
-@q(
-    "classifier_calibration_ece",
-    f"""WITH {_cal_base_duck()}
-       SELECT CAST(sum(n) AS BIGINT) AS n,
-              CAST(count(*) AS BIGINT) AS n_bins_used,
-              round(CAST(sum(abs(sy * 1000000 - sp)) AS DOUBLE)
-                    / (CAST(sum(n) AS DOUBLE) * 1e6), 6) AS ece,
-              round(max(round(CAST(abs(sy * 1000000 - sp) AS DOUBLE)
-                              / (n * 1e6), 9)), 6) AS mce
-       FROM g""",
-)
-def classifier_calibration_ece(spark, sf_dir):
-    """Scalar calibration verdict (checks/evaluation.py:ece) over the
-    same binning: ECE telescopes to Σ_b |1e6·Σy_b − Σp_b| / (N·1e6) —
-    integer micro numerators summed in DECIMAL(38,0), ONE final double
-    division; MCE maxes the per-bin rational (rounded 9dp pre-max on
-    both engines). The length-derived pseudo-probability is
-    uncalibrated by construction, so ECE is a measured nonzero."""
-    from xmlschemavalidator_spark.checks.evaluation import ece
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & F.col("n_chars").isNotNull()
-    )
-    scored = docs.select(
-        ((F.col("n_chars") % 500).cast("double") / F.lit(500)).alias("prob"),
-        (
-            F.locate(" spark ", F.concat(F.lit(" "), F.col("text"), F.lit(" "))) > 0
-        ).alias("label"),
-    )
-    return ece(scored, "prob", "label", n_bins=10)
 
 
 from xmlschemavalidator_spark.weburl import local_clustering_oracle_sql  # noqa: E402
@@ -10740,64 +10491,6 @@ def jsonld_harvest(spark, sf_dir):
         "doc_id",
         F.get_json_object("payload", "$['@type']").alias("jtype"),
         F.get_json_object("payload", "$.id").try_cast("bigint").alias("jid"),
-    )
-
-
-@q(
-    "kaplan_meier_user_lifetimes",
-    """WITH u AS (
-         SELECT user_id,
-                CAST((epoch_us(max(CAST(ts AS TIMESTAMP)))
-                      - epoch_us(min(CAST(ts AS TIMESTAMP)))) // 86400000000
-                     AS BIGINT) AS dur,
-                max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) = 1 AS obs
-         FROM events WHERE ts IS NOT NULL GROUP BY user_id),
-       g AS (SELECT dur AS t,
-                    CAST(sum(CASE WHEN obs THEN 1 ELSE 0 END) AS BIGINT) AS n_events,
-                    CAST(sum(CASE WHEN obs THEN 0 ELSE 1 END) AS BIGINT) AS n_censored,
-                    CAST(count(*) AS BIGINT) AS n
-             FROM u GROUP BY 1),
-       r AS (SELECT *, CAST(sum(n) OVER (ORDER BY t
-                 ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT)
-                 AS n_risk FROM g),
-       e AS (SELECT *, CASE WHEN n_events < n_risk THEN
-                 CAST(floor(ln(CAST(n_risk - n_events AS DOUBLE)
-                               / CAST(n_risk AS DOUBLE)) * 1000000) AS BIGINT)
-                 END AS lt
-             FROM r WHERE n_events > 0)
-       SELECT t, n_risk, n_events, n_censored,
-              CASE WHEN n_events < n_risk THEN
-                CAST(sum(lt) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS BIGINT)
-              END AS logsurv_micro
-       FROM e""",
-)
-def kaplan_meier_user_lifetimes(spark, sf_dir):
-    """Kaplan-Meier survival over user activity lifetimes (Kaplan &
-    Meier 1958; checks/evaluation.py:kaplan_meier): duration = a user's
-    active span in days, event = the user ever purchased (users who
-    never purchase are right-CENSORED — they leave the risk set without
-    counting as conversions, the correction naive retention curves
-    skip). Product-limit factors as floor-quantized micro-ln terms,
-    cumulated by one expanding window over the bounded distinct-duration
-    grid; survival itself (exp) stays out of the cross-engine contract
-    (the perplexity convention)."""
-    from xmlschemavalidator_spark.checks.evaluation import kaplan_meier
-
-    ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    u = ev.groupBy("user_id").agg(
-        F.floor(
-            (
-                F.unix_micros(F.max(F.col("ts").cast("timestamp")))
-                - F.unix_micros(F.min(F.col("ts").cast("timestamp")))
-            )
-            / 86_400_000_000
-        )
-        .cast("bigint")
-        .alias("dur"),
-        (F.max((F.col("event_type") == "purchase").cast("long")) == 1).alias("obs"),
-    )
-    return kaplan_meier(u, "dur", "obs").select(
-        "t", "n_risk", "n_events", "n_censored", "logsurv_micro"
     )
 
 
@@ -11711,63 +11404,6 @@ def standardized_purchase_rates(spark, sf_dir):
 
 
 @q(
-    "kaplan_meier_cohort_curves",
-    """WITH u AS (
-         SELECT 'c' || CAST(user_id % 3 AS VARCHAR) AS cohort,
-                CAST((epoch_us(max(CAST(ts AS TIMESTAMP)))
-                      - epoch_us(min(CAST(ts AS TIMESTAMP)))) // 86400000000
-                     AS BIGINT) AS dur,
-                max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) = 1 AS obs
-         FROM events WHERE ts IS NOT NULL GROUP BY user_id),
-       g AS (SELECT cohort, dur AS t,
-                    CAST(sum(CASE WHEN obs THEN 1 ELSE 0 END) AS BIGINT) AS n_events,
-                    CAST(sum(CASE WHEN obs THEN 0 ELSE 1 END) AS BIGINT) AS n_censored,
-                    CAST(count(*) AS BIGINT) AS n
-             FROM u GROUP BY 1, 2),
-       r AS (SELECT *, CAST(sum(n) OVER (PARTITION BY cohort ORDER BY t
-                 ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT)
-                 AS n_risk FROM g),
-       e AS (SELECT *, CASE WHEN n_events < n_risk THEN
-                 CAST(floor(ln(CAST(n_risk - n_events AS DOUBLE)
-                               / CAST(n_risk AS DOUBLE)) * 1000000) AS BIGINT)
-                 END AS lt
-             FROM r WHERE n_events > 0)
-       SELECT cohort, t, n_risk, n_events, n_censored,
-              CASE WHEN n_events < n_risk THEN
-                CAST(sum(lt) OVER (PARTITION BY cohort ORDER BY t
-                     ROWS UNBOUNDED PRECEDING) AS BIGINT)
-              END AS logsurv_micro
-       FROM e""",
-)
-def kaplan_meier_cohort_curves(spark, sf_dir):
-    """Per-cohort Kaplan-Meier curves (checks/evaluation.py:
-    kaplan_meier with group_cols) — the grouped form retention analysis
-    actually uses: three user cohorts' survival curves computed in one
-    pass, windows partitioned by cohort over the bounded
-    (cohort, duration) grid."""
-    from xmlschemavalidator_spark.checks.evaluation import kaplan_meier
-
-    ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    u = ev.groupBy("user_id").agg(
-        F.floor(
-            (
-                F.unix_micros(F.max(F.col("ts").cast("timestamp")))
-                - F.unix_micros(F.min(F.col("ts").cast("timestamp")))
-            )
-            / 86_400_000_000
-        )
-        .cast("bigint")
-        .alias("dur"),
-        (F.max((F.col("event_type") == "purchase").cast("long")) == 1).alias("obs"),
-    ).withColumn(
-        "cohort", F.concat(F.lit("c"), (F.col("user_id") % 3).cast("string"))
-    )
-    return kaplan_meier(u, "dur", "obs", group_cols=("cohort",)).select(
-        "cohort", "t", "n_risk", "n_events", "n_censored", "logsurv_micro"
-    )
-
-
-@q(
     "smr_purchase_rates",
     """WITH b AS (SELECT 'h' || CAST(user_id % 4 AS VARCHAR) AS grp,
                          CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 604800000000
@@ -11987,146 +11623,6 @@ def winsorized_mean_event_value(spark, sf_dir):
 
 
 @q(
-    "ab_purchase_rate_test",
-    """WITH b AS (SELECT user_id % 2 = 0 AS ga,
-                         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-                  FROM events WHERE event_type IS NOT NULL),
-       a AS (SELECT CAST(sum(CASE WHEN ga THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-                    CAST(sum(CASE WHEN ga THEN y ELSE 0 END) AS BIGINT) AS x_a,
-                    CAST(sum(CASE WHEN ga THEN 0 ELSE 1 END) AS BIGINT) AS n_b,
-                    CAST(sum(CASE WHEN ga THEN 0 ELSE y END) AS BIGINT) AS x_b
-             FROM b),
-       c AS (SELECT *,
-                    CAST(x_a AS DOUBLE) / n_a AS pa,
-                    CAST(x_b AS DOUBLE) / n_b AS pb,
-                    (CAST(x_a AS DOUBLE) + x_b) / (CAST(n_a AS DOUBLE) + n_b) AS pool
-             FROM a)
-       SELECT n_a, x_a, n_b, x_b,
-              round(pa, 6) AS rate_a, round(pb, 6) AS rate_b,
-              round(pa - pb, 6) AS rate_diff,
-              round((pa - pb) / sqrt(pool * (1.0 - pool)
-                    * (1.0 / n_a + 1.0 / n_b)), 6) AS z,
-              abs((pa - pb) / sqrt(pool * (1.0 - pool)
-                  * (1.0 / n_a + 1.0 / n_b))) * 1000 > 1960.0 AS significant
-       FROM c""",
-)
-def ab_purchase_rate_test(spark, sf_dir):
-    """Two-proportion z-test (checks/evaluation.py:two_proportion_test)
-    on the purchase rate between the even/odd user-id halves — the A/B
-    analyzer completing the experiment toolkit beside the jackknife CIs
-    (z answers 'is the diff real', jackknife answers 'how wide is the
-    ratio'). Exact integer counts from one pass; fixed double chain
-    with one IEEE sqrt; integer-milli critical value so the threshold
-    can't drift between engines."""
-    from xmlschemavalidator_spark.checks.evaluation import two_proportion_test
-
-    ev = _t(spark, sf_dir, "events").where(F.col("event_type").isNotNull())
-    base = ev.select(
-        F.when(F.col("user_id") % 2 == 0, F.lit("a")).otherwise(F.lit("b")).alias("g"),
-        (F.col("event_type") == "purchase").cast("int").alias("ok"),
-    )
-    return two_proportion_test(base, "g", "ok", "a", "b")
-
-
-@q(
-    "mann_whitney_doc_length",
-    """WITH b AS (SELECT CAST(floor(CAST(n_chars AS DOUBLE) * 1000000) AS BIGINT) AS s,
-                         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS a
-                  FROM documents
-                  WHERE n_chars IS NOT NULL AND lang IN ('en', 'de')),
-       g AS (SELECT s, CAST(sum(a) AS DECIMAL(38,0)) AS na,
-                    CAST(sum(1 - a) AS DECIMAL(38,0)) AS nb
-             FROM b GROUP BY s),
-       w AS (SELECT na, nb,
-                    na * (2 * COALESCE(sum(nb) OVER (ORDER BY s
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                          + nb) AS u2,
-                    (na + nb) * (na + nb) * (na + nb) - (na + nb) AS t3
-             FROM g),
-       a AS (SELECT sum(na) AS na, sum(nb) AS nb, sum(u2) AS u2, sum(t3) AS t3
-             FROM w),
-       c AS (SELECT CAST(na AS DOUBLE) AS na, CAST(nb AS DOUBLE) AS nb,
-                    CAST(u2 AS DOUBLE) / 2.0 AS u, CAST(t3 AS DOUBLE) AS t3
-             FROM a),
-       z AS (SELECT *, na + nb AS n,
-                    na * nb / 12.0 * ((na + nb + 1.0)
-                        - t3 / ((na + nb) * (na + nb - 1.0))) AS var
-             FROM c)
-       SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-              round(u, 6) AS u,
-              round(CASE WHEN na > 0 AND nb > 0 AND n > 1 AND var > 0
-                    THEN (u - na * nb / 2.0) / sqrt(var) END, 6) AS z,
-              coalesce(abs(CASE WHEN na > 0 AND nb > 0 AND n > 1 AND var > 0
-                    THEN (u - na * nb / 2.0) / sqrt(var) END) * 1000 > 1960.0,
-                    FALSE) AS significant
-       FROM z""",
-)
-def mann_whitney_doc_length(spark, sf_dir):
-    """Mann–Whitney U test (checks/evaluation.py:mann_whitney_u) on
-    document lengths between en and de — the nonparametric two-sample
-    answer the KS drift check approximates, with FULL tie correction
-    (Σ(t³−t) in DECIMAL — a billion-row tie cubes past BIGINT).
-    Reuses the roc_auc distinct-score machinery: one groupBy + one
-    bounded ordered window, never a corpus sort."""
-    from xmlschemavalidator_spark.checks.evaluation import mann_whitney_u
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("n_chars").isNotNull() & F.col("lang").isin(["en", "de"])
-    )
-    return mann_whitney_u(docs, "n_chars", "lang", "en", "de")
-
-
-@q(
-    "kruskal_wallis_doc_length",
-    """WITH b AS (SELECT CAST(floor(CAST(n_chars AS DOUBLE) * 1000000) AS BIGINT) AS s,
-                         lang AS g
-                  FROM documents WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
-       cell AS (SELECT s, g, CAST(count(*) AS DECIMAL(38,0)) AS c
-                FROM b GROUP BY 1, 2),
-       pers AS (SELECT s, sum(c) AS t FROM cell GROUP BY s),
-       rk AS (SELECT s, t,
-                     2 * COALESCE(sum(t) OVER (ORDER BY s
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                       + t + 1 AS ar2,
-                     t * t * t - t AS t3
-              FROM pers),
-       j AS (SELECT cell.g, cell.c, rk.ar2 FROM cell JOIN rk USING (s)),
-       pg AS (SELECT g, sum(c) AS ng, sum(c * ar2) AS rg2 FROM j GROUP BY g),
-       ties AS (SELECT sum(t3) AS t3, sum(t) AS nn FROM rk),
-       a AS (SELECT CAST(sum(ng) AS DOUBLE) AS n,
-                    CAST(count(*) AS BIGINT) AS n_groups,
-                    sum(CAST(rg2 * rg2 AS DOUBLE) / (4.0 * CAST(ng AS DOUBLE)))
-                      AS sr2
-             FROM pg)
-       SELECT CAST(n AS BIGINT) AS n, n_groups,
-              round(CASE WHEN n_groups >= 2 AND n > 1
-                         AND (1.0 - CAST(t3 AS DOUBLE) / (n*n*n - n)) > 0
-                    THEN 12.0 / (n * (n + 1.0)) * sr2 - 3.0 * (n + 1.0) END, 6)
-                AS h,
-              round(CASE WHEN n_groups >= 2 AND n > 1
-                         AND (1.0 - CAST(t3 AS DOUBLE) / (n*n*n - n)) > 0
-                    THEN (12.0 / (n * (n + 1.0)) * sr2 - 3.0 * (n + 1.0))
-                         / (1.0 - CAST(t3 AS DOUBLE) / (n*n*n - n)) END, 6)
-                AS h_corrected,
-              CAST(n_groups - 1 AS INTEGER) AS df
-       FROM a CROSS JOIN ties""",
-)
-def kruskal_wallis_doc_length(spark, sf_dir):
-    """Kruskal–Wallis H over document lengths across ALL languages
-    (checks/evaluation.py:kruskal_wallis) — the k-group nonparametric
-    'any language drawing longer docs?' completing the MWU pair.
-    Average ranks as exact integer halves over the bounded
-    distinct-length grid; rank sums and the tie term DECIMAL-summed;
-    H and its tie correction one fixed double chain."""
-    from xmlschemavalidator_spark.checks.evaluation import kruskal_wallis
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("n_chars").isNotNull() & F.col("lang").isNotNull()
-    )
-    return kruskal_wallis(docs, "n_chars", "lang")
-
-
-@q(
     "spearman_value_vs_hour",
     """WITH b AS (SELECT CAST(floor(CAST(value AS DOUBLE) * 1000000) AS BIGINT) AS x,
                          CAST(floor(CAST(epoch_us(CAST(ts AS TIMESTAMP))
@@ -12178,57 +11674,6 @@ def spearman_value_vs_hour(spark, sf_dir):
         .alias("tod"),
     )
     return spearman_correlation(base, "value", "tod")
-
-
-@q(
-    "mann_whitney_lang_drilldown",
-    """WITH b AS (SELECT CAST(floor(CAST(n_chars AS DOUBLE) * 1000000) AS BIGINT) AS s,
-                         lang AS g
-                  FROM documents WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
-       cell AS (SELECT s, g, CAST(count(*) AS DECIMAL(38,0)) AS c
-                FROM b GROUP BY 1, 2),
-       tot AS (SELECT s, sum(c) AS t FROM cell GROUP BY s),
-       grps AS (SELECT DISTINCT g FROM cell),
-       lat AS (SELECT tot.s, grps.g, COALESCE(cell.c, 0) AS c, tot.t,
-                      tot.t - COALESCE(cell.c, 0) AS r
-               FROM tot CROSS JOIN grps
-               LEFT JOIN cell ON cell.s = tot.s AND cell.g = grps.g),
-       sc AS (SELECT *, COALESCE(sum(r) OVER (PARTITION BY g ORDER BY s
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumr
-              FROM lat),
-       pg AS (SELECT g, sum(c) AS na, sum(r) AS nb,
-                     sum(c * (2 * cumr + r)) AS u2
-              FROM sc GROUP BY g),
-       ties AS (SELECT sum(t * t * t - t) AS t3 FROM tot),
-       f AS (SELECT g, CAST(na AS DOUBLE) AS na, CAST(nb AS DOUBLE) AS nb,
-                    CAST(u2 AS DOUBLE) / 2.0 AS u, CAST(t3 AS DOUBLE) AS t3
-             FROM pg CROSS JOIN ties),
-       zc AS (SELECT *, na + nb AS n,
-                     na * nb / 12.0 * ((na + nb + 1.0)
-                         - t3 / ((na + nb) * (na + nb - 1.0))) AS var
-              FROM f)
-       SELECT g AS lang, CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-              round(u, 6) AS u,
-              round(CASE WHEN na > 0 AND nb > 0 AND n > 1 AND var > 0
-                    THEN (u - na * nb / 2.0) / sqrt(var) END, 6) AS z,
-              coalesce(abs(CASE WHEN na > 0 AND nb > 0 AND n > 1 AND var > 0
-                    THEN (u - na * nb / 2.0) / sqrt(var) END) * 1000 > 1960.0,
-                    FALSE) AS significant
-       FROM zc""",
-)
-def mann_whitney_lang_drilldown(spark, sf_dir):
-    """The Kruskal–Wallis drill-down (checks/evaluation.py:
-    mann_whitney_one_vs_rest): per-language one-vs-rest rank tests over
-    document lengths, all served from ONE shared distinct-value lattice
-    — never a per-group corpus scan; pooled tie term shared by every
-    split (ties are a property of the value multiset). Pinned equal to
-    the explicit pairwise test in tests."""
-    from xmlschemavalidator_spark.checks.evaluation import mann_whitney_one_vs_rest
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("n_chars").isNotNull() & F.col("lang").isNotNull()
-    )
-    return mann_whitney_one_vs_rest(docs, "n_chars", "lang")
 
 
 @q(
@@ -12420,113 +11865,6 @@ def rule_rate_intervals_q(spark, sf_dir):
         _documents_ruleset_v2(),
         slo_fail_micro=10_000,
     )
-
-
-def _bh_sql(tests_cte: str, id_col: str, alpha_micro: int) -> str:
-    """Render the BH step-up chain over a CTE named ``tests`` yielding
-    (id_col, z) — same fixed double chain as checks/evaluation.bh_fdr."""
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided_sql
-
-    p = _p_two_sided_sql("z")
-    return f"""WITH {tests_cte},
-       pv AS (SELECT {id_col}, z,
-                     CASE WHEN z IS NOT NULL THEN {p} END AS p
-              FROM tests),
-       rk AS (SELECT {id_col}, z, p,
-                     CASE WHEN p IS NOT NULL THEN CAST(row_number() OVER (
-                         ORDER BY p ASC NULLS LAST, {id_col}) AS BIGINT) END AS i,
-                     CAST(count(p) OVER () AS BIGINT) AS m
-              FROM pv),
-       ct AS (SELECT *, max(CASE WHEN p * CAST(m AS DOUBLE) * 1000000.0
-                                      <= CAST(i AS DOUBLE) * {float(alpha_micro)}
-                                 THEN i END) OVER () AS cut
-              FROM rk)
-       SELECT {id_col}, round(z, 6) AS z, round(p, 6) AS p_value,
-              i AS bh_rank,
-              round(CAST(i AS DOUBLE) * {float(alpha_micro)}
-                    / (CAST(m AS DOUBLE) * 1000000.0), 6) AS bh_crit,
-              coalesce(i <= cut, FALSE) AS rejected
-       FROM ct"""
-
-
-_MWU_SOURCE_TESTS_CTE = """b AS (SELECT CAST(floor(CAST(n_chars AS DOUBLE) * 1000000) AS BIGINT) AS s,
-                         source AS g
-                  FROM documents WHERE n_chars IS NOT NULL AND source IS NOT NULL),
-       cell AS (SELECT s, g, CAST(count(*) AS DECIMAL(38,0)) AS c
-                FROM b GROUP BY 1, 2),
-       tot AS (SELECT s, sum(c) AS t FROM cell GROUP BY s),
-       grps AS (SELECT DISTINCT g FROM cell),
-       lat AS (SELECT tot.s, grps.g, COALESCE(cell.c, 0) AS c, tot.t,
-                      tot.t - COALESCE(cell.c, 0) AS r
-               FROM tot CROSS JOIN grps
-               LEFT JOIN cell ON cell.s = tot.s AND cell.g = grps.g),
-       sc AS (SELECT *, COALESCE(sum(r) OVER (PARTITION BY g ORDER BY s
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumr
-              FROM lat),
-       pg AS (SELECT g, sum(c) AS na, sum(r) AS nb,
-                     sum(c * (2 * cumr + r)) AS u2
-              FROM sc GROUP BY g),
-       ties AS (SELECT sum(t * t * t - t) AS t3 FROM tot),
-       f AS (SELECT g, CAST(na AS DOUBLE) AS na, CAST(nb AS DOUBLE) AS nb,
-                    CAST(u2 AS DOUBLE) / 2.0 AS u, CAST(t3 AS DOUBLE) AS t3
-             FROM pg CROSS JOIN ties),
-       zc AS (SELECT *, na + nb AS n,
-                     na * nb / 12.0 * ((na + nb + 1.0)
-                         - t3 / ((na + nb) * (na + nb - 1.0))) AS var
-              FROM f),
-       tests AS (SELECT g AS source,
-              round(CASE WHEN na > 0 AND nb > 0 AND n > 1 AND var > 0
-                    THEN (u - na * nb / 2.0) / sqrt(var) END, 6) AS z
-       FROM zc)"""
-
-
-@q("bh_fdr_source_drilldown", _bh_sql(_MWU_SOURCE_TESTS_CTE, "source", 50_000))
-def bh_fdr_source_drilldown(spark, sf_dir):
-    """Benjamini–Hochberg FDR correction (checks/evaluation.py:bh_fdr)
-    over the 20-source one-vs-rest MWU drill-down — the multiple-
-    comparisons capstone of the experiment toolkit: 20 segment tests at
-    a naive 5% gate expect ~1 false page on pure noise; BH bounds the
-    false-discovery RATE instead. On this uniform synthetic corpus the
-    honest answer is no rejection (measured min p = 0.081 at sf0.01) —
-    the full chain (A&S normal p from the rounded z, p-ascending ranks,
-    the i*alpha/m crit ladder, the step-up cut) is what the hash pins;
-    the rejecting branch is pinned by bh_fdr_planted_stepup. ONE window
-    sort over the 20-row hypothesis table, never corpus-sized."""
-    from xmlschemavalidator_spark.checks.evaluation import bh_fdr, mann_whitney_one_vs_rest
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("n_chars").isNotNull() & F.col("source").isNotNull()
-    )
-    tests = mann_whitney_one_vs_rest(docs, "n_chars", "source").select("source", "z")
-    return bh_fdr(tests, "source", alpha_micro=50_000)
-
-
-_BH_PLANTED = (
-    ("seg_a", 3.5), ("seg_b", 2.30), ("seg_c", 2.27),
-    ("seg_d", 2.0), ("seg_e", 0.3), ("seg_f", None),
-)
-
-_BH_PLANTED_CTE = "tests AS (" + " UNION ALL ".join(
-    f"SELECT '{s}' AS seg, CAST({z if z is not None else 'NULL'} AS DOUBLE) AS z"
-    for s, z in _BH_PLANTED
-) + ")"
-
-
-@q("bh_fdr_planted_stepup", _bh_sql(_BH_PLANTED_CTE, "seg", 50_000))
-def bh_fdr_planted_stepup(spark, sf_dir):
-    """The rejecting branch of bh_fdr, driver-pinned on an arithmetically
-    planted hypothesis table (the unigram_vocab_planted pattern: both
-    engines consume the same literals): z's chosen so the sorted p's
-    bracket the i*alpha/m ladder — rank-2 (p=0.0214 > 0.02) fails its
-    OWN threshold but is RESCUED by rank-3 passing below its (the
-    step-up property a naive per-row compare gets wrong), rank-4
-    (p=0.0455) stays accepted though a naive per-test 5% gate would
-    page it, and the NULL-z seg_f is carried with rejected=false and
-    excluded from m."""
-    from xmlschemavalidator_spark.checks.evaluation import bh_fdr
-
-    df = spark.createDataFrame(list(_BH_PLANTED), "seg string, z double")
-    return bh_fdr(df, "seg", alpha_micro=50_000)
 
 
 @q(
@@ -13780,55 +13118,6 @@ def embedding_outlier_gate(spark, sf_dir):
     return embedding_outliers(emb, "embedding", "vec_id", k=4, iters=4)
 
 
-@q(
-    "ks_exact_en_vs_de",
-    """WITH b AS (SELECT CAST(floor(CAST(n_chars AS DOUBLE) * 1000000) AS BIGINT) AS s,
-                  lang = 'en' AS ga
-           FROM documents WHERE n_chars IS NOT NULL AND lang IN ('en', 'de')),
-       cell AS (SELECT s,
-                   CAST(sum(CASE WHEN ga THEN 1 ELSE 0 END) AS DECIMAL(38,0)) AS ca,
-                   CAST(sum(CASE WHEN ga THEN 0 ELSE 1 END) AS DECIMAL(38,0)) AS cb
-                FROM b GROUP BY s),
-       cum AS (SELECT s,
-                  sum(ca) OVER (ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND CURRENT ROW) AS cuma,
-                  sum(cb) OVER (ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND CURRENT ROW) AS cumb,
-                  sum(ca) OVER () AS na, sum(cb) OVER () AS nb
-               FROM cell),
-       sc AS (SELECT s, na, nb, abs(cuma * nb - cumb * na) AS d FROM cum),
-       rk AS (SELECT *, max(d) OVER () AS dmax,
-                     row_number() OVER (ORDER BY d DESC, s) AS rn
-              FROM sc)
-       SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-              round(CASE WHEN na > 0 AND nb > 0 THEN CAST(dmax AS DOUBLE)
-                         / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)) END, 6)
-                  AS d_stat,
-              s AS d_at_value,
-              coalesce(CASE WHEN na > 0 AND nb > 0
-                    THEN CAST(dmax AS DOUBLE)
-                         / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))
-                         > 1.358 * sqrt((CAST(na AS DOUBLE) + CAST(nb AS DOUBLE))
-                                        / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)))
-                    END, FALSE) AS significant
-       FROM rk WHERE rn = 1""",
-)
-def ks_exact_en_vs_de(spark, sf_dir):
-    """EXACT two-sample KS (checks/evaluation.py:ks_exact) between en
-    and de document lengths — the binned ks_drift's exact sibling: true
-    D = max|F_a − F_b| over the shared value lattice with zero bucketing
-    error, the supremum's location (d_at_value — WHERE the drift is)
-    rank-selected deterministically, and the large-sample 5% gate
-    (1.358 integer-milli constant). Cross-multiplied DECIMAL ECDF
-    diffs; ONE double division at the max."""
-    from xmlschemavalidator_spark.checks.evaluation import ks_exact
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("n_chars").isNotNull() & F.col("lang").isin("en", "de")
-    )
-    return ks_exact(docs, "n_chars", "lang", "en", "de")
-
-
 def _lang_confusion_oracle() -> str:
     base = _lang_model_oracle()
     tail = (
@@ -14496,56 +13785,6 @@ def snm_blocking_evaluation(spark, sf_dir):
     return blocking_evaluation(cand, truth, n_records=dirty.count())
 
 
-@q(
-    "nelson_aalen_user_hazard",
-    """WITH u AS (
-         SELECT user_id,
-                CAST((epoch_us(max(CAST(ts AS TIMESTAMP)))
-                      - epoch_us(min(CAST(ts AS TIMESTAMP)))) // 86400000000
-                     AS BIGINT) AS dur,
-                max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) = 1 AS obs
-         FROM events WHERE ts IS NOT NULL GROUP BY user_id),
-       g AS (SELECT dur AS t,
-                    CAST(sum(CASE WHEN obs THEN 1 ELSE 0 END) AS BIGINT) AS n_events,
-                    CAST(sum(CASE WHEN obs THEN 0 ELSE 1 END) AS BIGINT) AS n_censored,
-                    CAST(count(*) AS BIGINT) AS n
-             FROM u GROUP BY 1),
-       r AS (SELECT *, CAST(sum(n) OVER (ORDER BY t
-                 ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT)
-                 AS n_risk FROM g)
-       SELECT t, n_risk, n_events, n_censored,
-              n_events * 1000000 // n_risk AS hazard_inc_micro,
-              CAST(sum(n_events * 1000000 // n_risk)
-                   OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS BIGINT)
-                AS cum_hazard_micro
-       FROM r WHERE n_events > 0""",
-)
-def nelson_aalen_user_hazard(spark, sf_dir):
-    """Nelson-Aalen cumulative hazard over user activity lifetimes
-    (checks/evaluation.py:nelson_aalen) — Kaplan-Meier's additive
-    sibling on the SAME durations/censoring (kaplan_meier_user_
-    lifetimes), answering the intensity question: conversion pressure
-    per lifetime-day. Exactness strictly stronger than KM's: each
-    d/n increment is an exact integer-micro rational, the cumulation a
-    pure integer sum — no ln, no libm contract anywhere."""
-    from xmlschemavalidator_spark.checks.evaluation import nelson_aalen
-
-    ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    u = ev.groupBy("user_id").agg(
-        F.floor(
-            (
-                F.unix_micros(F.max(F.col("ts").cast("timestamp")))
-                - F.unix_micros(F.min(F.col("ts").cast("timestamp")))
-            )
-            / 86_400_000_000
-        )
-        .cast("bigint")
-        .alias("dur"),
-        (F.max((F.col("event_type") == "purchase").cast("long")) == 1).alias("obs"),
-    )
-    return nelson_aalen(u, "dur", "obs")
-
-
 @q("embedding_opq_report")  # no oracle: Lloyd + SVD are engine-specific
 def embedding_opq_report(spark, sf_dir):
     """OPQ vs plain PQ at equal bytes/vector (similarity.py:opq_train —
@@ -14839,44 +14078,6 @@ def semantic_violations_mixed(spark, sf_dir):
     return semantic_type_violations(staged, "mixed_str", "integer", "event_id")
 
 
-def _brier_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import brier_oracle_sql
-
-    return brier_oracle_sql(
-        f"SELECT {_CAL_PROB_DUCK} AS prob, {_CAL_LABEL_DUCK} AS y"
-        " FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL",
-        "prob",
-        "y",
-        n_bins=10,
-    )
-
-
-@q("classifier_brier_decomposition", _brier_oracle())
-def classifier_brier_decomposition(spark, sf_dir):
-    """Brier score + Murphy decomposition (checks/evaluation.py:
-    brier_decomposition) on the same pseudo-probability staging as the
-    calibration bins: brier = reliability − resolution + uncertainty
-    + residual, every term reported — reliability re-states the ECE
-    story in squared units, resolution measures whether the score
-    separates outcomes at all (for this length-derived score: barely),
-    uncertainty is the label's own base-rate variance, and the
-    sign-indefinite residual (within-bin variance − 2·covariance) is
-    surfaced rather than hidden. Per-bin terms pico-quantized then
-    DECIMAL-summed — no float-sum ordering to diverge. ONE scan."""
-    from xmlschemavalidator_spark.checks.evaluation import brier_decomposition
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & F.col("n_chars").isNotNull()
-    )
-    scored = docs.select(
-        ((F.col("n_chars") % 500).cast("double") / F.lit(500)).alias("prob"),
-        (
-            F.locate(" spark ", F.concat(F.lit(" "), F.col("text"), F.lit(" "))) > 0
-        ).alias("label"),
-    )
-    return brier_decomposition(scored, "prob", "label", n_bins=10)
-
-
 def _species_oracle() -> str:
     from xmlschemavalidator_spark.checks.stats import species_richness_oracle_sql
     from xmlschemavalidator_spark.textops import _WS
@@ -14909,42 +14110,6 @@ def token_vocab_coverage_per_lang(spark, sf_dir):
         "lang", F.explode(tokens(F.col("text"))).alias("w")
     ).where(F.col("w") != "")
     return species_richness(toks, "w", group_cols=("lang",))
-
-
-def _mcnemar_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import mcnemar_oracle_sql
-    from xmlschemavalidator_spark.textops import _WS
-
-    ntok = (
-        "(CASE WHEN trim(coalesce(text, '')) = '' THEN 0 ELSE"
-        f" len(string_split_regex(trim(text), '{_WS}+')) END)"
-    )
-    return mcnemar_oracle_sql(
-        "SELECT n_chars BETWEEN 36 AND 400 AS a,"
-        f" {ntok} BETWEEN 8 AND 80 AS b"
-        " FROM documents WHERE n_chars IS NOT NULL"
-    )
-
-
-@q("length_gate_mcnemar", _mcnemar_oracle())
-def length_gate_mcnemar(spark, sf_dir):
-    """McNemar's paired test (checks/evaluation.py:mcnemar_test) between
-    two versions of the document length gate evaluated on the SAME
-    corpus — v1 keeps 36 ≤ n_chars ≤ 400, v2 keeps 8 ≤ tokens ≤ 80.
-    The unpaired two-proportion z-test would dilute the 1-2% of docs
-    that actually flip under a sea of concordant verdicts; McNemar
-    scores ONLY the flip cells (continuity-corrected chi², df=1) —
-    the rule-rollout significance gate. One scan, four integer cells,
-    oracle-exact including the A&S-polynomial p."""
-    from xmlschemavalidator_spark.checks.evaluation import mcnemar_test
-    from xmlschemavalidator_spark.textops import token_count
-
-    docs = _t(spark, sf_dir, "documents").where(F.col("n_chars").isNotNull())
-    verdicts = docs.select(
-        F.col("n_chars").between(36, 400).alias("a"),
-        token_count(F.col("text")).between(8, 80).alias("b"),
-    )
-    return mcnemar_test(verdicts, "a", "b")
 
 
 _BCUBED_ORACLE = """WITH base AS (
@@ -15157,87 +14322,6 @@ def prf_query_expansion(spark, sf_dir):
     return prf_expansion_terms(docs, "doc_id", _BM25_TERMS, r=5, n_expand=5)
 
 
-def _logrank_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import logrank_oracle_sql
-
-    return logrank_oracle_sql(
-        """SELECT CAST((epoch_us(max(CAST(ts AS TIMESTAMP)))
-                 - epoch_us(min(CAST(ts AS TIMESTAMP)))) // 86400000000
-                AS BIGINT) AS t,
-              user_id % 2 = 0 AS ga,
-              CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                AS BIGINT) AS e
-       FROM events WHERE ts IS NOT NULL GROUP BY user_id"""
-    )
-
-
-@q("logrank_cohort_comparison", _logrank_oracle())
-def logrank_cohort_comparison(spark, sf_dir):
-    """Log-rank test (checks/evaluation.py:logrank_test) between the two
-    user-id-parity cohorts on the same duration/censoring staging as
-    nelson_aalen_user_hazard (activity-span days, purchase = event,
-    still-active = censored): the significance verdict the KM /
-    Nelson–Aalen CURVES don't carry — parity cohorts are exchangeable,
-    so this doubles as an A/A guard (an alarming chi² here means the
-    staging itself leaks). Hypergeometric O−E across the shared event
-    grid, 12-dp pre-sum rounding, oracle-exact including the A&S p."""
-    from xmlschemavalidator_spark.checks.evaluation import logrank_test
-
-    ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    per_user = ev.groupBy("user_id").agg(
-        (
-            (
-                F.unix_micros(F.max(F.col("ts").cast("timestamp")))
-                - F.unix_micros(F.min(F.col("ts").cast("timestamp")))
-            )
-            / F.lit(86_400_000_000)
-        )
-        .cast("bigint")
-        .alias("t"),
-        (F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)) == 1)
-        .alias("e"),
-    )
-    staged = per_user.select(
-        "t", (F.col("user_id") % 2 == 0).alias("cohort"), "e"
-    )
-    return logrank_test(staged, "t", "e", "cohort", True, False)
-
-
-def _ca_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import cochran_armitage_oracle_sql
-
-    return cochran_armitage_oracle_sql(
-        """SELECT least(n_chars // 200, 2) AS s,
-              CASE WHEN position(' spark ' IN ' ' || text || ' ') > 0
-                   THEN 1 ELSE 0 END AS y
-       FROM documents WHERE n_chars IS NOT NULL AND text IS NOT NULL"""
-    )
-
-
-@q("cochran_armitage_length_trend", _ca_oracle())
-def cochran_armitage_length_trend(spark, sf_dir):
-    """Cochran–Armitage trend test (checks/evaluation.py:
-    cochran_armitage) — does the ' spark '-mention rate TREND across
-    the three doc-length buckets (0–199 / 200–399 / 400+ chars)? The
-    ordered one-df question the k-group chi² wastes power on; the whole
-    statistic is FIVE integer sums in one partial agg (t_scaled =
-    N·Σsx − X·Σsn is the exact-integer hash-grade numerator), so the
-    dose-response verdict costs one scan at any corpus size.
-    Oracle-exact including the A&S p."""
-    from xmlschemavalidator_spark.checks.evaluation import cochran_armitage
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("n_chars").isNotNull() & F.col("text").isNotNull()
-    )
-    staged = docs.select(
-        F.least(F.expr("n_chars div 200"), F.lit(2)).alias("s"),
-        (
-            F.locate(" spark ", F.concat(F.lit(" "), F.col("text"), F.lit(" "))) > 0
-        ).alias("y"),
-    )
-    return cochran_armitage(staged, "s", "y")
-
-
 _NEYMAN_ORACLE = """WITH per AS (
   SELECT stratum, CAST(count(*) AS BIGINT) AS n_rows,
          CAST(sum(q) AS HUGEINT) AS s, CAST(sum(q * q) AS HUGEINT) AS ss
@@ -15380,103 +14464,6 @@ def stratified_audit_estimate(spark, sf_dir):
     return stratified_estimate(docs, sample, "n_chars", "lang")
 
 
-def _kappa_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import cohens_kappa_oracle_sql
-
-    base = _lang_model_oracle()
-    tail = (
-        "SELECT doc, lang AS lang_pred, CAST(score AS BIGINT) AS score_micro\n"
-        "FROM r WHERE rn = 1"
-    )
-    assert tail in base, "lang model oracle tail changed; update the wrapper"
-    pairs = base.replace(
-        tail,
-        """, pred AS (SELECT doc, lang AS lang_pred FROM r WHERE rn = 1)
-SELECT d.lang AS va, pred.lang_pred AS vb
-FROM pred JOIN documents d ON pred.doc = d.doc_id""",
-    )
-    return cohens_kappa_oracle_sql(pairs, "va", "vb")
-
-
-@q("lang_id_cohens_kappa", _kappa_oracle())
-def lang_id_cohens_kappa(spark, sf_dir):
-    """Cohen's κ (checks/evaluation.py:cohens_kappa) between the
-    declared language labels and the trained NB classifier's
-    predictions — the chance-corrected scalar on top of
-    lang_confusion_matrix's cells: raw agreement is flattered by the
-    en-heavy marginal (two raters answering 'en' most of the time
-    agree by luck), κ subtracts exactly that. The acceptance gate a
-    classifier must pass against the labels it will replace
-    (Landis–Koch ≥0.8 = almost perfect). One cell groupBy + two
-    label-marginal aggregates; oracle replays training+scoring+argmax
-    +κ end to end."""
-    from xmlschemavalidator_spark.lang_model import predict_lang, train_lang_model
-
-    docs = _t(spark, sf_dir, "documents")
-    marker = None
-    for lg, m in sorted(_LANG_MARKERS.items()):
-        marker = (
-            F.when(F.col("lang") == lg, F.lit(m))
-            if marker is None
-            else marker.when(F.col("lang") == lg, F.lit(m))
-        )
-    marker = marker.otherwise(F.lit(""))
-    aug = docs.select(
-        "doc_id", "lang",
-        F.concat(marker, F.coalesce(F.col("text"), F.lit(""))).alias("text"),
-    )
-    model = train_lang_model(
-        aug, "doc_id", "lang",
-        n_buckets=_LANG_NB_BUCKETS, max_chars=_LANG_NB_MAXCHARS,
-    )
-    pred = predict_lang(aug, model, "doc_id").select("doc", "lang_pred")
-    pairs = pred.join(docs.select(F.col("doc_id").alias("doc"), "lang"), "doc")
-    from xmlschemavalidator_spark.checks.evaluation import cohens_kappa
-
-    return cohens_kappa(pairs, "lang", "lang_pred")
-
-
-def _wilcoxon_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import wilcoxon_oracle_sql
-
-    return wilcoxon_oracle_sql(
-        """SELECT
-         CAST(sum(CASE WHEN event_type = 'view' THEN value END) AS DOUBLE)
-           / sum(CASE WHEN event_type = 'view' THEN 1 END) AS a,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN value END) AS DOUBLE)
-           / sum(CASE WHEN event_type = 'purchase' THEN 1 END) AS b
-       FROM events WHERE value IS NOT NULL GROUP BY user_id
-       HAVING sum(CASE WHEN event_type = 'view' THEN 1 END) > 0
-          AND sum(CASE WHEN event_type = 'purchase' THEN 1 END) > 0"""
-    )
-
-
-@q("wilcoxon_view_vs_purchase", _wilcoxon_oracle())
-def wilcoxon_view_vs_purchase(spark, sf_dir):
-    """Wilcoxon signed-rank test (checks/evaluation.py:
-    wilcoxon_signed_rank) on PAIRED per-user means: each user's average
-    view-event value against their average purchase-event value — the
-    within-subject comparison the unpaired Mann–Whitney dilutes with
-    between-user variance, and the rank-based one a fat-tailed spender
-    can't buy (the paired t-test's failure mode). Integer micro diffs,
-    average ranks as exact halves over the bounded |d| lattice,
-    tie-corrected normal z; oracle-exact."""
-    from xmlschemavalidator_spark.checks.evaluation import wilcoxon_signed_rank
-
-    ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    per_user = ev.groupBy("user_id").agg(
-        (
-            F.sum(F.when(F.col("event_type") == "view", F.col("value")))
-            / F.sum(F.when(F.col("event_type") == "view", F.lit(1)))
-        ).alias("a"),
-        (
-            F.sum(F.when(F.col("event_type") == "purchase", F.col("value")))
-            / F.sum(F.when(F.col("event_type") == "purchase", F.lit(1)))
-        ).alias("b"),
-    ).where(F.col("a").isNotNull() & F.col("b").isNotNull())
-    return wilcoxon_signed_rank(per_user, "a", "b")
-
-
 def _mh_oracle() -> str:
     from xmlschemavalidator_spark.checks.stats import mantel_haenszel_oracle_sql
 
@@ -15513,82 +14500,6 @@ def mantel_haenszel_keyword_length(spark, sf_dir):
         (F.col("n_chars") >= 250).alias("o"),
     )
     return mantel_haenszel(staged, "e", "o", "st")
-
-
-def _cuped_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import cuped_oracle_sql
-
-    return cuped_oracle_sql(
-        """SELECT user_id % 2 = 0 AS ga,
-              CAST(coalesce(sum(CASE WHEN event_type = 'purchase'
-                                     THEN value END), 0) AS DOUBLE) AS y,
-              CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-                AS DOUBLE) AS x
-       FROM events WHERE value IS NOT NULL GROUP BY user_id"""
-    )
-
-
-@q("cuped_purchase_experiment", _cuped_oracle())
-def cuped_purchase_experiment(spark, sf_dir):
-    """CUPED-adjusted A/B comparison (checks/evaluation.py:cuped_test,
-    Deng et al. WSDM'13): per-user purchase revenue compared between
-    the user-parity arms with view-count as the pre-period covariate —
-    θ fit POOLED so the adjustment can't bias the contrast, the
-    variance shrinks by ρ², and parity arms make it an A/A guard (a
-    significant adjusted diff here means the staging leaks). Ten
-    DECIMAL moment lanes in ONE partial-agg pass; oracle-exact
-    including θ, the adjusted diff and the A&S p."""
-    from xmlschemavalidator_spark.checks.evaluation import cuped_test
-
-    ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    per_user = ev.groupBy("user_id").agg(
-        F.coalesce(
-            F.sum(F.when(F.col("event_type") == "purchase", F.col("value"))),
-            F.lit(0.0),
-        ).alias("y"),
-        F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-        .cast("double")
-        .alias("x"),
-    )
-    staged = per_user.select(
-        (F.col("user_id") % 2 == 0).alias("arm"), "y", "x"
-    )
-    return cuped_test(staged, "y", "x", "arm", True, False)
-
-
-def _power_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import (
-        required_sample_size_oracle_sql,
-    )
-
-    return required_sample_size_oracle_sql(
-        "SELECT position(' spark ' IN ' ' || text || ' ') > 0 AS y"
-        " FROM documents WHERE text IS NOT NULL",
-        "y",
-        20_000,
-    )
-
-
-@q("audit_power_requirement", _power_oracle())
-def audit_power_requirement(spark, sf_dir):
-    """Two-proportion power design (checks/evaluation.py:
-    required_sample_size) against the measured ' spark '-mention rate:
-    how many docs per arm an experiment needs to detect a 2-point
-    absolute shift at 5%/80% — and whether THIS corpus could even fill
-    both arms (``feasible``). The type-II-error guard for every
-    significance gate in the toolkit: running the monitor under-powered
-    and reading 'not significant' as 'no regression' is the failure
-    this one number prevents. One partial-agg scan, integer z
-    thresholds, oracle-exact."""
-    from xmlschemavalidator_spark.checks.evaluation import required_sample_size
-
-    docs = _t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    staged = docs.select(
-        (
-            F.locate(" spark ", F.concat(F.lit(" "), F.col("text"), F.lit(" "))) > 0
-        ).alias("y")
-    )
-    return required_sample_size(staged, "y", mde_ppm=20_000)
 
 
 def _laplace_oracle() -> str:
@@ -15713,37 +14624,6 @@ def tokenizer_fertility_per_lang(spark, sf_dir):
     return tokenizer_fertility(_t(spark, sf_dir, "documents"), "lang")
 
 
-def _tost_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import equivalence_oracle_sql
-
-    return equivalence_oracle_sql(
-        "SELECT doc_id % 2 = 0 AS ga, CAST(n_chars AS DOUBLE) AS v"
-        " FROM documents WHERE n_chars IS NOT NULL",
-        margin_ppm=25_000_000,
-    )
-
-
-@q("equivalence_doc_length_arms", _tost_oracle())
-def equivalence_doc_length_arms(spark, sf_dir):
-    """TOST equivalence certification (checks/evaluation.py:
-    equivalence_test, Schuirmann 1987) between the doc-id-parity halves
-    of the corpus on mean n_chars at ±25 chars — the migration gate
-    that "not significantly different" can never be (an under-powered
-    test passes anything; TOST demands evidence INSIDE the margin).
-    Parity halves of one corpus are equivalent by construction, so
-    this doubles as the positive control for the gate itself. Welch
-    moment lanes, one scan, oracle-exact including both one-sided
-    A&S p's."""
-    from xmlschemavalidator_spark.checks.evaluation import equivalence_test
-
-    docs = _t(spark, sf_dir, "documents").where(F.col("n_chars").isNotNull())
-    staged = docs.select(
-        (F.col("doc_id") % 2 == 0).alias("arm"),
-        F.col("n_chars").cast("double").alias("v"),
-    )
-    return equivalence_test(staged, "v", "arm", True, False, margin_ppm=25_000_000)
-
-
 _EMB_COV_ORACLE = """WITH q AS (
   SELECT vec_id,
          list_transform(embedding,
@@ -15840,7 +14720,7 @@ FROM m3"""
 
 
 def _jt_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided_sql
+    from xmlschemavalidator_spark.checks.stats import _p_two_sided_sql
 
     return _JT_ORACLE.replace("{P}", _p_two_sided_sql("z"))
 
@@ -15848,7 +14728,7 @@ def _jt_oracle() -> str:
 @q("jonckheere_value_by_hour", _jt_oracle())
 def jonckheere_value_by_hour(spark, sf_dir):
     """Jonckheere–Terpstra ordered-alternative test (checks/stats.py:
-    jonckheere_terpstra) — cochran_armitage's CONTINUOUS sibling: does
+    jonckheere_terpstra) — the Cochran–Armitage test's CONTINUOUS sibling: does
     the event value RISE across the four 6-hour day quarters, asked as
     one directed df instead of Kruskal–Wallis's any-difference. 2J stays
     integer on the (group, value) cell lattice (the kendall cell-pair
@@ -15907,40 +14787,6 @@ def woolf_or_homogeneity(spark, sf_dir):
         (F.col("n_chars") >= 250).alias("o"),
     )
     return woolf_homogeneity(staged, "e", "o", "st")
-
-
-def _spieg_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import spiegelhalter_oracle_sql
-
-    return spiegelhalter_oracle_sql(
-        f"SELECT {_CAL_PROB_DUCK} AS prob, {_CAL_LABEL_DUCK} AS y"
-        " FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL",
-        "prob",
-        "y",
-    )
-
-
-@q("classifier_spiegelhalter_z", _spieg_oracle())
-def classifier_spiegelhalter_z(spark, sf_dir):
-    """Spiegelhalter's Z calibration test (checks/evaluation.py:
-    spiegelhalter_z) on the same pseudo-probability staging as the
-    calibration bins / Brier decomposition — the SIGNIFICANCE verdict
-    those magnitudes lack, and binning-free (no n_bins knob): is the
-    length-derived score's miscalibration larger than its own forecast
-    variance explains? Exact integer micro sums end-to-end, one
-    quotient; oracle-exact."""
-    from xmlschemavalidator_spark.checks.evaluation import spiegelhalter_z
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & F.col("n_chars").isNotNull()
-    )
-    scored = docs.select(
-        ((F.col("n_chars") % 500).cast("double") / F.lit(500)).alias("prob"),
-        (
-            F.locate(" spark ", F.concat(F.lit(" "), F.col("text"), F.lit(" "))) > 0
-        ).alias("label"),
-    )
-    return spiegelhalter_z(scored, "prob", "label")
 
 
 _NOVELTY_ORACLE = r"""WITH sh AS (
@@ -16415,7 +15261,7 @@ def rbo_token_ranking_halves(spark, sf_dir):
 
 
 def _kendalls_w_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided_sql
+    from xmlschemavalidator_spark.checks.stats import _p_two_sided_sql
     from xmlschemavalidator_spark.textops import _WS
 
     ntok = (
@@ -16590,118 +15436,6 @@ def ivf_silhouette_report(spark, sf_dir):
     return simplified_silhouette(emb, "embedding", cents)
 
 
-# ===========================================================================
-# r4 session 11: Fisher exact / contingency completion
-# ===========================================================================
-
-def _fisher_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import fisher_oracle_sql
-
-    return fisher_oracle_sql(
-        "SELECT lang = 'sv' AS a, n_chars > 400 AS b"
-        " FROM documents WHERE lang IS NOT NULL AND n_chars IS NOT NULL"
-    )
-
-
-@q("rare_cell_fisher_exact", _fisher_oracle())
-def rare_cell_fisher_exact(spark, sf_dir):
-    """Fisher's exact test (checks/evaluation.py:fisher_exact, Fisher
-    1935) on the 2×2 of (lang='sv') × (n_chars>400) — both minority
-    flags, so the expected n11 cell is single-digit at sf0.01 and the
-    chi² approximation is exactly the thing NOT to trust; the
-    conditional hypergeometric tail is. Four partial-agg integer cells,
-    then an O(n + k_range) micro-ln recurrence walk evaluated on ONE
-    row; oracle replays the identical recurrence as a recursive CTE —
-    p and the integer-compared significance verdict are bit-exact."""
-    from xmlschemavalidator_spark.checks.evaluation import fisher_exact
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("lang").isNotNull() & F.col("n_chars").isNotNull()
-    )
-    flags = docs.select(
-        (F.col("lang") == "sv").alias("a"),
-        (F.col("n_chars") > 400).alias("b"),
-    )
-    return fisher_exact(flags, "a", "b")
-
-
-def _iso_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import isotonic_oracle_sql
-
-    return isotonic_oracle_sql(
-        f"SELECT {_CAL_PROB_DUCK} AS prob, {_CAL_LABEL_DUCK} AS label"
-        " FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL",
-        n_bins=16,
-    )
-
-
-@q("classifier_isotonic_map", _iso_oracle())
-def classifier_isotonic_map(spark, sf_dir):
-    """Isotonic calibration map (checks/evaluation.py:
-    isotonic_calibration — PAVA via the Robertson-Wright-Dykstra
-    minimax characterization, both engines walking the same O(bins³)
-    lattice over integer prefix sums): the FIX for what
-    classifier_calibration_ece measures. Same length-derived
-    pseudo-probability vs 'spark'-token label as the report/ECE
-    queries, 16 bins — the label's base rate is flat in prob, so the
-    fitted map is near-constant while raw_rate wobbles: exactly the
-    shape PAVA pools. One corpus groupBy to ≤16 rows; everything after
-    is bounded self-joins. Oracle-exact including the pooled plateaus."""
-    from xmlschemavalidator_spark.checks.evaluation import isotonic_calibration
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & F.col("n_chars").isNotNull()
-    )
-    scored = docs.select(
-        ((F.col("n_chars") % 500).cast("double") / F.lit(500)).alias("prob"),
-        (
-            F.locate(" spark ", F.concat(F.lit(" "), F.col("text"), F.lit(" "))) > 0
-        ).alias("label"),
-    )
-    return isotonic_calibration(scored, "prob", "label", n_bins=16)
-
-
-def _conformal_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import conformal_oracle_sql
-    from xmlschemavalidator_spark.textops import _WS
-
-    ntok = (
-        "(CASE WHEN trim(coalesce(text, '')) = '' THEN 0 ELSE"
-        f" len(string_split_regex(trim(text), '{_WS}+')) END)"
-    )
-    return conformal_oracle_sql(
-        f"SELECT doc_id AS id, CAST(n_chars AS DOUBLE) / ({ntok} + 1) AS score"
-        " FROM documents WHERE n_chars IS NOT NULL",
-        alpha_milli=100,
-    )
-
-
-@q("conformal_density_gate", _conformal_oracle())
-def conformal_density_gate(spark, sf_dir):
-    """Split conformal gate (checks/evaluation.py:conformal_gate — Vovk
-    et al. 2005 / Papadopoulos ECML'02) over the chars-per-token density
-    score: calibration half (deterministic md5 split) sets the
-    ⌈(n+1)(1−α)⌉-th-smallest-score threshold, eval half audits the
-    distribution-free ≥90% coverage guarantee. The score is an exact
-    integer ratio (IEEE division — bit-identical across engines), the
-    rank selection a window over the quantized distinct-score grid, the
-    verdict an integer milli compare. The 'flag every doc stranger than
-    what 1−α of exchangeable data reaches' gate with finite-sample
-    backing."""
-    from xmlschemavalidator_spark.checks.evaluation import conformal_gate
-    from xmlschemavalidator_spark.textops import token_count
-
-    docs = _t(spark, sf_dir, "documents").where(F.col("n_chars").isNotNull())
-    scored = docs.select(
-        F.col("doc_id").alias("id"),
-        (
-            F.col("n_chars").cast("double")
-            / (token_count(F.col("text")) + F.lit(1)).cast("double")
-        ).alias("score"),
-    )
-    return conformal_gate(scored, "score", "id", alpha_milli=100)
-
-
 # bow-tie fixture: doc_id%80 lays down a 75-node graph holding every
 # Broder class — 0..19 core ring (SCC), 20..29 feeders (IN), 30..39
 # sinks (OUT), 40..44 IN-side tendrils, 45..49 OUT-side tendrils,
@@ -16826,46 +15560,6 @@ def lang_spread_brown_forsythe(spark, sf_dir):
     )
 
 
-def _did_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import did_oracle_sql
-
-    return did_oracle_sql(
-        """SELECT user_id % 2 = 0 AS t,
-             CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS BIGINT)
-               >= 19738 AS p,
-             CAST(value AS DOUBLE) AS val
-           FROM events WHERE ts IS NOT NULL AND value IS NOT NULL"""
-    )
-
-
-@q("events_did_test", _did_oracle())
-def events_did_test(spark, sf_dir):
-    """Difference-in-differences (checks/evaluation.py:did_test — the
-    Card-Krueger 2×2 design): even-user cohort vs odd-user cohort,
-    pre/post the day-19738 cut (the series' median day), on event value — the non-randomized +
-    pre-period member of the experiment family beside CUPED
-    (randomized + covariate) and the two-proportion test. Four micro
-    cells from ONE partial-agg pass; unpooled Welch SE over the cells;
-    integer-milli verdict. The deterministic cohort split makes the
-    true effect 0 — the measured DiD is a parallel-trends null read,
-    which is exactly what the analyzer should say on exchangeable
-    halves."""
-    from xmlschemavalidator_spark.checks.evaluation import did_test
-
-    ev = _t(spark, sf_dir, "events").where(
-        F.col("ts").isNotNull() & F.col("value").isNotNull()
-    )
-    flagged = ev.select(
-        (F.col("user_id") % 2 == 0).alias("t"),
-        (
-            F.floor(F.unix_micros(F.col("ts").cast("timestamp")) / 86_400_000_000)
-            >= 19738
-        ).alias("p"),
-        F.col("value").cast("double").alias("val"),
-    )
-    return did_test(flagged, "t", "p", "val")
-
-
 def _hardneg_oracle() -> str:
     from xmlschemavalidator_spark.similarity import hard_negative_oracle_sql
 
@@ -16984,117 +15678,7 @@ def events_funnel_conversion(spark, sf_dir):
     )
 
 
-def _woe_oracle(summary: bool) -> str:
-    from xmlschemavalidator_spark.checks.evaluation import woe_iv_oracle_sql
-
-    return woe_iv_oracle_sql(
-        f"SELECT lang AS bin, {_CAL_LABEL_DUCK} = 1 AS label"
-        " FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL",
-        summary=summary,
-    )
-
-
-@q("lang_woe_iv_bins", _woe_oracle(False))
-def lang_woe_iv_bins(spark, sf_dir):
-    """Weight-of-evidence bins (checks/evaluation.py:woe_iv, the
-    Siddiqi credit-scoring audit) of the lang feature against the
-    'spark'-token label: SIGNED per-bin evidence (which languages push
-    toward/away from the label) where mutual_information only says
-    'dependent'. Zero-cell bins read NULL woe and are visibly excluded
-    — no smoothing hiding in the number. One bin-keyed partial agg."""
-    from xmlschemavalidator_spark.checks.evaluation import woe_iv
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & F.col("lang").isNotNull()
-    )
-    flagged = docs.select(
-        F.col("lang").alias("bin"),
-        (
-            F.locate(" spark ", F.concat(F.lit(" "), F.col("text"), F.lit(" "))) > 0
-        ).alias("label"),
-    )
-    return woe_iv(flagged, "bin", "label")
-
-
-@q("lang_woe_iv_summary", _woe_oracle(True))
-def lang_woe_iv_summary(spark, sf_dir):
-    """One-row information value + Siddiqi strength ladder over the
-    same WOE bins (12dp-round-then-DECIMAL-sum IV; ladder compared in
-    exact DECIMAL — integer casts round differently across engines)."""
-    from xmlschemavalidator_spark.checks.evaluation import woe_iv_summary
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & F.col("lang").isNotNull()
-    )
-    flagged = docs.select(
-        F.col("lang").alias("bin"),
-        (
-            F.locate(" spark ", F.concat(F.lit(" "), F.col("text"), F.lit(" "))) > 0
-        ).alias("label"),
-    )
-    return woe_iv_summary(flagged, "bin", "label")
-
-
-def _lift_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import lift_chart_oracle_sql
-
-    return lift_chart_oracle_sql(
-        f"SELECT doc_id AS id, {_CAL_PROB_DUCK} AS score,"
-        f" {_CAL_LABEL_DUCK} = 1 AS label"
-        " FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL"
-    )
-
-
-@q("classifier_lift_chart", _lift_oracle())
-def classifier_lift_chart(spark, sf_dir):
-    """Cumulative gains / lift chart (checks/evaluation.py:lift_chart)
-    over the calibration family's pseudo-probability vs 'spark'-token
-    label: the top-decile-capture view AUC averages away. The global
-    rank is ASSEMBLED from the quantized distinct-score grid (bounded
-    window + per-score id tie-break + broadcast join) — never a
-    corpus-wide single-partition sort; explicit integer bucket math
-    replaces ntile's engine-trusted remainder placement."""
-    from xmlschemavalidator_spark.checks.evaluation import lift_chart
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & F.col("n_chars").isNotNull()
-    )
-    scored = docs.select(
-        F.col("doc_id").alias("id"),
-        ((F.col("n_chars") % 500).cast("double") / F.lit(500)).alias("score"),
-        (
-            F.locate(" spark ", F.concat(F.lit(" "), F.col("text"), F.lit(" "))) > 0
-        ).alias("label"),
-    )
-    return lift_chart(scored, "score", "label", "id")
-
-
-def _holm_sql() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import holm_oracle_sql
-
-    return holm_oracle_sql(
-        f"WITH {_BH_PLANTED_CTE} SELECT seg, z FROM tests", "seg", 50_000
-    )
-
-
-@q("holm_planted_stepdown", _holm_sql())
-def holm_planted_stepdown(spark, sf_dir):
-    """Holm step-down FWER correction (checks/evaluation.py:
-    holm_adjust, Holm 1979) on the SAME planted hypothesis table as
-    bh_fdr_planted_stepup — pinned precisely because the two disagree
-    there: BH's step-up rescues ranks 1-3 (FDR triage), Holm stops at
-    rank 2 (p=0.0214 > 0.05/4) and rejects ONLY rank 1 — the
-    any-false-alarm-is-an-incident gate. Monotone adjusted p's
-    (running max of (m−i+1)·p), NULL-z row carried unrejected and
-    excluded from m; one bounded window sort."""
-    from xmlschemavalidator_spark.checks.evaluation import holm_adjust
-
-    df = spark.createDataFrame(list(_BH_PLANTED), "seg string, z double")
-    return holm_adjust(df, "seg", alpha_micro=50_000)
-
-
 def _ka_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided_sql  # noqa: F401
     from xmlschemavalidator_spark.linkage import krippendorff_oracle_sql
     from xmlschemavalidator_spark.textops import _WS
 
@@ -17202,110 +15786,6 @@ def embedding_mmr_rerank(spark, sf_dir):
     return mmr_rerank(scored, k=8, lambda_milli=700)
 
 
-def _thr_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import (
-        threshold_selection_oracle_sql,
-    )
-
-    return threshold_selection_oracle_sql(
-        f"SELECT {_CAL_PROB_DUCK} AS score, {_CAL_LABEL_DUCK} = 1 AS label"
-        " FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL"
-    )
-
-
-@q("classifier_threshold_selection", _thr_oracle())
-def classifier_threshold_selection(spark, sf_dir):
-    """Operating-point selection (checks/evaluation.py:
-    threshold_selection): Youden-J / F1-max / accuracy-max thresholds
-    over the calibration family's pseudo-probability vs 'spark'-token
-    label — the deployment bridge between roc_auc (is the ranking
-    good) and conformal (certify a threshold): WHICH threshold to ship.
-    One grid groupBy + one descending cumulative window gives every
-    candidate's confusion matrix at once; argmax keys are exact integer
-    rationals through one 12dp-rounded IEEE division, smallest
-    threshold on ties."""
-    from xmlschemavalidator_spark.checks.evaluation import threshold_selection
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & F.col("n_chars").isNotNull()
-    )
-    scored = docs.select(
-        ((F.col("n_chars") % 500).cast("double") / F.lit(500)).alias("score"),
-        (
-            F.locate(" spark ", F.concat(F.lit(" "), F.col("text"), F.lit(" "))) > 0
-        ).alias("label"),
-    )
-    return threshold_selection(scored, "score", "label")
-
-
-def _fair_oracle(summary: bool) -> str:
-    from xmlschemavalidator_spark.checks.evaluation import fairness_oracle_sql
-    from xmlschemavalidator_spark.textops import _WS
-
-    ntok = (
-        "(CASE WHEN trim(coalesce(text, '')) = '' THEN 0 ELSE"
-        f" len(string_split_regex(trim(text), '{_WS}+')) END)"
-    )
-    return fairness_oracle_sql(
-        f"SELECT lang AS grp, n_chars BETWEEN 36 AND 400 AS pred,"
-        f" {ntok} BETWEEN 8 AND 80 AS label"
-        " FROM documents WHERE lang IS NOT NULL AND n_chars IS NOT NULL"
-        " AND text IS NOT NULL",
-        summary=summary,
-    )
-
-
-@q("lang_fairness_audit", _fair_oracle(False))
-def lang_fairness_audit(spark, sf_dir):
-    """Per-group fairness panel (checks/evaluation.py:fairness_audit,
-    the Hardt-Price-Srebro vocabulary) of the char-length gate treated
-    as a selection decision, per language, against the token-length
-    'ground truth': selection_rate (demographic parity), tpr/fpr
-    (equalized odds), precision (predictive parity) — the three
-    criteria that provably can't all hold on unequal base rates,
-    reported per lang so the per-language filter-bias question every
-    multilingual corpus pipeline faces is a measured table, not a
-    vibe. ONE partial-agg groupBy; exact counts; NULL-gated
-    degenerate cells."""
-    from xmlschemavalidator_spark.checks.evaluation import fairness_audit
-    from xmlschemavalidator_spark.textops import token_count
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("lang").isNotNull()
-        & F.col("n_chars").isNotNull()
-        & F.col("text").isNotNull()
-    )
-    flagged = docs.select(
-        F.col("lang").alias("grp"),
-        F.col("n_chars").between(36, 400).alias("pred"),
-        token_count(F.col("text")).between(8, 80).alias("label"),
-    )
-    return fairness_audit(flagged, "grp", "pred", "label")
-
-
-@q("lang_fairness_summary", _fair_oracle(True))
-def lang_fairness_summary(spark, sf_dir):
-    """One-row disparate-impact verdict over the same panel: the EEOC
-    four-fifths rule decided by the cross-multiplied exact-integer
-    compare 5·sel_min·n_max ≥ 4·sel_max·n_min (no float threshold),
-    plus max−min equalized-odds gaps; extremes picked by 12dp rational
-    keys with deterministic group tie-breaks."""
-    from xmlschemavalidator_spark.checks.evaluation import fairness_summary
-    from xmlschemavalidator_spark.textops import token_count
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("lang").isNotNull()
-        & F.col("n_chars").isNotNull()
-        & F.col("text").isNotNull()
-    )
-    flagged = docs.select(
-        F.col("lang").alias("grp"),
-        F.col("n_chars").between(36, 400).alias("pred"),
-        token_count(F.col("text")).between(8, 80).alias("label"),
-    )
-    return fairness_summary(flagged, "grp", "pred", "label")
-
-
 def _capture_oracle() -> str:
     from xmlschemavalidator_spark.dedup import capture_recapture_oracle_sql
 
@@ -17406,46 +15886,6 @@ def ht_total_chars_estimate(spark, sf_dir):
     return poisson_ht_estimate(frame, "id", "y", "size", expected_n=100, salt="ht")
 
 
-def _hl_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import (
-        hosmer_lemeshow_oracle_sql,
-    )
-
-    return hosmer_lemeshow_oracle_sql(
-        f"SELECT doc_id AS id, {_CAL_PROB_DUCK} AS prob,"
-        f" {_CAL_LABEL_DUCK} = 1 AS label"
-        " FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL"
-    )
-
-
-@q("classifier_hosmer_lemeshow", _hl_oracle())
-def classifier_hosmer_lemeshow(spark, sf_dir):
-    """Hosmer–Lemeshow decile goodness-of-fit (checks/evaluation.py:
-    hosmer_lemeshow, 1980) over the calibration family's
-    pseudo-probability vs 'spark'-token label — the classic PUBLISHED
-    calibration statistic completing report/ECE (describe) →
-    spiegelhalter_z (per-row test) → THIS (the decile-table test).
-    The length-derived probability is uncalibrated by construction, so
-    the verdict is a measured rejection. Grid-assembled deciles (no
-    global sort), all-integer bucket rationals
-    (O·10⁶−E)²·n/(E(10⁶n−E)) 12dp-round-then-DECIMAL-summed,
-    Wilson–Hilferty chi²(B−2) tail; degenerate buckets excluded
-    VISIBLY via n_informative."""
-    from xmlschemavalidator_spark.checks.evaluation import hosmer_lemeshow
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & F.col("n_chars").isNotNull()
-    )
-    scored = docs.select(
-        F.col("doc_id").alias("id"),
-        ((F.col("n_chars") % 500).cast("double") / F.lit(500)).alias("prob"),
-        (
-            F.locate(" spark ", F.concat(F.lit(" "), F.col("text"), F.lit(" "))) > 0
-        ).alias("label"),
-    )
-    return hosmer_lemeshow(scored, "prob", "label", "id")
-
-
 def _sprt_oracle() -> str:
     from xmlschemavalidator_spark.checks.sequence import sprt_oracle_sql
 
@@ -17478,41 +15918,6 @@ def events_sprt_error_monitor(spark, sf_dir):
         (F.col("event_type") != "error").alias("y"),
     )
     return sprt_monitor(stream, "t", "y", p0_milli=850, p1_milli=750)
-
-
-def _bayes_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import bayes_ab_oracle_sql
-
-    return bayes_ab_oracle_sql(
-        "SELECT CASE WHEN user_id % 2 = 0 THEN 'A' ELSE 'B' END AS variant,"
-        " event_type = 'purchase' AS outcome"
-        " FROM events WHERE user_id IS NOT NULL AND event_type IS NOT NULL",
-        "A",
-        "B",
-    )
-
-
-@q("events_bayes_ab_test", _bayes_oracle())
-def events_bayes_ab_test(spark, sf_dir):
-    """Exact Bayesian A/B (checks/evaluation.py:bayes_ab_test — the
-    Beta-posterior P(B beats A) p-values keep getting misread AS):
-    even-user vs odd-user cohorts on the purchase outcome — the
-    deterministic halves make the true lift 0, so the posterior reads
-    mid-range and the decision is keep_testing: exactly what the
-    analyzer should say on exchangeable halves, measured. The series
-    walks conv_B+1 integer micro-ln recurrence steps (the fisher_exact
-    machinery) — one scalar HOF in Spark, a recursive CTE in DuckDB —
-    and the ship/keep decision compares integer trillionths."""
-    from xmlschemavalidator_spark.checks.evaluation import bayes_ab_test
-
-    ev = _t(spark, sf_dir, "events").where(
-        F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
-    )
-    flagged = ev.select(
-        F.when(F.col("user_id") % 2 == 0, "A").otherwise("B").alias("variant"),
-        (F.col("event_type") == "purchase").alias("outcome"),
-    )
-    return bayes_ab_test(flagged, "variant", "outcome", "A", "B")
 
 
 def _cliffs_oracle() -> str:
@@ -17674,35 +16079,6 @@ def events_runs_test(spark, sf_dir):
     return runs_test(stream, "t", "y")
 
 
-def _bino_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import (
-        exact_binomial_oracle_sql,
-    )
-
-    return exact_binomial_oracle_sql(
-        "SELECT n_chars > 400 AS y FROM documents WHERE n_chars IS NOT NULL",
-        p0_milli=300,
-    )
-
-
-@q("rate_exact_binomial_test", _bino_oracle())
-def rate_exact_binomial_test(spark, sf_dir):
-    """Exact one-sample binomial test (checks/evaluation.py:
-    exact_binomial_test — fisher_exact's one-sample sibling): is the
-    long-doc rate (n_chars > 400, measured ≈31.6% at sf0.01)
-    consistent with a contracted 30%? The pmf-rule two-sided p from
-    the integer micro-ln recurrence (Python-literal ln p0/ln(1−p0)
-    consumed by both engines, scalar HOF vs recursive CTE) — a
-    measured near-boundary verdict, no normal approximation and no
-    continuity fudge."""
-    from xmlschemavalidator_spark.checks.evaluation import exact_binomial_test
-
-    docs = _t(spark, sf_dir, "documents").where(F.col("n_chars").isNotNull())
-    return exact_binomial_test(
-        docs.select((F.col("n_chars") > 400).alias("y")), "y", p0_milli=300
-    )
-
-
 def _fleiss_oracle() -> str:
     from xmlschemavalidator_spark.linkage import fleiss_oracle_sql
     from xmlschemavalidator_spark.textops import _WS
@@ -17758,164 +16134,6 @@ def doc_size_fleiss_kappa(spark, sf_dir):
         F.when(tl < 160, "S").when(tl < 420, "M").otherwise("L").alias("val"),
     )
     return fleiss_kappa(r1.unionByName(r2).unionByName(r3), "unit", "val")
-
-
-def _cq_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import cochrans_q_oracle_sql
-    from xmlschemavalidator_spark.textops import _WS
-
-    ntok = (
-        "(CASE WHEN trim(coalesce(text, '')) = '' THEN 0 ELSE"
-        f" len(string_split_regex(trim(text), '{_WS}+')) END)"
-    )
-    return cochrans_q_oracle_sql(
-        f"""SELECT doc_id AS blk, 'chars36_400' AS trt,
-             n_chars BETWEEN 36 AND 400 AS y
-             FROM documents WHERE n_chars IS NOT NULL AND text IS NOT NULL
-           UNION ALL
-           SELECT doc_id, 'tokens8_80', {ntok} BETWEEN 8 AND 80
-             FROM documents WHERE n_chars IS NOT NULL AND text IS NOT NULL
-           UNION ALL
-           SELECT doc_id, 'len40_450',
-             length(coalesce(text, '')) BETWEEN 40 AND 450
-             FROM documents WHERE n_chars IS NOT NULL AND text IS NOT NULL"""
-    )
-
-
-@q("rule_versions_cochrans_q", _cq_oracle())
-def rule_versions_cochrans_q(spark, sf_dir):
-    """Cochran's Q (checks/evaluation.py:cochrans_q, 1950) across
-    THREE length-gate rule versions evaluated on the same corpus —
-    McNemar's k-extension (McNemar compares two rules pairwise, Q asks
-    whether ANY of k differ, before pairwise drill-down) and
-    Friedman's binary sibling. All-equal blocks drop out
-    algebraically; everything up to one division is exact DECIMAL
-    integers; Wilson–Hilferty chi²(k−1) tail. Oracle-exact."""
-    from xmlschemavalidator_spark.checks.evaluation import cochrans_q
-    from xmlschemavalidator_spark.textops import token_count
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("n_chars").isNotNull() & F.col("text").isNotNull()
-    )
-    ntok = token_count(F.col("text"))
-    tl = F.length(F.coalesce(F.col("text"), F.lit("")))
-    stacked = (
-        docs.select(
-            F.col("doc_id").alias("blk"),
-            F.lit("chars36_400").alias("trt"),
-            F.col("n_chars").between(36, 400).alias("y"),
-        )
-        .unionByName(
-            docs.select(
-                F.col("doc_id").alias("blk"),
-                F.lit("tokens8_80").alias("trt"),
-                ntok.between(8, 80).alias("y"),
-            )
-        )
-        .unionByName(
-            docs.select(
-                F.col("doc_id").alias("blk"),
-                F.lit("len40_450").alias("trt"),
-                tl.between(40, 450).alias("y"),
-            )
-        )
-    )
-    return cochrans_q(stacked, "blk", "trt", "y")
-
-
-def _bowker_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import bowker_oracle_sql
-
-    base = _lang_model_oracle()
-    tail = (
-        "SELECT doc, lang AS lang_pred, CAST(score AS BIGINT) AS score_micro\n"
-        "FROM r WHERE rn = 1"
-    )
-    assert tail in base, "lang model oracle tail changed; update the wrapper"
-    pairs = base.replace(
-        tail,
-        """, pred AS (SELECT doc, lang AS lang_pred FROM r WHERE rn = 1)
-SELECT d.lang AS a, pred.lang_pred AS b
-FROM pred JOIN documents d ON pred.doc = d.doc_id""",
-    )
-    return bowker_oracle_sql(pairs)
-
-
-@q("lang_id_bowker_symmetry", _bowker_oracle())
-def lang_id_bowker_symmetry(spark, sf_dir):
-    """Bowker's symmetry test (checks/evaluation.py:bowker_test, JASA
-    1948 — McNemar at k categories) between declared language labels
-    and the trained NB classifier's predictions: κ says HOW MUCH they
-    agree; Bowker says whether the DISAGREEMENT flows one way
-    (en→de systematically ≠ de→en) — the directional-drift question a
-    symmetric-looking confusion matrix can hide. Diagonal never
-    enters: a million stable docs can't drown directional drift.
-    Empty off-diagonal pairs excluded from df visibly; pair terms
-    exact integer rationals 12dp-round-then-DECIMAL-summed,
-    Wilson–Hilferty tail. Oracle replays training + scoring + argmax
-    + the symmetry lattice end to end."""
-    from xmlschemavalidator_spark.checks.evaluation import bowker_test
-    from xmlschemavalidator_spark.lang_model import predict_lang, train_lang_model
-
-    docs = _t(spark, sf_dir, "documents")
-    marker = None
-    for lg, m in sorted(_LANG_MARKERS.items()):
-        marker = (
-            F.when(F.col("lang") == lg, F.lit(m))
-            if marker is None
-            else marker.when(F.col("lang") == lg, F.lit(m))
-        )
-    marker = marker.otherwise(F.lit(""))
-    aug = docs.select(
-        "doc_id", "lang",
-        F.concat(marker, F.coalesce(F.col("text"), F.lit(""))).alias("text"),
-    )
-    model = train_lang_model(
-        aug, "doc_id", "lang",
-        n_buckets=_LANG_NB_BUCKETS, max_chars=_LANG_NB_MAXCHARS,
-    )
-    pred = predict_lang(aug, model, "doc_id").select("doc", "lang_pred")
-    pairs = pred.join(
-        docs.select(F.col("doc_id").alias("doc"), "lang"), "doc"
-    ).select(F.col("lang").alias("a"), F.col("lang_pred").alias("b"))
-    return bowker_test(pairs, "a", "b")
-
-
-def _mcnemar_exact_oracle() -> str:
-    from xmlschemavalidator_spark.checks.evaluation import (
-        mcnemar_exact_oracle_sql,
-    )
-    from xmlschemavalidator_spark.textops import _WS
-
-    ntok = (
-        "(CASE WHEN trim(coalesce(text, '')) = '' THEN 0 ELSE"
-        f" len(string_split_regex(trim(text), '{_WS}+')) END)"
-    )
-    return mcnemar_exact_oracle_sql(
-        "SELECT n_chars BETWEEN 36 AND 400 AS a,"
-        f" {ntok} BETWEEN 8 AND 80 AS b"
-        " FROM documents WHERE n_chars IS NOT NULL"
-    )
-
-
-@q("length_gate_mcnemar_exact", _mcnemar_exact_oracle())
-def length_gate_mcnemar_exact(spark, sf_dir):
-    """EXACT McNemar (checks/evaluation.py:mcnemar_exact_test — the
-    Binomial(m,½) form) on the SAME rule pair as length_gate_mcnemar:
-    the chi² approximation goes soft exactly where McNemar matters, at
-    FEW flips; here the flip cells are small by construction and the
-    exact pmf-rule p is the honest verdict, side by side with the
-    approximate query for comparison. The micro-ln walk runs over the
-    FLIP count, not n."""
-    from xmlschemavalidator_spark.checks.evaluation import mcnemar_exact_test
-    from xmlschemavalidator_spark.textops import token_count
-
-    docs = _t(spark, sf_dir, "documents").where(F.col("n_chars").isNotNull())
-    verdicts = docs.select(
-        F.col("n_chars").between(36, 400).alias("a"),
-        token_count(F.col("text")).between(8, 80).alias("b"),
-    )
-    return mcnemar_exact_test(verdicts, "a", "b")
 
 
 def _moran_oracle() -> str:

@@ -338,10 +338,10 @@ def expectation_summary(
 
     At web scale a strict all-rows gate is useless for soft rules (one
     mojibake doc out of 10^12 fails the corpus); the operational gate is
-    "≥ X% of rows conform". ONE aggregate computes every rule's pass
-    count (map-side partials, O(#rules) longs per partition reach the
-    shuffle), then a driver-side unpivot renders the per-rule report —
-    never one job per rule.
+    "≥ X% of rows conform". ONE aggregate (:func:`_rule_failures`)
+    counts every rule's failures (map-side partials, O(#rules) longs per
+    partition reach the shuffle), then ``stack()`` renders the per-rule
+    report with ``n_pass = n_rows − n_fail`` — never one job per rule.
 
     Returns one row per rule: ``(rule_id, n_rows, n_pass, pass_rate,
     mostly, ok)``; ``pass_rate`` rounded 6dp for hash-stable compare,
@@ -352,35 +352,44 @@ def expectation_summary(
     aggregate shape with the segment columns as grouping keys (map-side
     partials; #segments × #rules rows reach the shuffle, never data).
     """
+    by = by or []
     mostly = mostly or {}
-    compiled = ruleset.compile()
-    rids = sorted(compiled)
-    aggs = [
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        *[
-            F.sum(F.coalesce(compiled[r], F.lit(False)).cast("long"))
-            .cast("bigint")
-            .alias(f"_p_{i}")
-            for i, r in enumerate(rids)
-        ],
-    ]
-    agg = df.groupBy(*by).agg(*aggs) if by else df.agg(*aggs)
-    stack = ", ".join(
-        f"'{r}', _p_{i}, CAST({float(mostly.get(r, default_mostly))!r} AS DOUBLE)"
-        for i, r in enumerate(rids)
-    )
-    return agg.select(
-        *(by or []),
-        F.expr(f"stack({len(rids)}, {stack}) AS (rule_id, n_pass, mostly)"),
-        "n_rows",
-    ).select(
-        *(by or []),
+    target = F.create_map(*[
+        F.lit(x)
+        for r in sorted(ruleset.compile())
+        for x in (r, float(mostly.get(r, default_mostly)))
+    ])[F.col("rule_id")]
+    n_pass = F.col("n_rows") - F.col("n_fail")
+    return _rule_failures(df, ruleset, by).select(
+        *by,
         "rule_id",
         "n_rows",
-        "n_pass",
-        F.round(F.col("n_pass") / F.col("n_rows"), 6).alias("pass_rate"),
-        "mostly",
-        (F.col("n_pass") / F.col("n_rows") >= F.col("mostly")).alias("ok"),
+        n_pass.alias("n_pass"),
+        F.round(n_pass / F.col("n_rows"), 6).alias("pass_rate"),
+        target.alias("mostly"),
+        (n_pass / F.col("n_rows") >= target).alias("ok"),
+    )
+
+
+def _rule_failures(df: DataFrame, ruleset: RuleSet, by: list[str]) -> DataFrame:
+    """``(*by, rule_id, n_fail, n_rows)``, one row per rule (per segment)
+    in sorted id order, from ONE aggregate over one scan: ``n_rows`` and
+    each rule's failures ``_f_i`` — #rules longs per partition (per
+    segment) reach the shuffle — then ``stack()`` renders the per-rule
+    rows. NULL verdicts count as failed, same convention as validate()."""
+    compiled = ruleset.compile()
+    rids = sorted(compiled)
+    aggs = [F.count(F.lit(1)).cast("bigint").alias("n_rows")]
+    aggs += [
+        F.sum((~F.coalesce(compiled[r], F.lit(False))).cast("long"))
+        .cast("bigint")
+        .alias(f"_f_{i}")
+        for i, r in enumerate(rids)
+    ]
+    agg = df.groupBy(*by).agg(*aggs) if by else df.agg(*aggs)
+    stack = ", ".join(f"'{r}', _f_{i}" for i, r in enumerate(rids))
+    return agg.select(
+        *by, F.expr(f"stack({len(rids)}, {stack}) AS (rule_id, n_fail)"), "n_rows"
     )
 
 
@@ -505,27 +514,10 @@ def rule_rate_intervals(
     Wilson (not Wald — Wald collapses to ±0 at p=0 and lies at small
     n): (p + z²/2n ± z·√(p(1−p)/n + z²/4n²)) / (1 + z²/n), a fixed
     double chain on exact integer counts from the engine's standard ONE
-    aggregate (#rules longs per partition reach the shuffle).
+    aggregate (:func:`_rule_failures`).
     ``z_milli`` integer (1960 = 95%) so the width can't drift between
     engines."""
-    compiled = ruleset.compile()
-    rids = sorted(compiled)
-    aggs = [
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        *[
-            F.sum(
-                (~F.coalesce(compiled[r], F.lit(False))).cast("long")
-            )
-            .cast("bigint")
-            .alias(f"_f_{i}")
-            for i, r in enumerate(rids)
-        ],
-    ]
-    agg = df.agg(*aggs)
-    stack = ", ".join(f"'{r}', _f_{i}" for i, r in enumerate(rids))
-    long = agg.select(
-        F.expr(f"stack({len(rids)}, {stack}) AS (rule_id, n_fail)"), "n_rows"
-    )
+    long = _rule_failures(df, ruleset, [])
     z = F.lit(z_milli / 1000.0)
     n = F.col("n_rows").cast("double")
     p = F.col("n_fail").cast("double") / n

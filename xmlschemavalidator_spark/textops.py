@@ -134,7 +134,7 @@ def lang_id(text: Column) -> Column:
 
 
 def doc_fingerprint(text: Column) -> Column:
-    """Deterministic content fingerprint: md5 of the whitespace-normalized,
+    r"""Deterministic content fingerprint: md5 of the whitespace-normalized,
     lower-cased text. md5 (not xxhash64) so SQL oracles in other engines
     reproduce it bit-for-bit; whitespace is the explicit :data:`_WS` class,
     which those oracles must use too (RE2's ``\s`` has no ``\x0B``)."""

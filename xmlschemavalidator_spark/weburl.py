@@ -3711,7 +3711,7 @@ def morans_i(
     )
     z = F.when(ok & (var > 0), (i_val - e_i) / F.sqrt(var))
     sig = F.abs(z) * 1000 > F.lit(float(z_crit_milli))
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided
+    from xmlschemavalidator_spark.checks.stats import _p_two_sided
 
     return j.select(
         "n_nodes",
@@ -3738,7 +3738,7 @@ def morans_i_oracle_sql(
 ) -> str:
     """DuckDB replay of :func:`morans_i`; ``edges_sql`` yields
     (src, dst), ``attrs_sql`` yields (node, val)."""
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided_sql
+    from xmlschemavalidator_spark.checks.stats import _p_two_sided_sql
 
     i_val = "((nn / w) * (num / den))"
     e_i = "(-1.0 / (nn - 1.0))"
@@ -3947,7 +3947,7 @@ def gearys_c(
     ) / (n * (n - 2.0) * (n - 3.0) * w2)
     z = F.when(ok & (var > 0), (c_val - 1.0) / F.sqrt(var))
     sig = F.abs(z) * 1000 > F.lit(float(z_crit_milli))
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided
+    from xmlschemavalidator_spark.checks.stats import _p_two_sided
 
     return j.select(
         "n_nodes",
@@ -3973,7 +3973,7 @@ def gearys_c_oracle_sql(
 ) -> str:
     """DuckDB replay of :func:`gearys_c` — same exact-integer C, same
     Cliff–Ord randomization chain."""
-    from xmlschemavalidator_spark.checks.evaluation import _p_two_sided_sql
+    from xmlschemavalidator_spark.checks.stats import _p_two_sided_sql
 
     c_val = (
         "(CAST((nn_dec - 1) * nn_dec * D2 AS DOUBLE)"

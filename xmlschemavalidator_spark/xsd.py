@@ -303,7 +303,7 @@ class XsdSchema:
                     rule = (
                         FixedAttr(decl.fixed)
                         if (decl.nillable and particle != "choice")
-                        else _NullOr(FixedAttr(decl.fixed))
+                        else NullOr(FixedAttr(decl.fixed))
                     )
                 elif decl.default is not None:
                     # default= decodes absent values before validation
@@ -311,7 +311,7 @@ class XsdSchema:
                 elif decl.nillable or particle == "choice":
                     # nillable="true" (xsi:nil on a column: NULL passes);
                     # choice alternatives must not fail when absent
-                    rule = _NullOr(type_obj)
+                    rule = NullOr(type_obj)
                 rules.append(FieldRule(f"{root}__{c.name}", rule, column=col))
 
         for a in ct.attributes:
@@ -325,7 +325,7 @@ class XsdSchema:
             elif a.required:
                 rules.append(FieldRule(rid, RequiredAttr(t), column=col, is_attr=True))
             elif t is not None:
-                rules.append(FieldRule(rid, _NullOr(t), column=col, is_attr=True))
+                rules.append(FieldRule(rid, NullOr(t), column=col, is_attr=True))
 
         for i, test in enumerate(ct.asserts):
             # XSD 1.1 xs:assert: record-scoped cross-field rule compiled
@@ -637,11 +637,6 @@ class XsdSchema:
         for o in outs[1:]:
             out = out.unionByName(o)
         return out
-
-
-# NullOr moved to rules/types.py (shared with constraint suggestion);
-# the private alias keeps existing imports working
-_NullOr = NullOr
 
 
 # ===========================================================================
