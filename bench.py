@@ -62,12 +62,10 @@ def headline_queries():
     """name -> fn(spark) returning a DataFrame to be fully materialized."""
     from pyspark.sql import functions as F
 
-    from xmlschemavalidator_spark.checks import (
-        column_stats,
-        duplicate_keys,
-        referential_violations,
-    )
     from xmlschemavalidator_spark.checks.drift import histogram, ks_drift
+    from xmlschemavalidator_spark.checks.referential import referential_violations
+    from xmlschemavalidator_spark.checks.stats import column_stats
+    from xmlschemavalidator_spark.checks.uniqueness import duplicate_keys
     from xmlschemavalidator_spark.dedup import (
         minhash_lsh_candidates,
         simhash_signatures_df,

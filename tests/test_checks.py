@@ -15,6 +15,31 @@ from xmlschemavalidator_spark.checks.stats import column_stats, distinct_counts,
 from xmlschemavalidator_spark.checks.uniqueness import duplicate_keys, uniqueness_violations
 
 
+def test_checks_stats_import_loads_no_sibling_checks():
+    """Importing one ``checks`` module loads only what it imports: the
+    package ``__init__`` pulls in no sibling, so a job that needs
+    ``checks.stats`` never loads ``checks.uniqueness`` or
+    ``checks.referential``."""
+    import pathlib
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "import xmlschemavalidator_spark.checks.stats\n"
+        "print(sorted(m for m in sys.modules\n"
+        "             if m.startswith('xmlschemavalidator_spark.checks.')))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=pathlib.Path(__file__).resolve().parent.parent,
+        capture_output=True, text=True, check=True,
+    ).stdout
+    assert "xmlschemavalidator_spark.checks.stats" in out
+    assert "checks.uniqueness" not in out
+    assert "checks.referential" not in out
+
+
 def test_column_stats_exact(spark):
     df = spark.createDataFrame(
         [("a", 1), ("bb", 2), (None, 3), ("dddd", None)], "s string, n bigint"

@@ -1,13 +1,17 @@
-"""Dedup tests: exact, minhash-LSH, jaccard, simhash, embedding near-dup."""
+"""Dedup tests: exact, minhash-LSH, jaccard, simhash, embedding near-dup and
+exact cosine top-k."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from xmlschemavalidator_spark.dedup import (
+    brute_force_topk,
     drop_exact_duplicates,
     embedding_near_duplicates,
     exact_duplicate_groups,
+    hyperplane_bucket,
     jaccard_pairs,
     minhash_lsh_candidates,
     minhash_signature,
@@ -156,6 +160,36 @@ def test_embedding_near_duplicates(spark):
     got = {(r["id_a"], r["id_b"]) for r in
            embedding_near_duplicates(df, "vec_id", "vec", threshold=0.95, nbits=4).collect()}
     assert (1, 2) in got and (1, 3) not in got
+
+
+def embeddings(spark):
+    return spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+
+
+def test_brute_force_topk_matches_numpy(spark):
+    import numpy as np
+
+    df = embeddings(spark)
+    rows = df.collect()
+    q = list(rows[0]["embedding"])
+    got = brute_force_topk(df, "embedding", q, k=5).collect()
+    # numpy oracle
+    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    ids = np.array([r["vec_id"] for r in rows])
+    qv = np.array(q, dtype=np.float64)
+    cos = (mat @ qv) / (np.linalg.norm(mat, axis=1) * np.linalg.norm(qv))
+    order = sorted(zip(-np.round(cos, 5), ids))[:5]
+    want = [(i, round(-c, 5)) for c, i in order]
+    assert [(r["vec_id"], round(r["cosine"], 5)) for r in got] == want
+    assert got[0]["vec_id"] == rows[0]["vec_id"] and got[0]["cosine"] == pytest.approx(1.0)
+
+
+def test_hyperplane_bucket_deterministic(spark):
+    df = embeddings(spark).limit(50)
+    a = [r[0] for r in df.select(hyperplane_bucket(F.col("embedding"), 8)).collect()]
+    b = [r[0] for r in df.select(hyperplane_bucket(F.col("embedding"), 8)).collect()]
+    assert a == b
+    assert all(0 <= x < 256 for x in a)
 
 
 def test_near_duplicate_clusters_transitive(spark):

@@ -1,8 +1,8 @@
 """Pin the pure-Python XXH64 (hashing.py) to Spark's real ``xxhash64``.
 
-These are the load-bearing tests for two perf fixes: the driver-side LSH
-query bucket (similarity.lsh_topk) and the JVM-vs-Python SimHash parity
-check — both assume hashing.py reproduces Spark's hash bit-for-bit.
+The JVM-vs-Python SimHash parity check (dedup.simhash vs dedup.simhash_py)
+assumes hashing.py reproduces Spark's string hash bit-for-bit; these tests
+pin that.
 """
 
 from __future__ import annotations
@@ -10,15 +10,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from xmlschemavalidator_spark.hashing import (
-    spark_xxhash64_ints,
-    xxh64_int,
-    xxh64_long,
-    xxh64_str,
-)
+from xmlschemavalidator_spark.hashing import xxh64_str
 
-INTS = [0, 1, -1, 42, -42, 2**31 - 1, -(2**31), 123456789]
-LONGS = [0, 1, -1, 2**31, 2**63 - 1, -(2**63), 987654321012345]
 STRINGS = [
     "",
     "a",
@@ -37,38 +30,11 @@ STRINGS = [
 ]
 
 
-def test_xxh64_int_matches_spark(spark):
-    df = spark.createDataFrame([(v,) for v in INTS], "v int")
-    got = {r["v"]: r["h"] for r in df.select("v", F.xxhash64("v").alias("h")).collect()}
-    for v in INTS:
-        assert xxh64_int(v) == got[v], f"int {v}"
-
-
-def test_xxh64_long_matches_spark(spark):
-    df = spark.createDataFrame([(v,) for v in LONGS], "v long")
-    got = {r["v"]: r["h"] for r in df.select("v", F.xxhash64("v").alias("h")).collect()}
-    for v in LONGS:
-        assert xxh64_long(v) == got[v], f"long {v}"
-
-
 def test_xxh64_str_matches_spark(spark):
     df = spark.createDataFrame([(i, s) for i, s in enumerate(STRINGS)], "i int, s string")
     got = {r["i"]: r["h"] for r in df.select("i", F.xxhash64("s").alias("h")).collect()}
     for i, s in enumerate(STRINGS):
         assert xxh64_str(s) == got[i], f"str {s!r}"
-
-
-def test_multi_arg_int_chain_matches_spark(spark):
-    """xxhash64(lit(i), lit(j), lit(seed)) — the exact shape
-    similarity.hyperplane_bucket uses for its plane coefficients."""
-    triples = [(0, 0, 42), (1, 2, 3), (7, 63, 42), (11, 127, 99), (-1, 5, 42)]
-    df = spark.createDataFrame(triples, "a int, b int, c int")
-    got = {
-        (r["a"], r["b"], r["c"]): r["h"]
-        for r in df.select("a", "b", "c", F.xxhash64("a", "b", "c").alias("h")).collect()
-    }
-    for t in triples:
-        assert spark_xxhash64_ints(list(t)) == got[t], f"chain {t}"
 
 
 @pytest.mark.parametrize("n", [15, 16, 17, 39, 40, 41, 63, 64, 65, 100])

@@ -131,7 +131,7 @@ def test_q4_semi_join_shape(spark):
 
 
 def test_topk_never_global_sort(spark):
-    from xmlschemavalidator_spark.similarity import brute_force_topk
+    from xmlschemavalidator_spark.dedup import brute_force_topk
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     out = brute_force_topk(emb, "embedding", [0.1] * 64, k=5)

@@ -128,20 +128,12 @@ def run_at(spark, n_rows: int, workdir: str) -> tuple[dict, dict, float]:
 
 def run_index_at(spark, docs_path: str, n_rows: int, workdir: str) -> tuple[dict, dict]:
     """Index-path rehearsal (r4 VERDICT item 6): the persisted inverted
-    text index (build → append a 1% batch → serve a fixed query set) and
-    the persisted IVF-PQ ANN index (build over deterministic vectors
-    derived from the same doc ids → serve) — the only major STATEFUL
-    paths the pipeline rehearsal doesn't cover. Each serve runs twice
-    and must be BIT-IDENTICAL (persisted-index determinism); stage walls
-    feed the same 20M/2M ratio table. The ANN corpus runs at n_rows/4
-    (vector gen is 64 doubles/row — the ratio between the two sizes is
-    the signal, not the absolute row count)."""
+    text index (build → append a 1% batch → serve a fixed query set) —
+    the major STATEFUL path the pipeline rehearsal doesn't cover. The
+    serve runs twice and must be BIT-IDENTICAL (persisted-index
+    determinism); stage walls feed the same 20M/2M ratio table."""
     from pyspark.sql import functions as F
 
-    from xmlschemavalidator_spark.similarity import (
-        build_ivf_pq_index,
-        ivf_pq_topk,
-    )
     from xmlschemavalidator_spark.textindex import (
         append_text_index,
         bm25_index_topk,
@@ -185,40 +177,6 @@ def run_index_at(spark, docs_path: str, n_rows: int, workdir: str) -> tuple[dict
     again = serve_text()
     audit["index_query_deterministic"] = first == again
     audit["index_query_hits"] = sum(len(h) for h in first)
-
-    # IVF-PQ: deterministic 64-dim vectors derived from doc ids
-    n_vec = n_rows // 4
-    vec = spark.range(n_vec).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(0), F.lit(63)),
-            lambda i: (F.pmod(F.xxhash64(F.col("id"), i), F.lit(2001)) - 1000)
-            / 1000.0,
-        ).alias("embedding"),
-    )
-    vec_path = f"{workdir}/vectors_{n_rows}"
-    stage("ivfpq_gen", lambda: vec.write.mode("overwrite").parquet(vec_path))
-    vdf = spark.read.parquet(vec_path)
-    ann = f"{workdir}/ivfpq_{n_rows}"
-    stage("ivfpq_build", lambda: build_ivf_pq_index(
-        vdf, "embedding", ann, k=8, m=8, pq_k=16, iters=3,
-        sample_fraction=min(1.0, 65536 / max(n_vec, 1))))
-    qvecs = [r["embedding"] for r in vdf.where(F.col("vec_id") % 9973 == 1)
-             .orderBy("vec_id").limit(5).collect()]
-
-    def serve_ann():
-        return [
-            [(r["vec_id"], r["cosine"]) for r in
-             ivf_pq_topk(spark, ann, [float(x) for x in q], k=10,
-                         nprobe=2).collect()]
-            for q in qvecs
-        ]
-
-    a1 = stage("ivfpq_query", serve_ann)
-    a2 = serve_ann()
-    audit["ivfpq_query_deterministic"] = a1 == a2
-    audit["ivfpq_query_hits"] = sum(len(h) for h in a1)
-    audit["ivfpq_rows"] = n_vec
     return audit, times
 
 
@@ -229,7 +187,7 @@ def main() -> int:
     p.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     p.add_argument("--ratio-bar", type=float, default=12.0)
     p.add_argument("--no-index", action="store_true",
-                   help="skip the text-index/IVF-PQ index rehearsal phase")
+                   help="skip the text-index rehearsal phase")
     p.add_argument("--no-pipeline", action="store_true",
                    help="skip the composed-pipeline phase (index only)")
     args = p.parse_args()
@@ -297,9 +255,8 @@ def main() -> int:
             result["index_audit_small"] = ia_small
             result["index_audit_big"] = ia_big
             for aud in (ia_small, ia_big):
-                for key in ("index_query_deterministic", "ivfpq_query_deterministic"):
-                    if not aud.get(key, False):
-                        flagged.append(f"NONDETERMINISTIC:{key}")
+                if not aud.get("index_query_deterministic", False):
+                    flagged.append("NONDETERMINISTIC:index_query_deterministic")
         result.update({
             "stages": rows,
             "superlinear_stages": flagged,

@@ -7,8 +7,7 @@ uses, mapped onto Spark:
 * TRAINING never iterates over the corpus. One distributed pass builds the
   word-frequency table (explode → groupBy → top ``max_words`` by count);
   the iterative merge learning then runs driver-side on that bounded table
-  (≤ max_words rows — the same bounded-collect contract as k-means
-  centroids in similarity.kmeans_fit). At 100 TB the corpus pass is the
+  (≤ max_words rows — a bounded collect). At 100 TB the corpus pass is the
   only big job; the Zipf head the cap keeps carries almost all pair mass.
 * ENCODING is a broadcast join against the precomputed segmentation of the
   trained words (covers the frequency head), with an Arrow-batched pandas

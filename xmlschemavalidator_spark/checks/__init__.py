@@ -6,18 +6,3 @@ None of these exist in the reference (verified absent from core.clj /
 parser.clj); designs are Spark-first: partial+final hash aggregation, HLL
 sketches, broadcast/shuffle-hash anti joins, exact histogram-CDF drift.
 """
-
-from xmlschemavalidator_spark.checks.stats import column_stats, distinct_counts
-from xmlschemavalidator_spark.checks.uniqueness import duplicate_keys, uniqueness_violations
-from xmlschemavalidator_spark.checks.referential import referential_violations
-from xmlschemavalidator_spark.checks.drift import histogram, ks_drift
-
-__all__ = [
-    "column_stats",
-    "distinct_counts",
-    "duplicate_keys",
-    "uniqueness_violations",
-    "referential_violations",
-    "histogram",
-    "ks_drift",
-]

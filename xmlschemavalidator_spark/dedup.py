@@ -545,10 +545,9 @@ def _simhash_chunks(
 
 def sig_chunks(sigd: DataFrame, hamming_max: int) -> DataFrame:
     """Pigeonhole chunk explosion of ANY 64-bit signature frame
-    ``(doc, sig)`` — the generic layer under the SimHash text path and the
-    embedding SimHash path (similarity.embedding_simhash_pairs):
-    ``(doc, sig, ci, cv)``, one row per (doc, chunk index) with the
-    chunk's bit value."""
+    ``(doc, sig)`` — the generic layer under the SimHash text path and
+    :func:`hamming_near_duplicates`: ``(doc, sig, ci, cv)``, one row per
+    (doc, chunk index) with the chunk's bit value."""
     n_chunks = min(hamming_max + 1, 16)
     width = -(-64 // n_chunks)  # ceil
     mask = (1 << width) - 1
@@ -637,12 +636,12 @@ def hamming_near_duplicates(
 ) -> DataFrame:
     """Pairs with Hamming distance <= hamming_max over ANY 64-bit
     signature frame ``(doc, sig)`` — the generic pairing layer
-    :func:`simhash_near_duplicates` (text) and
-    similarity.embedding_simhash_pairs (embeddings) both run on. Same
-    pigeonhole blocking, hot-bucket cap, and grouped member-list expansion
-    as the text path (see that docstring for the scale analysis); the signature
-    computation upstream runs ONCE because the gate is a window count
-    riding the chunk exchange, never an aliased self-join."""
+    :func:`simhash_near_duplicates` (text) and :func:`bbit_jaccard_pairs`
+    (1-bit MinHash) both run on. Same pigeonhole blocking, hot-bucket
+    cap, and grouped member-list expansion as the text path (see that
+    docstring for the scale analysis); the signature computation
+    upstream runs ONCE because the gate is a window count riding the
+    chunk exchange, never an aliased self-join."""
     from pyspark.sql import Window
 
     chunks = sig_chunks(sigd, hamming_max)
@@ -1744,6 +1743,53 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
 
 
+def _lit_vec(vec: list[float]) -> Column:
+    return F.array(*[F.lit(float(x)) for x in vec])
+
+
+def brute_force_topk(
+    df: DataFrame, vec_col: str, query: list[float], k: int = 10, id_col: str = "vec_id"
+) -> DataFrame:
+    """Exact top-k by cosine: ``(id, cosine)``. orderBy+limit compiles to
+    TakeOrderedAndProject — per-partition top-k then a k-row merge on the
+    driver, NOT a global sort shuffle. Math in double (float32 accumulation
+    would diverge from double-precision oracles); cosines rounded to 5dp
+    per the repo-wide oracle-parity convention."""
+    cos = cosine_similarity(F.col(vec_col).cast("array<double>"), _lit_vec(query))
+    return (
+        df.select(F.col(id_col), F.round(cos, 5).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col(id_col))
+        .limit(k)
+    )
+
+
+def hyperplane_bucket(vec: Column, nbits: int = 12, seed: int = 42) -> Column:
+    """LSH bucket id: sign bits of <vec, plane_i> for nbits deterministic
+    pseudo-random hyperplanes. plane_i[j] = centered hash(i, j, seed) —
+    uniform in [-1, 1), reproducible, computed inline (never materialized)."""
+    bits = []
+    for i in range(nbits):
+        # dot product with plane i via aggregate over the vector's indices
+        dot = F.aggregate(
+            F.zip_with(
+                vec,
+                F.sequence(F.lit(0), F.size(vec) - 1),
+                lambda x, j: x
+                * (
+                    (F.pmod(F.xxhash64(F.lit(i), j, F.lit(seed)), F.lit(100000)) / 50000.0)
+                    - 1.0
+                ),
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        bits.append(F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(2**i))
+    out = bits[0]
+    for b in bits[1:]:
+        out = out + b
+    return out.cast("long")
+
+
 def embedding_near_duplicates(
     df: DataFrame, id_col: str, vec_col: str, threshold: float = 0.95,
     nbits: int = 12, seed: int = 42,
@@ -1755,8 +1801,6 @@ def embedding_near_duplicates(
     verified only within buckets. High-cosine pairs agree on most
     hyperplane signs, so collision probability ≈ (1 - θ/π)^nbits.
     """
-    from xmlschemavalidator_spark.similarity import hyperplane_bucket
-
     keyed = df.select(F.col(id_col).alias("doc"), F.col(vec_col).alias("vec"))
     bucketed = keyed.withColumn("bucket", hyperplane_bucket(F.col("vec"), nbits, seed))
     a = bucketed.select("bucket", F.col("doc").alias("id_a"), F.col("vec").alias("va"))
@@ -1777,10 +1821,10 @@ def embedding_near_duplicates(
 # --------------------------------------------------------------------------
 # SemDeDup — semantic deduplication via embedding clusters (Abbas et al.
 # 2023, "SemDeDup: Data-efficient learning at web-scale through semantic
-# deduplication"). Cluster the embedding space with k-means (the IVF
-# trainer, similarity.kmeans_fit, doubles as the clusterer), then look for
-# near-duplicate pairs ONLY within a cluster — the quadratic pair problem
-# shrinks from O(n²) to Σ O(c²) with c bounded by ``max_cluster``.
+# deduplication"). Cluster the embedding space (any trained centroid set
+# serves), then look for near-duplicate pairs ONLY within a cluster — the
+# quadratic pair problem shrinks from O(n²) to Σ O(c²) with c bounded by
+# ``max_cluster``.
 # Keep policy per the paper: within a duplicate group, the item FARTHEST
 # from its centroid survives (low centroid-cosine first), preserving the
 # cluster's outer shell where the semantic diversity lives.
@@ -1801,8 +1845,6 @@ def semdedup_assign(
     the oracle's ``ORDER BY cc DESC, c`` replays it). All k cosines are
     computed once into a let-bound scores array (HOF subtrees are not
     CSE'd across output columns — CLAUDE.md)."""
-    from xmlschemavalidator_spark.similarity import _lit_vec
-
     cents = F.array(*[_lit_vec(c) for c in centroids])
     scores = F.transform(
         cents, lambda c: F.round(cosine_similarity(F.col("_vec"), c), 5)
@@ -2469,9 +2511,9 @@ def bbit_jaccard_pairs(
     ``(id_a, id_b, hamming, est_jaccard_micro)`` — reuses the generic
     64-bit Hamming layer (:func:`hamming_near_duplicates`: pigeonhole
     chunk blocking, hot-bucket cap, grouped member expansion — one
-    machinery, now three signature families: SimHash, dHash, b-bit
-    MinHash). The estimator is Li & König's b=1 form: E[match frac] =
-    ½ + J/2, so Ĵ = 1 − 2·hd/64 — in exact integer micros,
+    machinery for two signature families: SimHash and b-bit MinHash).
+    The estimator is Li & König's b=1 form: E[match frac] = ½ + J/2,
+    so Ĵ = 1 − 2·hd/64 — in exact integer micros,
     ``max(0, 64 − 2·hd) · 15625`` (15625 = 10⁶/64). ``hamming_max``
     must be <= 15 (the chunk layer's 16-piece pigeonhole guarantee);
     15 ≈ J ≥ 0.53."""

@@ -1386,24 +1386,13 @@ WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0)
 @q("ann_cosine_topk", _COS_TOPK_SQL)
 def ann_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-10 around vec_id=0 (exact ANN baseline).
-    Reuses similarity.brute_force_topk directly — double math and 5dp
+    Reuses dedup.brute_force_topk directly — double math and 5dp
     rounding are the library defaults, matching the oracle convention."""
-    from xmlschemavalidator_spark.similarity import brute_force_topk
+    from xmlschemavalidator_spark.dedup import brute_force_topk
 
     emb = _t(spark, sf_dir, "embeddings")
     qrow = emb.where(F.col("vec_id") == 0).select("embedding").collect()[0]["embedding"]
     return brute_force_topk(emb, "embedding", [float(x) for x in qrow], k=10)
-
-
-@q("ann_lsh_topk")  # no oracle: approximate candidate set is engine-specific
-def ann_lsh_topk(spark, sf_dir):
-    from xmlschemavalidator_spark.similarity import lsh_topk
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "vec", F.col("embedding").cast("array<double>")
-    )
-    qrow = emb.where(F.col("vec_id") == 0).select("vec").collect()[0]["vec"]
-    return lsh_topk(emb, "vec", list(qrow), k=10, nbits=6)
 
 
 # ===========================================================================
@@ -3167,123 +3156,6 @@ def incremental_revalidation(spark, sf_dir):
     return incremental_revalidate(prev, docs, new, rs, key="doc_id")
 
 
-@q("ann_lsh_recall")
-def ann_lsh_recall(spark, sf_dir):
-    """Recall@10 of the LSH-bucketed ANN vs the exact brute-force top-10,
-    across the multi-probe dial (rows-only: the metric IS the quality
-    check — LSH is approximate by construction, so an oracle equality
-    would be wrong). Query = an in-corpus vector (the realistic ANN
-    scenario; this synthetic corpus is near-random apart from planted
-    near-dups, which bounds achievable recall for ANY bucketing method —
-    the monotone probe curve is the property under test)."""
-    from xmlschemavalidator_spark.similarity import brute_force_topk, lsh_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    query = emb.orderBy("vec_id").first()["embedding"]
-    exact = brute_force_topk(emb, "embedding", query, k=10)
-    rows = []
-    for probes in (1, 4, 7):
-        approx = lsh_topk(emb, "embedding", query, k=10, nbits=6, probes=probes)
-        hits = exact.join(approx, "vec_id", "left_semi").count()
-        rows.append((10, probes, hits, round(hits / 10.0, 2)))
-    return spark.createDataFrame(rows, "k int, probes int, n_hits long, recall double")
-
-
-@q("ann_lsh_multitable_recall")
-def ann_lsh_multitable_recall(spark, sf_dir):
-    """Recall@10 across the number-of-tables dial (rows-only: the metric
-    IS the quality check). L independent plane families: a neighbor with
-    single-table collision probability r is found with 1-(1-r)^L — the
-    standard recall lever when multi-probe alone is not enough. One scan
-    per search regardless of L (all bucket ids in one projection)."""
-    from xmlschemavalidator_spark.similarity import (
-        brute_force_topk,
-        lsh_topk_multitable,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    query = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
-    exact = brute_force_topk(emb, "embedding", query, k=10)
-    rows = []
-    # nbits=3 so the dial is visible on this near-random corpus (measured:
-    # recall 0.5 -> 0.7 from 1 to 8 tables; at nbits=6 near-orthogonal
-    # vectors collide at ~0.5^6 per table and recall flatlines at the
-    # noise floor for any L — the corpus, not the index, is the bound)
-    for tables in (1, 2, 4, 8):
-        approx = lsh_topk_multitable(
-            emb, "embedding", query, k=10, nbits=3, tables=tables
-        )
-        hits = exact.join(approx, "vec_id", "left_semi").count()
-        rows.append((10, tables, hits, round(hits / 10.0, 2)))
-    return spark.createDataFrame(rows, "k int, tables int, n_hits long, recall double")
-
-
-@q("ivf_kmeans_topk")
-def ivf_kmeans_topk(spark, sf_dir):
-    """IVF with TRAINED centroids (rows-only: k-means is iterative, no
-    single SQL equivalent): Lloyd iterations where each update shuffles
-    only k x dim partial sums, then a 2-probe search. The scale path for
-    ANN once LSH bucket skew or recall demands data-adaptive lists."""
-    from xmlschemavalidator_spark.similarity import ivf_assign, ivf_topk, kmeans_fit
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = kmeans_fit(emb, "embedding", k=8, iters=3)
-    assigned = ivf_assign(emb, "embedding", cents)
-    query = emb.orderBy("vec_id").first()["embedding"]
-    return ivf_topk(assigned, "embedding", cents, [float(x) for x in query], k=5, nprobe=2)
-
-
-@q("embedding_pq_topk")  # no oracle: PQ codebooks are iteratively trained
-def embedding_pq_topk(spark, sf_dir):
-    """Product-quantization ANN (similarity.py:pq_train/pq_encode/pq_topk,
-    Jégou et al. TPAMI'11): 64-dim floats → 8 codes, ADC scoring from
-    driver-side lookup tables — the ~32x-compression coarse stage of
-    IVF-PQ. Rows-only (Lloyd training is iterative); the recall-vs-exact
-    contract is pinned by test_similarity.py::test_pq_adc_recall_vs_exact.
-    The output self-checks: the query vector's own row must rank first."""
-    from xmlschemavalidator_spark.similarity import pq_encode, pq_topk, pq_train
-
-    emb = _t(spark, sf_dir, "embeddings")
-    books = pq_train(emb, "embedding", m=8, k=64, iters=3)
-    codes = pq_encode(emb, "embedding", books)
-    query = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
-    return pq_topk(codes, "pq_codes", query, books, k=5)
-
-
-@q("ann_ivf_index_topk")  # no oracle: trained-centroid probe set is engine-specific
-def ann_ivf_index_topk(spark, sf_dir):
-    """Persisted IVF index roundtrip (rows-only: k-means is iterative):
-    build_ivf_index writes vectors partitioned by inverted list + the
-    centroid table; ivf_index_topk then scans ONLY the nprobe probed
-    _list= directories (partition pruning at file-listing time — the
-    pinned plan shape in test_similarity) and ranks exact cosine inside
-    them. Must equal the in-memory ivf_topk with the same centroids."""
-    import shutil
-    import tempfile
-
-    from xmlschemavalidator_spark.similarity import build_ivf_index, ivf_index_topk
-
-    tmp = tempfile.mkdtemp(prefix="ivfidx_")
-    try:
-        emb = _t(spark, sf_dir, "embeddings").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-        build_ivf_index(emb, "embedding", f"{tmp}/ivf", k=8, iters=3)
-        query = emb.orderBy("vec_id").first()["embedding"]
-        topk = ivf_index_topk(
-            spark, f"{tmp}/ivf", [float(x) for x in query],
-            k=5, nprobe=2, vec_col="embedding",
-        )
-        # materialize the k rows before the tmpdir vanishes (the returned
-        # plan would otherwise read deleted files at driver collect time)
-        return spark.createDataFrame(
-            [(r["vec_id"], r["cosine"]) for r in topk.collect()],
-            "vec_id bigint, cosine double",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 @q("pages_domain_stats")
 def pages_domain_stats(spark, sf_dir):
     """Hot-domain detection over web pages (rows-only by design: the input
@@ -4610,19 +4482,6 @@ def with_status_decode(spark, sf_dir):
     )
 
 
-@q("ann_ivf_topk")  # no oracle: IVF probe set is engine-specific
-def ann_ivf_topk(spark, sf_dir):
-    """IVF-style ANN: assign to broadcast centroids, probe nearest lists."""
-    from xmlschemavalidator_spark.similarity import ivf_assign, ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "vec", F.col("embedding").cast("array<double>")
-    )
-    cents = [list(r["vec"]) for r in emb.orderBy("vec_id").limit(4).collect()]
-    assigned = ivf_assign(emb, "vec", cents)
-    return ivf_topk(assigned, "vec", cents, cents[1], k=5, nprobe=2)
-
-
 # ---------------------------------------------------------------------------
 # round-3 continuation: SemDeDup, canonical keep-policy, deterministic
 # training shuffle, DSIR importance resampling
@@ -4665,7 +4524,7 @@ _SEMDEDUP_COS = (
 def embedding_semdedup(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023) with deterministic centroids (the
     first 4 vectors — the oracle can't replay k-means, so the QUERY pins
-    centroids; the operator takes any trained set, e.g. kmeans_fit's).
+    centroids; the operator takes any trained set).
     Assignment argmax, within-cluster ranking, and the pair threshold all
     compare 5dp-ROUNDED cosines on both engines, so the verdict —
     including which member of each dup group survives — is hash-exact."""
@@ -6212,101 +6071,6 @@ def unimax_epochs(spark, sf_dir):
     return out.select("doc_id", "lang", "epoch")
 
 
-# --- int8 quantization + Matryoshka truncation (ANN memory-reduction) -----
-
-_QUANT_CTES = """
-base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-m AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS mx FROM base),
-s AS (SELECT vec_id, v, CASE WHEN mx > 0 THEN mx ELSE 1.0 END AS scale FROM m),
-qz AS (SELECT vec_id, scale,
-              list_transform(v, x -> floor(x * 127.0 / scale + 0.5)) AS q
-       FROM s)"""
-
-
-@q(
-    "embedding_quantize_int8",
-    f"""WITH {_QUANT_CTES}
-        SELECT vec_id, round(scale, 6) AS scale,
-               md5(array_to_string(
-                 list_transform(q, x -> CAST(CAST(x AS BIGINT) AS VARCHAR)),
-                 ',')) AS q_md5
-        FROM qz""",
-)
-def embedding_quantize_int8(spark, sf_dir):
-    """Symmetric int8 quantization (similarity.py:quantize_int8): per-
-    vector scale + the full quantized array (md5-compressed for the value
-    hash). floor(x+0.5) half-up on BOTH engines — round() half-even
-    semantics differ, the one rounding mode regex/float parity work has
-    to dodge here. 4x memory cut for the ANN coarse stage."""
-    from xmlschemavalidator_spark.similarity import quantize_int8
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qs = emb.select(
-        "vec_id",
-        quantize_int8(F.col("embedding").cast("array<double>")).alias("s"),
-    )
-    return qs.select(
-        "vec_id",
-        F.round(F.col("s.scale"), 6).alias("scale"),
-        F.md5(
-            F.concat_ws(",", F.transform("s.q", lambda x: x.cast("string")))
-        ).alias("q_md5"),
-    )
-
-
-@q(
-    "embedding_quantized_topk",
-    f"""WITH {_QUANT_CTES},
-        qv AS (SELECT q AS qq FROM qz WHERE vec_id = 0)
-        SELECT vec_id,
-               round(CASE WHEN list_dot_product(q, q) > 0
-                           AND list_dot_product(qq, qq) > 0
-                     THEN list_dot_product(q, qq)
-                          / (sqrt(list_dot_product(q, q))
-                             * sqrt(list_dot_product(qq, qq)))
-                     ELSE 0.0 END, 5) AS qcosine
-        FROM qz, qv
-        ORDER BY qcosine DESC, vec_id
-        LIMIT 10""",
-)
-def embedding_quantized_topk(spark, sf_dir):
-    """Coarse ANN ranking over int8-quantized vectors (similarity.py:
-    quantized_topk): the per-vector scales cancel in the cosine, so the
-    score is an integer dot product + one double division — bit-exact
-    against the SQL replay. Ranks on the 5dp-rounded value, ties by id."""
-    from xmlschemavalidator_spark.similarity import quantized_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qrow = emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
-    return quantized_topk(emb, "vec_id", "embedding", [float(x) for x in qrow], k=10)
-
-
-@q(
-    "embedding_matryoshka_topk",
-    """WITH base AS (SELECT vec_id, (embedding::DOUBLE[])[1:16] AS v FROM embeddings),
-        q AS (SELECT v AS qv FROM base WHERE vec_id = 0)
-        SELECT vec_id,
-               round(list_dot_product(v, qv)
-                     / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))),
-                     5) AS cosine
-        FROM base, q
-        ORDER BY cosine DESC, vec_id
-        LIMIT 10""",
-)
-def embedding_matryoshka_topk(spark, sf_dir):
-    """Matryoshka retrieval (Kusupati et al. NeurIPS'22, similarity.py:
-    matryoshka_topk): top-10 by cosine over the first 16 of 64 dims —
-    the dims-fold-cheaper coarse pass; cosine normalizes by truncated
-    norms so no renormalization exists to diverge."""
-    from xmlschemavalidator_spark.similarity import matryoshka_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qrow = emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
-    return matryoshka_topk(
-        emb, "vec_id", "embedding", [float(x) for x in qrow], dims=16, k=10
-    )
-
-
 from xmlschemavalidator_spark.weburl import hyperball_oracle_sql  # noqa: E402
 
 
@@ -6480,60 +6244,6 @@ def text_bm25_topk(spark, sf_dir):
 
 
 _ORACLES["text_bm25_topk"] = _bm25_oracle()
-
-
-def _rrf_oracle() -> str:
-    """RRF fusion replay: re-derive BOTH constituent rankings with the
-    engines' existing exact oracles (nested-WITH subqueries), rank with
-    the same (score desc, id asc) tie-break, fuse with the same integer
-    1000000 // (60 + rank) contributions."""
-    return f"""\
-WITH bm AS (SELECT * FROM ({_bm25_oracle()})),
-bmr AS (SELECT doc,
-               row_number() OVER (ORDER BY score_micro DESC, doc ASC) AS rank
-        FROM bm),
-cs AS (SELECT * FROM ({_COS_TOPK_SQL})),
-csr AS (SELECT vec_id AS doc,
-               row_number() OVER (ORDER BY cosine DESC, vec_id ASC) AS rank
-        FROM cs),
-u AS (SELECT doc, rank FROM bmr UNION ALL SELECT doc, rank FROM csr)
-SELECT doc,
-       CAST(SUM(1000000 // (60 + rank)) AS BIGINT) AS rrf_micro,
-       CAST(count(*) AS BIGINT) AS n_lists
-FROM u GROUP BY doc
-ORDER BY rrf_micro DESC, doc ASC LIMIT 10"""
-
-
-@q("hybrid_rrf_topk", _rrf_oracle())
-def hybrid_rrf_topk(spark, sf_dir):
-    """Hybrid retrieval: reciprocal-rank fusion (Cormack et al. SIGIR'09,
-    the production BM25+ANN combiner) of the BM25 top-10 and the
-    brute-force cosine top-10 — both already oracle-exact on their own —
-    with integer-micro 1/(60+rank) contributions so the FUSED ranking
-    hash-matches the DuckDB replay too. The fuse itself touches only the
-    two k-row lists (TakeOrderedAndProject), never the corpus."""
-    from xmlschemavalidator_spark.similarity import (
-        brute_force_topk,
-        ranked,
-        rrf_fuse,
-    )
-    from xmlschemavalidator_spark.textops import bm25_topk
-
-    docs = _t(spark, sf_dir, "documents")
-    bmr = ranked(
-        bm25_topk(docs, "doc_id", _BM25_TERMS, k=10),
-        [F.col("score_micro").desc()],
-        "doc",
-    )
-    emb = _t(spark, sf_dir, "embeddings")
-    qrow = emb.where(F.col("vec_id") == 0).select("embedding").collect()[0][
-        "embedding"
-    ]
-    cs = brute_force_topk(
-        emb, "embedding", [float(x) for x in qrow], k=10
-    ).withColumnRenamed("vec_id", "doc")
-    csr = ranked(cs, [F.col("cosine").desc()], "doc")
-    return rrf_fuse([bmr, csr], "doc", k=60, topn=10)
 
 
 @q("text_bm25_index_topk", None)  # oracle attached below (same SQL builder)
@@ -10523,9 +10233,6 @@ def gini_doc_length_per_lang(spark, sf_dir):
     return gini_coefficient(docs, "n_chars", "doc_id", ("lang",))
 
 
-from xmlschemavalidator_spark.weburl import degree_stats as _dstats  # noqa: E402
-
-
 @q(
     "link_powerlaw_alpha",
     """WITH e0 AS (SELECT doc_id AS src, (doc_id * 17 + 3) % 50000 AS dst
@@ -10743,80 +10450,6 @@ def crawl_rate_audit(spark, sf_dir):
     return crawl_rate_violations(ev, "host", "ts", max_per_window=3, window_s=3600)
 
 
-def _embedding_simhash_oracle(dim: int = 64) -> str:
-    """DuckDB replay of the sign-random-projection pipeline: same
-    Python-generated ±1 plane literals, integer-micro quantized dots
-    (order-free), HUGEINT bit packing (the bbit-oracle device), chunk
-    blocking and the literal cos table."""
-    from xmlschemavalidator_spark.similarity import _srp_cos_table, _srp_plane_signs
-
-    planes = _srp_plane_signs(64, dim)
-    dots = ",\n         ".join(
-        f"CASE WHEN list_sum(list_transform(qv, (x, i) -> x * "
-        f"{planes[j]}[i])) >= 0 THEN 1 ELSE 0 END AS b{j}"
-        for j in range(64)
-    )
-    packed = " + ".join(f"b{j}::HUGEINT * {1 << j}::HUGEINT" for j in range(64))
-    chunks = "\n  UNION ALL ".join(
-        f"SELECT doc, sig, {ci} AS ci, "
-        f"CAST((sigh // {1 << (4 * ci)}::HUGEINT) % 16 AS BIGINT) AS cv FROM sig"
-        for ci in range(16)
-    )
-    cos_tab = str(_srp_cos_table())
-    return f"""
-WITH qvs AS (
-  SELECT vec_id AS doc,
-         list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000)
-                                              AS BIGINT)) AS qv
-  FROM embeddings
-  WHERE embedding IS NOT NULL AND len(embedding) = {dim}
-), bits AS (
-  SELECT doc,
-         {dots}
-  FROM qvs
-), sig AS (
-  SELECT doc, sigh,
-         CAST(CASE WHEN sigh >= 9223372036854775808::HUGEINT
-              THEN sigh - 18446744073709551616::HUGEINT ELSE sigh END AS BIGINT) AS sig
-  FROM (SELECT doc, {packed} AS sigh FROM bits)
-), chunks AS (
-  {chunks}
-), ok AS (
-  SELECT ci, cv FROM chunks GROUP BY 1, 2
-  HAVING count(*) > 1 AND count(*) <= 1000
-), cand AS (
-  SELECT DISTINCT a.doc AS id_a, a.sig AS sig_a, b.doc AS id_b, b.sig AS sig_b
-  FROM chunks a JOIN chunks b USING (ci, cv) JOIN ok USING (ci, cv)
-  WHERE a.doc < b.doc
-)
-SELECT id_a, id_b,
-       CAST(bit_count(xor(sig_a, sig_b)) AS INTEGER) AS hamming,
-       CAST({cos_tab}[bit_count(xor(sig_a, sig_b)) + 1] AS BIGINT) AS est_cos_micro
-FROM cand WHERE bit_count(xor(sig_a, sig_b)) <= 15"""
-
-
-@q("embedding_simhash_pairs", _embedding_simhash_oracle())
-def embedding_simhash_pairs_q(spark, sf_dir):
-    """All-pairs angular near-dup candidates over the embeddings table
-    (Charikar STOC'02 sign-random-projection;
-    similarity.py:embedding_simhash_pairs): the coarse ALL-PAIRS path
-    query-time LSH doesn't give, served by the same pigeonhole Hamming
-    layer as text SimHash / dHash / b-bit MinHash — four signature
-    families, one machinery. Embeddings quantize to integer micros
-    before the ±1-literal dots, so every stage is order-free integer
-    arithmetic and the DuckDB replay is hash-exact including the bit
-    packing and the cos(π·hd/64) literal table."""
-    from xmlschemavalidator_spark.similarity import embedding_simhash_pairs
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return embedding_simhash_pairs(emb, "embedding", "vec_id").select(
-        "id_a",
-        "id_b",
-        F.col("hamming").cast("int").alias("hamming"),
-        "est_cos_micro",
-    )
-
-
 from xmlschemavalidator_spark.textops import PORTABLE_HASH64_SQL as _PH64  # noqa: E402
 
 _JK_BUCKET = (
@@ -10939,45 +10572,6 @@ def eb_shrunken_source_rates(spark, sf_dir):
         ).cast("int").alias("has_spark"),
     )
     return eb_shrunken_rates(scored, ("source",), "has_spark")
-
-
-@q(
-    "embedding_centroid_drift",
-    """WITH b AS (
-         SELECT label AS grp, d - 1 AS d,
-                CAST(floor(CAST(v AS DOUBLE) * 1000000) AS HUGEINT) AS v
-         FROM (SELECT label, unnest(embedding) AS v,
-                      generate_subscripts(embedding, 1) AS d
-               FROM embeddings WHERE embedding IS NOT NULL)),
-       per AS (SELECT grp, d, sum(v) AS s, count(*) AS c
-               FROM b GROUP BY 1, 2),
-       g AS (SELECT d, sum(s) AS gs FROM per GROUP BY d),
-       a AS (SELECT grp, CAST(max(c) AS BIGINT) AS n,
-                    sum(per.s * g.gs) AS dot,
-                    sum(per.s * per.s) AS na,
-                    sum(g.gs * g.gs) AS nb
-             FROM per JOIN g USING (d) GROUP BY grp)
-       SELECT grp AS label, n,
-              round(CASE WHEN na > 0 AND nb > 0 THEN
-                CAST(dot AS DOUBLE)
-                / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) END, 6)
-                AS cos_to_global
-       FROM a""",
-)
-def embedding_centroid_drift_q(spark, sf_dir):
-    """Per-label embedding centroid drift vs the global centroid
-    (similarity.py:embedding_centroid_drift) — the vector-column drift
-    analyzer the scalar KS/χ²/PSI family can't provide; the labels in
-    the embeddings table are genuine clusters, so each label's mean
-    direction measurably departs from the global mean (spread of
-    cos_to_global values, not a vacuous all-1 column). Integer-micro
-    DECIMAL sums per (group, dim); the only doubles are the final
-    dot/(√·√) chain."""
-    from xmlschemavalidator_spark.similarity import embedding_centroid_drift
-
-    return embedding_centroid_drift(
-        _t(spark, sf_dir, "embeddings"), "label", "embedding"
-    )
 
 
 from xmlschemavalidator_spark.textops import declared_charset_sql  # noqa: E402
@@ -12854,42 +12448,6 @@ def zipf_alpha_tokens(spark, sf_dir):
     return powerlaw_alpha(freq, "freq", kmin=2)
 
 
-def _jl_oracle(out_dim: int = 8, dim: int = 64) -> str:
-    from xmlschemavalidator_spark.similarity import _srp_plane_signs
-
-    planes = _srp_plane_signs(out_dim, dim, "jl")
-    arms = " UNION ALL ".join(
-        f"SELECT doc, {j} AS j, CAST(list_sum(list_transform(qv, "
-        f"(x, i) -> x * {planes[j]}[i])) AS BIGINT) AS y FROM qvs"
-        for j in range(out_dim)
-    )
-    return f"""WITH qvs AS (
-  SELECT vec_id AS doc,
-         list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000)
-                                              AS BIGINT)) AS qv
-  FROM embeddings
-  WHERE embedding IS NOT NULL AND len(embedding) = {dim})
-{arms}"""
-
-
-@q("jl_projection", _jl_oracle())
-def jl_projection(spark, sf_dir):
-    """Johnson–Lindenstrauss ±1 sign projection (similarity.py:
-    jl_project, Achlioptas JCSS'03) of the 64-dim embeddings down to 8
-    exact-integer coordinates — the shuffle-weight reducer in front of
-    the ANN family; cosines survive within JL tolerance (pinned in
-    tests). Micro-quantize first, Python-literal planes, order-free
-    integer dots — the embedding_simhash exactness device, so the
-    DuckDB replay is bit-exact. Rows are (doc, j, y) via posexplode."""
-    from xmlschemavalidator_spark.similarity import jl_project
-
-    emb = _t(spark, sf_dir, "embeddings")
-    proj = jl_project(emb, "embedding", "vec_id", out_dim=8)
-    return proj.select(
-        "doc", F.posexplode(F.col("jl")).alias("j", "_y")
-    ).select("doc", F.col("j").cast("bigint").alias("j"), F.col("_y").alias("y"))
-
-
 def _benford_money_oracle() -> str:
     from xmlschemavalidator_spark.textops import extract_money_cents_sql
 
@@ -13100,22 +12658,6 @@ def url_pct_normalize(spark, sf_dir):
         norm.alias("pct_normalized"),
         canonical_url(norm).alias("canonical_url"),
     )
-
-
-@q("embedding_outlier_gate")
-def embedding_outlier_gate(spark, sf_dir):
-    """Embedding-space OOD/corrupt-vector gate (similarity.py:
-    embedding_outliers): k-means centroids, per-vector cosine distance
-    to its OWN nearest centroid, Hampel median+MAD filter PER CLUSTER
-    (robust_outliers — cluster radii differ, a global threshold can't
-    adapt; one far vector cannot move its own cutoff). The gate in
-    front of ANN/SemDeDup: they would happily 'dedup' against a
-    truncated-download vector. Rows-only by design (iterative
-    centroids); planted-OOD recovery pinned in tests."""
-    from xmlschemavalidator_spark.similarity import embedding_outliers
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return embedding_outliers(emb, "embedding", "vec_id", k=4, iters=4)
 
 
 def _lang_confusion_oracle() -> str:
@@ -13783,117 +13325,6 @@ def snm_blocking_evaluation(spark, sf_dir):
         F.col("id").alias("id_a"), (F.col("id") + 1_000_000).alias("id_b")
     )
     return blocking_evaluation(cand, truth, n_records=dirty.count())
-
-
-@q("embedding_opq_report")  # no oracle: Lloyd + SVD are engine-specific
-def embedding_opq_report(spark, sf_dir):
-    """OPQ vs plain PQ at equal bytes/vector (similarity.py:opq_train —
-    Ge et al. 2013 non-parametric alternation, VERDICT r4 item 7): the
-    learned orthogonal rotation's quantization-MSE and the ADC
-    recall@10 of both code paths against brute-force cosine truth over
-    8 spread queries. Rotation is orthogonal, so cosine ranking is
-    preserved and the SAME pq_topk machinery serves both rows.
-    Rows-only by design; MSE dominance on anisotropic data pinned by
-    test_similarity.py::test_opq_beats_plain_pq_on_anisotropic_data."""
-    from xmlschemavalidator_spark.similarity import (
-        ann_recall_report,
-        apply_rotation,
-        brute_force_topk,
-        opq_train,
-        pq_mse,
-        pq_topk,
-        pq_train,
-        pq_encode,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings").localCheckpoint()
-    m, k = 8, 16
-    plain_books = pq_train(emb, "embedding", m=m, k=k, iters=4)
-    R = opq_train(emb, "embedding", m=m, k=k, opq_iters=4, lloyd_iters=3)
-    rot = apply_rotation(emb, "embedding", R).localCheckpoint()
-    opq_books = pq_train(rot, "embedding", m=m, k=k, iters=4)
-
-    import numpy as np
-
-    Rm = np.array(R)
-    qrows = emb.where(F.col("vec_id") % 61 == 0).orderBy("vec_id").limit(8).collect()
-    out = []
-    for name, frame, books, rotate in (
-        ("pq", emb, plain_books, False),
-        ("opq", rot, opq_books, True),
-    ):
-        coded = pq_encode(frame, "embedding", books).localCheckpoint()
-        exact = None
-        approx = None
-        for r in qrows:
-            qv = [float(x) for x in r["embedding"]]
-            if rotate:
-                qv = [float(x) for x in np.array(qv) @ Rm]
-            e = brute_force_topk(frame, "embedding", qv, k=10).select(
-                F.lit(r["vec_id"]).cast("long").alias("query_id"), "vec_id"
-            )
-            a = pq_topk(coded, "pq_codes", qv, books, k=10).select(
-                F.lit(r["vec_id"]).cast("long").alias("query_id"), "vec_id"
-            )
-            exact = e if exact is None else exact.unionByName(e)
-            approx = a if approx is None else approx.unionByName(a)
-        rec = ann_recall_report(exact, approx).agg(
-            F.avg("recall_micro").cast("bigint").alias("r")
-        ).collect()[0]["r"]
-        mse = pq_mse(frame, "embedding", books)
-        out.append((name, int(round(mse * 1_000_000)), int(rec)))
-    return spark.createDataFrame(
-        out, "method string, mse_micro bigint, mean_recall_micro bigint"
-    ).orderBy("method")
-
-
-@q("ann_recall_ivf_vs_exact")  # no oracle: k-means lists are engine-specific
-def ann_recall_ivf_vs_exact(spark, sf_dir):
-    """ANN method evaluation (similarity.py:ann_recall_report): the
-    recall@10-vs-nprobe TUNING CURVE of the trained-centroid IVF search
-    against brute-force cosine truth over 8 spread query points — the
-    near-dup method-evaluation convention applied to similarity search;
-    nprobe is chosen BY this table. Measured at sf0.01: mean recall
-    0.450 / 0.700 / 0.863 at nprobe 2/4/6 of 8 lists (the synthetic
-    embeddings are weakly clustered, so the curve rises roughly
-    linearly in probed mass — exactly what the table is for). Rows-only
-    by design (Lloyd is iterative); arithmetic pinned by
-    test_similarity.py::test_ann_recall_report_counts_and_floor.
-    Per-query search cost is bounded by the probed lists; the report is
-    nprobes x queries rows."""
-    from xmlschemavalidator_spark.similarity import (
-        ann_recall_report,
-        brute_force_topk,
-        ivf_assign,
-        ivf_topk,
-        kmeans_fit,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = kmeans_fit(emb, "embedding", k=8, iters=3)
-    assigned = ivf_assign(emb, "embedding", cents).localCheckpoint()
-    qrows = emb.where(F.col("vec_id") % 61 == 0).orderBy("vec_id").limit(8).collect()
-    out = None
-    for nprobe in (2, 4, 6):
-        exact = None
-        approx = None
-        for r in qrows:
-            qv = [float(x) for x in r["embedding"]]
-            e = brute_force_topk(emb, "embedding", qv, k=10).select(
-                F.lit(r["vec_id"]).cast("long").alias("query_id"), "vec_id"
-            )
-            a = ivf_topk(
-                assigned, "embedding", cents, qv, k=10, nprobe=nprobe
-            ).select(
-                F.lit(r["vec_id"]).cast("long").alias("query_id"), "vec_id"
-            )
-            exact = e if exact is None else exact.unionByName(e)
-            approx = a if approx is None else approx.unionByName(a)
-        rep = ann_recall_report(exact, approx).select(
-            F.lit(nprobe).cast("long").alias("nprobe"), "*"
-        )
-        out = rep if out is None else out.unionByName(rep)
-    return out
 
 
 # ===========================================================================
@@ -14622,58 +14053,6 @@ def tokenizer_fertility_per_lang(spark, sf_dir):
     from xmlschemavalidator_spark.textops import tokenizer_fertility
 
     return tokenizer_fertility(_t(spark, sf_dir, "documents"), "lang")
-
-
-_EMB_COV_ORACLE = """WITH q AS (
-  SELECT vec_id,
-         list_transform(embedding,
-             x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
-  FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64),
-ux AS (SELECT vec_id, idx.i AS i, qv[idx.i + 1] AS x
-       FROM q CROSS JOIN (SELECT unnest(range(0, 64)) AS i) idx),
-n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM q),
-sx AS (SELECT i, CAST(sum(CAST(x AS HUGEINT)) AS DOUBLE) AS sx
-       FROM ux GROUP BY i),
-sxx AS (SELECT a.i AS i, b.i AS j,
-               CAST(sum(CAST(a.x AS HUGEINT) * b.x) AS DOUBLE) AS s
-        FROM ux a JOIN ux b ON a.vec_id = b.vec_id AND a.i <= b.i
-        GROUP BY 1, 2)
-SELECT sxx.i, sxx.j,
-  round((s - sa.sx * sb.sx / n.n) / n.n / (1000000.0 * 1000000.0), 9) AS cov
-FROM sxx JOIN sx sa ON sxx.i = sa.i JOIN sx sb ON sxx.j = sb.i
-CROSS JOIN n"""
-
-
-@q("embedding_covariance_upper", _EMB_COV_ORACLE)
-def embedding_covariance_upper(spark, sf_dir):
-    """Exact embedding covariance matrix, upper triangle (similarity.py:
-    embedding_covariance) — the anisotropy/collapse detector cosine
-    checks can't see (collapsed embeddings still cosine-match
-    THEMSELVES): trace concentrating into few diagonal cells = the
-    model degrading toward few directions. The engine's one
-    deliberately Arrow-heavy exact path: int64 Q^TQ partials per
-    bounded chunk inside mapInPandas, DECIMAL-summed — every
-    intermediate an exact integer, so even this pandas-UDF path is
-    value-identical to the DuckDB self-join replay. One corpus pass;
-    the shuffle carries chunks × 2080 partial rows, never vectors."""
-    from xmlschemavalidator_spark.similarity import embedding_covariance
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return embedding_covariance(emb, "embedding")
-
-
-@q("embedding_spectrum_report", None)
-def embedding_spectrum_report(spark, sf_dir):
-    """Spectral collapse verdict (similarity.py:embedding_spectrum) on
-    the exact covariance matrix: effective rank (participation ratio
-    (Σλ)²/Σλ²) and top-eigenvalue share — →1 as the embedding model
-    collapses onto one direction, the failure cosine checks can't see.
-    Driver-side eigh on the bounded 64×64 collect (the model-table
-    contract); rows-only by design (eigensolvers aren't SQL — the
-    exactness story lives in embedding_covariance_upper underneath)."""
-    from xmlschemavalidator_spark.similarity import embedding_spectrum
-
-    return embedding_spectrum(_t(spark, sf_dir, "embeddings"))
 
 
 _JT_ORACLE = """WITH src AS (
@@ -15414,28 +14793,6 @@ def dedup_cluster_size_alpha(spark, sf_dir):
     return powerlaw_alpha(sizes, "deg", kmin=2)
 
 
-@q("ivf_silhouette_report", None)
-def ivf_silhouette_report(spark, sf_dir):
-    """Simplified silhouette (similarity.py:simplified_silhouette,
-    Hruschka 2004) of the IVF k-means partition over the embeddings
-    table — the clustering-quality verdict the recall curve doesn't
-    carry (recall grades the INDEX; this grades whether the partition
-    is real structure: mean s near 0 = clusters touching, negative-s
-    mass = assignment borders where nprobe must rise). Rows-only by
-    design: centroids come from the Spark kmeans_fit, and oracle_sql
-    is static — the math is pinned by the bit-exact Python replay in
-    test_similarity.py instead. One narrow k-cosine projection +
-    #clusters-row aggregate."""
-    from xmlschemavalidator_spark.similarity import (
-        kmeans_fit,
-        simplified_silhouette,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = kmeans_fit(emb, "embedding", k=8, iters=4)
-    return simplified_silhouette(emb, "embedding", cents)
-
-
 # bow-tie fixture: doc_id%80 lays down a 75-node graph holding every
 # Broder class — 0..19 core ring (SCC), 20..29 feeders (IN), 30..39
 # sinks (OUT), 40..44 IN-side tendrils, 45..49 OUT-side tendrils,
@@ -15558,42 +14915,6 @@ def lang_spread_brown_forsythe(spark, sf_dir):
         "val",
         "lang",
     )
-
-
-def _hardneg_oracle() -> str:
-    from xmlschemavalidator_spark.similarity import hard_negative_oracle_sql
-
-    return hard_negative_oracle_sql(
-        "SELECT vec_id, embedding FROM embeddings WHERE vec_id < 100",
-        "SELECT vec_id AS query_id, (vec_id * 7 + 3) % 100 AS positive_id"
-        " FROM embeddings WHERE vec_id < 15",
-        k=5,
-    )
-
-
-@q("embedding_hard_negatives", _hardneg_oracle())
-def embedding_hard_negatives(spark, sf_dir):
-    """Hard-negative mining (similarity.py:hard_negative_mining — the
-    DPR recipe, Karpukhin EMNLP'20 §3.2): for 15 query vectors with
-    planted positives over the 100-vector slice, the top-5
-    highest-cosine non-positives per query plus the margin vs the best
-    positive — the contrastive-training batch builder. Cosines rounded
-    5dp BEFORE ranking so the order is an engine-shared fact; one
-    broadcast query table + anti-join + per-query top-k window.
-    Brute-force candidate generator disclosed (swap in IVF/LSH at
-    corpus scale, same tail)."""
-    from xmlschemavalidator_spark.similarity import hard_negative_mining
-
-    emb = _t(spark, sf_dir, "embeddings").where(F.col("vec_id") < 100)
-    pos = (
-        _t(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") < 15)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            ((F.col("vec_id") * 7 + 3) % 100).alias("positive_id"),
-        )
-    )
-    return hard_negative_mining(emb, pos, k=5)
 
 
 @q(
@@ -15738,52 +15059,6 @@ def doc_size_krippendorff_alpha(spark, sf_dir):
     )
     ratings = size1.unionByName(size2).unionByName(size3)
     return krippendorff_alpha(ratings, "unit", "val")
-
-
-@q("embedding_mmr_rerank", None)
-def embedding_mmr_rerank(spark, sf_dir):
-    """MMR diversity rerank (similarity.py:mmr_rerank, Carbonell &
-    Goldstein SIGIR'98) over per-query ANN candidates: 8 queries × the
-    100-vector slice's top-24 by cosine, reranked at λ=0.7 — the
-    redundancy-vs-relevance tail every retrieval stack bolts onto its
-    top-N (and the serving-side countermeasure SemDeDup applies at
-    corpus build time). All-integer greedy (micro relevances,
-    floor-micro cosines, unscaled BIGINT objective, min-id ties) in ONE
-    aggregate over sequence(1, k) — engine-specific by design
-    (rows-only): the arithmetic is pinned bit-exact by the pure-Python
-    replay in test_similarity.py instead of a DuckDB oracle."""
-    from xmlschemavalidator_spark.dedup import cosine_similarity
-    from xmlschemavalidator_spark.similarity import mmr_rerank
-
-    emb = _t(spark, sf_dir, "embeddings").where(F.col("vec_id") < 100)
-    queries = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("_qv"),
-    )
-    cand = emb.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").cast("array<double>").alias("_cv"),
-    )
-    cos = cosine_similarity(F.col("_qv"), F.col("_cv"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rel_micro").desc(), F.col("cand_id").asc()
-    )
-    scored = (
-        cand.crossJoin(F.broadcast(queries))
-        .where(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.floor(cos * F.lit(1_000_000.0)).cast("bigint").alias("rel_micro"),
-            F.col("_cv").alias("embedding"),
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= 24)
-        .drop("_rn")
-    )
-    return mmr_rerank(scored, k=8, lambda_milli=700)
 
 
 def _capture_oracle() -> str:

@@ -1,20 +1,13 @@
 """Pure-Python XXH64 compatible with Spark's ``xxhash64`` expression.
 
-Why this exists (two call sites, both performance fixes):
+Why this exists: the JVM-side SimHash (:func:`dedup.simhash`) hashes
+tokens with ``xxhash64``; its driver-side replica (:func:`dedup.simhash_py`)
+and the cross-implementation parity test need the same hash in plain
+Python.
 
-* :func:`similarity.lsh_topk` needs the LSH bucket of a *literal* query
-  vector.  Computing it with a 1-row Spark job is a needless job per query —
-  replicating the hash arithmetic driver-side removes it.
-* The JVM-side SimHash (:func:`dedup.simhash`) hashes tokens with
-  ``xxhash64``; a cross-implementation parity test needs the same hash in
-  plain Python.
-
-Spark's ``xxhash64(c1, c2, ...)`` chains per-column hashes: starting from
-``seed`` (42 unless set), each column value is hashed with the running hash
-as the seed.  Integer-typed columns go through ``hashInt`` (4-byte path),
-longs through ``hashLong``, strings through ``hashUnsafeBytes`` over UTF-8
-bytes (standard XXH64 body).  Mirrored from the published algorithm
-(xxHash, Yann Collet) as implemented in Spark's
+Spark hashes a string column with ``hashUnsafeBytes`` over its UTF-8
+bytes (standard XXH64 body), seeded with 42 unless set.  Mirrored from the
+published algorithm (xxHash, Yann Collet) as implemented in Spark's
 ``sql/catalyst/expressions/XXH64.java``; correctness is pinned by
 tests/test_hashing.py comparing against the real ``F.xxhash64`` on a value
 sweep.
@@ -64,26 +57,6 @@ def _to_signed(h: int) -> int:
 
 def _to_unsigned(v: int) -> int:
     return v & _MASK64
-
-
-def xxh64_int(value: int, seed: int = SPARK_SEED) -> int:
-    """Spark XXH64.hashInt: 4-byte integer path (IntegerType columns).
-    ``value`` is interpreted as a signed 32-bit int; returns signed 64-bit
-    (what Spark's LongType column shows)."""
-    k = value & 0xFFFFFFFF
-    h = (_to_unsigned(seed) + PRIME64_5 + 4) & _MASK64
-    h ^= (k * PRIME64_1) & _MASK64
-    h = (_rotl(h, 23) * PRIME64_2 + PRIME64_3) & _MASK64
-    return _to_signed(_fmix(h))
-
-
-def xxh64_long(value: int, seed: int = SPARK_SEED) -> int:
-    """Spark XXH64.hashLong: 8-byte path (LongType columns)."""
-    k = value & _MASK64
-    h = (_to_unsigned(seed) + PRIME64_5 + 8) & _MASK64
-    h ^= (_rotl((k * PRIME64_2) & _MASK64, 31) * PRIME64_1) & _MASK64
-    h = (_rotl(h, 27) * PRIME64_1 + PRIME64_4) & _MASK64
-    return _to_signed(_fmix(h))
 
 
 def xxh64_bytes(data: bytes, seed: int = SPARK_SEED) -> int:
@@ -138,12 +111,3 @@ def xxh64_bytes(data: bytes, seed: int = SPARK_SEED) -> int:
 def xxh64_str(s: str, seed: int = SPARK_SEED) -> int:
     """``F.xxhash64(string_col)`` equivalent: XXH64 over the UTF-8 bytes."""
     return xxh64_bytes(s.encode("utf-8"), seed)
-
-
-def spark_xxhash64_ints(values: list[int], seed: int = SPARK_SEED) -> int:
-    """``F.xxhash64(lit(i1), lit(i2), ...)`` for IntegerType inputs: Spark
-    chains per-column hashes, each using the running hash as the seed."""
-    h = seed
-    for v in values:
-        h = xxh64_int(v, h)
-    return h

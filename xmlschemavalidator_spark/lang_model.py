@@ -20,8 +20,8 @@ scoring, AND the argmax exactly:
   SAME Spark-SQL ``F.log``/``floor`` shape the DSIR/quality models use
   (CLAUDE.md: floor-quantized integers are the one float-parity recipe).
 * scoring — the weight table is rendered as C bucket-indexed LITERAL
-  arrays (one ``F.lit(list)`` Literal per class — the same literal-table
-  trick as PQ's ADC scoring, similarity.pq_topk) and each class score is
+  arrays (one ``F.lit(list)`` Literal per class — a literal lookup table,
+  as in product-quantization ADC scoring) and each class score is
   ONE integer ``aggregate`` HOF over the per-doc bucket array bound once
   behind a projection boundary: prior + Σ w[bucket]. No explode, no
   join, no shuffle — the whole scorer is two codegen'd narrow
@@ -365,8 +365,8 @@ def _doc_class_scores(
 ) -> tuple[DataFrame, list[Column]]:
     """Shared scoring core — the NARROW-PLAN path (VERDICT r4 item 3):
     the weight table is rendered as C bucket-indexed LITERAL arrays
-    (one ``F.lit(list)`` Literal each, the ADC trick from
-    similarity.pq_topk), and each class score is one integer
+    (one ``F.lit(list)`` Literal each, the product-quantization ADC
+    trick), and each class score is one integer
     ``aggregate`` over the bound bucket array: prior + Σ w[bucket].
     No explode, no join, no shuffle — scoring is a chain of two
     codegen'd projections. Integer adds are associative, so the scores

@@ -1,6 +1,5 @@
 """Persisted inverted text index + BM25 query — the retrieval layer a
-validated web corpus serves from (the text-side sibling of
-similarity.py's persisted IVF index; reference scope: the dataset-level
+validated web corpus serves from (reference scope: the dataset-level
 ops the reference's declarative checks imply once the corpus is
 query-served — see SURVEY.md §2.7/§2.10).
 
