@@ -72,8 +72,6 @@ def headline_queries():
     )
     from xmlschemavalidator_spark.driver_queries import (
         agg_pricing_summary,
-        events_cohort_retention,
-        text_jaro_winkler_windows,
         ann_cosine_topk,
         bpe_tokenize,
         stylometry_burrows_delta,
@@ -87,8 +85,6 @@ def headline_queries():
         main_content_extract,
         join_q3_shipping_priority,
         join_revenue_segment,
-        temporal_asof_join,
-        temporal_sessionize,
         text_bm25_topk,
         text_kneser_ney_lm,
         text_stupid_backoff_lm,
@@ -185,11 +181,6 @@ def headline_queries():
         "url_canonicalize": lambda s: url_canonicalize(s, SF_DIR),
         "link_pagerank": lambda s: _bench_pagerank(s),
         "anchor_topk": lambda s: _bench_anchor_topk(s),
-        # round-4 temporal family: as-of join (union + ordered-window
-        # carry-forward — one shuffle, no range explosion) and gap
-        # sessionization + per-session stats (one shuffle, two windows)
-        "temporal_asof": lambda s: temporal_asof_join(s, SF_DIR),
-        "temporal_sessionize": lambda s: temporal_sessionize(s, SF_DIR),
         # round-4 session-5: BM25 retrieval (the full-corpus (doc, term)
         # agg + 3-term broadcast scoring — the from-scratch cost the
         # persisted index amortizes) and the WordPiece tokenizer
@@ -197,12 +188,9 @@ def headline_queries():
         # wordpiece family in the suite)
         "bm25_topk": lambda s: text_bm25_topk(s, SF_DIR),
         "wordpiece_tokenize": lambda s: wordpiece_tokenize(s, SF_DIR),
-        # round-4 session-6: CDC MERGE at corpus shape (orders replayed as
-        # a change log onto customer — the partial-aggregatable
-        # max(struct) collapse + one full-outer join) and multi-source
-        # BFS over the same 50k-node graph PageRank uses (frontier joins
-        # + anti-joins, the exact-distance counterpart of HyperBall)
-        "cdc_apply": lambda s: _bench_cdc(s),
+        # round-4 session-6: multi-source BFS over the same 50k-node graph
+        # PageRank uses (frontier joins + anti-joins, the exact-distance
+        # counterpart of HyperBall)
         "link_bfs": lambda s: _bench_bfs(s),
         # round-4 session-7: interpolated Kneser-Ney (in-query train +
         # full-corpus scoring — the smoothing upgrade's honest cost next
@@ -242,12 +230,6 @@ def headline_queries():
         # corpus scans)
         "code_switch": lambda s: code_switch_report_q(s, SF_DIR),
         "stratified_audit": lambda s: _bench_stratified_audit(s),
-        # round-4 session-11: the weekly cohort retention matrix
-        # (DISTINCT (user, week) before any join) and the Jaro-Winkler
-        # Arrow pandas_udf — the suite's measured Python-boundary
-        # comparator
-        "cohort_retention": lambda s: events_cohort_retention(s, SF_DIR),
-        "jaro_winkler": lambda s: text_jaro_winkler_windows(s, SF_DIR),
     }
 
 
@@ -276,26 +258,6 @@ def _bench_rake(spark):
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     return rake_keywords(docs, k=5)
-
-
-def _bench_cdc(spark):
-    from pyspark.sql import functions as F
-
-    from xmlschemavalidator_spark.temporal import cdc_apply
-
-    cust = spark.read.parquet(f"{SF_DIR}/customer.parquet")
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    changes = orders.select(
-        F.col("o_custkey").alias("c_custkey"),
-        F.col("o_orderdate").alias("ts"),
-        F.col("o_orderkey").alias("ord"),
-        F.when(F.col("o_orderstatus") == "F", F.lit("D")).otherwise(F.lit("U")).alias("op"),
-        F.concat(F.lit("u"), F.col("o_orderkey").cast("string")).alias("c_name"),
-        (F.col("o_custkey") % 25).cast("int").alias("c_nationkey"),
-        F.col("o_totalprice").alias("c_acctbal"),
-        F.col("o_orderpriority").alias("c_mktsegment"),
-    )
-    return cdc_apply(cust, changes, key="c_custkey", ts="ts", order_col="ord")
 
 
 def _bench_bfs(spark):

@@ -4,6 +4,7 @@ with-status (core.clj:263-285; parser.clj:345-400)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from xmlschemavalidator_spark.compiler import FieldRule, RuleSet
@@ -499,6 +500,15 @@ def test_rule_cooccurrence_single_scan_plan(spark):
     assert plan.count("Scan ExistingRDD") == 1
 
 
+def test_rule_cooccurrence_one_rule_raises_value_error(spark):
+    """One rule has no pair: a ValueError, not a ParseException from an
+    empty ``stack(0, )``."""
+    from xmlschemavalidator_spark.engine import rule_cooccurrence
+
+    with pytest.raises(ValueError):
+        rule_cooccurrence(_docs(spark), RuleSet(rules=[_ruleset().rules[0]]))
+
+
 def test_violation_examples_deterministic_per_rule(spark):
     from xmlschemavalidator_spark.engine import violation_examples
 
@@ -549,6 +559,20 @@ def test_rule_rate_intervals_wilson(spark):
                                  "doc_id long, v long")
     [t] = rule_rate_intervals(tiny, rs, slo_fail_micro=100_000).collect()
     assert t["fail_rate"] == 0.2 and t["breaches_slo"] is False
+
+
+def test_rule_rate_intervals_empty_input_is_null(spark):
+    """No rows: NULL rate, bounds and SLO verdict (as expectation_summary's
+    pass_rate and ok), never DIVIDE_BY_ZERO under ANSI mode."""
+    from xmlschemavalidator_spark.engine import rule_rate_intervals
+
+    empty = _docs(spark).limit(0)
+    rows = rule_rate_intervals(empty, _ruleset()).collect()
+    assert sorted(r["rule_id"] for r in rows) == sorted(_ruleset().compile())
+    for r in rows:
+        assert r["n_rows"] == 0
+        assert (r["fail_rate"], r["ci_lo"], r["ci_hi"], r["breaches_slo"]) == (
+            None, None, None, None)
 
 
 def test_rule_cofire_matrix_hand_computed(spark):

@@ -30,6 +30,17 @@ def test_oracle_keys_subset():
     assert len(oracles) >= 20
 
 
+def test_front_block_is_50_distinct_oracled_queries():
+    """The driver samples the first 50 queries(): the curated front block
+    is 50 distinct names, each a query with a DuckDB oracle."""
+    from xmlschemavalidator_spark.driver_queries import _FRONT_50, all_oracles
+
+    assert len(_FRONT_50) == 50
+    assert len(set(_FRONT_50)) == 50
+    assert set(_FRONT_50) <= set(all_oracles())
+    assert list(entrymod.queries())[:50] == list(_FRONT_50)
+
+
 @pytest.mark.parametrize("name", sorted(entrymod.queries()))
 def test_each_query_runs(spark, name):
     fn = entrymod.queries()[name]

@@ -516,41 +516,6 @@ def test_fd_summary_two_level_partial_agg(spark):
     assert len(re.findall(r"\(\d+\) HashAggregate", plan)) == 4
 
 
-def test_cdc_apply_partial_struct_max_one_join(spark):
-    """The change-collapse is ONE partial-aggregatable max(struct) (a
-    hot key pre-combines map-side), then ONE join — no window sort over
-    the change log."""
-    import re
-
-    from xmlschemavalidator_spark.temporal import cdc_apply
-
-    target = spark.createDataFrame([(1, "a")], "id bigint, v string")
-    changes = spark.createDataFrame(
-        [(1, 2, 3, "U", "b")], "id bigint, ts bigint, ord bigint, op string, v string"
-    )
-    plan = fmt(cdc_apply(target, changes, key="id", ts="ts", order_col="ord"))
-    # struct-max compiles to SortAggregate (structs aren't hash-aggregatable)
-    aggs = re.findall(r"\(\d+\) (?:Sort|Hash)Aggregate", plan)
-    assert len(aggs) == 2  # partial + final struct-max, nothing else
-    assert "Window" not in plan
-    joins = re.findall(r"\(\d+\) \w*(?:SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)", plan)
-    assert len(joins) == 1
-
-
-def test_rolling_anomalies_single_exchange(spark):
-    """Both window reads (count/sum/sumsq) share one key partitioning:
-    a single Exchange."""
-    import re
-
-    from xmlschemavalidator_spark.temporal import rolling_anomalies
-
-    df = spark.createDataFrame(
-        [("k", i, 10) for i in range(8)], "k string, b bigint, v bigint"
-    )
-    plan = fmt(rolling_anomalies(df, key="k", bucket="b", value="v", window=4))
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
-
-
 def test_ecdf_single_exchange(spark):
     """row_number and the group count share the group partitioning."""
     import re
@@ -560,26 +525,6 @@ def test_ecdf_single_exchange(spark):
     docs = _docs(spark).select("doc_id", "lang", "n_chars")
     plan = fmt(ecdf_normalize(docs, "n_chars", "doc_id", group_cols=("lang",)))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
-
-
-def test_cusum_single_exchange_two_windows(spark):
-    """CUSUM's two expanding-frame window families ride ONE (key, order)
-    Exchange — the prefix sums and running extrema never re-shuffle."""
-    import re
-
-    from xmlschemavalidator_spark.temporal import cusum_changepoints
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    daily = ev.groupBy(
-        "event_type",
-        F.expr("CAST(unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000 AS BIGINT)").alias("day"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    p = fmt(
-        cusum_changepoints(daily, "event_type", "day", "n", target=5, slack=0, threshold=3)
-    )
-    assert n_scans(p) == 1
-    # one Exchange for the rollup groupBy + one for the window partitioning
-    assert len(re.findall(r"\(\d+\) Exchange", p)) == 2
 
 
 def test_ols_trend_single_scan_partial_agg(spark):
@@ -662,34 +607,6 @@ def test_privacy_audits_no_expand_single_scan(spark):
     assert n_scans(pk) == 1 and "Expand" not in pk
     pl = fmt(l_diversity_violations(d, ["source"], "lang", l=5))
     assert n_scans(pl) == 1 and "Expand" not in pl
-
-
-def test_event_transitions_single_key_shuffle(spark):
-    """One window Exchange on the key + partial-agg pair groupBy."""
-    import re
-
-    from xmlschemavalidator_spark.temporal import event_transitions
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    p = fmt(event_transitions(ev, "user_id", "ts", "event_type", "event_id"))
-    assert n_scans(p) == 1
-    assert "partial_count" in p  # the pair count combines map-side
-
-
-def test_ewma_single_window_partition(spark):
-    """All horizon lag terms ride ONE window partitioning — exactly one
-    Exchange for the key (plus the final single-partition none)."""
-    import re
-
-    from xmlschemavalidator_spark.temporal import ewma_control
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    daily = ev.groupBy(
-        "event_type", F.dayofyear("ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    p = fmt(ewma_control(daily, "event_type", "day", "n", target=60.0, threshold=5.0))
-    n_windows = len(re.findall(r"\(\d+\) Window", p))
-    assert n_windows == 1  # 32 lags share one Window node
 
 
 def test_emerging_terms_scans_corpus_once(spark):

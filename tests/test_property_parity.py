@@ -153,25 +153,3 @@ def test_gini_rank_form_equals_pairwise_definition(xs):
     rank_num = sum((2 * (i + 1) - n - 1) * x for i, x in enumerate(xs_sorted))
     pair_num = sum(abs(a - b) for a in xs for b in xs) // 1  # integer
     assert 2 * rank_num == pair_num
-
-
-@given(
-    st.lists(st.integers(min_value=-1000, max_value=1000), min_size=1, max_size=50),
-    st.integers(min_value=1, max_value=999_999),
-)
-def test_ewma_truncated_kernel_error_bound(xs, alpha_micro):
-    """The horizon-H truncated, present-weight-normalized kernel is within
-    (1−α)^H · range(x) of the exact infinite recursion — the bound
-    ewma_control's docstring claims."""
-    a = alpha_micro / 1e6
-    H = 32
-    # exact recursion seeded on the first value
-    z = xs[0]
-    for x in xs[1:]:
-        z = a * x + (1 - a) * z
-    # truncated normalized kernel over the last H values
-    w = [a * (1 - a) ** d for d in range(min(H, len(xs)))]
-    vals = xs[::-1][: len(w)]
-    zt = sum(wi * v for wi, v in zip(w, vals)) / sum(w)
-    rng = max(xs) - min(xs)
-    assert abs(z - zt) <= (1 - a) ** min(H, len(xs) - 1) * rng + 1e-6 * (1 + rng)

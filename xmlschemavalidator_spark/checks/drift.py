@@ -401,7 +401,7 @@ def jsd_drift(
 
 def _rbo_weights_micro(p_milli: int, k: int) -> list[int]:
     """w_d = (1−p)p^(d−1) floor-quantized to micros, d = 1..k — computed
-    ONCE in Python and consumed by both engines (the EWMA device)."""
+    ONCE in Python and consumed by both engines."""
     # (1 − p) computed as integer millis FIRST: 1.0 − 0.9 in doubles is
     # 0.09999999999999998 and floors a clean 100000 down to 99999
     p = p_milli / 1000.0
@@ -438,9 +438,9 @@ def ranking_overlap_rbo(
     Mechanics: a common item enters the depth-``d`` intersection at
     d = max(rank_a, rank_b), so |∩_d| is one cumulative sum over the
     k-bounded depth histogram — no per-depth re-join. Weights are
-    Python-precomputed integer micros (the EWMA device); each depth
-    term is the exact integer ``w_d·|∩_d| div d`` and the score their
-    BIGINT sum — engine-identical.
+    Python-precomputed integer micros; each depth term is the exact
+    integer ``w_d·|∩_d| div d`` and the score their BIGINT sum —
+    engine-identical.
 
     Scale shape: the inputs are top-k lists (already bounded); one
     item join + a k-row window. Nothing here touches a corpus.

@@ -362,9 +362,9 @@ def runs_test(
 ):
     """Wald–Wolfowitz runs test (1940) on an ordered boolean sequence —
     the RANDOMNESS check under the monitoring family: SPRT decides
-    which rate, CUSUM finds where it shifted, the runs test asks
-    whether pass/fail outcomes are even EXCHANGEABLE (clustered
-    failures → fewer runs than chance; alternation → more). ONE row
+    which rate, the runs test asks whether pass/fail outcomes are even
+    EXCHANGEABLE (clustered failures → fewer runs than chance;
+    alternation → more). ONE row
     ``(n, n_pos, n_neg, n_runs, expected_runs, z, p, nonrandom)``
     against E[R] = 2·n₁n₀/n + 1 and
 

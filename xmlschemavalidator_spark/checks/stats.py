@@ -657,7 +657,7 @@ def theil_sen_trend(
     both engines agree to the last ulp before rounding.
 
     Scale shape: the pairwise self-join is O(n²) PER GROUP — by the
-    same bounded-series contract as Hampel/CUSUM/EWMA (rollup buckets:
+    same bounded-series contract as Hampel (rollup buckets:
     days per key, not corpus rows); the join key is the group, so no
     global product ever forms. Equal-x pairs are excluded (vertical
     slope undefined — the standard convention).

@@ -2098,9 +2098,8 @@ def jaccard_pairs_prefix(
         F.array_sort(shingles(F.col(text_col), shingle_n)).alias("sh"),
     ).where(F.size("sh") > 0)
     # persisted because three plan branches read it (index build and
-    # both verification sides); exposed as result._ppjoin_base (the
-    # range_join._range_join_iv convention) so a long-lived session can
-    # .unpersist() after the result materializes
+    # both verification sides); exposed as result._ppjoin_base so a
+    # long-lived session can .unpersist() after the result materializes
     base = base.persist()
     ex = base.select("doc", F.explode("sh").alias("shingle"))
     freq = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("_f"))

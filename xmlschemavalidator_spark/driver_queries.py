@@ -6546,361 +6546,6 @@ def cohort_retention_staggered(spark, sf_dir):
 
 
 # ===========================================================================
-# temporal operators (temporal.py): as-of join, range join, hypertable
-# rollup (one-shot + incremental), gap sessionization
-# ===========================================================================
-
-from xmlschemavalidator_spark.temporal import _micros as _t_us  # noqa: E402
-
-@q(
-    "temporal_asof_join",
-    """WITH st AS (
-  SELECT user_id, ts, value, event_id FROM (
-    SELECT user_id, ts, value, event_id,
-           row_number() OVER (PARTITION BY user_id, ts
-                              ORDER BY value DESC, event_id DESC) AS rn
-    FROM events WHERE event_type = 'purchase') WHERE rn = 1
-), pr AS (
-  SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'click'
-)
-SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us, p.value,
-       epoch_us(s.ts) AS asof_ts_us, s.value AS asof_value,
-       s.event_id AS asof_event_id
-FROM pr p ASOF LEFT JOIN st s
-  ON p.user_id = s.user_id AND p.ts >= s.ts""",
-)
-def temporal_asof_join(spark, sf_dir):
-    """As-of join: attach to every click the user's most recent purchase
-    at-or-before it (backward inclusive — DuckDB/pandas ASOF semantics).
-    The Spark plan is the union + ordered-window carry-forward (ONE
-    shuffle on user_id, no inequality join, no range explosion); the
-    oracle is DuckDB's native ASOF LEFT JOIN over the identically
-    struct-max-deduped state side. 1,865 matched + 141 left-NULL clicks
-    at sf0.01 — both branches carry signal. Timestamps compare as exact
-    epoch microseconds."""
-    from xmlschemavalidator_spark.temporal import asof_join
-
-    e = _t(spark, sf_dir, "events")
-    probe = e.where(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    state = e.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "value", "event_id"
-    )
-    out = asof_join(probe, state, on="user_id", ts="ts",
-                    state_cols=("value", "event_id"))
-    return out.select(
-        "event_id",
-        "user_id",
-        _t_us(F.col("ts")).alias("ts_us"),
-        "value",
-        _t_us(F.col("asof_ts")).alias("asof_ts_us"),
-        "asof_value",
-        "asof_event_id",
-    )
-
-
-@q(
-    "temporal_range_join",
-    """SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us, p.value,
-       s.event_id AS interval_id,
-       epoch_us(s.ts) AS start_us,
-       epoch_us(s.ts + INTERVAL 4 HOUR) AS end_us
-FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-JOIN (SELECT * FROM events WHERE event_type = 'signup') s
-  ON p.user_id = s.user_id AND p.ts >= s.ts
-     AND p.ts < s.ts + INTERVAL 4 HOUR""",
-)
-def temporal_range_join(spark, sf_dir):
-    """Interval-containment join: purchases landing inside a 4-hour
-    post-signup window of the same user (half-open [start, end)). The
-    Spark plan explodes intervals over 1-hour buckets and EQUI-joins on
-    (user_id, bucket) + exact containment filter — never the
-    BroadcastNestedLoopJoin a naive inequality join plans; each
-    qualifying pair meets in exactly one bucket so no dedup pass. The
-    oracle is the direct inequality join (fine for DuckDB at sf0.01).
-    144 joined rows at sf0.01."""
-    from xmlschemavalidator_spark.temporal import range_join
-
-    e = _t(spark, sf_dir, "events")
-    probe = e.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    iv = e.where(F.col("event_type") == "signup").select(
-        "user_id",
-        F.col("event_id").alias("interval_id"),
-        F.col("ts").alias("start_ts"),
-        (F.col("ts") + F.expr("INTERVAL 4 HOURS")).alias("end_ts"),
-    )
-    out = range_join(probe, iv, on="user_id", ts="ts",
-                     start="start_ts", end="end_ts", bucket_seconds=3600)
-    return out.select(
-        "event_id",
-        "user_id",
-        _t_us(F.col("ts")).alias("ts_us"),
-        "value",
-        "interval_id",
-        _t_us(F.col("start_ts")).alias("start_us"),
-        _t_us(F.col("end_ts")).alias("end_us"),
-    )
-
-
-@q(
-    "temporal_sessionize",
-    """WITH g AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 21600000000
-              THEN 1 ELSE 0 END AS new_s
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), s AS (
-  SELECT user_id, ts,
-         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) AS session_seq
-  FROM g
-)
-SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-       CAST(count(*) AS BIGINT) AS n_events,
-       min(epoch_us(ts)) AS start_us, max(epoch_us(ts)) AS end_us,
-       max(epoch_us(ts)) - min(epoch_us(ts)) AS duration_us
-FROM s GROUP BY user_id, session_seq""",
-)
-def temporal_sessionize(spark, sf_dir):
-    """Gap-based sessionization (6-hour inactivity gap) + per-session
-    stats. A session breaks only when the gap STRICTLY exceeds the
-    threshold; equal-timestamp ties order by event_id so session
-    numbering is deterministic in both engines. One shuffle on user_id
-    (lag + running-sum share the window partitioning). 5,725 sessions
-    at sf0.01 with up-to-10-event sessions — boundary arithmetic
-    carries signal. Durations are exact microsecond BIGINTs."""
-    from xmlschemavalidator_spark.temporal import session_stats, sessionize
-
-    e = _t(spark, sf_dir, "events")
-    sess = sessionize(e, on="user_id", ts="ts", gap_seconds=21600,
-                      order_col="event_id")
-    return session_stats(sess, on="user_id", ts="ts").select(
-        "user_id",
-        "session_seq",
-        "n_events",
-        "start_us",
-        "end_us",
-        (F.col("end_us") - F.col("start_us")).alias("duration_us"),
-    )
-
-
-_ROLLUP_DAILY_SQL = """\
-SELECT CAST((epoch_us(ts) // 86400000000) * 86400 AS BIGINT) AS bucket_start,
-       event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(round(sum(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_value,
-       min(value) AS min_value, max(value) AS max_value
-FROM events GROUP BY 1, 2"""
-
-
-def _rollup_select(df):
-    return df.select(
-        "bucket_start",
-        "event_type",
-        "n_events",
-        F.round(F.col("sum_value"), 2).cast("double").alias("sum_value"),
-        "min_value",
-        "max_value",
-    )
-
-
-@q("temporal_rollup_daily", _ROLLUP_DAILY_SQL)
-def temporal_rollup_daily(spark, sf_dir):
-    """Hypertable-style continuous aggregate: daily buckets x event_type
-    with the mergeable aggregate set (count / DECIMAL sum / min / max).
-    Bucket starts are integer epoch-second arithmetic (`unix_micros div
-    width`, exactly DuckDB's `//`) — double division at ~1.7e15 us can
-    misfloor at bucket edges. Sums stay DECIMAL until the final 2dp
-    round so the oracle compares exactly. 150 cells (30 days x 5 types)
-    at sf0.01; ONE partially-aggregated shuffle."""
-    from xmlschemavalidator_spark.temporal import time_rollup
-
-    e = _t(spark, sf_dir, "events")
-    return _rollup_select(
-        time_rollup(e, "ts", 86400, dims=("event_type",), value="value")
-    )
-
-
-@q("temporal_rollup_incremental", _ROLLUP_DAILY_SQL)
-def temporal_rollup_incremental(spark, sf_dir):
-    """Incremental maintenance of the SAME daily rollup: the corpus
-    arrives as three disjoint batches (event_id mod 3), each folded in
-    by append_time_rollup (per-_batch= dirs, committed batches never
-    rewritten), then read_time_rollup merges partials at O(buckets)
-    cost. Must hash-match the one-shot oracle exactly — count/sum/min/
-    max are mergeable and the sum stayed DECIMAL in the partials, so
-    the merge is invisible to the query."""
-    import shutil
-    import tempfile
-
-    from xmlschemavalidator_spark.temporal import (
-        append_time_rollup,
-        read_time_rollup,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="rollup_")
-    try:
-        e = _t(spark, sf_dir, "events")
-        for i in range(3):
-            append_time_rollup(
-                e.where(F.col("event_id") % 3 == i),
-                "ts",
-                86400,
-                f"{tmp}/agg",
-                batch_id=f"{i:05d}",
-                dims=("event_type",),
-            )
-        merged = _rollup_select(
-            read_time_rollup(spark, f"{tmp}/agg", dims=("event_type",))
-        )
-        # materialize before the tmp dir disappears (the driver collects
-        # AFTER this function returns)
-        return spark.createDataFrame(merged.collect(), merged.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@q(
-    "temporal_scd2_dimension",
-    """WITH o AS (
-  SELECT user_id, ts, event_id, event_type,
-         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS prev_type
-  FROM events
-), ch AS (
-  SELECT user_id, ts, event_id, event_type FROM o
-  WHERE prev_type IS NULL OR prev_type <> event_type
-)
-SELECT user_id, event_type,
-       epoch_us(ts) AS valid_from_us,
-       coalesce(epoch_us(lead(ts) OVER (PARTITION BY user_id
-                                        ORDER BY ts, event_id)),
-                CAST(-1 AS BIGINT)) AS valid_to_us,
-       lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-         AS is_current
-FROM ch""",
-)
-def temporal_scd2_dimension(spark, sf_dir):
-    """Slowly-changing-dimension type-2 build from the events change
-    stream: per user, consecutive same-event_type rows collapse into one
-    validity run with a half-open [valid_from, valid_to) interval
-    (valid_to NULL -> -1 on the current run). ONE shuffle on user_id —
-    the change-point filter sits between a lag and a lead pass sharing
-    the window partitioning. ~8k runs at sf0.01 (4/5 of transitions
-    change type), 150 is_current rows — collapse, interval chaining, and
-    the current-run flag all carry signal."""
-    from xmlschemavalidator_spark.temporal import scd2_build
-
-    e = _t(spark, sf_dir, "events")
-    dim = scd2_build(e, key="user_id", ts="ts", attrs=("event_type",),
-                     order_col="event_id")
-    return dim.select(
-        "user_id",
-        "event_type",
-        _t_us(F.col("valid_from")).alias("valid_from_us"),
-        F.coalesce(_t_us(F.col("valid_to")), F.lit(-1).cast("bigint")).alias(
-            "valid_to_us"
-        ),
-        "is_current",
-    )
-
-
-@q("temporal_rollup_streaming", _ROLLUP_DAILY_SQL)
-def temporal_rollup_streaming(spark, sf_dir):
-    """The SAME daily rollup maintained by Structured Streaming: the
-    events table replayed as a file stream (2 files per micro-batch),
-    each batch folded in by stream_time_rollup's foreachBatch appender
-    (per-epoch `_batch=` dirs — replayed batches overwrite exactly their
-    own dir, so the sink is exactly-once under retries). The merged
-    read-back must hash-match the one-shot batch oracle — a streaming
-    query with a FULL DuckDB oracle, not a rows-only check, because
-    every aggregate in the partial rollups is mergeable."""
-    import shutil
-    import tempfile
-
-    from xmlschemavalidator_spark.temporal import (
-        read_time_rollup,
-        stream_time_rollup,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="strollup_")
-    try:
-        e = _t(spark, sf_dir, "events").select("ts", "event_type", "value")
-        src = f"{tmp}/src"
-        e.repartition(4).write.parquet(src)
-        sdf = (
-            spark.readStream.schema("ts timestamp_ntz, event_type string, value double")
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-        )
-        q_ = stream_time_rollup(
-            sdf, "ts", 86400, f"{tmp}/agg", f"{tmp}/ckpt",
-            dims=("event_type",),
-        )
-        try:
-            if not q_.awaitTermination(300):
-                raise TimeoutError("stream_time_rollup did not finish in 300s")
-        finally:
-            q_.stop()
-        merged = _rollup_select(
-            read_time_rollup(spark, f"{tmp}/agg", dims=("event_type",))
-        )
-        return spark.createDataFrame(merged.collect(), merged.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@q(
-    "temporal_interval_union",
-    """\
-WITH iv AS (
-  SELECT user_id, epoch_us(ts) AS s,
-         epoch_us(ts + to_hours(1 + event_id % 5)) AS e
-  FROM events
-), m AS (
-  SELECT user_id, s, e,
-         max(e) OVER (PARTITION BY user_id ORDER BY s, e
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-  FROM iv WHERE e > s AND s IS NOT NULL AND e IS NOT NULL
-), r AS (
-  SELECT user_id, s, e,
-         CAST(SUM(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
-              OVER (PARTITION BY user_id ORDER BY s, e
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS run_seq
-  FROM m
-)
-SELECT user_id, run_seq, min(s) AS start_us, max(e) AS end_us,
-       CAST(count(*) AS BIGINT) AS n_intervals
-FROM r GROUP BY user_id, run_seq""",
-)
-def temporal_interval_union(spark, sf_dir):
-    """Merge overlapping activity intervals per user (each event opens a
-    [ts, ts + 1..5h) window from its id) into disjoint coverage runs —
-    temporal.interval_union's sweep (running max of prior ends detects
-    run starts, running sum numbers runs, one groupBy collapses), all on
-    ONE shuffle (plan-pinned). Exact epoch-microsecond bounds vs the
-    identical ROWS-framed window replay in DuckDB; touching intervals
-    merge (half-open semantics). The coverage metric crawl-window
-    accounting needs, at the shuffle cost of a sessionization."""
-    from xmlschemavalidator_spark.temporal import interval_union
-
-    e = _t(spark, sf_dir, "events")
-    iv = e.select(
-        "user_id",
-        F.col("ts").alias("start_ts"),
-        F.expr(
-            "timestampadd(HOUR, CAST(1 + event_id % 5 AS INT), ts)"
-        ).alias("end_ts"),
-    )
-    return interval_union(iv, on="user_id", start="start_ts", end="end_ts")
-
-
-# ===========================================================================
 # unigram-LM subword tokenizer (unigram.py, Kudo 2018 / SentencePiece)
 # ===========================================================================
 
@@ -7349,70 +6994,6 @@ def entropy_doc_lang(spark, sf_dir):
 
 
 @q(
-    "cdc_apply_customer",
-    """WITH ch AS (SELECT o_custkey AS k, o_orderdate AS ts, o_orderkey AS ord,
-                          CASE WHEN o_orderstatus = 'F' THEN 'D' ELSE 'U' END AS op,
-                          concat('upd_', CAST(o_orderkey AS VARCHAR)) AS c_name,
-                          CAST(o_custkey % 25 AS INTEGER) AS c_nationkey,
-                          round(o_totalprice, 2) AS c_acctbal,
-                          o_orderpriority AS c_mktsegment
-                   FROM orders),
-            w AS (SELECT *, row_number() OVER (
-                      PARTITION BY k ORDER BY ts DESC, ord DESC) AS rn
-                  FROM ch),
-            latest AS (SELECT * FROM w WHERE rn = 1),
-            merged AS (SELECT coalesce(c.c_custkey, l.k) AS c_custkey,
-                              l.k IS NOT NULL AS has_change, l.op,
-                              CASE WHEN l.k IS NOT NULL AND l.op <> 'D'
-                                   THEN l.c_name ELSE c.c_name END AS c_name,
-                              CASE WHEN l.k IS NOT NULL AND l.op <> 'D'
-                                   THEN l.c_nationkey ELSE c.c_nationkey END AS c_nationkey,
-                              CASE WHEN l.k IS NOT NULL AND l.op <> 'D'
-                                   THEN l.c_acctbal ELSE c.c_acctbal END AS c_acctbal,
-                              CASE WHEN l.k IS NOT NULL AND l.op <> 'D'
-                                   THEN l.c_mktsegment ELSE c.c_mktsegment END AS c_mktsegment
-                       FROM customer c FULL OUTER JOIN latest l ON c.c_custkey = l.k)
-       SELECT c_custkey, c_name, c_nationkey,
-              CAST(round(c_acctbal, 2) AS DOUBLE) AS c_acctbal, c_mktsegment
-       FROM merged WHERE NOT has_change OR op <> 'D'
-       ORDER BY c_custkey""",
-)
-def cdc_apply_customer(spark, sf_dir):
-    """MERGE INTO / SCD type-1 compaction (temporal.py cdc_apply): orders
-    replayed as a CDC stream onto the customer dimension — latest change
-    per key wins, 'F'-status tombstones delete, unseen keys pass
-    through, new keys insert. The duplicate-collapse is ONE
-    partial-aggregatable max(struct(ts, order, op, attrs)) (a hot key
-    reaches the shuffle as one row per map task), then ONE full-outer
-    join; the oracle replays the same latest-wins semantics with a
-    window. Deterministic ties via (o_orderdate, o_orderkey)."""
-    from xmlschemavalidator_spark.temporal import cdc_apply
-
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    changes = orders.select(
-        F.col("o_custkey").alias("c_custkey"),
-        F.col("o_orderdate").alias("ts"),
-        F.col("o_orderkey").alias("ord"),
-        F.when(F.col("o_orderstatus") == "F", F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-        F.concat(F.lit("upd_"), F.col("o_orderkey").cast("string")).alias("c_name"),
-        (F.col("o_custkey") % 25).cast("int").alias("c_nationkey"),
-        F.round(F.col("o_totalprice"), 2).alias("c_acctbal"),
-        F.col("o_orderpriority").alias("c_mktsegment"),
-    )
-    merged = cdc_apply(cust, changes, key="c_custkey", ts="ts", order_col="ord")
-    return merged.select(
-        "c_custkey",
-        "c_name",
-        "c_nationkey",
-        F.round("c_acctbal", 2).cast("double").alias("c_acctbal"),
-        "c_mktsegment",
-    ).orderBy("c_custkey")
-
-
-@q(
     "snm_part_name_pairs",
     """WITH b AS (SELECT p_partkey AS id, p_name AS key,
                          substr(p_name, 1, 4) AS blk
@@ -7606,53 +7187,6 @@ def sequence_gaps_lineitem(spark, sf_dir):
     )
 
 
-@q(
-    "rolling_anomalies_event_counts",
-    """WITH r AS (SELECT (epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) * 3600
-                             AS bucket_start,
-                         event_type,
-                         CAST(count(*) AS BIGINT) AS n_events
-                  FROM events GROUP BY 1, 2),
-            z AS (SELECT event_type, bucket_start,
-                         CAST(n_events AS HUGEINT) AS x,
-                         count(*) OVER fr AS w,
-                         sum(CAST(n_events AS HUGEINT)) OVER fr AS s,
-                         sum(CAST(n_events AS HUGEINT)
-                             * CAST(n_events AS HUGEINT)) OVER fr AS ss
-                  FROM r
-                  WINDOW fr AS (PARTITION BY event_type ORDER BY bucket_start
-                                ROWS BETWEEN 12 PRECEDING AND 1 PRECEDING))
-       SELECT event_type, bucket_start,
-              CAST(x AS BIGINT) AS value_q,
-              CAST(s // 12 AS BIGINT) AS mean_q,
-              (w * x - s) > 0 AS flag_hi
-       FROM z
-       WHERE w = 12 AND 100 * (w*x - s) * (w*x - s) > 900 * (w*ss - s*s)
-       ORDER BY event_type, bucket_start""",
-)
-def rolling_anomalies_event_counts(spark, sf_dir):
-    """Rolling z-score anomalies over the hourly continuous aggregate
-    (temporal.py:rolling_anomalies on a time_rollup): hours whose event
-    count deviates from the previous-12-hour mean by more than 3 sigma.
-    The whole predicate is cross-multiplied integer arithmetic in
-    DECIMAL(38,0) — 100·(w·x−Σ)² > k²·(w·Σx²−Σ²) over half-open ROWS
-    frames, no float mean/stddev, no sqrt — replayed in HUGEINT
-    bit-for-bit. Warm-up rows (short lookback) never flag."""
-    from xmlschemavalidator_spark.temporal import rolling_anomalies, time_rollup
-
-    ev = _t(spark, sf_dir, "events")
-    rollup = time_rollup(ev, "ts", 3600, dims=("event_type",))
-    counts = rollup.select("event_type", "bucket_start", "n_events")
-    return rolling_anomalies(
-        counts,
-        key="event_type",
-        bucket="bucket_start",
-        value="n_events",
-        window=12,
-        k_tenths=30,
-    ).orderBy("event_type", "bucket_start")
-
-
 from xmlschemavalidator_spark.weburl import (  # noqa: E402
     label_propagation_oracle_sql,
     ppr_oracle_sql,
@@ -7715,50 +7249,6 @@ def ecdf_normalize_chars(spark, sf_dir):
     return ecdf_normalize(
         docs, "n_chars", "doc_id", group_cols=("lang",)
     ).orderBy("doc_id")
-
-
-@q(
-    "last_touch_attribution_events",
-    """WITH w AS (SELECT user_id, event_id, event_type,
-                         epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events
-                  WHERE ts IS NOT NULL),
-            c AS (SELECT user_id, event_id, event_type, us,
-                         last_value(CASE WHEN event_type IN ('click', 'view')
-                             THEN {'us': us, 'id': event_id} END IGNORE NULLS)
-                             OVER (PARTITION BY user_id ORDER BY us, event_id
-                                   ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND 1 PRECEDING) AS lt
-                  FROM w)
-       SELECT user_id, event_id AS conv_id, us AS conv_us,
-              CASE WHEN ok THEN lt.id END AS touch_id,
-              CASE WHEN ok THEN lt.us END AS touch_us,
-              ok AS attributed
-       FROM (SELECT *, lt IS NOT NULL AND (us - lt.us) <= 604800000000 AS ok
-             FROM c WHERE event_type IN ('purchase', 'signup'))
-       ORDER BY conv_id""",
-)
-def last_touch_attribution_events(spark, sf_dir):
-    """Last-touch conversion attribution (temporal.py:
-    last_touch_attribution): every purchase/signup credited to the
-    user's most recent preceding click/view within a 7-day lookback —
-    the asof-join family shape as ONE ordered window carrying the last
-    touch struct over the STRICTLY-preceding frame (self-attribution
-    impossible by frame construction). Integer-microsecond window
-    test; ~3.8k attributed vs 150 not at sf0.01 — both branches carry
-    signal."""
-    from xmlschemavalidator_spark.temporal import last_touch_attribution
-
-    ev = _t(spark, sf_dir, "events")
-    return last_touch_attribution(
-        ev,
-        on="user_id",
-        ts="ts",
-        order_col="event_id",
-        type_col="event_type",
-        touch_types=("click", "view"),
-        conv_types=("purchase", "signup"),
-        window_seconds=7 * 86400,
-    ).orderBy("conv_id")
 
 
 @q(
@@ -7904,93 +7394,6 @@ def moments_event_value(spark, sf_dir):
     return moments_profile(_t(spark, sf_dir, "events"), "value")
 
 
-_CDC_ORACLE = _ORACLES["cdc_apply_customer"]
-
-
-@q("stream_cdc_apply_customer", _CDC_ORACLE)
-def stream_cdc_apply_customer(spark, sf_dir):
-    """The SAME customer merge maintained by a STREAMING CDC store
-    (temporal.py:stream_cdc_partials / read_cdc_state): the order change
-    log replays as a 3-chunk file stream; each micro-batch persists only
-    its latest-change-per-key partial under ``_batch=`` (exactly-once
-    own-dir overwrite — the rollup store's contract), and the served
-    state is target + merge-of-partials. max(struct) is ASSOCIATIVE, so
-    the latest of per-batch latests is bit-identical to the one-shot
-    cdc_apply — this query shares cdc_apply_customer's oracle verbatim:
-    a streaming MERGE INTO with a full SQL oracle, and the stream never
-    rewrites the big table."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from xmlschemavalidator_spark.temporal import (
-        read_cdc_state,
-        stream_cdc_partials,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="stcdc_")
-    try:
-        orders = _t(spark, sf_dir, "orders")
-        changes = orders.select(
-            F.col("o_custkey").alias("c_custkey"),
-            F.col("o_orderdate").alias("ts"),
-            F.col("o_orderkey").alias("ord"),
-            F.when(F.col("o_orderstatus") == "F", F.lit("D"))
-            .otherwise(F.lit("U"))
-            .alias("op"),
-            F.concat(F.lit("upd_"), F.col("o_orderkey").cast("string")).alias(
-                "c_name"
-            ),
-            (F.col("o_custkey") % 25).cast("int").alias("c_nationkey"),
-            F.round(F.col("o_totalprice"), 2).alias("c_acctbal"),
-            F.col("o_orderpriority").alias("c_mktsegment"),
-        )
-        n = changes.count()
-        srcdir = f"{tmp}/in"
-        os.makedirs(srcdir)
-        chunks = [
-            changes.where(F.col("ord") < n // 3),
-            changes.where((F.col("ord") >= n // 3) & (F.col("ord") < 2 * n // 3)),
-            changes.where(F.col("ord") >= 2 * n // 3),
-        ]
-        t_base = 1_600_000_000
-        for j, ch in enumerate(chunks):
-            d = f"{tmp}/chunk{j}"
-            ch.coalesce(1).write.parquet(d)
-            dst = f"{srcdir}/{j:04d}.parquet"
-            shutil.move(glob.glob(f"{d}/part-*.parquet")[0], dst)
-            os.utime(dst, (t_base + 600 * j, t_base + 600 * j))
-        sdf = (
-            spark.readStream.schema(
-                "c_custkey bigint, ts timestamp_ntz, ord bigint, op string, "
-                "c_name string, c_nationkey int, c_acctbal double, "
-                "c_mktsegment string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(srcdir)
-        )
-        q_ = stream_cdc_partials(
-            sdf, f"{tmp}/store", f"{tmp}/ckpt",
-            key="c_custkey", ts="ts", order_col="ord",
-        )
-        q_.awaitTermination(300)
-        cust = _t(spark, sf_dir, "customer")
-        merged = read_cdc_state(
-            spark, f"{tmp}/store", cust,
-            key="c_custkey", ts="ts", order_col="ord",
-        )
-        return merged.select(
-            "c_custkey",
-            "c_name",
-            "c_nationkey",
-            F.round("c_acctbal", 2).cast("double").alias("c_acctbal"),
-            "c_mktsegment",
-        ).orderBy("c_custkey").localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 @q(
     "trimmed_mean_event_value",
     """WITH r AS (SELECT event_type, value,
@@ -8057,41 +7460,6 @@ def suggest_fds_orders(spark, sf_dir):
     return suggest_fds(
         orders, ["o_orderkey", "o_custkey", "o_orderstatus"]
     ).orderBy("lhs", "rhs")
-
-
-@q(
-    "interarrival_user_events",
-    """WITH w AS (SELECT user_id,
-                         epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-                         epoch_us(CAST(ts AS TIMESTAMP))
-                           - lag(epoch_us(CAST(ts AS TIMESTAMP)))
-                               OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS gap
-                  FROM events WHERE ts IS NOT NULL)
-       SELECT user_id,
-              CAST(count(*) AS BIGINT) AS n_events,
-              CAST(count(gap) AS BIGINT) AS n_gaps,
-              CAST(min(gap) AS BIGINT) AS min_gap_us,
-              CAST(max(gap) AS BIGINT) AS max_gap_us,
-              CAST(CASE WHEN count(gap) > 0
-                   THEN (max(us) - min(us)) // count(gap) END AS BIGINT)
-                  AS mean_gap_us
-       FROM w GROUP BY user_id ORDER BY user_id""",
-)
-def interarrival_user_events(spark, sf_dir):
-    """Per-user inter-arrival gap profile (temporal.py:
-    interarrival_stats) — the burstiness statistics behind
-    sessionization-gap tuning and metronomic-bot detection. The mean
-    needs NO window: gaps telescope (Σ gaps = max−min), so it comes
-    from the plain partial-aggregatable min/max/count; only the
-    individual-gap min/max ride the one ordered window. Exact integer
-    microseconds throughout."""
-    from xmlschemavalidator_spark.temporal import interarrival_stats
-
-    ev = _t(spark, sf_dir, "events")
-    return interarrival_stats(
-        ev, on="user_id", ts="ts", order_col="event_id"
-    ).orderBy("user_id")
 
 
 @q(
@@ -8250,74 +7618,6 @@ def ols_trend_daily_events(spark, sf_dir):
     return ols_trend(
         daily, "day", "n_events", group_cols=("event_type",)
     ).orderBy("event_type")
-
-
-@q(
-    "cusum_daily_event_counts",
-    """WITH daily AS (SELECT event_type,
-                             CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000
-                                  AS BIGINT) AS day,
-                             CAST(count(*) AS BIGINT) AS n_events
-                      FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-            w AS (SELECT event_type, day,
-                         CAST(n_events AS HUGEINT) AS x FROM daily),
-            p AS (SELECT event_type, day, x,
-                         sum(x - 65) OVER fr AS pp,
-                         sum(x - 63) OVER fr AS qq
-                  FROM w
-                  WINDOW fr AS (PARTITION BY event_type ORDER BY day
-                                ROWS UNBOUNDED PRECEDING)),
-            c AS (SELECT event_type, day, x,
-                         pp - least(CAST(0 AS HUGEINT),
-                                    min(pp) OVER (PARTITION BY event_type
-                                                  ORDER BY day
-                                                  ROWS UNBOUNDED PRECEDING))
-                             AS cp,
-                         greatest(CAST(0 AS HUGEINT),
-                                  max(qq) OVER (PARTITION BY event_type
-                                                ORDER BY day
-                                                ROWS UNBOUNDED PRECEDING)) - qq
-                             AS cn
-                  FROM p)
-       SELECT event_type, day, CAST(x AS BIGINT) AS value_q,
-              CAST(cp AS BIGINT) AS cusum_pos,
-              CAST(cn AS BIGINT) AS cusum_neg,
-              cp > 30 AS flag_hi
-       FROM c WHERE cp > 30 OR cn > 30
-       ORDER BY event_type, day""",
-)
-def cusum_daily_event_counts(spark, sf_dir):
-    """Two-sided CUSUM change-point alarms (temporal.py:
-    cusum_changepoints, Page 1954) over per-type daily event counts:
-    target 64/slack 1/threshold 30 picked from the measured sf0.01
-    daily-count distribution (median ~66 → 72 of 150 buckets alarm; a
-    well-tuned zero-alarm setting would prove nothing). The recursion
-    C+ = max(0, C+ + x - t - s) unrolls to prefix-sum minus running
-    min — two expanding windows sharing ONE (key, day) partitioning,
-    all DECIMAL(38,0); HUGEINT replays it bit-for-bit. This is the
-    small-persistent-shift detector the rolling z-score gate misses."""
-    from xmlschemavalidator_spark.temporal import cusum_changepoints
-
-    ev = _t(spark, sf_dir, "events")
-    daily = (
-        ev.where(F.col("ts").isNotNull())
-        .groupBy(
-            "event_type",
-            F.expr(
-                "CAST(unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000 AS BIGINT)"
-            ).alias("day"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
-    )
-    return cusum_changepoints(
-        daily,
-        key="event_type",
-        bucket="day",
-        value="n_events",
-        target=64,
-        slack=1,
-        threshold=30,
-    ).orderBy("event_type", "day")
 
 
 def _winnow_fps_sql(k: int, w: int) -> str:
@@ -8896,12 +8196,14 @@ def tfidf_cosine_pairs_docs(spark, sf_dir):
 # Registration order is package-growth order (round 1 first), so an
 # unordered export would only ever show the driver the round-1 facet/type
 # operators. This curated front block is one representative per family —
-# facets/types/structural → verdicts → dataset checks → dedup (exact/line/
-# span/LSH/b-bit/SemDeDup/canonical/decontam) → DSIR → lang ID → quality →
-# tokenizers → URL layer → graph → retrieval → temporal → streaming → CUBE
-# → TPC-H → statistical analyzers — every one chosen to return NONZERO rows
-# at sf0.01 (verified; the three clean-data 0-row checks are replaced here
-# by their planted-violation variants and demoted to the tail).
+# facets/types/structural → verdicts, violations and the rule-set tools
+# (XSD identity constraints, migration delta, violation examples, per-rule
+# rate intervals) → dataset checks → dedup (exact/line/span/LSH/b-bit/
+# SemDeDup/canonical/decontam) → DSIR → lang ID → quality → tokenizers →
+# URL layer → graph → retrieval → CUBE → TPC-H → statistical analyzers —
+# every one chosen to return NONZERO rows at sf0.01 (verified; the three
+# clean-data 0-row checks are replaced here by their planted-violation
+# variants and demoted to the tail).
 _FRONT_50 = (
     "facet_enumeration", "facet_range", "facet_pattern",          # §2.1
     "type_lattice", "type_union_detail",                          # §2.2/2.3
@@ -8909,7 +8211,8 @@ _FRONT_50 = (
     "attr_required",                                              # §2.5
     "verdicts_wide", "violations_long", "validation_summary",     # §2.6
     "xsd_columnar_verdicts", "xsd_xml_documents",
-    "ruleset_extension_verdicts",
+    "xsd_identity_constraints", "ruleset_extension_verdicts",
+    "ruleset_migration_delta", "violation_examples", "rule_rate_intervals",
     "column_stats", "length_histogram", "heavy_hitters_lang",     # §2.7
     "uniqueness_duplicates", "referential_orders_planted",
     "ks_drift_lang", "suggest_constraints", "incremental_revalidation",
@@ -8924,10 +8227,8 @@ _FRONT_50 = (
     "robots_filter_rfc_kept",
     "link_pagerank", "link_components",                           # §2.10 graph
     "text_bm25_index_topk",                                       # §2.10 retrieval
-    "temporal_asof_join", "temporal_sessionize",                  # §2.10 temporal
-    "stream_cdc_apply_customer",                                  # §2.10 streaming
     "cube_source_lang", "join_q18_large_orders",                  # OLAP/TPC-H
-    "welch_t_doc_length", "doc_size_fleiss_kappa",                # stats battery
+    "welch_t_doc_length",                                         # stats battery
 )
 
 
@@ -9476,243 +8777,6 @@ def text_stupid_backoff_lm(spark, sf_dir):
     )
 
 
-from xmlschemavalidator_spark.linkage import FsField, fs_weight_sql_terms  # noqa: E402
-
-_FS_FIELDS = [
-    FsField("name", m=0.95, u=0.05),
-    FsField("mkt", m=0.95, u=0.20),
-    FsField("bal", m=0.90, u=0.02),
-]
-_FS_AGREE_SQL = {
-    "name": "levenshtein(na, nb) <= 1",
-    "mkt": "ma = mb",
-    "bal": "abs(ba - bb) <= 500",
-}
-
-
-@q(
-    "fs_record_linkage",
-    f"""WITH base AS (
-         SELECT c_custkey AS id, lower(c_name) AS name, c_mktsegment AS mkt,
-                CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal
-         FROM customer),
-       dirty AS (
-         SELECT * FROM base
-         UNION ALL
-         SELECT id + 1000000, substr(name, 1, length(name) - 1), mkt, bal + 250
-         FROM base WHERE id % 5 = 0),
-       keyed AS (SELECT *, substr(name, 15, 2) || '|' || name AS k FROM dirty),
-       r AS (SELECT *, row_number() OVER (
-                 PARTITION BY substr(k, 1, 2) ORDER BY k, id) AS rn
-             FROM keyed),
-       p AS (SELECT a.id AS id_a, b.id AS id_b, a.name AS na, b.name AS nb,
-                    a.mkt AS ma, b.mkt AS mb, a.bal AS ba, b.bal AS bb
-             FROM r a JOIN r b
-               ON substr(a.k, 1, 2) = substr(b.k, 1, 2)
-              AND b.rn - a.rn BETWEEN 1 AND 2),
-       sc AS (SELECT id_a, id_b,
-                     levenshtein(na, nb) <= 1 AS agree_name,
-                     ma = mb AS agree_mkt,
-                     abs(ba - bb) <= 500 AS agree_bal,
-                     CAST({fs_weight_sql_terms(_FS_FIELDS, _FS_AGREE_SQL)}
-                          AS BIGINT) AS weight_micro
-              FROM p)
-       SELECT id_a, id_b, agree_name, agree_mkt, agree_bal, weight_micro,
-              CASE WHEN weight_micro >= 8000000 THEN 'match'
-                   WHEN weight_micro >= 0 THEN 'possible'
-                   ELSE 'non_match' END AS decision
-       FROM sc""",
-)
-def fs_record_linkage(spark, sf_dir):
-    """Fellegi–Sunter probabilistic record linkage (JASA 1969; the
-    splink model — linkage.py:fellegi_sunter_score) over a planted
-    dirty-duplicates customer table: every id%5==0 row gets a copy with
-    a truncated name and a $2.50-shifted balance. Candidates come from
-    the SNM blocking layer (window 3 on a digit-derived key); scoring
-    is the integer micro-log2 weight sum over three field comparisons
-    (name lev<=1, segment equality, balance within $5), classified
-    match / possible / non_match at measured thresholds (8e6, 0) —
-    150 / 591 / 2814 at sf0.01, so all three decision bands carry
-    weight in the hash. The log2 weights are Python-computed literals
-    consumed by BOTH engines (fs_weight_sql_terms renders the oracle
-    side from the same FsField list). Scoring itself is a narrow
-    projection — candidate generation owns the shuffle."""
-    from xmlschemavalidator_spark.dedup import sorted_neighborhood_pairs
-    from xmlschemavalidator_spark.linkage import fellegi_sunter_score
-
-    cust = _t(spark, sf_dir, "customer")
-    base = cust.select(
-        F.col("c_custkey").alias("id"),
-        F.lower(F.col("c_name")).alias("name"),
-        F.col("c_mktsegment").alias("mkt"),
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("bigint").alias("bal"),
-    )
-    dup = base.where(F.col("id") % 5 == 0).select(
-        (F.col("id") + 1_000_000).alias("id"),
-        F.expr("substring(name, 1, length(name) - 1)").alias("name"),
-        "mkt",
-        (F.col("bal") + 250).alias("bal"),
-    )
-    dirty = base.unionByName(dup)
-    keyed = dirty.withColumn(
-        "snm_key", F.concat(F.substring("name", 15, 2), F.lit("|"), F.col("name"))
-    )
-    pairs = sorted_neighborhood_pairs(
-        keyed, "id", "snm_key", window=3, block_chars=2
-    ).select("id_a", "id_b")
-    a = dirty.select(
-        F.col("id").alias("id_a"),
-        F.col("name").alias("name_a"),
-        F.col("mkt").alias("mkt_a"),
-        F.col("bal").alias("bal_a"),
-    )
-    b = dirty.select(
-        F.col("id").alias("id_b"),
-        F.col("name").alias("name_b"),
-        F.col("mkt").alias("mkt_b"),
-        F.col("bal").alias("bal_b"),
-    )
-    pj = pairs.join(a, "id_a").join(b, "id_b")
-    out = fellegi_sunter_score(
-        pj,
-        {
-            "name": F.levenshtein("name_a", "name_b") <= 1,
-            "mkt": F.col("mkt_a") == F.col("mkt_b"),
-            "bal": F.abs(F.col("bal_a") - F.col("bal_b")) <= 500,
-        },
-        _FS_FIELDS,
-        upper_micro=8_000_000,
-        lower_micro=0,
-    )
-    return out.select(
-        "id_a", "id_b", "agree_name", "agree_mkt", "agree_bal",
-        "weight_micro", "decision",
-    )
-
-
-from xmlschemavalidator_spark.linkage import fs_em_oracle_cte  # noqa: E402
-
-_FS_PAIRS_SQL = """WITH base AS (
-         SELECT c_custkey AS id, lower(c_name) AS name, c_mktsegment AS mkt,
-                CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal
-         FROM customer),
-       dirty AS (
-         SELECT * FROM base
-         UNION ALL
-         SELECT id + 1000000, substr(name, 1, length(name) - 1), mkt, bal + 250
-         FROM base WHERE id % 5 = 0),
-       keyed AS (SELECT *, substr(name, 15, 2) || '|' || name AS k FROM dirty),
-       r AS (SELECT *, row_number() OVER (
-                 PARTITION BY substr(k, 1, 2) ORDER BY k, id) AS rn
-             FROM keyed),
-       p AS (SELECT levenshtein(a.name, b.name) <= 1 AS agree_name,
-                    a.mkt = b.mkt AS agree_mkt,
-                    abs(a.bal - b.bal) <= 500 AS agree_bal
-             FROM r a JOIN r b
-               ON substr(a.k, 1, 2) = substr(b.k, 1, 2)
-              AND b.rn - a.rn BETWEEN 1 AND 2)
-       SELECT agree_name, agree_mkt, agree_bal, CAST(count(*) AS BIGINT) AS n
-       FROM p
-       WHERE agree_name IS NOT NULL AND agree_mkt IS NOT NULL
-         AND agree_bal IS NOT NULL
-       GROUP BY 1, 2, 3"""
-
-
-@q(
-    "fs_em_training",
-    fs_em_oracle_cte(_FS_PAIRS_SQL, ["name", "mkt", "bal"], iterations=15),
-)
-def fs_em_training(spark, sf_dir):
-    """EM estimation of the Fellegi-Sunter m/u/λ parameters (Winkler
-    1988; splink's 'training' — linkage.py:fs_em_estimate) over the
-    same dirty-customer candidate pairs as fs_record_linkage, three
-    conditionally-independent comparisons (the FS identifiability
-    minimum). The whole algorithm runs on the ≤8-row agreement-pattern
-    table (ONE groupBy of the pairs); responsibilities floor-quantize
-    to integer trillionths before every M-step sum, so 15 EM rounds
-    are bit-identical between the collected-Python path and the
-    unrolled-CTE DuckDB replay — ORACLE-EXACT INCLUDING EM TRAINING,
-    estimates and derived micro-log2 match weights both."""
-    from xmlschemavalidator_spark.dedup import sorted_neighborhood_pairs
-    from xmlschemavalidator_spark.linkage import fs_em_estimate
-
-    cust = _t(spark, sf_dir, "customer")
-    base = cust.select(
-        F.col("c_custkey").alias("id"),
-        F.lower(F.col("c_name")).alias("name"),
-        F.col("c_mktsegment").alias("mkt"),
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("bigint").alias("bal"),
-    )
-    dup = base.where(F.col("id") % 5 == 0).select(
-        (F.col("id") + 1_000_000).alias("id"),
-        F.expr("substring(name, 1, length(name) - 1)").alias("name"),
-        "mkt",
-        (F.col("bal") + 250).alias("bal"),
-    )
-    dirty = base.unionByName(dup)
-    keyed = dirty.withColumn(
-        "snm_key", F.concat(F.substring("name", 15, 2), F.lit("|"), F.col("name"))
-    )
-    pairs = sorted_neighborhood_pairs(
-        keyed, "id", "snm_key", window=3, block_chars=2
-    ).select("id_a", "id_b")
-    a = dirty.select(
-        F.col("id").alias("id_a"), F.col("name").alias("name_a"),
-        F.col("mkt").alias("mkt_a"), F.col("bal").alias("bal_a"),
-    )
-    b = dirty.select(
-        F.col("id").alias("id_b"), F.col("name").alias("name_b"),
-        F.col("mkt").alias("mkt_b"), F.col("bal").alias("bal_b"),
-    )
-    pj = pairs.join(a, "id_a").join(b, "id_b")
-    return fs_em_estimate(
-        pj,
-        {
-            "name": F.levenshtein("name_a", "name_b") <= 1,
-            "mkt": F.col("mkt_a") == F.col("mkt_b"),
-            "bal": F.abs(F.col("bal_a") - F.col("bal_b")) <= 500,
-        },
-        iterations=15,
-    )
-
-
-@q(
-    "event_transition_matrix",
-    """WITH b AS (
-         SELECT user_id, event_id, event_type,
-                lead(event_type) OVER (
-                  PARTITION BY user_id ORDER BY ts, event_id) AS nxt
-         FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL),
-       g AS (SELECT event_type AS from_event,
-                    coalesce(nxt, '<end>') AS to_event,
-                    CAST(count(*) AS BIGINT) AS n
-             FROM b GROUP BY 1, 2),
-       t AS (SELECT from_event, CAST(sum(n) AS BIGINT) AS tot
-             FROM g GROUP BY 1)
-       SELECT g.from_event, g.to_event, g.n,
-              CAST(g.n * 1000000 // t.tot AS BIGINT) AS p_micro
-       FROM g JOIN t USING (from_event)""",
-)
-def event_transition_matrix(spark, sf_dir):
-    """First-order Markov transition matrix over per-user event streams
-    (temporal.py:event_transitions) with the '<end>' absorbing state —
-    the clickstream user-journey staple and the next-event-prediction
-    baseline. One window shuffle on user_id (tie-broken by event_id so
-    the lag order is deterministic) + one pair groupBy; the matrix is
-    bounded by |event vocabulary|², not the corpus. Probabilities are
-    row-normalized integer millionths (BIGINT div)."""
-    from xmlschemavalidator_spark.temporal import event_transitions
-
-    return event_transitions(
-        _t(spark, sf_dir, "events"),
-        "user_id",
-        "ts",
-        "event_type",
-        id_col="event_id",
-        include_end=True,
-    )
-
-
 def _warc_stats_fixture() -> list[dict]:
     """Deterministic fake-crawl rows (pure function of i — no sf
     dependence), shared by the Spark query and the literal oracle."""
@@ -9914,45 +8978,6 @@ def robots_sitemap_discovery(spark, sf_dir):
     return docs.select(
         "doc_id",
         F.explode(robots_sitemap_urls(robots)).alias("sitemap_url"),
-    )
-
-
-from xmlschemavalidator_spark.temporal import ewma_control_oracle_sql  # noqa: E402
-
-_EWMA_DAILY_SQL = (
-    "SELECT event_type, CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000"
-    " AS BIGINT) AS day, CAST(count(*) AS BIGINT) AS n_events"
-    " FROM events WHERE ts IS NOT NULL GROUP BY 1, 2"
-)
-
-
-@q(
-    "ewma_daily_event_counts",
-    ewma_control_oracle_sql(
-        _EWMA_DAILY_SQL, "event_type", "day", "n_events",
-        target=66.0, threshold=5.0,
-    ),
-)
-def ewma_daily_event_counts(spark, sf_dir):
-    """EWMA control chart (Roberts 1959; temporal.py:ewma_control) over
-    per-type daily event counts — the medium-drift leg between the
-    rolling z-score (spikes) and CUSUM (tiny persistent shifts), all
-    three sharing the same continuous-aggregate input. Truncated
-    exponential kernel as 32 fixed lag terms on ONE window (weights
-    Python-quantized into both engines), integer-only flag decisions;
-    target 66 / threshold 5 measured to fire BOTH flags at sf0.01
-    (13 hi / 9 lo of 150 buckets)."""
-    from xmlschemavalidator_spark.temporal import ewma_control
-
-    ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    daily = ev.groupBy(
-        "event_type",
-        F.floor(F.unix_micros(F.col("ts").cast("timestamp")) / 86_400_000_000)
-        .cast("bigint")
-        .alias("day"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
-    return ewma_control(
-        daily, "event_type", "day", "n_events", target=66.0, threshold=5.0
     )
 
 
@@ -10790,104 +9815,6 @@ def hreflang_page_graph(spark, sf_dir):
     )
 
 
-def _fs_em_scored_oracle() -> str:
-    em = fs_em_oracle_cte(_FS_PAIRS_SQL, ["name", "mkt", "bal"], iterations=15)
-    return f"""WITH em AS MATERIALIZED ({em}),
- wts AS (SELECT
-   max(CASE WHEN field='name' THEN w_agree_micro END) AS wa_name,
-   max(CASE WHEN field='name' THEN w_disagree_micro END) AS wd_name,
-   max(CASE WHEN field='mkt' THEN w_agree_micro END) AS wa_mkt,
-   max(CASE WHEN field='mkt' THEN w_disagree_micro END) AS wd_mkt,
-   max(CASE WHEN field='bal' THEN w_agree_micro END) AS wa_bal,
-   max(CASE WHEN field='bal' THEN w_disagree_micro END) AS wd_bal
-  FROM em),
- base AS (SELECT c_custkey AS id, lower(c_name) AS name, c_mktsegment AS mkt,
-          CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal FROM customer),
- dirty AS (SELECT * FROM base UNION ALL
-   SELECT id + 1000000, substr(name, 1, length(name) - 1), mkt, bal + 250
-   FROM base WHERE id % 5 = 0),
- keyed AS (SELECT *, substr(name, 15, 2) || '|' || name AS k FROM dirty),
- r AS (SELECT *, row_number() OVER (
-         PARTITION BY substr(k, 1, 2) ORDER BY k, id) AS rn FROM keyed),
- p AS (SELECT a.id AS id_a, b.id AS id_b,
-              levenshtein(a.name, b.name) <= 1 AS agree_name,
-              a.mkt = b.mkt AS agree_mkt,
-              abs(a.bal - b.bal) <= 500 AS agree_bal
-       FROM r a JOIN r b ON substr(a.k, 1, 2) = substr(b.k, 1, 2)
-        AND b.rn - a.rn BETWEEN 1 AND 2),
- sc AS (SELECT id_a, id_b,
-   CAST((CASE WHEN agree_name IS NULL THEN 0
-         WHEN agree_name THEN wa_name ELSE wd_name END)
- + (CASE WHEN agree_mkt IS NULL THEN 0
-    WHEN agree_mkt THEN wa_mkt ELSE wd_mkt END)
- + (CASE WHEN agree_bal IS NULL THEN 0
-    WHEN agree_bal THEN wa_bal ELSE wd_bal END) AS BIGINT) AS weight_micro
- FROM p CROSS JOIN wts)
-SELECT id_a, id_b, weight_micro,
-       CASE WHEN weight_micro >= 20000000 THEN 'match'
-            WHEN weight_micro >= 0 THEN 'possible'
-            ELSE 'non_match' END AS decision
-FROM sc"""
-
-
-@q("fs_em_scored_linkage", _fs_em_scored_oracle())
-def fs_em_scored_linkage(spark, sf_dir):
-    """The train→deploy linkage loop end to end (linkage.py:
-    fs_em_estimate → fs_score_with_weights): EM learns m/u/λ from the
-    agreement-pattern table, the learned FULL-precision micro weights
-    (no lossy round-trip through rounded m/u) score every candidate
-    pair. The learned model is sharper than the hand-set priors: true
-    duplicates land at 46.06 bits vs 1.95 for window-neighbor
-    coincidences (measured — EM discovered that balance agreement, not
-    name agreement, separates matches inside an SNM window), giving the
-    clean 150/591/2814 decision mix at thresholds (20e6, 0)."""
-    from xmlschemavalidator_spark.dedup import sorted_neighborhood_pairs
-    from xmlschemavalidator_spark.linkage import fs_em_estimate, fs_score_with_weights
-
-    cust = _t(spark, sf_dir, "customer")
-    base = cust.select(
-        F.col("c_custkey").alias("id"),
-        F.lower(F.col("c_name")).alias("name"),
-        F.col("c_mktsegment").alias("mkt"),
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("bigint").alias("bal"),
-    )
-    dup = base.where(F.col("id") % 5 == 0).select(
-        (F.col("id") + 1_000_000).alias("id"),
-        F.expr("substring(name, 1, length(name) - 1)").alias("name"),
-        "mkt",
-        (F.col("bal") + 250).alias("bal"),
-    )
-    dirty = base.unionByName(dup)
-    keyed = dirty.withColumn(
-        "snm_key", F.concat(F.substring("name", 15, 2), F.lit("|"), F.col("name"))
-    )
-    pairs = sorted_neighborhood_pairs(
-        keyed, "id", "snm_key", window=3, block_chars=2
-    ).select("id_a", "id_b")
-    a = dirty.select(
-        F.col("id").alias("id_a"), F.col("name").alias("name_a"),
-        F.col("mkt").alias("mkt_a"), F.col("bal").alias("bal_a"),
-    )
-    b = dirty.select(
-        F.col("id").alias("id_b"), F.col("name").alias("name_b"),
-        F.col("mkt").alias("mkt_b"), F.col("bal").alias("bal_b"),
-    )
-    pj = pairs.join(a, "id_a").join(b, "id_b").persist()
-    agreements = {
-        "name": F.levenshtein("name_a", "name_b") <= 1,
-        "mkt": F.col("mkt_a") == F.col("mkt_b"),
-        "bal": F.abs(F.col("bal_a") - F.col("bal_b")) <= 500,
-    }
-    learned = {
-        r["field"]: (r["w_agree_micro"], r["w_disagree_micro"])
-        for r in fs_em_estimate(pj, agreements, iterations=15).collect()
-    }
-    out = fs_score_with_weights(
-        pj, agreements, learned, upper_micro=20_000_000, lower_micro=0
-    )
-    return out.select("id_a", "id_b", "weight_micro", "decision")
-
-
 @q(
     "simpsons_paradox_daily_events",
     """WITH daily AS (SELECT event_type,
@@ -11612,45 +10539,6 @@ def jsd_drift_source(spark, sf_dir):
     return jsd_drift(cur, base)
 
 
-@q(
-    "acf_event_rate",
-    """WITH b AS (SELECT CAST((epoch_us(ts) // 3600000000) * 3600 AS BIGINT) AS t,
-                  CAST(floor(CAST(count(*) AS DOUBLE) * 1000000)
-                       AS DECIMAL(38,0)) AS y
-           FROM events WHERE ts IS NOT NULL GROUP BY 1),
-       g AS (SELECT CAST(count(*) AS DECIMAL(38,0)) AS n, sum(y) AS s,
-                    sum(y * y) AS syy
-             FROM b),
-       lags AS (SELECT CAST(unnest([1, 2, 3, 24]) AS BIGINT) AS lag),
-       pl AS (SELECT l.lag, CAST(count(*) AS DECIMAL(38,0)) AS p,
-                     sum(lb.y * rb.y) AS sxy, sum(lb.y) AS h, sum(rb.y) AS tl
-              FROM lags l, b lb, b rb
-              WHERE lb.t + l.lag * 3600 = rb.t
-              GROUP BY l.lag),
-       res AS (SELECT lags.lag, pl.p, pl.sxy, pl.h, pl.tl
-               FROM lags LEFT JOIN pl ON lags.lag = pl.lag)
-       SELECT lag, CAST(coalesce(p, 0) AS BIGINT) AS n_pairs,
-              CASE WHEN p IS NOT NULL AND (n * n * syy - n * s * s) > 0
-                   THEN round(CAST(n * n * sxy - n * s * (h + tl) + p * s * s
-                                   AS DOUBLE)
-                              / CAST(n * n * syy - n * s * s AS DOUBLE), 6)
-              END AS acf
-       FROM res CROSS JOIN g""",
-)
-def acf_event_rate(spark, sf_dir):
-    """Autocorrelation of the hourly event-rate series (temporal.py:acf
-    over a time_rollup) at lags 1/2/3 h and the daily lag 24 h — the
-    seasonality/memory profile the point alarms (EWMA, CUSUM, rolling
-    z) can't see. Global-mean estimator cross-multiplied to pure
-    DECIMAL integer sums (mean never materialized), one double division
-    per lag; the lag join runs on the 720-bucket table, never rows.
-    Empty buckets are gaps (disclosed via n_pairs), not zeros."""
-    from xmlschemavalidator_spark.temporal import acf, time_rollup
-
-    roll = time_rollup(_t(spark, sf_dir, "events"), "ts", 3600)
-    return acf(roll, "bucket_start", "n_events", lags=(1, 2, 3, 24), step=3600)
-
-
 # synthesized page urls: every 4th is an m.-mobile variant of its bare page
 _PLANT_PAGE_URL = (
     "concat('https://', CASE WHEN doc_id % 4 = 0 THEN 'm.' ELSE '' END, "
@@ -12109,45 +10997,6 @@ def feed_entry_harvest(spark, sf_dir):
     )
 
 
-@q(
-    "seasonal_profile_events",
-    """WITH h AS (SELECT (epoch_us(ts) % 86400000000) // 3600000000 AS bucket,
-                         CAST(count(*) AS BIGINT) AS n_events
-                  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-       d AS (SELECT ((epoch_us(ts) // 86400000000) + 3) % 7 AS bucket,
-                    CAST(count(*) AS BIGINT) AS n_events
-             FROM events WHERE ts IS NOT NULL GROUP BY 1),
-       hh AS (SELECT 'hour_of_day' AS period, CAST(bucket AS BIGINT) AS bucket,
-                     n_events,
-                     CAST((n_events * 24 * 1000000)
-                          // (sum(n_events) OVER ()) AS BIGINT)
-                         AS seasonal_index_micro
-              FROM h),
-       dd AS (SELECT 'day_of_week', CAST(bucket AS BIGINT), n_events,
-                     CAST((n_events * 7 * 1000000)
-                          // (sum(n_events) OVER ()) AS BIGINT)
-              FROM d)
-       SELECT * FROM hh UNION ALL SELECT * FROM dd""",
-)
-def seasonal_profile_events(spark, sf_dir):
-    """Seasonality indexes (temporal.py:seasonal_profile) of the event
-    stream over both calendar periods — the SHAPE the acf lag profile
-    only detects: per hour-of-day and per day-of-week, bucket share vs
-    a uniform spread in integer micros (10⁶ = average). Pure epoch
-    arithmetic for the day index — dayofweek() builtins disagree across
-    engines on the week start. One ≤24-cell groupBy per period."""
-    from xmlschemavalidator_spark.temporal import seasonal_profile
-
-    ev = _t(spark, sf_dir, "events")
-    h = seasonal_profile(ev, "ts", "hour_of_day").select(
-        F.lit("hour_of_day").alias("period"), "*"
-    )
-    d = seasonal_profile(ev, "ts", "day_of_week").select(
-        F.lit("day_of_week").alias("period"), "*"
-    )
-    return h.unionByName(d)
-
-
 _CDC_CHUNKS_SQL = """\
 WITH toks AS (SELECT doc_id,
                      list_filter(regexp_split_to_array(trim(text),
@@ -12581,44 +11430,6 @@ def rule_cofire_matrix(spark, sf_dir):
     return rule_cofire(_t(spark, sf_dir, "documents"), _documents_ruleset_v2())
 
 
-@q(
-    "dispersion_event_types",
-    """WITH pb AS (SELECT event_type AS key,
-                          epoch_us(ts) // 3600000000 AS b,
-                          CAST(count(*) AS DECIMAL(38,0)) AS c
-                   FROM events
-                   WHERE ts IS NOT NULL AND event_type IS NOT NULL
-                   GROUP BY 1, 2),
-       pk AS (SELECT key, sum(c) AS s, sum(c * c) AS q,
-                     CAST(max(b) - min(b) + 1 AS DECIMAL(38,0)) AS nb
-              FROM pb GROUP BY key)
-       SELECT key, CAST(s AS BIGINT) AS n_events,
-              CAST(nb AS BIGINT) AS n_buckets,
-              round(CAST(s AS DOUBLE) / CAST(nb AS DOUBLE), 6)
-                  AS mean_per_bucket,
-              round(CASE WHEN nb > 1
-                    THEN CAST(nb * q - s * s AS DOUBLE)
-                         / CAST((nb - 1) * s AS DOUBLE) END, 6) AS dispersion,
-              coalesce(CASE WHEN nb > 1
-                    THEN CAST(nb * q - s * s AS DOUBLE)
-                         / CAST((nb - 1) * s AS DOUBLE) END * 1000.0 > 2000.0,
-                    FALSE) AS overdispersed
-       FROM pk""",
-)
-def dispersion_event_types(spark, sf_dir):
-    """Index of dispersion (temporal.py:dispersion_index) of hourly
-    event counts per event_type — the burstiness verdict between the
-    inter-arrival gap stats and the seasonal profile: Poisson-organic
-    D≈1, batch/bot slam-then-sleep D≫1, metronome D≈0. Span gaps count
-    as zero buckets without materializing them; DECIMAL moments until
-    ONE double division."""
-    from xmlschemavalidator_spark.temporal import dispersion_index
-
-    return dispersion_index(
-        _t(spark, sf_dir, "events"), "ts", "event_type", 3600
-    )
-
-
 _PLANT_PCT_URL = """concat('https://ex', CAST(doc_id % 5 AS STRING), '.com/',
   CASE doc_id % 4 WHEN 0 THEN concat('%7Euser', CAST(doc_id % 20 AS STRING))
        WHEN 1 THEN concat('%7euser', CAST(doc_id % 20 AS STRING))
@@ -12931,34 +11742,6 @@ def cfd_violation_rows_orders(spark, sf_dir):
     )
 
 
-def _event_ngrams_oracle() -> str:
-    from xmlschemavalidator_spark.temporal import event_ngrams_oracle_sql
-
-    return event_ngrams_oracle_sql(
-        "SELECT user_id, ts, event_id, event_type FROM events",
-        "user_id", "ts", "event_type",
-        n=3, id_col="event_id", min_count=3,
-    )
-
-
-@q("event_trigram_patterns", _event_ngrams_oracle())
-def event_trigram_patterns(spark, sf_dir):
-    """Frequent event trigrams (temporal.py:event_ngrams — contiguous
-    sequential-pattern mining, the n>2 sibling of the Markov transition
-    matrix): which whole 3-step journeys recur, with n_keys separating
-    one bot looping a path from many users sharing it. ONE window
-    shuffle on the user computes both leads in the same frame; the
-    (ts, event_id) ordering is the event_transitions determinism
-    contract. Result bounded by |vocab|³ ∩ observed (125 cells max on
-    this corpus), oracle-exact."""
-    from xmlschemavalidator_spark.temporal import event_ngrams
-
-    return event_ngrams(
-        _t(spark, sf_dir, "events"), "user_id", "ts", "event_type",
-        n=3, id_col="event_id", min_count=3,
-    )
-
-
 _JSON_PLANT_SQL = """CASE event_id % 7
   WHEN 0 THEN '{"k": "str", "tag": true}'
   WHEN 1 THEN '{"k": 1.5, "m": {"d": ' || CAST(event_id % 5 AS VARCHAR) || '}}'
@@ -13210,123 +11993,6 @@ def weighted_quantile_mass_per_lang(spark, sf_dir):
     )
 
 
-_SPIKE_SQL = (
-    "SELECT ts, event_type FROM events"
-    + " UNION ALL SELECT ts, event_type FROM events"
-    " WHERE CAST(ts AS DATE) = DATE '2024-01-25' AND event_type = 'click'"
-    * 3
-)
-
-
-def _seasonal_residual_oracle() -> str:
-    from xmlschemavalidator_spark.temporal import seasonal_residual_oracle_sql
-
-    return seasonal_residual_oracle_sql(
-        _SPIKE_SQL, "ts", "event_type", window=7, k_tenths=30
-    )
-
-
-@q("seasonal_residual_anomalies_daily", _seasonal_residual_oracle())
-def seasonal_residual_anomalies_daily(spark, sf_dir):
-    """Seasonally-adjusted daily anomalies (temporal.py:
-    seasonal_residual_anomalies — the STL-lite composition: a Monday
-    spike on a Monday-heavy stream is weather, not news). Per-type
-    daily counts deseasonalize by the type's own day-of-week index
-    ((d+3)%7 anchoring, the cross-engine dayofweek trap), residuals
-    feed the cross-multiplied rolling-z predicate — all integer, no
-    sqrt. A 4x click spike is planted on 2024-01-25 (one quiet
-    Thursday); the detector must flag it through the weekday pattern.
-    One groupBy to keys×days, one keys×7 profile, one window pass."""
-    from xmlschemavalidator_spark.temporal import seasonal_residual_anomalies
-
-    ev = _t(spark, sf_dir, "events").select("ts", "event_type")
-    spike = ev.where(
-        (F.to_date("ts") == F.lit("2024-01-25"))
-        & (F.col("event_type") == "click")
-    )
-    planted = ev.unionByName(spike).unionByName(spike).unionByName(spike)
-    return seasonal_residual_anomalies(
-        planted, "ts", "event_type", window=7, k_tenths=30
-    )
-
-
-@q(
-    "snm_blocking_evaluation",
-    """WITH base AS (
-         SELECT c_custkey AS id, lower(c_name) AS name, c_mktsegment AS mkt,
-                CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal
-         FROM customer),
-       dirty AS (
-         SELECT * FROM base
-         UNION ALL
-         SELECT id + 1000000, substr(name, 1, length(name) - 1), mkt, bal + 250
-         FROM base WHERE id % 5 = 0),
-       keyed AS (SELECT *, substr(name, 15, 2) || '|' || name AS k FROM dirty),
-       r AS (SELECT *, row_number() OVER (
-                 PARTITION BY substr(k, 1, 2) ORDER BY k, id) AS rn
-             FROM keyed),
-       cand AS (SELECT DISTINCT least(a.id, b.id) AS a, greatest(a.id, b.id) AS b
-                FROM r a JOIN r b
-                  ON substr(a.k, 1, 2) = substr(b.k, 1, 2)
-                 AND b.rn - a.rn BETWEEN 1 AND 2
-                WHERE a.id <> b.id),
-       truth AS (SELECT id AS a, id + 1000000 AS b FROM base WHERE id % 5 = 0),
-       nn AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM dirty),
-       nc AS (SELECT CAST(count(*) AS BIGINT) AS n_candidates FROM cand),
-       nt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth),
-       nf AS (SELECT CAST(count(*) AS BIGINT) AS n_found
-              FROM cand JOIN truth USING (a, b))
-       SELECT CAST(n AS BIGINT) AS n_records,
-              CAST(n * (n - 1) // 2 AS BIGINT) AS n_total_pairs,
-              n_candidates, n_truth, n_found,
-              CAST((n * (n - 1) // 2 - n_candidates) * 1000000
-                   // (n * (n - 1) // 2) AS BIGINT) AS reduction_ratio_micro,
-              CASE WHEN n_truth > 0 THEN n_found * 1000000 // n_truth END
-                AS pairs_completeness_micro,
-              CASE WHEN n_candidates > 0
-                   THEN n_found * 1000000 // n_candidates END
-                AS pair_quality_micro
-       FROM nn, nc, nt, nf""",
-)
-def snm_blocking_evaluation(spark, sf_dir):
-    """Blocking-scheme evaluation (linkage.py:blocking_evaluation,
-    Christen TKDE'12 metrics) over the fs_record_linkage plant: the SNM
-    candidate generator (window 3, 2-char blocks) judged against the
-    KNOWN planted duplicate pairs — reduction ratio (how much of the
-    1.6M-pair quadratic space was refused), pairs completeness (recall
-    of true dups into candidates) and pair quality (precision), all
-    integer micros. The ER twin of the near-dup method evaluation:
-    these three numbers ARE how SNM window/key choices get made."""
-    from xmlschemavalidator_spark.dedup import sorted_neighborhood_pairs
-    from xmlschemavalidator_spark.linkage import blocking_evaluation
-
-    cust = _t(spark, sf_dir, "customer")
-    base = cust.select(
-        F.col("c_custkey").alias("id"),
-        F.lower(F.col("c_name")).alias("name"),
-        F.col("c_mktsegment").alias("mkt"),
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("bigint").alias("bal"),
-    )
-    dup = base.where(F.col("id") % 5 == 0).select(
-        (F.col("id") + 1_000_000).alias("id"),
-        F.expr("substring(name, 1, length(name) - 1)").alias("name"),
-        "mkt",
-        (F.col("bal") + 250).alias("bal"),
-    )
-    dirty = base.unionByName(dup)
-    keyed = dirty.withColumn(
-        "snm_key",
-        F.concat(F.substring("name", 15, 2), F.lit("|"), F.col("name")),
-    )
-    cand = sorted_neighborhood_pairs(
-        keyed, "id", "snm_key", window=3, block_chars=2
-    ).select("id_a", "id_b")
-    truth = base.where(F.col("id") % 5 == 0).select(
-        F.col("id").alias("id_a"), (F.col("id") + 1_000_000).alias("id_b")
-    )
-    return blocking_evaluation(cand, truth, n_records=dirty.count())
-
-
 # ===========================================================================
 # semantic type inference (checks/semantic.py)
 # ===========================================================================
@@ -13541,101 +12207,6 @@ def token_vocab_coverage_per_lang(spark, sf_dir):
         "lang", F.explode(tokens(F.col("text"))).alias("w")
     ).where(F.col("w") != "")
     return species_richness(toks, "w", group_cols=("lang",))
-
-
-_BCUBED_ORACLE = """WITH base AS (
-     SELECT c_custkey AS id, lower(c_name) AS name FROM customer),
-   dirty AS (
-     SELECT id, name FROM base
-     UNION ALL
-     SELECT id + 1000000, substr(name, 1, length(name) - 1)
-     FROM base WHERE id % 5 = 0),
-   keyed AS (SELECT *, substr(name, 15, 2) || '|' || name AS k FROM dirty),
-   r AS (SELECT *, row_number() OVER (
-             PARTITION BY substr(k, 1, 2) ORDER BY k, id) AS rn
-         FROM keyed),
-   cand AS (SELECT DISTINCT least(a.id, b.id) AS ia, greatest(a.id, b.id) AS ib
-            FROM r a JOIN r b
-              ON substr(a.k, 1, 2) = substr(b.k, 1, 2)
-             AND b.rn - a.rn BETWEEN 1 AND 2
-            WHERE a.id <> b.id AND levenshtein(a.k, b.k) <= 1),
-   edges AS (SELECT ia AS id, ib AS nb FROM cand
-             UNION ALL SELECT ib, ia FROM cand),
-   assign AS (SELECT d.id, least(coalesce(m.mn, d.id), d.id) AS c
-              FROM dirty d LEFT JOIN (SELECT id, min(nb) AS mn
-                                      FROM edges GROUP BY id) m USING (id)),
-   j AS (SELECT a.id, a.c, a.id % 1000000 AS t FROM assign a),
-   cells AS (SELECT c, t, CAST(count(*) AS HUGEINT) AS nct FROM j GROUP BY 1, 2),
-   csz AS (SELECT c, CAST(count(*) AS HUGEINT) AS nc FROM j GROUP BY 1),
-   tsz AS (SELECT t, CAST(count(*) AS HUGEINT) AS nt FROM j GROUP BY 1),
-   p AS (SELECT CAST(sum(nct * nct * 1000000 // nc) AS HUGEINT) AS ps
-         FROM cells JOIN csz USING (c)),
-   rr AS (SELECT CAST(sum(nct * nct * 1000000 // nt) AS HUGEINT) AS rs
-          FROM cells JOIN tsz USING (t)),
-   tot AS (SELECT CAST(count(*) AS BIGINT) AS n_records,
-                  CAST(count(DISTINCT c) AS BIGINT) AS n_clusters,
-                  CAST(count(DISTINCT t) AS BIGINT) AS n_truth_classes
-           FROM j)
- SELECT n_records, n_clusters, n_truth_classes,
-   CAST(ps // n_records AS BIGINT) AS precision_micro,
-   CAST(rs // n_records AS BIGINT) AS recall_micro,
-   CASE WHEN ps // n_records + rs // n_records > 0
-        THEN CAST(2 * (ps // n_records) * (rs // n_records)
-                  // (ps // n_records + rs // n_records) AS BIGINT)
-   END AS f1_micro
- FROM tot, p, rr"""
-
-
-@q("bcubed_cluster_evaluation", _BCUBED_ORACLE)
-def bcubed_cluster_evaluation(spark, sf_dir):
-    """B³ clustering evaluation (linkage.py:bcubed_evaluation) of an
-    end-to-end ER run against the planted-duplicate truth — the third
-    leg of the evaluation stack: snm_blocking_evaluation grades the
-    candidate GENERATOR, this grades the delivered CLUSTERS per record
-    (Amigó et al. IR'09's argument for B³ over pairwise-F: one giant
-    wrong cluster dominates pairwise-F quadratically but costs B³ only
-    its member records). Clustering under test: SNM candidates (window
-    3, 2-char blocks) verified at Levenshtein ≤ 1 on the sort key (the
-    engine-portable verifier), then one-round min-label star assignment
-    — deliberately the cheapest clusterer, so recall pays for every
-    window miss and precision for every near-name false merge. Truth
-    class = id mod 10⁶ (planted dup shares its base's class). No pair
-    set ever materializes in the evaluation: three groupBys over
-    (cluster, truth) cells, integer-micro metrics, oracle-exact."""
-    from xmlschemavalidator_spark.dedup import sorted_neighborhood_pairs
-    from xmlschemavalidator_spark.linkage import bcubed_evaluation
-
-    cust = _t(spark, sf_dir, "customer")
-    base = cust.select(
-        F.col("c_custkey").alias("id"), F.lower(F.col("c_name")).alias("name")
-    )
-    dup = base.where(F.col("id") % 5 == 0).select(
-        (F.col("id") + 1_000_000).alias("id"),
-        F.expr("substring(name, 1, length(name) - 1)").alias("name"),
-    )
-    dirty = base.unionByName(dup)
-    keyed = dirty.withColumn(
-        "snm_key",
-        F.concat(F.substring("name", 15, 2), F.lit("|"), F.col("name")),
-    )
-    cand = sorted_neighborhood_pairs(
-        keyed, "id", "snm_key", window=3, block_chars=2, max_distance=1
-    ).select("id_a", "id_b")
-    edges = cand.select(
-        F.col("id_a").alias("id"), F.col("id_b").alias("nb")
-    ).unionByName(cand.select(F.col("id_b").alias("id"), F.col("id_a").alias("nb")))
-    assign = (
-        dirty.select("id")
-        .join(edges.groupBy("id").agg(F.min("nb").alias("_mn")), "id", "left")
-        .select(
-            "id",
-            F.least(F.coalesce(F.col("_mn"), F.col("id")), F.col("id")).alias(
-                "cluster"
-            ),
-        )
-    )
-    truth = dirty.select("id", (F.col("id") % 1_000_000).alias("truth"))
-    return bcubed_evaluation(assign, truth)
 
 
 def _heaps_oracle() -> str:
@@ -14204,56 +12775,6 @@ def ngram_novelty_per_doc(spark, sf_dir):
     return ngram_novelty(_t(spark, sf_dir, "documents"), "doc_id")
 
 
-_TRANSITION_DRIFT_ORACLE = """WITH base AS (
-  SELECT user_id, CAST(ts AS TIMESTAMP) AS tss, event_id, event_type,
-         extract(hour FROM CAST(ts AS TIMESTAMP)) < 12 AS pa
-  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL),
-pairs AS (
-  SELECT event_type AS from_event,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY tss, event_id) AS to_event,
-         pa
-  FROM base),
-g AS (SELECT from_event, to_event,
-             CAST(sum(CASE WHEN pa THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-             CAST(sum(CASE WHEN pa THEN 0 ELSE 1 END) AS BIGINT) AS n_b
-      FROM pairs WHERE to_event IS NOT NULL GROUP BY 1, 2),
-st AS (SELECT *, CAST(sum(n_a) OVER (PARTITION BY from_event) AS BIGINT) AS ta,
-              CAST(sum(n_b) OVER (PARTITION BY from_event) AS BIGINT) AS tb
-       FROM g)
-SELECT from_event, to_event, n_a, n_b,
-  CASE WHEN ta > 0 THEN n_a * 1000000 // ta END AS p_a_micro,
-  CASE WHEN tb > 0 THEN n_b * 1000000 // tb END AS p_b_micro,
-  CAST(coalesce(CASE WHEN ta > 0 THEN n_a * 1000000 // ta END, 0)
-       - coalesce(CASE WHEN tb > 0 THEN n_b * 1000000 // tb END, 0)
-       AS BIGINT) AS delta_micro
-FROM st"""
-
-
-@q("transition_drift_am_pm", _TRANSITION_DRIFT_ORACLE)
-def transition_drift_am_pm(spark, sf_dir):
-    """Per-edge transition drift (temporal.py:transition_drift) between
-    morning and afternoon user journeys — the flow question scalar
-    drift analyzers can't localize: chi² on event COUNTS misses a
-    reroute (same totals, different wiring); this reports WHICH edge
-    moved, with appearing/vanishing edges as explicit p=0 rows rather
-    than drops. One key-window shuffle + vocab²-bounded matrix;
-    oracle-exact."""
-    from xmlschemavalidator_spark.temporal import transition_drift
-
-    ev = _t(spark, sf_dir, "events")
-    staged = ev.select(
-        "user_id",
-        F.col("ts").cast("timestamp").alias("tss"),
-        "event_id",
-        "event_type",
-        (F.hour(F.col("ts").cast("timestamp")) < 12).alias("pa"),
-    )
-    return transition_drift(
-        staged, "user_id", "tss", "event_type", "pa", id_col="event_id"
-    )
-
-
 def _keyness_oracle() -> str:
     from xmlschemavalidator_spark.textops import _WS
 
@@ -14616,7 +13137,7 @@ def rbo_token_ranking_halves(spark, sf_dir):
     rank 1 is the finding and one at rank 19 is noise, which set
     overlap can't distinguish. Parity halves are exchangeable, so a low
     reading here is the A/A guard firing. Python-precomputed integer
-    weights (the EWMA device), exact integer depth terms; oracle-exact
+    weights, exact integer depth terms; oracle-exact
     including both embedded rankings."""
     from pyspark.sql import Window as W
 
@@ -14917,150 +13438,6 @@ def lang_spread_brown_forsythe(spark, sf_dir):
     )
 
 
-@q(
-    "text_jaro_winkler_windows",
-    """SELECT doc_id,
-         round(jaro_winkler_similarity(substr(coalesce(text, ''), 1, 20),
-                                       substr(coalesce(text, ''), 9, 20)), 6)
-           AS jw
-       FROM documents WHERE text IS NOT NULL""",
-)
-def text_jaro_winkler_windows(spark, sf_dir):
-    """Jaro–Winkler comparator (linkage.py:with_jaro_winkler, Winkler
-    1990) between two overlapping 20-char windows of each doc — a
-    measured spread of similarities exercising matches, transpositions
-    and the prefix boost. The Spark side is an Arrow-batched pandas_udf
-    (the per-pair flag-array walk has no Column form — a disclosed
-    Python-path exception); the oracle is DuckDB's BUILT-IN
-    jaro_winkler_similarity, so the hash compare crosschecks two
-    INDEPENDENT implementations of the same parameterization (p=0.1,
-    prefix≤4, boost>0.7 — fuzz-verified on 3k random pairs)."""
-    from xmlschemavalidator_spark.linkage import with_jaro_winkler
-
-    docs = _t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    pairs = docs.select(
-        "doc_id",
-        F.substring(F.coalesce(F.col("text"), F.lit("")), 1, 20).alias("a"),
-        F.substring(F.coalesce(F.col("text"), F.lit("")), 9, 20).alias("b"),
-    )
-    return with_jaro_winkler(pairs, "a", "b").select("doc_id", "jw")
-
-
-def _cohort_oracle() -> str:
-    from xmlschemavalidator_spark.temporal import cohort_retention_oracle_sql
-
-    return cohort_retention_oracle_sql(
-        "SELECT user_id AS u, ts FROM events", period_days=7
-    )
-
-
-@q("events_cohort_retention", _cohort_oracle())
-def events_cohort_retention(spark, sf_dir):
-    """Weekly cohort retention matrix (temporal.py:cohort_retention) —
-    cohort = first-seen week, cell = share active at each week offset;
-    the per-wave decay grid Kaplan–Meier summarizes into one curve.
-    Activity collapses to DISTINCT (user, week) BEFORE any join (no
-    countDistinct Expand, no event-scale join), first-week is one
-    partial min; matrix bounded by weeks², not users. Exact integer
-    counts, one division per cell — oracle-exact."""
-    from xmlschemavalidator_spark.temporal import cohort_retention
-
-    return cohort_retention(
-        _t(spark, sf_dir, "events"), "user_id", "ts", period_days=7
-    )
-
-
-def _funnel_oracle() -> str:
-    from xmlschemavalidator_spark.temporal import funnel_oracle_sql
-
-    return funnel_oracle_sql(
-        "SELECT user_id AS u, event_type AS e, ts FROM events",
-        ["view", "click", "purchase"],
-    )
-
-
-@q("events_funnel_conversion", _funnel_oracle())
-def events_funnel_conversion(spark, sf_dir):
-    """Strict-order funnel (temporal.py:funnel_conversion):
-    view → click-after-view → purchase-after-that, each step anchored
-    at the EARLIEST qualifying event — the semantics a per-type
-    distinct-count 'funnel' gets wrong (it counts purchases logged
-    before the click). Two bounded user-keyed min-joins; exact integer
-    micro timestamps; conversion rates one division each. Measured
-    mixed decay at every SF."""
-    from xmlschemavalidator_spark.temporal import funnel_conversion
-
-    return funnel_conversion(
-        _t(spark, sf_dir, "events"),
-        "user_id",
-        "ts",
-        "event_type",
-        ["view", "click", "purchase"],
-    )
-
-
-def _ka_oracle() -> str:
-    from xmlschemavalidator_spark.linkage import krippendorff_oracle_sql
-    from xmlschemavalidator_spark.textops import _WS
-
-    ntok = (
-        "(CASE WHEN trim(coalesce(text, '')) = '' THEN 0 ELSE"
-        f" len(string_split_regex(trim(text), '{_WS}+')) END)"
-    )
-    # three deterministic "raters" bucketing each doc into S/M/L; rater 3
-    # abstains on every 5th doc (the missing-data path α exists for)
-    ratings = f"""SELECT doc_id AS unit, CASE
-      WHEN n_chars < 150 THEN 'S' WHEN n_chars < 400 THEN 'M' ELSE 'L'
-    END AS val FROM documents WHERE n_chars IS NOT NULL
-  UNION ALL
-  SELECT doc_id, CASE WHEN {ntok} < 30 THEN 'S'
-      WHEN {ntok} < 80 THEN 'M' ELSE 'L' END
-    FROM documents WHERE text IS NOT NULL
-  UNION ALL
-  SELECT doc_id, CASE WHEN length(coalesce(text, '')) < 160 THEN 'S'
-      WHEN length(coalesce(text, '')) < 420 THEN 'M' ELSE 'L' END
-    FROM documents WHERE text IS NOT NULL AND doc_id % 5 <> 0"""
-    return krippendorff_oracle_sql(ratings)
-
-
-@q("doc_size_krippendorff_alpha", _ka_oracle())
-def doc_size_krippendorff_alpha(spark, sf_dir):
-    """Krippendorff's alpha, nominal (linkage.py:krippendorff_alpha —
-    the m-rater missing-data agreement coefficient completing the
-    family: κ two-rater, W m-rankings, α m-rater-with-holes): three
-    deterministic size-class 'raters' (chars / tokens / text length)
-    vote S/M/L per doc, rater 3 abstaining on every 5th doc. The
-    coincidence-matrix identity collapsed to per-unit integer sums —
-    no c×k matrix; 12dp-round-then-DECIMAL-summed rationals;
-    oracle-exact at a measured mid-range agreement."""
-    from xmlschemavalidator_spark.linkage import krippendorff_alpha
-    from xmlschemavalidator_spark.textops import token_count
-
-    docs = _t(spark, sf_dir, "documents")
-    size1 = docs.where(F.col("n_chars").isNotNull()).select(
-        F.col("doc_id").alias("unit"),
-        F.when(F.col("n_chars") < 150, "S")
-        .when(F.col("n_chars") < 400, "M")
-        .otherwise("L")
-        .alias("val"),
-    )
-    ntok = token_count(F.col("text"))
-    size2 = docs.where(F.col("text").isNotNull()).select(
-        F.col("doc_id").alias("unit"),
-        F.when(ntok < 30, "S").when(ntok < 80, "M").otherwise("L").alias("val"),
-    )
-    tl = F.length(F.coalesce(F.col("text"), F.lit("")))
-    size3 = (
-        docs.where(F.col("text").isNotNull() & (F.col("doc_id") % 5 != 0))
-        .select(
-            F.col("doc_id").alias("unit"),
-            F.when(tl < 160, "S").when(tl < 420, "M").otherwise("L").alias("val"),
-        )
-    )
-    ratings = size1.unionByName(size2).unionByName(size3)
-    return krippendorff_alpha(ratings, "unit", "val")
-
-
 def _capture_oracle() -> str:
     from xmlschemavalidator_spark.dedup import capture_recapture_oracle_sql
 
@@ -15097,31 +13474,6 @@ def dedup_capture_recapture(spark, sf_dir):
         (F.col("id_a") * 7 + F.col("id_b")) % 4 != 0
     )
     return capture_recapture_estimate(mh, ng)
-
-
-def _rau_oracle() -> str:
-    from xmlschemavalidator_spark.temporal import rolling_active_oracle_sql
-
-    return rolling_active_oracle_sql(
-        "SELECT user_id AS u, ts FROM events", window_days=7
-    )
-
-
-@q("events_rolling_active_users", _rau_oracle())
-def events_rolling_active_users(spark, sf_dir):
-    """DAU / rolling-7-day-active / stickiness (temporal.py:
-    rolling_active_users): the sliding distinct-count that CANNOT be
-    summed from daily partials, computed exactly via per-user coverage
-    ISLANDS — each active day covers the next 7 days' membership,
-    islands merge in one user-keyed window pass, ±1 boundary deltas
-    prefix-sum over the bounded day spine. Work O(distinct (user,day));
-    nothing 7×'d, no distinct inside a sliding frame. Engagement
-    companion to events_cohort_retention on the same table."""
-    from xmlschemavalidator_spark.temporal import rolling_active_users
-
-    return rolling_active_users(
-        _t(spark, sf_dir, "events"), "user_id", "ts", window_days=7
-    )
 
 
 def _ht_oracle() -> str:
@@ -15181,8 +13533,8 @@ def events_sprt_error_monitor(spark, sf_dir):
     the hypotheses, so the earliest-crossing semantics and the exact
     integer LLR walk (two Python-computed micro literals consumed by
     both engines, BIGINT cumsum, literal boundaries) are what the hash
-    pins. Completes the monitoring family: z-score/CUSUM/EWMA detect
-    drift in aggregates; SPRT DECIDES with guaranteed error rates."""
+    pins. Completes the monitoring family: the Hampel filter flags
+    outliers in aggregates; SPRT DECIDES with guaranteed error rates."""
     from xmlschemavalidator_spark.checks.sequence import sprt_monitor
 
     ev = _t(spark, sf_dir, "events").where(
@@ -15352,63 +13704,6 @@ def events_runs_test(spark, sf_dir):
         (F.col("event_type") != "error").alias("y"),
     )
     return runs_test(stream, "t", "y")
-
-
-def _fleiss_oracle() -> str:
-    from xmlschemavalidator_spark.linkage import fleiss_oracle_sql
-    from xmlschemavalidator_spark.textops import _WS
-
-    ntok = (
-        "(CASE WHEN trim(coalesce(text, '')) = '' THEN 0 ELSE"
-        f" len(string_split_regex(trim(text), '{_WS}+')) END)"
-    )
-    ratings = f"""SELECT doc_id AS unit, CASE
-      WHEN n_chars < 150 THEN 'S' WHEN n_chars < 400 THEN 'M' ELSE 'L'
-    END AS val FROM documents WHERE n_chars IS NOT NULL AND text IS NOT NULL
-  UNION ALL
-  SELECT doc_id, CASE WHEN {ntok} < 30 THEN 'S'
-      WHEN {ntok} < 80 THEN 'M' ELSE 'L' END
-    FROM documents WHERE n_chars IS NOT NULL AND text IS NOT NULL
-  UNION ALL
-  SELECT doc_id, CASE WHEN length(coalesce(text, '')) < 160 THEN 'S'
-      WHEN length(coalesce(text, '')) < 420 THEN 'M' ELSE 'L' END
-    FROM documents WHERE n_chars IS NOT NULL AND text IS NOT NULL"""
-    return fleiss_oracle_sql(ratings)
-
-
-@q("doc_size_fleiss_kappa", _fleiss_oracle())
-def doc_size_fleiss_kappa(spark, sf_dir):
-    """Fleiss' kappa (linkage.py:fleiss_kappa, 1971) over the SAME
-    three size-class raters as doc_size_krippendorff_alpha but with
-    the COMPLETE panel (no abstention) — the fixed-m classic: κ two
-    raters / α any-with-holes / Fleiss m-fixed, now all three
-    measured side by side on one corpus. Exact integer pair counts
-    and category totals in DECIMAL, fixed final chain; modal-m
-    complete-design gate."""
-    from xmlschemavalidator_spark.linkage import fleiss_kappa
-    from xmlschemavalidator_spark.textops import token_count
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("n_chars").isNotNull() & F.col("text").isNotNull()
-    )
-    ntok = token_count(F.col("text"))
-    tl = F.length(F.coalesce(F.col("text"), F.lit("")))
-    r1 = docs.select(
-        F.col("doc_id").alias("unit"),
-        F.when(F.col("n_chars") < 150, "S")
-        .when(F.col("n_chars") < 400, "M")
-        .otherwise("L")
-        .alias("val"),
-    )
-    r2 = docs.select(
-        F.col("doc_id").alias("unit"),
-        F.when(ntok < 30, "S").when(ntok < 80, "M").otherwise("L").alias("val"),
-    )
-    r3 = docs.select(
-        F.col("doc_id").alias("unit"),
-        F.when(tl < 160, "S").when(tl < 420, "M").otherwise("L").alias("val"),
-    )
-    return fleiss_kappa(r1.unionByName(r2).unionByName(r3), "unit", "val")
 
 
 def _moran_oracle() -> str:

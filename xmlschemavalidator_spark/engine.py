@@ -400,9 +400,12 @@ def _rule_pair_failures(df: DataFrame, ruleset: RuleSet) -> DataFrame:
     joint failures ``_b_i_j`` — k + k(k−1)/2 longs per partition reach
     the shuffle (k = #rules, bounded by the ruleset, never by data) — then
     ``stack()`` renders the pair table from that single row, never a join.
-    NULL verdicts count as failed, same convention as validate()."""
+    NULL verdicts count as failed, same convention as validate(). Fewer
+    than two rules have no pair: ValueError, not an empty ``stack(0, )``."""
     compiled = ruleset.compile()
     rids = sorted(compiled)
+    if len(rids) < 2:
+        raise ValueError("rule pairs: need ≥2 SQL-compilable rules")
     fails = [(~F.coalesce(compiled[r], F.lit(False))).cast("long") for r in rids]
     pairs = list(itertools.combinations(range(len(rids)), 2))
     aggs = [F.count(F.lit(1)).cast("bigint").alias("n_rows")]
@@ -516,10 +519,16 @@ def rule_rate_intervals(
     double chain on exact integer counts from the engine's standard ONE
     aggregate (:func:`_rule_failures`).
     ``z_milli`` integer (1960 = 95%) so the width can't drift between
-    engines."""
+    engines. An empty input (``n_rows`` 0) has no rate: ``fail_rate``,
+    ``ci_lo``, ``ci_hi`` and ``breaches_slo`` are NULL, as
+    :func:`expectation_summary`'s ``pass_rate`` and ``ok`` are, never a
+    divide-by-zero under ANSI mode."""
     long = _rule_failures(df, ruleset, [])
     z = F.lit(z_milli / 1000.0)
-    n = F.col("n_rows").cast("double")
+    # n is NULL when n_rows is 0, so every term below is NULL; the bounds
+    # are guarded too because greatest/least skip a NULL argument
+    nonempty = F.col("n_rows") > 0
+    n = F.when(nonempty, F.col("n_rows").cast("double"))
     p = F.col("n_fail").cast("double") / n
     z2n = z * z / n
     center = (p + z2n / F.lit(2.0)) / (F.lit(1.0) + z2n)
@@ -528,8 +537,8 @@ def rule_rate_intervals(
         * F.sqrt(p * (F.lit(1.0) - p) / n + z * z / (F.lit(4.0) * n * n))
         / (F.lit(1.0) + z2n)
     )
-    lo = F.greatest(center - half, F.lit(0.0))
-    hi = F.least(center + half, F.lit(1.0))
+    lo = F.when(nonempty, F.greatest(center - half, F.lit(0.0)))
+    hi = F.when(nonempty, F.least(center + half, F.lit(1.0)))
     slo = F.lit(slo_fail_micro / 1e6)
     return long.select(
         "rule_id",
@@ -563,8 +572,6 @@ def rule_cofire(df: DataFrame, ruleset: RuleSet) -> DataFrame:
     (parser.clj:345-375); the co-fire MATRIX over a corpus is the
     north-rule dataset view of that same status vocabulary.
     """
-    if len(ruleset.compile()) < 2:
-        raise ValueError("rule_cofire: need ≥2 SQL-compilable rules")
     long = _rule_pair_failures(df, ruleset)
     union = F.col("n_fail_a") + F.col("n_fail_b") - F.col("n_both")
     return long.select(

@@ -29,8 +29,9 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # absolute-epoch parity (temporal.py) needs NTZ->LTZ casts to
-        # read wall time as UTC, matching DuckDB's naive-is-UTC epoch_us
+        # the event-time buckets of the driver queries (events_durbin_watson,
+        # crawl_rate_audit and others) cast NTZ->LTZ for unix_micros; UTC
+        # reads that wall time as DuckDB's naive-is-UTC epoch_us does
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
