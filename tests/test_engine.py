@@ -91,6 +91,70 @@ def test_partition_summary_counts(spark):
         assert r["pass"] == (r["n_failed_docs"] == 0)
 
 
+def test_violations_and_summary_evaluate_each_row_once(spark):
+    """``violations`` followed by ``partition_summary`` evaluates each
+    row's rules once: a rule counting the rows it is given sees N rows,
+    not 2N, however many actions run on the two outputs."""
+    from xmlschemavalidator_spark.compiler import PandasRule
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(s):
+        seen.add(len(s))
+        return s.notna()
+
+    rs = _ruleset()
+    rs.add(FieldRule("lang_present", PandasRule(counted), column="lang"))
+    res = validate(_docs(spark).repartition(2), rs, key="url")
+    got = sorted(tuple(r) for r in res.violations.collect())
+    assert ("u6", "lang_present", None) in got and len(got) == 6
+    summary = res.partition_summary.collect()
+    assert sum(r["n_rows"] for r in summary) == 6
+    assert sum(r["n_failed_docs"] for r in summary) == 4
+    assert res.violations.count() == 6
+    assert seen.value == 6
+
+
+def test_partition_summary_matches_spark_partition_id(spark):
+    """Each summary row is one input partition: ``(partition_id, n_rows,
+    n_failed_docs)`` equals ``groupBy(spark_partition_id())`` over the
+    input and over ``verdicts.where(~_doc_ok)``."""
+    df = spark.range(0, 90, 1, numPartitions=3).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+        F.when(F.col("id") % 7 == 0, F.lit("xx")).otherwise(F.lit("en")).alias("lang"),
+        (F.lit(30) + F.col("id") % 15).alias("n_chars"),
+    )
+    res = validate(df, _ruleset(), key="url")
+    pid = F.spark_partition_id().alias("partition_id")
+    n_rows = dict(df.groupBy(pid).count().collect())
+    n_failed = dict(res.verdicts.where(~F.col(DOC_OK)).groupBy(pid).count().collect())
+    expected = sorted((p, n, n_failed.get(p, 0)) for p, n in n_rows.items())
+    got = sorted(
+        (r["partition_id"], r["n_rows"], r["n_failed_docs"])
+        for r in res.partition_summary.collect()
+    )
+    assert len(expected) == 3 and all(f > 0 for _, _, f in expected)
+    assert got == expected
+
+
+def test_lost_checkpoint_raises_not_a_short_count(spark):
+    """The checkpoint behind ``violations`` and ``partition_summary`` is not
+    recomputed: once its blocks are gone (as when the executor holding them
+    dies between the two actions) the second action raises, and never
+    returns a summary short of the lost partitions."""
+    from py4j.protocol import Py4JJavaError
+
+    res = validate(_docs(spark).repartition(2), _ruleset(), key="url")
+    sc = spark.sparkContext._jsc.sc()
+    before = {i.id() for i in sc.getRDDStorageInfo()}
+    assert res.violations.count() == 5
+    ours = {i.id() for i in sc.getRDDStorageInfo()} - before
+    assert len(ours) == 1
+    sc.env().blockManager().master().removeRdd(ours.pop(), True)
+    with pytest.raises(Py4JJavaError, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        res.partition_summary.collect()
+
+
 def test_valid_fold(spark):
     assert not validate(_docs(spark), _ruleset(), key="url").valid()
     clean = _docs(spark).filter(F.col("url").isin("u1", "u2"))

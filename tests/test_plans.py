@@ -34,14 +34,23 @@ def _docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet")
 
 
+def _assert_reads_checkpoint(res) -> None:
+    """``violations`` and ``partition_summary`` read the checkpoint of
+    ``res.compact``: neither plan scans parquet."""
+    assert n_scans(fmt(res.violations)) == 0
+    assert n_scans(fmt(res.partition_summary)) == 0
+
+
 def test_violations_plan_no_shuffle(spark):
     """N rules compile into ONE projection + explode over one scan:
-    no Exchange, no Union, exactly one parquet scan."""
+    no Exchange, no Union, exactly one parquet scan. That scan is the
+    compact frame's, which the violations are read from."""
     res = validate(_docs(spark), documents_ruleset(), key="doc_id")
-    p = fmt(res.violations)
+    p = fmt(res.compact)
     assert n_scans(p) == 1
     assert "Exchange" not in p
     assert "Union" not in p
+    _assert_reads_checkpoint(res)
 
 
 def _assert_lazy_violations_plan(p: str) -> None:
@@ -62,11 +71,13 @@ def _assert_lazy_violations_plan(p: str) -> None:
 
 def test_violations_plan_lazy_batch_and_stream(spark, tmp_path):
     """Batch ``validate().violations`` and ``stream_violations`` share one
-    plan shape; the streaming pin reads the executed micro-batch plan."""
+    plan shape; the batch pin reads the compact frame that the violations
+    come from, the streaming pin the executed micro-batch plan."""
     from xmlschemavalidator_spark.streaming.validate_stream import stream_violations
 
     res = validate(_docs(spark), documents_ruleset(), key="doc_id")
-    _assert_lazy_violations_plan(fmt(res.violations))
+    _assert_lazy_violations_plan(fmt(res.compact))
+    _assert_reads_checkpoint(res)
 
     src = str(tmp_path / "src")
     _docs(spark).write.parquet(src)

@@ -42,12 +42,23 @@ def frame_hash(df: pd.DataFrame) -> tuple[int, list[str], str]:
     return len(df), cols, h
 
 
-def main(only: list[str] | None = None) -> int:
-    import __spark_entry__ as entrymod
+def start_spark():
+    """The tool's session. Spark's console progress bars share the terminal
+    with the result lines and run into them, so the JVM this starts has
+    them off (``PYSPARK_SUBMIT_ARGS`` is read when the JVM launches)."""
     from xmlschemavalidator_spark.session import get_spark
 
+    submit = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = f"--conf spark.ui.showConsoleProgress=false {submit}"
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def main(only: list[str] | None = None) -> int:
+    import __spark_entry__ as entrymod
+
+    spark = start_spark()
 
     con = duckdb.connect()
     for t in TABLES:

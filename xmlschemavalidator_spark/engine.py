@@ -4,38 +4,65 @@ Output model (SURVEY.md §1.3) — the reference's verdict tree
 (``[status value tag]`` leaves, core.clj parser_test.clj:311-316) becomes:
 
 * **wide verdicts**  — one boolean column per rule plus ``_doc_ok`` (the
-  AND-fold that is the reference's ``valid?``, core.clj:279-285);
-* **violations**     — a long DataFrame ``(key, rule_id, observed_value)``,
-  built by :func:`explode_failures`: each rule contributes
-  ``when(failed, struct(rule_id, observed_value))`` to ONE array, which is
-  plainly ``explode``-d and kept ``WHERE v IS NOT NULL``. An observed value
-  is computed only for a rule that failed, there is no higher-order
-  function, and N rules never cause N scans or a union of N subplans;
+  AND-fold that is the reference's ``valid?``, core.clj:279-285), a lazy
+  full-width frame: each action on it evaluates the rules again;
+* **violations**     — a long DataFrame ``(key, rule_id, observed_value)``;
 * **partition summary** — per ``spark_partition_id()`` pass/fail counts
   (the dataset-level analogue of per-node status metadata from ``decode``,
   core.clj:263-276).
 
+One evaluation feeds both the violations and the summary, as the
+reference's one ``validator-fn`` call per document yields both the decoded
+value and every node's status. The first access to either one
+checkpoints a *compact frame* (:func:`compact_frame`): each rule
+contributes ``when(failed, struct(rule_id, observed_value))`` to ONE array,
+read from the verdict columns and closed by a marker element, which is
+plainly ``explode``-d and kept ``WHERE v IS NOT NULL``. Every input row
+leaves one marker row carrying only its ``_doc_ok``; each failed rule
+leaves one row carrying the key, the ``violation_cols`` and its observed
+value. An observed value is computed only for a rule that failed, there is
+no higher-order function, and N rules never cause N scans or a union of N
+subplans. The violations are the checkpoint's rule rows and the summary
+counts its marker rows, so a caller running both pays one scan and one
+rule evaluation per row (:class:`ValidationResult`).
+
 Compile once: every Column built per rule — the ``rule_<id>_ok`` verdicts,
-the ``_doc_ok`` fold and the violation payload array — is derived from the
+the ``_doc_ok`` fold and the violation payload arrays — is derived from the
 RuleSet's memoized compile (:meth:`RuleSet.compiled`) the first time it is
 needed and kept with it (:func:`rule_columns`). A later ``validate()`` on the
 same RuleSet, from the batch engine, a manifest batch or a streaming
 micro-batch, only assembles DataFrames; nothing is rebuilt per call unless
-the rules or the type registry changed. Only these driver-side expression
-objects are cached, never data.
+the rules or the type registry changed. These driver-side expression
+objects are kept with the RuleSet; the only data kept is a result's own
+checkpoint, which lives as long as the result does.
 
-Scale notes: the whole verdict computation is narrow (no shuffle); the only
-shuffle is the partition-summary aggregation, which is a partial+final hash
-aggregate over at most O(#partitions) groups. Violations inherit the input's
-partitioning. At 10^12 rows, nothing here is a bottleneck beyond the scan.
+Scale notes: the whole verdict computation is narrow (no shuffle), and so
+is the compact frame: its checkpoint keeps the scan's partitions, which is
+what lets the summary group by ``spark_partition_id()`` over it. The only
+shuffle is the partition-summary aggregation, a partial+final hash
+aggregate over at most O(#partitions) groups that reads the checkpoint,
+not the input. Violations inherit the input's partitioning. The
+checkpoint holds one serialized row per input row plus one per
+violation in executor memory, spilling to executor disk: about 2 bytes
+per input row for the flagship's pages, as compressed blocks (SCALE.md).
+At 10^12 rows, nothing here is a bottleneck beyond the scan.
+
+Failure mode: the checkpoint lives on the executors that computed it and
+is not recomputed from the input. If an executor is lost between the
+action on ``violations`` and the one on ``partition_summary``, the second
+action fails with Spark's ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` error
+("Checkpoint block rdd_<id>_<partition> not found!"). That is an error,
+never a short count: validate again.
 """
 
 from __future__ import annotations
 
 import itertools
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Optional
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -52,20 +79,60 @@ def ok_col_name(rule_id: str) -> str:
 
 @dataclass
 class ValidationResult:
-    """Handle over the three output shapes. All are lazy DataFrames."""
+    """Handle over the three output shapes of one ``validate()``.
+
+    ``verdicts`` is a lazy full-width DataFrame; each action on it
+    evaluates the rules again. ``violations`` and ``partition_summary``
+    come from ONE evaluation: the first access to either one checkpoints
+    ``compact`` (eagerly, so its scan runs under that access as a job of
+    its own), and both are read from that checkpoint, however many
+    actions the caller runs on them. The checkpoint's blocks are freed by
+    Spark's ContextCleaner once this result and the DataFrames taken from
+    it are garbage. See the module docstring for the failure mode."""
 
     verdicts: DataFrame  # input + rule_<id>_ok booleans + _doc_ok
-    violations: DataFrame  # (key, rule_id, observed_value:string)
-    partition_summary: DataFrame  # (partition_id, n_rows, n_failed_docs, pass)
+    compact: DataFrame  # unevaluated; see compact_frame
+    violation_columns: list[str]  # key, rule_id, observed_value, *violation_cols
     observation: Optional[Observation] = None  # filled when observe=True
+
+    @cached_property
+    def _checkpoint(self) -> DataFrame:
+        # serialized: a passing row's marker then costs a few bytes, not a
+        # Java object per row
+        return self.compact.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+
+    @cached_property
+    def violations(self) -> DataFrame:
+        """``(key, rule_id, observed_value, *violation_cols)``: the
+        checkpoint's rule rows."""
+        return self._checkpoint.where(F.col("rule_id").isNotNull()).select(
+            *self.violation_columns
+        )
+
+    @cached_property
+    def partition_summary(self) -> DataFrame:
+        """``(partition_id, n_rows, n_failed_docs, pass)`` per input
+        partition: the checkpoint's marker rows, grouped by
+        ``spark_partition_id()`` (the checkpoint keeps the scan's
+        partitions). A partition without rows has no summary row."""
+        return (
+            self._checkpoint.where(F.col("rule_id").isNull())
+            .groupBy(F.spark_partition_id().alias("partition_id"))
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum((~F.col(DOC_OK)).cast("long")).alias("n_failed_docs"),
+            )
+            .withColumn("pass", F.col("n_failed_docs") == F.lit(0))
+        )
 
     def rule_counts(self) -> dict[str, int]:
         """Per-rule violation counts + n_rows/n_failed_docs, harvested from
         the Observation attached to the verdicts plan: Spark accumulates
-        these DURING whatever action the caller runs on ``verdicts`` —
-        ZERO additional scans (at 100 TB a separate count-per-rule pass is
-        a whole extra job). Blocks until some action has materialized the
-        verdicts at least once."""
+        these DURING whatever action first runs that plan — an action on
+        ``verdicts`` or the checkpoint behind ``violations`` and
+        ``partition_summary`` — ZERO additional scans (at 100 TB a separate
+        count-per-rule pass is a whole extra job). Blocks until such an
+        action has run."""
         if self.observation is None:
             raise ValueError("validate(..., observe=True) was not requested")
         return dict(self.observation.get)
@@ -88,6 +155,9 @@ class RuleColumns:
     doc_ok: Column
     # array(when(failed, struct(rule_id, observed_value))), in ruleset order
     failures: Column
+    # the same elements with `failed` read from the rule_<id>_ok columns,
+    # then a marker struct(NULL, NULL) that no row filters out
+    marked: Column
 
 
 def rule_columns(ruleset: RuleSet) -> RuleColumns:
@@ -104,17 +174,29 @@ def rule_columns(ruleset: RuleSet) -> RuleColumns:
         # for the rows that rule fails. Never build every rule's payload and
         # drop the passing ones with a higher-order ``filter``: that
         # evaluates every observed value on every row, interpreted.
-        failures = F.array(*[
-            F.when(
-                ~F.coalesce(compiled.columns[rule.rule_id], F.lit(False)),
-                F.struct(
-                    F.lit(rule.rule_id).alias("rule_id"),
-                    F.expr(rule.observed_expr).cast("string").alias("observed_value"),
-                ),
+        rules = ruleset.resolved_rules()
+        payloads = [
+            F.struct(
+                F.lit(rule.rule_id).alias("rule_id"),
+                F.expr(rule.observed_expr).cast("string").alias("observed_value"),
             )
-            for rule in ruleset.resolved_rules()
+            for rule in rules
+        ]
+        failures = F.array(*[
+            F.when(~F.coalesce(compiled.columns[rule.rule_id], F.lit(False)), p)
+            for rule, p in zip(rules, payloads)
         ])
-        compiled.derived = RuleColumns(verdicts, doc_ok, failures)
+        marked = F.array(
+            *[
+                F.when(~F.coalesce(F.col(ok_col_name(rule.rule_id)), F.lit(False)), p)
+                for rule, p in zip(rules, payloads)
+            ],
+            F.struct(
+                F.lit(None).cast("string").alias("rule_id"),
+                F.lit(None).cast("string").alias("observed_value"),
+            ),
+        )
+        compiled.derived = RuleColumns(verdicts, doc_ok, failures, marked)
     return compiled.derived
 
 
@@ -143,6 +225,35 @@ def explode_failures(df: DataFrame, ruleset: RuleSet, *carry: str) -> DataFrame:
     )
 
 
+def compact_frame(verdicts: DataFrame, ruleset: RuleSet, *carry: str) -> DataFrame:
+    """The one frame that ``violations`` and ``partition_summary`` are read
+    from: ``(carry..., rule_id, observed_value, _doc_ok)`` over the output
+    of :func:`with_verdicts`.
+
+    :class:`RuleColumns` ``marked`` holds each rule's
+    ``when(~coalesce(rule_<id>_ok, false), struct(rule_id,
+    observed_value))`` and then one marker element; it gets the plain
+    ``explode`` and ``WHERE v IS NOT NULL`` of :func:`explode_failures`.
+    So every input row leaves one marker row (``rule_id`` NULL) that
+    carries only its ``_doc_ok``, and each failed rule one row that
+    carries ``carry`` and its observed value, in ruleset order, before its
+    row's marker. The rules are read from the verdict columns, so each is
+    evaluated once per row. Narrow: the frame keeps ``verdicts``'
+    partitions."""
+    rule = F.col("_v.rule_id")
+    failed = rule.isNotNull()
+    return (
+        verdicts.select(*carry, DOC_OK, F.explode(rule_columns(ruleset).marked).alias("_v"))
+        .where(F.col("_v").isNotNull())
+        .select(
+            *[F.when(failed, F.col(c)).alias(c) for c in carry],
+            rule.alias("rule_id"),
+            F.col("_v.observed_value").alias("observed_value"),
+            F.when(~failed, F.col(DOC_OK)).alias(DOC_OK),
+        )
+    )
+
+
 def validate(
     df: DataFrame,
     ruleset: RuleSet,
@@ -154,13 +265,13 @@ def validate(
 
     The rule Columns come from the RuleSet's memoized compile
     (:func:`rule_columns`): the first call on a RuleSet builds them, every
-    later one reuses them and only assembles the three DataFrames.
-    One projection computes every rule boolean; ``_doc_ok`` is their
-    conjunction (NULL counts as failed). The violations frame comes from
-    :func:`explode_failures`: one ``when(failed, struct(rule_id,
-    observed_value))`` per rule, a plain ``explode`` and ``WHERE v IS NOT
-    NULL`` — a single narrow pass that computes an observed value only
-    where its rule failed.
+    later one reuses them and only assembles DataFrames; no Spark job runs
+    here. One projection computes every rule boolean; ``_doc_ok`` is their
+    conjunction (NULL counts as failed). ``violations`` and
+    ``partition_summary`` are both read from one checkpoint of
+    :func:`compact_frame` over that projection, taken on the first access
+    to either (:class:`ValidationResult`), so each rule runs once per row
+    however many of them the caller runs.
 
     ``violation_cols``: extra input columns carried through onto each
     violation row (e.g. the partition column for partitioned sinks). They
@@ -186,28 +297,12 @@ def validate(
             ],
         )
 
-    # --- violations: when(failed, payload) per rule, explode, not null ---
     extra = violation_cols or []
     carry = [key, *[c for c in extra if c != key]]
-    violations = explode_failures(df, ruleset, *carry).select(
-        key, "rule_id", "observed_value", *extra
-    )
-
-    # --- per-partition pass/fail (north rule: per-partition verdicts) -----
-    partition_summary = (
-        verdicts.select(F.spark_partition_id().alias("partition_id"), F.col(DOC_OK))
-        .groupBy("partition_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum((~F.col(DOC_OK)).cast("long")).alias("n_failed_docs"),
-        )
-        .withColumn("pass", F.col("n_failed_docs") == F.lit(0))
-    )
-
     return ValidationResult(
         verdicts=verdicts,
-        violations=violations,
-        partition_summary=partition_summary,
+        compact=compact_frame(verdicts, ruleset, *carry),
+        violation_columns=[key, "rule_id", "observed_value", *extra],
         observation=observation,
     )
 
@@ -217,8 +312,9 @@ def split_valid(
 ) -> tuple[DataFrame, DataFrame]:
     """Quarantine flow: ``(clean, quarantined)`` — rows passing every rule
     vs rows failing any, both with the original schema. Two filters over
-    the same compiled plan; when both are written in one job the scan is
-    shared (same exchange-reuse as any self-filtered write pair)."""
+    the same lazy ``verdicts`` plan: each write of one of them is its own
+    action, with its own scan and its own evaluation of every rule, so
+    writing both reads the input twice. Nothing is cached between them."""
     res = validate(df, ruleset, key=key)
     drop = [ok_col_name(r) for r in ruleset.rule_ids()] + [DOC_OK]
     clean = res.verdicts.where(F.col(DOC_OK)).drop(*drop)

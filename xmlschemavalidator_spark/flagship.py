@@ -1,10 +1,13 @@
 """The flagship validation job: the full web-page ruleset of FIXTURES.md §2
-applied to the input_hint pages table in one pass, plus dataset-level checks.
+applied to the input_hint pages table in one pass.
 
 This is the engine's headline workload (the north-rule metric is validated
 docs/sec through THIS job): row-level facet rules + the byte-identical
-extraction invariant fused into a single projection; uniqueness, referential,
-stats, and drift as separate (aggregate) passes.
+extraction invariant fused into a single projection, whose one evaluation
+yields both the violations and the per-partition summary (engine.validate).
+It runs no dataset-level check: no job runs the uniqueness or referential
+checks yet, and column stats and t-digest drift belong to
+jobs/profile_job.py.
 """
 
 from __future__ import annotations
@@ -75,7 +78,10 @@ _WEB_RULESET = web_ruleset()
 
 
 def run_flagship(df: DataFrame, key: str = "url") -> ValidationResult:
-    """Apply the web ruleset — one narrow pass for verdicts + violations."""
+    """Validate ``df`` with the web ruleset, compiled once per process. The
+    result's violations and partition summary are read from one
+    checkpointed evaluation of the rules (engine.validate); no other check
+    runs."""
     return validate(df, _WEB_RULESET, key=key)
 
 
